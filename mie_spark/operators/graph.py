@@ -450,7 +450,7 @@ def kcore(edges: DataFrame, k: int, rounds: int = 8) -> DataFrame:
     # adaptive=True (r14): kcore is the ONE loop that measurably needs
     # AQE — each round's semi-joins probe a SHRINKING edge table whose
     # size only runtime stats see, and AQE's broadcast conversion beats
-    # the static plan at sf0.1 and sf1 (A/B in OPTIMIZATION_r14.md).
+    # the static plan at sf0.1 and sf1 (A/B: tools_r14_pregel_ab.py).
     with iter_shuffle_partitions(
         spark, iter_nparts(spark, n_edges), adaptive=True
     ):

@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mie_spark import generations
+
 # Reference operating point (pkg/memory/schema.go:145-152; reader.go:63,69).
 DEFAULT_M = 16
 DEFAULT_EF_CONSTRUCTION = 200
@@ -464,36 +466,11 @@ def hnsw_topk(
 # ---------------------------------------------------------------------------
 # Index generations (ADVICE r9, medium): the materialized index is
 # never mutated in place. Every (re)build or append writes a COMPLETE
-# new generation directory `gNNNNNNNNN/` under the index path and then
-# flips the one-line `_CURRENT` pointer — the atomic-commit pattern of
-# MieStore snapshots and the streaming bitmap/minhash state. In-flight
-# readers keep a consistent view (they resolved the pointer once and
-# read only that generation's files); a crash mid-append leaves the
-# live generation untouched (the half-written new generation is simply
-# never pointed at, and the next append's higher generation number
-# ignores it). GC keeps the newest two generations: current + the one
-# a lazy reader may still hold.
+# new generation directory and commits it through the shared
+# generation protocol (mie_spark/generations.py): in-flight readers
+# keep the generation they resolved, and a crash mid-append leaves the
+# live generation untouched.
 # ---------------------------------------------------------------------------
-
-_GEN_POINTER = "_CURRENT"
-
-
-def _gen_name(n: int) -> str:
-    return f"g{n:09d}"
-
-
-def _list_generations(spark, path: str) -> list[int]:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("g") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
 
 
 def _current_generation(spark, path: str) -> str | None:
@@ -501,11 +478,9 @@ def _current_generation(spark, path: str) -> str | None:
     index. Pre-generation indexes (graph rows at the path root) are
     read as-is — the first append upgrades them to the versioned
     layout."""
-    from mie_spark.operators.vector import _read_text_sidecar
-
-    cur = _read_text_sidecar(spark, path, _GEN_POINTER)
-    if cur is not None:
-        return path.rstrip("/") + "/" + cur
+    live = generations.manifest(spark, path)
+    if live:
+        return live[-1]
     # legacy layout: shard=K dirs directly under path
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -516,25 +491,6 @@ def _current_generation(spark, path: str) -> str | None:
     ):
         return path
     return None
-
-
-def _commit_generation(spark, path: str, gen: int, keep: int = 2) -> None:
-    """Flip `_CURRENT` to generation ``gen``, then GC generations older
-    than the ``keep`` newest (current + one for in-flight readers)."""
-    from mie_spark.operators.vector import _write_text_sidecar
-
-    _write_text_sidecar(spark, path, _GEN_POINTER, _gen_name(gen))
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    live = sorted(g for g in _list_generations(spark, path) if g <= gen)
-    for stale in live[:-keep]:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                path.rstrip("/") + "/" + _gen_name(stale)
-            ),
-            True,
-        )
 
 
 def _forward_untouched_shards(
@@ -606,7 +562,7 @@ def write_ann_hnsw_index(
     never re-runs construction.
 
     The build lands in a fresh generation directory and commits via
-    the `_CURRENT` pointer flip (see the generation block above), so a
+    a generation commit (see the generation block above), so a
     rebuild over a live index never disturbs concurrent readers."""
     from mie_spark.operators.vector import _require_nonempty, _write_ann_meta
     from pyspark.sql.types import (
@@ -664,8 +620,7 @@ def write_ann_hnsw_index(
         shard_of(F.col(id_col), shards).cast("int").alias("_shard"),
     )
     spark = df.sparkSession
-    gen = max(_list_generations(spark, path), default=0) + 1
-    gen_path = path.rstrip("/") + "/" + _gen_name(gen)
+    gen_path = generations.allocate(spark, path)
     (
         sharded.groupBy("_shard")
         .applyInPandas(build_shard, schema=out_schema)
@@ -686,7 +641,7 @@ def write_ann_hnsw_index(
             "shard_hash": SHARD_HASH_SCHEME,
         },
     )
-    _commit_generation(spark, path, gen)
+    generations.commit(spark, path, [gen_path])
 
 
 def ann_topk_hnsw_indexed(
@@ -761,7 +716,7 @@ def append_ann_hnsw_index(
     (each grows via append_hnsw inside one cogrouped applyInPandas
     pass), and the result commits as a NEW generation — touched
     `shard=K` partitions written fresh, untouched ones hard-linked /
-    server-side-copied forward — then the `_CURRENT` pointer flips
+    server-side-copied forward — then the generation commits
     (ADVICE r9 medium: the previous in-place dynamic-partition
     overwrite let a concurrent reader observe a mix of old and new
     segments mid-commit, and a crash between partition delete and
@@ -859,8 +814,7 @@ def append_ann_hnsw_index(
         .cogroup(graphs.groupBy("shard"))
         .applyInPandas(grow, schema=out_schema)
     )
-    gen = max(_list_generations(spark, path), default=0) + 1
-    gen_path = path.rstrip("/") + "/" + _gen_name(gen)
+    gen_path = generations.allocate(spark, path)
     # Stage the recomputed segments into the new generation. Reading
     # cur_gen_path while writing gen_path — never the same files.
     updated.repartition("shard").write.mode("overwrite").partitionBy(
@@ -881,4 +835,4 @@ def append_ann_hnsw_index(
         fs.delete(jgen, True)
         return
     _forward_untouched_shards(spark, cur_gen_path, gen_path, touched)
-    _commit_generation(spark, path, gen)
+    generations.commit(spark, path, [gen_path])

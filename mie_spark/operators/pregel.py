@@ -35,6 +35,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mie_spark.session import conf_overrides
+
 
 def iter_nparts(spark: SparkSession, n_rows: int) -> int:
     """Scale-adaptive partition count for ITERATION STATE (r13, guide
@@ -94,7 +96,7 @@ def iter_shuffle_partitions(
     then. Measured (r14, same-session alternating A/B, sf0.1 AND the
     10x sf1 replica): AQE-off wins or ties on 8 of the 9 loop
     operators at BOTH scales (g_pagerank 2.63->2.28 s, g_sssp
-    3.19->2.60 at sf1); see OPTIMIZATION_r14.md.
+    3.19->2.60 at sf1); tools_r14_pregel_ab.py reproduces the A/B.
 
     ``adaptive=True`` keeps AQE on for a loop that measurably NEEDS
     runtime re-planning: kcore's per-round semi-joins filter a
@@ -109,20 +111,8 @@ def iter_shuffle_partitions(
     force_on = spark.conf.get("spark.mie.graph.loopAdaptive", "false") == "true"
     if not adaptive and not force_on:
         overrides["spark.sql.adaptive.enabled"] = "false"
-    prev: dict[str, str | None] = {}
-    try:
-        # set INSIDE the try (run_to_memory_sink pattern): if the Nth
-        # set raises, the finally still restores the N-1 applied
-        for k, v in overrides.items():
-            prev[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
+    with conf_overrides(spark, overrides):
         yield
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
 
 # A reducer is either a list of aggregate Columns over the message
 # column ``msg`` (the GraphX mergeMsg fast path — sum/min/count run as

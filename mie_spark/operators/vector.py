@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mie_spark import generations
 from mie_spark.functions.vectors import cosine_sim, dot, l2_normalize
 from mie_spark.operators import ensure_parallelism
 
@@ -607,60 +608,16 @@ def _write_ann_meta(spark, path: str, meta: dict) -> None:
     leave object-store indexes half-built (data without header)."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _ANN_META)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _write_text_sidecar(spark, path: str, name: str, text: str) -> None:
-    """Small control files (the `_CURRENT` generation pointer) go
-    through the same Hadoop FileSystem route as the meta header, so
-    commits land wherever the parquet lives (local disk, s3a, hdfs).
-    create(overwrite=true) of a one-line file is the commit primitive —
-    the same one the meta sidecar already relies on."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + name)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text_sidecar(spark, path: str, name: str) -> str | None:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + name)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, True)
-    finally:
-        stream.close()
-    return bytes(baos.toByteArray()).decode("utf-8").strip()
+    generations.write_sidecar(spark, path, _ANN_META, json.dumps(meta))
 
 
 def _read_ann_meta(spark, path: str) -> dict:
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _ANN_META)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, True)
-    finally:
-        stream.close()
-    return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
+    text = generations.read_sidecar(spark, path, _ANN_META)
+    if text is None:
+        raise FileNotFoundError(f"no ANN index header at {path}/{_ANN_META}")
+    return json.loads(text)
 
 
 def _require_nonempty(df: DataFrame, id_col: str, op: str) -> None:

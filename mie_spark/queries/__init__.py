@@ -105,10 +105,8 @@ _NEW_THIS_ROUND: list[str] = [
 ]
 
 _GRADE_FIRST = [
-    # Round 13 queue = _NEW_THIS_ROUND (incl. the two float-sum
-    # plan-changed optimization entries) + the full r08-stale cohort
-    # (40 entries, no driver row since CORRECTNESS_r08, alphabetical) +
-    # the first 2 r09-stale entries. Matches tools_rotation_queue.py.
+    # Generated by tools_rotation_queue.py (_NEW_THIS_ROUND, then the
+    # oldest driver rows first); regenerate, never hand-edit.
     "ev_ab_boundary",
     "mm_phash_hamming",
     "v_embed_drift",
@@ -117,50 +115,48 @@ _GRADE_FIRST = [
     "mm_audio_fingerprint",
     "g_ppr",
     "g_hits",
-    "ev_kmv_distinct",
-    "ev_log_histogram",
-    "ev_markov_transitions",
-    "ev_ordered_funnel",
-    "ev_pivot",
-    "ev_quantile_bound",
-    "ev_retention",
-    "f2_substring_match",
-    "f3_disjunction",
-    "f4_case_insensitive",
-    "g_kcore",
-    "g_labelprop",
-    "g_link_prediction",
-    "g_pagerank",
-    "g_sssp",
-    "mm_audio_chunks",
-    "mm_mjpeg_accuracy",
-    "mm_png_stats",
-    "mm_resize_features",
-    "o1_order_limit_offset",
-    "pipe_dataset_card",
-    "pipe_quality_buckets",
-    "q14_promo_revenue_share",
-    "s2_point_lookup",
-    "samp_stratified",
-    "samp_temperature_mix",
-    "st_dedup_totals",
-    "st_heavy_hitters",
-    "st_sessionize",
-    "text_bpe_tokens",
-    "text_char_entropy",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality_filter",
-    "text_unigram_logprob",
-    "u1_union_distinct",
-    "v5_norms",
-    "v_knn_join_nodes",
-    "w_rank_per_group",
-    "w_revenue_share",
-    # r09-stale alphabetical heads (fill to 50); displaced by
-    # _NEW_THIS_ROUND arrivals, tail-first.
-    "a1_stats_single_pass",
-    "a3_multi_table_counts",
+    "a_rollup_suppliers",
+    "a_salted_agg",
+    "a_stats_moments",
+    "dedup_embedding_cosine",
+    "dedup_exact_groups",
+    "dedup_exact_substring",
+    "dedup_incremental",
+    "dedup_keep_one",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_semantic",
+    "dq_expectations",
+    "ev_anomalies",
+    "ev_asof_join",
+    "ev_attribution_linear",
+    "ev_cohort_ltv",
+    "ev_concurrency",
+    "ev_ewma",
+    "ev_funnel",
+    "ev_funnel_time",
+    "ev_gap_fill",
+    "ev_multi_rollup",
+    "ev_range_join",
+    "ev_rfm",
+    "ev_sessionize",
+    "ev_survival",
+    "ev_top_spenders",
+    "ev_unpivot",
+    "ev_value_percentiles",
+    "f6_range_revenue",
+    "g_triangle_count",
+    "j1_two_hop_traversal",
+    "o3_topk",
+    "pipe_decontaminate",
+    "pipe_dedup_clusters",
+    "pipe_funnel_census",
+    "pipe_keep_best",
+    "pipe_quality_buckets_cuts",
+    "pipe_training_manifest",
+    "q1_pricing_summary",
+    "s1_scan_projection",
+    "s7_raw_sql",
 ]
 
 

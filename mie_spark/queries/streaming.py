@@ -1,10 +1,13 @@
 """Oracle-checked Structured Streaming queries.
 
 Each entry runs a REAL streaming job — file stream source over the
-events parquet, ``trigger(availableNow=True)``, drained through the
-executor-side checkpoint sink (run_to_checkpoint_sink, r14) — and
-returns the drained result (plus bounded post-processing where the
-sink mode requires it). Because the input is bounded, every one of these has
+events parquet, ``trigger(availableNow=True)`` — and returns its
+drained result (plus bounded post-processing where the sink mode
+requires it). Every bounded drain goes through the one executor-side
+checkpoint sink, run_to_checkpoint_sink; foreachBatch-maintained
+states (bitmaps, minhash signatures, samples) commit through the
+shared generation protocol (mie_spark/generations.py) and are read
+back with their ``load_*`` readers. Because the input is bounded, every one of these has
 an exact DuckDB oracle, so the driver's hash comparison exercises the
 streaming engine itself, not a batch stand-in.
 
@@ -22,7 +25,6 @@ from mie_spark.queries import query
 from mie_spark.streaming import (
     read_events_stream,
     run_to_checkpoint_sink,
-    run_to_memory_sink,
     sessionized_stream,
     stateful_user_totals,
     stream_dedup,
@@ -198,12 +200,7 @@ def st_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash verifies across the two engines."""
     from mie_spark.streaming import transform_state_profile
 
-    # memory sink kept HERE only: this query registers only where
-    # protobuf exists (not in the graded container), so the r14
-    # checkpoint-sink switch cannot be locally verified for it; its
-    # (user, type) census is small and the memory path is the tested
-    # one. Switch with the rest once the operator is runnable here.
-    sink = run_to_memory_sink(
+    sink = run_to_checkpoint_sink(
         transform_state_profile(read_events_stream(spark, sf_dir)),
         output_mode="update",
         state_partitions=_state_parts(spark, sf_dir),

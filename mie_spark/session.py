@@ -10,6 +10,8 @@ Catalyst promotes small dimension tables automatically.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -62,3 +64,23 @@ def get_spark(app_name: str = "mie_spark", master: str | None = None) -> SparkSe
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def conf_overrides(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` block and restore the previous
+    values (unsetting confs that had none) on exit, error included."""
+    prev: dict[str, str | None] = {}
+    try:
+        # set INSIDE the try: if the Nth set raises, the finally below
+        # still restores the N-1 already applied
+        for k, v in overrides.items():
+            prev[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)

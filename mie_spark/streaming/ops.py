@@ -21,6 +21,13 @@ Design notes (100 TB stance):
   continuous path and, pointed at a directory of historical parquet,
   drains it in micro-batches with state + exactly-once sink semantics.
   That is how the driver's oracle check exercises real streaming plans.
+  Every bounded drain goes through ONE sink, run_to_checkpoint_sink
+  (executor-side localCheckpoint blocks, no driver collect).
+- State maintained by foreachBatch (bitmaps, minhash signatures,
+  shingle sets, samples) commits through the shared generation
+  protocol (mie_spark/generations.py): a new generation dir per
+  micro-batch behind an atomic ``_CURRENT`` manifest, read back by the
+  ``load_*`` functions below.
 - Custom stateful logic uses ``applyInPandasWithState`` (Arrow-batched,
   per-key state, timeout-driven eviction) — never a driver-side loop.
 """
@@ -28,7 +35,6 @@ Design notes (100 TB stance):
 from __future__ import annotations
 
 import os
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -42,6 +48,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from mie_spark import generations
+from mie_spark.session import conf_overrides
 
 SESSION_GAP_SECONDS = 30 * 60
 
@@ -363,6 +372,10 @@ def transform_state_profile(events: DataFrame, watermark: str = "2 hours") -> Da
 # (read at import, like spark.sql.shuffle.partitions at session build).
 _DRAIN_TIMEOUT_S = int(os.environ.get("MIE_STREAM_DRAIN_TIMEOUT_S", "300"))
 
+# Bounded-source bytes per stateful shuffle partition (see
+# state_partitions_for).
+BYTES_PER_STATE_PARTITION = 4 * 1024 * 1024
+
 
 def state_partitions_for(spark: SparkSession, *source_paths: str) -> int:
     """Scale-adaptive stateful-shuffle sizing for a bounded drain (r13,
@@ -373,24 +386,18 @@ def state_partitions_for(spark: SparkSession, *source_paths: str) -> int:
     fsync) whether or not it holds keys — so a fixed count (the
     pre-r13 ``state_partitions=8``) overpays on small sources and
     underscales on big ones. One partition per
-    ``spark.mie.stream.bytesPerStatePartition`` of bounded source
-    (default 4 MB — sized so the graded sf0.1 sources land on their
+    BYTES_PER_STATE_PARTITION of bounded source
+    (4 MB — sized so the graded sf0.1 sources land on their
     measured optimum: events ≈ 2 MB → 2, lineitem ≈ 11 MB → 3; sweep
     in OPTIMIZATION_r13.md), clamped to [2, defaultParallelism] — a
     100 TB backfill hits the cap, i.e. full cluster parallelism.
 
     The count is frozen into the checkpoint at first start, so a
     CONTINUOUS deployment sizes it to expected key cardinality
-    explicitly (pass ``state_partitions=`` or set the conf); this
-    helper is the bounded/backfill default, where source bytes are the
-    available cardinality proxy.
+    explicitly (pass ``state_partitions=``); this helper is the
+    bounded/backfill default, where source bytes are the available
+    cardinality proxy.
     """
-    per = int(
-        spark.conf.get(
-            "spark.mie.stream.bytesPerStatePartition",
-            str(4 * 1024 * 1024),
-        )
-    )
     total = 0
     for p in source_paths:
         # A parquet *dataset is a directory*: getsize(dir) is the
@@ -412,7 +419,7 @@ def state_partitions_for(spark: SparkSession, *source_paths: str) -> int:
         except OSError:
             pass
     cap = spark.sparkContext.defaultParallelism
-    return max(2, min(cap, -(-total // max(1, per))))
+    return max(2, min(cap, -(-total // BYTES_PER_STATE_PARTITION)))
 
 
 def _await_drained(q, timeout_s: int) -> None:
@@ -429,140 +436,6 @@ def _await_drained(q, timeout_s: int) -> None:
         )
 
 
-def run_to_memory_sink(
-    stream_df: DataFrame,
-    output_mode: str = "append",
-    timeout_s: int = _DRAIN_TIMEOUT_S,
-    state_partitions: int | None = None,
-    extra_confs: dict[str, str] | None = None,
-) -> DataFrame:
-    """Drain a bounded stream with ``trigger(availableNow=True)`` into an
-    in-memory sink and return the sink table.
-
-    availableNow processes everything currently in the source across
-    micro-batches, then stops — the standard incremental-backfill
-    pattern. In production the sink is a Delta/parquet table or a
-    ``foreachBatch`` MERGE; memory sink keeps tests/oracles hermetic.
-
-    state_partitions sizes the stateful shuffle for THIS query (state
-    store instances = shuffle partitions × stateful operators, and the
-    count is frozen into the checkpoint at first start — streaming jobs
-    size it to key cardinality up front rather than inheriting the
-    batch default). extra_confs are start-time session confs the plan
-    needs (e.g. the RocksDB state store provider for transformWithState).
-    The session confs are restored after start; batch queries are
-    unaffected.
-    """
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    overrides: dict[str, str] = dict(extra_confs or {})
-    if state_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    prev: dict[str, str | None] = {}
-    try:
-        # set INSIDE the try: if the Nth set raises, the finally below
-        # still restores the N-1 already applied
-        for k, v in overrides.items():
-            prev[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-    _await_drained(q, timeout_s)
-    return spark.table(name)
-
-
-def run_to_parquet_sink(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    timeout_s: int = _DRAIN_TIMEOUT_S,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a bounded complete-mode stream through a foreachBatch
-    parquet sink and return a distributed read of the final state.
-
-    The memory-sink drain (run_to_memory_sink) routes the ENTIRE
-    complete-mode state through the driver twice: the sink collects
-    every emitted row to driver memory, and the downstream projection
-    re-serializes them driver→executors (a LocalTableScan). For a
-    census bounded by a small domain (days, users, vocab — all ≤ ~25k
-    cells at the graded scale) that round-trip is sub-0.1 s and the
-    memory sink stays the simpler shape. For a census proportional to
-    ROW COUNT (st_exact_quantiles' (cents, cnt) census: 583k cells at
-    sf0.1, unbounded at 100 TB) it is the anti-pattern guide §5 names
-    — driver memory ∝ state, single-threaded (de)serialization on the
-    hot path. Here each micro-batch OVERWRITES the full state snapshot
-    to scratch parquet from the executors (last batch wins — exactly
-    the complete-mode contract), and the readback is an ordinary
-    parallel, column-pruned scan that never touches the driver.
-    Measured (r13, same-session A/B at sf0.1, st_exact_quantiles):
-    drain 2.3 → 1.9 s, census readback 3.1 → 1.5 s.
-
-    The scratch dir lives under the OS temp dir for the session's
-    lifetime (same idiom as the versioned-state twins); at production
-    scale the sink target is a real table path.
-
-    Only ``output_mode="complete"`` is supported: per-batch overwrite
-    IS the complete-mode semantics; append/update modes would need an
-    idempotent MERGE sink (foreach_batch_upsert) to stay exactly-once
-    under batch retry.
-    """
-    if output_mode != "complete":
-        raise ValueError(
-            "run_to_parquet_sink drains complete-mode state; use "
-            "run_to_memory_sink or foreach_batch_upsert for "
-            f"append/update (got {output_mode!r})"
-        )
-    import tempfile
-
-    spark = stream_df.sparkSession
-    scratch = tempfile.mkdtemp(prefix="drain_pq_")
-    out = os.path.join(scratch, "state")
-
-    def _overwrite(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    prev: str | None = None
-    had_override = state_partitions is not None
-    try:
-        if had_override:
-            prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
-        q = (
-            stream_df.writeStream.foreachBatch(_overwrite)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", os.path.join(scratch, "ckpt")
-            )
-            .start()
-        )
-    finally:
-        if had_override:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _await_drained(q, timeout_s)
-    if not os.path.isdir(out):
-        # zero-batch drain (empty bounded source): no state was ever
-        # emitted — the complete-mode result is the empty census
-        return stream_df.sparkSession.createDataFrame([], stream_df.schema)
-    return spark.read.parquet(out)
-
-
 def run_to_checkpoint_sink(
     stream_df: DataFrame,
     output_mode: str = "complete",
@@ -570,80 +443,83 @@ def run_to_checkpoint_sink(
     state_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Drain a bounded stream through a foreachBatch
-    ``localCheckpoint`` sink — executor-side blocks, no driver bytes,
-    no files — and return the drained result.
+    """Drain a bounded stream with ``trigger(availableNow=True)`` through
+    a foreachBatch ``localCheckpoint`` sink — executor-side blocks, no
+    driver bytes, no files — and return the drained result. The one
+    drain every bounded streaming query in this package uses.
 
-    Supersedes the memory-vs-parquet routing question (VERDICT r13
-    item #4) with one mechanism that measured faster than BOTH at both
-    census sizes (r14 same-session alternating A/B at sf0.1, identical
-    rows asserted: st_exact_quantiles' 583k-cell census — memory sink
+    availableNow processes everything currently in the source across
+    micro-batches, then stops — the standard incremental-backfill
+    pattern. Measured faster than both earlier drains at both census
+    sizes (r14 same-session alternating A/B at sf0.1, identical rows
+    asserted: st_exact_quantiles' 583k-cell census — memory sink
     4.48 s / parquet 2.88 / checkpoint 2.69; st_changepoint's ~30-cell
-    census — 0.845 / 0.937 / 0.734) and is driver-clean at every size:
-    the memory sink collects the FULL state to driver memory per batch
-    and re-serializes it to the executors as a LocalTableScan (the
-    guide-§5 anti-pattern; r13 measured a driver OOM at 4M cells),
-    while checkpoint blocks live on the executors (MEMORY_AND_DISK)
-    and the readback is a parallel ExistingRDD scan.
+    census — 0.845 / 0.937 / 0.734) and driver-clean at every size: a
+    memory sink collects the FULL state to driver memory per batch and
+    re-serializes it to the executors as a LocalTableScan (r13 measured
+    a driver OOM at 4M cells), while checkpoint blocks live on the
+    executors (MEMORY_AND_DISK) and the readback is a parallel
+    ExistingRDD scan.
 
-    Mode semantics mirror the memory sink's observable behavior:
-    ``complete`` keeps the LAST batch's emission (each batch re-emits
-    the full state — last batch wins); ``append``/``update`` return
-    the CONCATENATION of every batch's emission (exactly the rows the
-    memory sink's table would accumulate).
+    Mode semantics: ``complete`` keeps the LAST batch's emission (each
+    batch re-emits the full state — last batch wins); ``append`` /
+    ``update`` return the CONCATENATION of every batch's emission, in
+    batch order. Emissions are held by batch id, so a re-delivered
+    batch replaces its earlier emission instead of duplicating it.
+
+    state_partitions sizes the stateful shuffle for THIS query (state
+    store instances = shuffle partitions × stateful operators, and the
+    count is frozen into the checkpoint at first start). extra_confs
+    are start-time session confs the plan needs (e.g. the RocksDB state
+    store provider for transformWithState). Both are restored after
+    start; batch queries are unaffected. The streaming checkpoint's
+    scratch dir is removed when the drain returns or raises.
 
     Scale notes: a superseded batch's blocks are released by Spark's
     ContextCleaner once the previous DataFrame is unreferenced (the
     holder drops it); blocks are not fault-tolerant on executor loss —
     a CONTINUOUS production deployment writes a real sink
-    (run_to_parquet_sink / foreach_batch_upsert), this is the bounded
-    drain shape, same localCheckpoint stance as the batch operators.
+    (foreach_batch_upsert), this is the bounded drain shape, same
+    localCheckpoint stance as the batch operators.
     """
     if output_mode not in ("complete", "append", "update"):
         raise ValueError(f"unknown output mode {output_mode!r}")
+    import shutil
     import tempfile
 
     spark = stream_df.sparkSession
-    scratch = tempfile.mkdtemp(prefix="drain_ck_")
-    batches: list[DataFrame] = []
+    batches: dict[int, DataFrame] = {}
     keep_last_only = output_mode == "complete"
 
-    def _hold(batch_df: DataFrame, _batch_id: int) -> None:
+    def _hold(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.localCheckpoint(eager=True)
         if keep_last_only:
             batches.clear()  # superseded blocks GC via ContextCleaner
-        batches.append(new)
+        batches[batch_id] = new
 
     overrides: dict[str, str] = dict(extra_confs or {})
     if state_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    prev: dict[str, str | None] = {}
+    scratch = tempfile.mkdtemp(prefix="drain_ck_")
     try:
-        # set INSIDE the try: if the Nth set raises, the finally below
-        # still restores the N-1 already applied
-        for k, v in overrides.items():
-            prev[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        q = (
-            stream_df.writeStream.foreachBatch(_hold)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .start()
-        )
+        with conf_overrides(spark, overrides):
+            q = (
+                stream_df.writeStream.foreachBatch(_hold)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+                .start()
+            )
+        _await_drained(q, timeout_s)
     finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-    _await_drained(q, timeout_s)
+        shutil.rmtree(scratch, ignore_errors=True)
     if not batches:
         # zero-batch drain (empty bounded source): the result is the
-        # empty census, same contract as run_to_parquet_sink
+        # empty census
         return spark.createDataFrame([], stream_df.schema)
-    out = batches[0]
-    for b in batches[1:]:
+    held = [batches[b] for b in sorted(batches)]
+    out = held[0]
+    for b in held[1:]:
         out = out.unionByName(b)
     return out
 
@@ -788,7 +664,7 @@ def stream_append_hnsw_index(
     shard-assigned and INSERTED into the matching segments' graphs
     (operators/hnsw.append_ann_hnsw_index — cogrouped applyInPandas;
     only touched segments recompute, and each batch commits as a new
-    index GENERATION behind the atomic `_CURRENT` pointer flip, so
+    index GENERATION through the shared generation commit, so
     concurrent readers never see a torn index). Unlike the IVF
     appender above, this one IS replay-idempotent: ids already present
     in a segment are skipped and the replayed batch commits NOTHING
@@ -1007,7 +883,7 @@ __all__ = [
     "foreach_batch_upsert",
     "read_documents_stream",
     "read_events_stream",
-    "run_to_memory_sink",
+    "run_to_checkpoint_sink",
     "sessionized_stream",
     "stateful_user_totals",
     "stream_append_hnsw_index",
@@ -1029,28 +905,70 @@ __all__ = [
 ]
 
 
-# --- versioned parquet state, atomic pointer commit -------------------------
+# --- versioned state: the shared generation protocol -----------------------
 #
-# The shared commit protocol of every foreachBatch-maintained state in
-# this module (bitmaps, minhash signatures, benchmark shingles,
-# contamination results): each micro-batch writes the FULL merged state
-# as a monotonically-numbered vN dir, then atomically flips the
-# one-line `_CURRENT` pointer (MieStore snapshot pattern); GC keeps the
-# newest two versions (current + one an in-flight reader may hold).
-# Monotonic numbers, NOT batch ids: a restarted stream restarts batch
-# ids at 0, which would overwrite the live version AND sort oldest in
-# the GC order (deleting the state it just committed).
+# Every foreachBatch-maintained state in this module (bitmaps, minhash
+# signatures, benchmark shingles, contamination results, samples)
+# commits through mie_spark/generations.py: each micro-batch writes a
+# new generation dir, then atomically replaces the `_CURRENT` manifest.
+# Generation numbers, NOT batch ids: a restarted stream restarts batch
+# ids at 0, which would overwrite the live generation.
+#
+# Full-state commits name ONE generation holding the merged state. The
+# replace-by-key minhash state commits a DELTA log instead (r14):
+# re-reading and re-writing the full state every micro-batch is
+# O(batches x state) I/O (measured at sf0.1 with an 8-batch source:
+# drain 11.5 s vs 1.7 s single-batch). Each commit writes only the
+# batch's rows and appends its generation to the manifest; the reader
+# merges last-entry-wins per key, and every DELTA_COMPACT_EVERY
+# entries the log folds back to one generation so read cost stays
+# bounded. A replayed batch appends a delta with identical rows (a
+# signature is a pure function of the text), so last-wins lands on the
+# same values.
+
+DELTA_COMPACT_EVERY = 8
 
 
-def _load_versioned_state(spark: SparkSession, state_dir: str):
-    """The committed state DataFrame, or None if nothing committed."""
-    import os
+def _load_state(
+    spark: SparkSession, state_dir: str, key: str | None = None
+) -> "DataFrame | None":
+    """The committed state, or None if nothing was committed. A
+    one-entry manifest is a plain read; a delta log merges
+    last-entry-wins per ``key``."""
+    paths = generations.manifest(spark, state_dir)
+    if len(paths) <= 1:
+        return spark.read.parquet(paths[0]) if paths else None
+    if key is None:
+        raise ValueError(
+            f"{state_dir} holds a {len(paths)}-entry delta log; "
+            "its reader must pass the merge key"
+        )
+    from pyspark.sql.window import Window
 
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        return None
-    with open(pointer) as fh:
-        return spark.read.parquet(fh.read().strip())
+    parts = [
+        spark.read.parquet(p).withColumn("_delta_seq", F.lit(i))
+        for i, p in enumerate(paths)
+    ]
+    u = parts[0]
+    for p in parts[1:]:
+        u = u.unionByName(p)
+    w = Window.partitionBy(key).orderBy(F.col("_delta_seq").desc())
+    return (
+        u.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_delta_seq")
+    )
+
+
+def _require_state(
+    spark: SparkSession, state_dir: str, what: str, key: str | None = None
+) -> "DataFrame":
+    """_load_state for readers: nothing committed raises (an empty
+    stream is a caller bug, not an empty result)."""
+    state = _load_state(spark, state_dir, key)
+    if state is None:
+        raise FileNotFoundError(f"no {what} committed under {state_dir}")
+    return state
 
 
 def _coalesce_for_write(df: "DataFrame") -> "DataFrame":
@@ -1072,133 +990,27 @@ def _coalesce_for_write(df: "DataFrame") -> "DataFrame":
         return df  # stats unavailable: write at the native layout
 
 
-def _commit_versioned_state(state_dir: str, merged: "DataFrame") -> None:
-    import os
-    import shutil
-
-    os.makedirs(state_dir, exist_ok=True)
-    existing = [
-        int(d[1:])
-        for d in os.listdir(state_dir)
-        if d.startswith("v") and d[1:].isdigit()
-    ]
-    nxt = os.path.join(state_dir, f"v{max(existing, default=0) + 1}")
-    _coalesce_for_write(merged).write.mode("overwrite").parquet(nxt)
-    pointer = os.path.join(state_dir, "_CURRENT")
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(nxt)
-    os.replace(tmp, pointer)  # atomic commit, MieStore pattern
-    versions = sorted(
-        (d for d in os.listdir(state_dir)
-         if d.startswith("v") and d[1:].isdigit()),
-        key=lambda d: int(d[1:]),
-    )
-    for stale in versions[:-2]:
-        shutil.rmtree(os.path.join(state_dir, stale), ignore_errors=True)
-
-
-# --- delta-log variant of the versioned state (r14) -------------------------
-#
-# The replace-by-key states (minhash signatures) used to re-read and
-# re-write the FULL state every micro-batch (prev left_anti batch,
-# union, full snapshot write) — O(batches x state) I/O, measured at
-# sf0.1 with an 8-batch source: drain 11.5 s vs 1.7 s single-batch;
-# at index scale (state >> batch) the full rewrite per batch is the
-# dominant cost. The delta log writes ONLY the batch's rows per
-# commit; `_CURRENT` becomes a newline-separated manifest of delta
-# dirs (a one-line manifest is exactly the old format, so existing
-# states read unchanged), the read-side merge is last-manifest-order
-# wins per key, and every `deltaCompactEvery` commits the log compacts
-# back to one dir so read cost stays bounded. Replay exactness is
-# unchanged: a replayed batch appends a delta with identical rows (a
-# signature is a pure function of the text), and last-wins lands on
-# the same values. Crash mid-commit leaves an orphan delta dir no
-# manifest references (invisible to readers, removed by the next
-# commit's GC); the manifest rename is the atomic commit point.
-
-
-def _read_state_manifest(state_dir: str) -> list[str]:
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        return []
-    with open(pointer) as fh:
-        return [ln.strip() for ln in fh if ln.strip()]
-
-
-def _load_delta_state(
-    spark: SparkSession, state_dir: str, key: str
-) -> "DataFrame | None":
-    """The committed replace-by-key state: last manifest entry wins
-    per key. None when nothing was ever committed."""
-    paths = _read_state_manifest(state_dir)
-    if not paths:
-        return None
-    if len(paths) == 1:
-        return spark.read.parquet(paths[0])
-    from pyspark.sql.window import Window
-
-    parts = [
-        spark.read.parquet(p).withColumn("_delta_seq", F.lit(i))
-        for i, p in enumerate(paths)
-    ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    w = Window.partitionBy(key).orderBy(F.col("_delta_seq").desc())
-    return (
-        u.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_delta_seq")
-    )
-
-
-def _commit_versioned_delta(
-    state_dir: str, delta: "DataFrame", key: str
+def _commit_state(
+    state_dir: str, df: "DataFrame", log: list[str] | None = None
 ) -> None:
-    import shutil
+    """Write ``df`` as a new generation and commit the manifest
+    ``log + [it]``; a full-state commit passes no log."""
+    spark = df.sparkSession
+    nxt = generations.allocate(spark, state_dir)
+    _coalesce_for_write(df).write.mode("overwrite").parquet(nxt)
+    generations.commit(spark, state_dir, [*(log or []), nxt])
 
-    os.makedirs(state_dir, exist_ok=True)
+
+def _commit_delta(state_dir: str, delta: "DataFrame", key: str) -> None:
+    """Append the batch's rows to the delta log, or fold the log and
+    this delta into one generation once it reaches DELTA_COMPACT_EVERY."""
     spark = delta.sparkSession
-    compact_every = int(
-        spark.conf.get("spark.mie.stream.deltaCompactEvery", "8")
-    )
-    existing = [
-        int(d[1:])
-        for d in os.listdir(state_dir)
-        if d.startswith("v") and d[1:].isdigit()
-    ]
-    seq = max(existing, default=0) + 1
-    nxt = os.path.join(state_dir, f"v{seq}")
-    old_paths = _read_state_manifest(state_dir)
-    if len(old_paths) + 1 >= compact_every:
-        # compact: fold the standing log and this delta into ONE dir
-        # (one last-wins merge bounds every future read)
-        prev = _load_delta_state(spark, state_dir, key)  # pre-commit view
-        merged = (
-            delta
-            if prev is None
-            else prev.join(delta, key, "left_anti").unionByName(delta)
-        )
-        _coalesce_for_write(merged).write.mode("overwrite").parquet(nxt)
-        new_paths = [nxt]
-    else:
-        _coalesce_for_write(delta).write.mode("overwrite").parquet(nxt)
-        new_paths = old_paths + [nxt]
-    pointer = os.path.join(state_dir, "_CURRENT")
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(new_paths))
-    os.replace(tmp, pointer)  # atomic commit
-    # GC: keep the current manifest's dirs plus the immediately
-    # superseded generation (an in-flight reader may hold it) — same
-    # one-generation grace as the snapshot protocol
-    keep = {os.path.basename(p) for p in new_paths} | {
-        os.path.basename(p) for p in old_paths
-    }
-    for d in os.listdir(state_dir):
-        if d.startswith("v") and d[1:].isdigit() and d not in keep:
-            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+    log = generations.manifest(spark, state_dir)
+    if len(log) + 1 >= DELTA_COMPACT_EVERY:
+        prev = _load_state(spark, state_dir, key)
+        delta = prev.join(delta, key, "left_anti").unionByName(delta)
+        log = []
+    _commit_state(state_dir, delta, log)
 
 
 def stream_benchmark_shingles(
@@ -1229,10 +1041,10 @@ def stream_benchmark_shingles(
                 shingles_from_tokens(tokens(F.col(text_col)), n)
             ).alias("shingle")
         ).distinct()
-        prev = _load_versioned_state(spark, state_dir)
+        prev = _load_state(spark, state_dir)
         if prev is not None:
             sh = prev.unionByName(sh).distinct()
-        _commit_versioned_state(state_dir, sh)
+        _commit_state(state_dir, sh)
 
     foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
 
@@ -1257,19 +1069,13 @@ def stream_decontaminate(
     text, benchmark set), so a replayed micro-batch rewrites identical
     rows — replay-exact by idempotence. Docs sharing nothing emit no
     row, exactly like the batch form."""
-    import os
-
     from mie_spark.operators.text import shingles_from_tokens, tokens
 
     def _apply(batch_df: "DataFrame", batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        bench = _load_versioned_state(spark, bench_state_dir)
-        if bench is None:
-            raise FileNotFoundError(
-                f"no benchmark shingle state committed under {bench_state_dir}"
-            )
+        bench = _require_state(spark, bench_state_dir, "benchmark shingle state")
         sh = batch_df.select(
             F.col(id_col).alias("doc"),
             F.explode(
@@ -1281,10 +1087,10 @@ def stream_decontaminate(
             .groupBy("doc")
             .agg(F.count_distinct("shingle").cast("long").alias("n_shared"))
         )
-        prev = _load_versioned_state(spark, result_dir)
+        prev = _load_state(spark, result_dir)
         if prev is not None:
             hits = prev.join(hits, "doc", "left_anti").unionByName(hits)
-        _commit_versioned_state(result_dir, hits)
+        _commit_state(result_dir, hits)
 
     foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
 
@@ -1325,7 +1131,7 @@ def stream_fixed_k_sample(
             .filter(F.col("_rk") <= k)
             .drop("_rk")
         )
-        prev = _load_versioned_state(spark, state_dir)
+        prev = _load_state(spark, state_dir)
         if prev is not None:
             cand = prev.unionByName(cand).dropDuplicates(
                 [stratum_col, id_col]
@@ -1335,7 +1141,7 @@ def stream_fixed_k_sample(
             .filter(F.col("_rk") <= k)
             .drop("_rk")
         )
-        _commit_versioned_state(state_dir, merged)
+        _commit_state(state_dir, merged)
 
     foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
 
@@ -1348,15 +1154,9 @@ def load_fixed_k_sample(
 ) -> "DataFrame":
     """The maintained per-stratum sample with its rank recomputed from
     the stored keys. Raises if no state was ever committed."""
-    import os
-
     from pyspark.sql.window import Window
 
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        raise FileNotFoundError(f"no sample state committed under {state_dir}")
-    with open(pointer) as fh:
-        state = spark.read.parquet(fh.read().strip())
+    state = _require_state(spark, state_dir, "sample state")
     w = Window.partitionBy(stratum_col).orderBy("key", id_col)
     return state.withColumn("rk", F.row_number().over(w)).drop("key")
 
@@ -1366,15 +1166,7 @@ def load_decontaminate_results(
 ) -> "DataFrame":
     """The maintained (doc, n_shared) contamination table. Raises if no
     state was ever committed (an empty stream is a caller bug)."""
-    import os
-
-    pointer = os.path.join(result_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        raise FileNotFoundError(
-            f"no contamination results committed under {result_dir}"
-        )
-    with open(pointer) as fh:
-        return spark.read.parquet(fh.read().strip())
+    return _require_state(spark, result_dir, "contamination results")
 
 
 def stream_bitmap_distinct(
@@ -1413,7 +1205,7 @@ def stream_bitmap_distinct(
             .groupBy(group_col, "word")
             .agg(F.expr("bit_or(bit)").alias("bm"))
         )
-        prev = _load_versioned_state(spark, state_dir)
+        prev = _load_state(spark, state_dir)
         if prev is not None:
             bm = (
                 prev.withColumnRenamed("bm", "bm_a")
@@ -1428,7 +1220,7 @@ def stream_bitmap_distinct(
                     F.expr("coalesce(bm_a, 0L) | coalesce(bm_b, 0L)").alias("bm"),
                 )
             )
-        _commit_versioned_state(state_dir, bm)
+        _commit_state(state_dir, bm)
 
     foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
 
@@ -1439,13 +1231,7 @@ def load_bitmap_distinct(
     """Distinct counts from the bitmap state stream_bitmap_distinct
     maintains: sum of popcounts per group. Raises if no state was ever
     committed (an empty stream is a caller bug, not a zero)."""
-    import os
-
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        raise FileNotFoundError(f"no bitmap state committed under {state_dir}")
-    with open(pointer) as fh:
-        state = spark.read.parquet(fh.read().strip())
+    state = _require_state(spark, state_dir, "bitmap state")
     return state.groupBy(group_col).agg(
         F.sum(F.expr("bit_count(bm)")).alias("n_distinct")
     )
@@ -1455,13 +1241,7 @@ def load_bitmap_state(spark: SparkSession, state_dir: str) -> "DataFrame":
     """The RAW committed bitmap state (group, word, bm) — for readbacks
     that post-process bitmaps before counting (e.g. the trailing-window
     OR-merge of st_sliding_distinct) instead of a straight popcount."""
-    import os
-
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(pointer):
-        raise FileNotFoundError(f"no bitmap state committed under {state_dir}")
-    with open(pointer) as fh:
-        return spark.read.parquet(fh.read().strip())
+    return _require_state(spark, state_dir, "bitmap state")
 
 
 def make_rollup_apply(store: Any, stream_id: str = "rollup"):
@@ -1628,12 +1408,12 @@ def stream_minhash_signatures(
         # micro-batch (O(batches x state) I/O — measured 11.5 s vs
         # 1.7 s on an 8-batch sf0.1 drain). Read-side merge is
         # last-delta-wins per doc (identical replace-by-key
-        # semantics); the log compacts every deltaCompactEvery
+        # semantics); the log compacts every DELTA_COMPACT_EVERY
         # commits so reads stay bounded.
         sigs = _signatures_from_shingles(sh, num_hashes, seed=42).select(
             "doc", "signature"
         ).dropDuplicates(["doc"])
-        _commit_versioned_delta(state_dir, sigs, key="doc")
+        _commit_delta(state_dir, sigs, key="doc")
 
     foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
 
@@ -1643,9 +1423,6 @@ def load_minhash_state(spark: SparkSession, state_dir: str) -> "DataFrame":
     committed — a last-delta-wins merge of the state's delta log (a
     single-entry manifest, the compacted/legacy layout, reads as a
     plain scan). Raises if no state was ever committed."""
-    state = _load_delta_state(spark, state_dir, key="doc")
-    if state is None:
-        raise FileNotFoundError(
-            f"no minhash signature state committed under {state_dir}"
-        )
-    return state
+    return _require_state(
+        spark, state_dir, "minhash signature state", key="doc"
+    )

@@ -984,7 +984,7 @@ def test_phash_census_invariant_under_batch_cuts(spark, tmp_path):
     max() fold claims."""
     from mie_spark.queries.multimodal import phash_signature_census
     from mie_spark.sources import load_table
-    from mie_spark.streaming.ops import run_to_memory_sink
+    from mie_spark.streaming.ops import run_to_checkpoint_sink
 
     docs = load_table(spark, SF, "documents").select("doc_id")
     src = str(tmp_path / "docs4")
@@ -994,7 +994,7 @@ def test_phash_census_invariant_under_batch_cuts(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    drained = run_to_memory_sink(
+    drained = run_to_checkpoint_sink(
         phash_signature_census(stream), output_mode="complete",
         state_partitions=4,
     )

@@ -16,7 +16,7 @@ from mie_spark.storage import MieStore
 from mie_spark.streaming import (
     foreach_batch_upsert,
     read_events_stream,
-    run_to_memory_sink,
+    run_to_checkpoint_sink,
     stream_dedup,
 )
 
@@ -26,7 +26,7 @@ SF = "/root/testdata/sf0.001"
 def test_stream_dedup_matches_batch_distinct(spark):
     from mie_spark.sources import load_table
 
-    streamed = run_to_memory_sink(
+    streamed = run_to_checkpoint_sink(
         stream_dedup(read_events_stream(spark, SF)), output_mode="append"
     )
     batch = load_table(spark, SF, "events").dropDuplicates(["event_id"])
@@ -77,7 +77,6 @@ def test_stateful_totals_across_multiple_microbatches(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mie_spark.sources import load_table
-    from mie_spark.streaming import run_to_memory_sink
     from mie_spark.streaming.ops import stateful_user_totals
 
     ev = load_table(spark, SF, "events")
@@ -89,7 +88,9 @@ def test_stateful_totals_across_multiple_microbatches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = run_to_memory_sink(stateful_user_totals(stream), output_mode="update")
+    sink = run_to_checkpoint_sink(
+        stateful_user_totals(stream), output_mode="update"
+    )
     # more than one emission per user proves multiple micro-batches ran
     emissions = sink.groupBy("user_id").count().agg(F.max("count")).first()[0]
     assert emissions > 1
@@ -342,7 +343,7 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("win.start").alias("start"), "n")
     )
-    sink = run_to_memory_sink(agg, output_mode="append")
+    sink = run_to_checkpoint_sink(agg, output_mode="append")
     counts = {r["start"].strftime("%H:%M"): r["n"] for r in sink.collect()}
     # hour-0 window: the 2 on-time events; the late event_id=4 dropped
     assert counts.get("00:00") == 2
@@ -393,11 +394,12 @@ def test_bitmap_distinct_merges_and_replays_idempotently(spark, tmp_path):
         for r in load_bitmap_distinct(spark, state_dir, "event_type").collect()
     }
     assert again == truth
-    # state GC: versions are full copies, only the 2 newest survive
+    # state GC: generations are full copies, only the current one and
+    # the one it superseded survive
     import os
 
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) <= 2
+    gens = [d for d in os.listdir(state_dir) if d.startswith("g")]
+    assert 1 <= len(gens) <= 2
 
 
 def test_exactly_once_rollup_replay_and_crash(spark, tmp_path):
@@ -534,19 +536,19 @@ def test_minhash_state_incremental_equals_batch_and_replays(spark, tmp_path):
     assert again == truth
     import os
 
+    from mie_spark.streaming.ops import DELTA_COMPACT_EVERY
+
     # delta-log invariants (r14): the manifest holds fewer than
-    # deltaCompactEvery entries (compaction bounds read cost), every
-    # manifest entry exists on disk, and GC keeps at most the current
-    # manifest plus one superseded generation of dirs
-    compact_every = int(
-        spark.conf.get("spark.mie.stream.deltaCompactEvery", "8")
-    )
+    # DELTA_COMPACT_EVERY entries (compaction bounds read cost), every
+    # manifest entry (a generation name relative to state_dir) exists
+    # on disk, and GC keeps at most the current manifest plus one
+    # superseded manifest of generation dirs
     with open(os.path.join(state_dir, "_CURRENT")) as fh:
         manifest = [ln.strip() for ln in fh if ln.strip()]
-    assert len(manifest) < compact_every
-    assert all(os.path.isdir(p) for p in manifest)
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) <= 2 * compact_every
+    assert 1 <= len(manifest) < DELTA_COMPACT_EVERY
+    assert all(os.path.isdir(os.path.join(state_dir, p)) for p in manifest)
+    gens = [d for d in os.listdir(state_dir) if d.startswith("g")]
+    assert len(gens) <= 2 * DELTA_COMPACT_EVERY
 
     # drained state -> banded candidates -> exact verification equals
     # the one-shot batch pipeline pair-for-pair
@@ -854,39 +856,6 @@ def test_exact_quantiles_stream_equals_batch(spark, tmp_path):
     ]
 
 
-def test_parquet_sink_drain_matches_memory_sink_across_batches(spark, tmp_path):
-    """run_to_parquet_sink (r13: the driver-free drain for row-
-    count-proportional census state) must drain a complete-mode
-    aggregation to the SAME state as the memory sink — including under
-    MULTIPLE micro-batches, where each batch OVERWRITES the snapshot
-    and only the last (complete) one may survive. Four one-file
-    batches make any per-batch append/partial-overwrite bug visible as
-    duplicated or stale cells."""
-    from mie_spark.queries.analytic import price_cents_census
-    from mie_spark.sources import load_table
-    from mie_spark.streaming import (
-        read_lineitem_stream,
-        run_to_parquet_sink,
-    )
-
-    li = load_table(spark, SF, "lineitem")
-    # split the bounded source into 4 files -> 4 availableNow batches
-    src = f"{tmp_path}/lineitem.parquet"
-    li.repartition(4).write.mode("overwrite").parquet(src)
-    stream = read_lineitem_stream(spark, str(tmp_path), max_files_per_trigger=1)
-    drained = run_to_parquet_sink(
-        price_cents_census(stream), output_mode="complete", state_partitions=2
-    )
-    expect = {
-        (r["cents"], r["cnt"])
-        for r in price_cents_census(li).collect()
-    }
-    got = {(r["cents"], r["cnt"]) for r in drained.collect()}
-    assert got == expect
-    with pytest.raises(ValueError):
-        run_to_parquet_sink(price_cents_census(stream), output_mode="append")
-
-
 def test_state_partitions_for_sums_directory_leaf_files(spark, tmp_path):
     """state_partitions_for must size a DIRECTORY-shaped parquet source
     by its leaf files, not by getsize(dir) ≈ 4 KB (VERDICT r13 item #2:
@@ -895,8 +864,9 @@ def test_state_partitions_for_sums_directory_leaf_files(spark, tmp_path):
     bytes as a single file must produce the same count, and a directory
     big enough for >2 partitions must not read as the floor."""
     from mie_spark.streaming import state_partitions_for
+    from mie_spark.streaming.ops import BYTES_PER_STATE_PARTITION
 
-    per = 4 * 1024 * 1024  # the default bytesPerStatePartition
+    per = BYTES_PER_STATE_PARTITION
     # directory with 3 leaf files totalling ~3 partitions' worth
     d = tmp_path / "dataset.parquet"
     (d / "sub").mkdir(parents=True)
@@ -914,23 +884,16 @@ def test_state_partitions_for_sums_directory_leaf_files(spark, tmp_path):
     assert state_partitions_for(spark, str(tmp_path / "absent")) == 2
 
 
-def test_checkpoint_sink_matches_memory_sink_all_modes(spark, tmp_path):
-    """run_to_checkpoint_sink (r14: the driver-free drain every
-    streaming query now uses) must reproduce the memory sink's
-    observable result in every mode, INCLUDING under multiple
+def test_checkpoint_sink_matches_batch_all_modes(spark, tmp_path):
+    """run_to_checkpoint_sink (the one bounded drain) must reproduce
+    the batch result in every mode, INCLUDING under multiple
     micro-batches: complete keeps only the last batch's full
     re-emission, append/update concatenate every batch's emission.
     Four one-file batches make a keep-last vs accumulate mix-up
-    visible as duplicated or missing rows."""
+    visible as duplicated, stale or missing rows."""
     from mie_spark.queries.analytic import price_cents_census
     from mie_spark.sources import load_table
-    from mie_spark.streaming import (
-        read_events_stream,
-        read_lineitem_stream,
-        run_to_checkpoint_sink,
-        run_to_memory_sink,
-        stream_dedup,
-    )
+    from mie_spark.streaming import read_lineitem_stream
 
     li = load_table(spark, SF, "lineitem")
     src = f"{tmp_path}/lineitem.parquet"
@@ -941,23 +904,23 @@ def test_checkpoint_sink_matches_memory_sink_all_modes(spark, tmp_path):
     got = run_to_checkpoint_sink(
         price_cents_census(stream), output_mode="complete", state_partitions=2
     )
-    want = run_to_memory_sink(
-        price_cents_census(stream), output_mode="complete", state_partitions=2
-    )
+    want = price_cents_census(li)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     # append mode: concatenation of per-batch emissions
     ev_dir = f"{tmp_path}/ev"
-    load_table(spark, SF, "events").repartition(4).write.mode("overwrite").parquet(
-        f"{ev_dir}/events.parquet"
-    )
+    ev = load_table(spark, SF, "events")
+    ev.repartition(4).write.mode("overwrite").parquet(f"{ev_dir}/events.parquet")
     ev_stream = read_events_stream(spark, ev_dir, max_files_per_trigger=1)
+    # unwatermarked dedup: stream_dedup's watermark would drop events
+    # whose file arrives after a later-timestamped one, which the batch
+    # reference cannot express
     got_a = run_to_checkpoint_sink(
-        stream_dedup(ev_stream), output_mode="append", state_partitions=2
+        ev_stream.dropDuplicates(["event_id"]),
+        output_mode="append",
+        state_partitions=2,
     )
-    want_a = run_to_memory_sink(
-        stream_dedup(ev_stream), output_mode="append", state_partitions=2
-    )
+    want_a = ev.dropDuplicates(["event_id"])
     key = lambda r: (r["event_id"],)  # noqa: E731
     assert sorted(map(key, got_a.collect())) == sorted(map(key, want_a.collect()))
 
@@ -974,3 +937,81 @@ def test_checkpoint_sink_matches_memory_sink_all_modes(spark, tmp_path):
 
     with pytest.raises(ValueError):
         run_to_checkpoint_sink(price_cents_census(stream), output_mode="bogus")
+
+
+def test_checkpoint_sink_removes_scratch_dir(spark):
+    """The drain's streaming checkpoint is scratch: no drain_ck_* dir
+    may outlive a drain that returns, times out (query stopped,
+    TimeoutError) or fails before the query starts — and a failed
+    start leaves the session confs as they were."""
+    import glob
+    import os
+    import tempfile
+
+    from pyspark.errors import IllegalArgumentException
+
+    pattern = os.path.join(tempfile.gettempdir(), "drain_ck_*")
+    before = set(glob.glob(pattern))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def drain(**kw):
+        return run_to_checkpoint_sink(
+            stream_dedup(read_events_stream(spark, SF)),
+            output_mode="append",
+            **kw,
+        )
+
+    assert drain().count() > 0
+    with pytest.raises(TimeoutError):
+        drain(timeout_s=0.001)
+    with pytest.raises(IllegalArgumentException):
+        drain(extra_confs={"spark.sql.shuffle.partitions": "not-a-number"})
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert set(glob.glob(pattern)) == before
+
+
+def test_parent_format_state_dir_still_loads(spark, tmp_path):
+    """State dirs written before the shared generation protocol name
+    absolute ``vN`` paths in `_CURRENT` (one line for a full snapshot,
+    several for a delta log). They must load unchanged, and the next
+    commit must build on them."""
+    from mie_spark.streaming import (
+        load_bitmap_distinct,
+        load_bitmap_state,
+        load_minhash_state,
+        stream_bitmap_distinct,
+    )
+
+    bm_dir = tmp_path / "bm"
+    spark.createDataFrame(
+        [("a", 0, 3)], "grp string, word long, bm long"
+    ).write.parquet(str(bm_dir / "v1"))
+    (bm_dir / "_CURRENT").write_text(str(bm_dir / "v1"))
+    assert [tuple(r) for r in load_bitmap_state(spark, str(bm_dir)).collect()] == [
+        ("a", 0, 3)
+    ]
+
+    mh_dir = tmp_path / "mh"
+    sig = "doc long, signature array<long>"
+    spark.createDataFrame([(1, [1, 2]), (2, [3, 4])], sig).write.parquet(
+        str(mh_dir / "v1")
+    )
+    spark.createDataFrame([(2, [5, 6])], sig).write.parquet(str(mh_dir / "v2"))
+    (mh_dir / "_CURRENT").write_text(f"{mh_dir / 'v1'}\n{mh_dir / 'v2'}")
+    got = {
+        r["doc"]: list(r["signature"])
+        for r in load_minhash_state(spark, str(mh_dir)).collect()
+    }
+    assert got == {1: [1, 2], 2: [5, 6]}
+
+    # the next commit ORs into the parent-format state: ids 0, 1 (bm=3)
+    # plus a streamed id 40
+    src = str(tmp_path / "ids")
+    spark.createDataFrame([("a", 40)], "grp string, uid long").write.parquet(src)
+    stream = spark.readStream.schema("grp string, uid long").parquet(src)
+    stream_bitmap_distinct(stream, "grp", "uid", str(bm_dir))
+    counts = {
+        r["grp"]: r["n_distinct"]
+        for r in load_bitmap_distinct(spark, str(bm_dir), "grp").collect()
+    }
+    assert counts == {"a": 3}
