@@ -6,10 +6,11 @@ filesystem root (or pointed at directly via MIE_CONFIG_PATH), version-
 checked, then overlaid with environment variables so a deployment can
 tweak one knob without editing the file. The struct shape and env names
 match the reference; the engine names map to THIS engine's storage
-plane — ``mem`` (driver pandas) and ``parquet`` (versioned snapshots,
-storage.py). The reference's ``sqlite``/``rocksdb`` names are accepted
-as aliases of ``parquet`` so an existing config file keeps working
-after a switch.
+plane, which is one engine (versioned parquet snapshots, storage.py)
+in two lifetimes — ``parquet`` keeps them in the configured directory,
+``mem`` in a throwaway temp directory removed at exit. The reference's
+``sqlite``/``rocksdb`` names are accepted as aliases of ``parquet`` so
+an existing config file keeps working after a switch.
 """
 
 from __future__ import annotations
@@ -214,8 +215,9 @@ def default_data_dir() -> str:
 
 
 def resolve_storage_path(cfg: Config) -> str | None:
-    """Effective MieStore path: None selects the mem engine; otherwise
-    the configured (or default) snapshot directory (config.go:162-176)."""
+    """Effective MieStore path: None (``mem``) opens an ephemeral store
+    on a temp directory removed at exit; otherwise the configured (or
+    default) snapshot directory (config.go:162-176)."""
     if cfg.storage.engine == "mem":
         return None
     return cfg.storage.path or default_data_dir()

@@ -1,42 +1,43 @@
-"""Storage plane: upsert-by-key tables behind two engines.
+"""Storage plane: upsert-by-key tables on one engine.
 
 Engine mapping (SURVEY.md §1.5 — the reference opens CozoDB as `mem`,
-`rocksdb`, or `sqlite`, storage/embedded.go:35-70):
+`rocksdb`, or `sqlite`, storage/embedded.go:35-70, one query engine
+under every back end). Here every store is versioned parquet snapshots
+per table with an atomic `_CURRENT` pointer file, read and written
+entirely by Spark; the back end is only WHERE the snapshots live:
 
-- ``mem``      → driver-held pandas frames, surfaced as Spark DataFrames
-                 on read. The reference's mem engine is a single-process
-                 store too; this is the documented tiny-table latency
-                 fast path (unit tests, 18-table graph workloads of
-                 thousands of rows) and the ONLY place pandas appears.
-- ``parquet``  → versioned parquet snapshots per table with an atomic
-                 `_CURRENT` pointer file, read and written entirely by
-                 Spark: ``table()`` is a lazy ``spark.read.parquet``
-                 (scans distribute, filters push down), upsert =
-                 anti-join on keys ∪ new rows executed as one Spark
-                 plan whose write action streams straight to snapshot
-                 N+1 — no driver materialization at any point, so the
-                 write path scales with the cluster, not the driver.
-                 The pointer-flip is the transaction commit (poor-man's
-                 MVCC); on a warehouse deployment the same call maps to
-                 one Delta `MERGE INTO` (not shippable in this
-                 container). GC keeps the 2 newest snapshots, so a lazy
-                 reader survives exactly ONE commit after it was opened;
-                 a handle held across two or more commits loses its
-                 files — re-open via table() for fresh reads (the same
-                 contract as Delta's VACUUM horizon, just shorter).
+- a ``path``   → a durable store directory (the reference's
+                 ``rocksdb``/``sqlite``).
+- no path      → an ephemeral store (the reference's ``mem``): the same
+                 engine on a private ``tempfile.mkdtemp`` directory,
+                 removed at interpreter exit — not on garbage
+                 collection, so a lazy DataFrame never outlives its
+                 files.
 
-                 Snapshots are PARTITIONED by a stable key-hash bucket
-                 (``bkt=K`` subdirs, ``merge_buckets`` of them): a merge
-                 reads and rewrites ONLY the buckets the batch touches
-                 (partition pruning on the read, ``partitionBy`` on the
-                 write) and hard-links every untouched bucket's files
-                 from the previous snapshot — O(batch) I/O per commit
-                 instead of O(table), which is the difference between a
-                 usable and an unusable write path at 100 TB. Hard links
-                 keep each snapshot a self-contained full table, so the
-                 pointer flip, GC, pinning, time travel, and backup all
-                 work unchanged (deleting an old version only drops link
-                 counts, never shared file content).
+``table()`` is a lazy ``spark.read.parquet`` (scans distribute, filters
+push down); upsert = anti-join on keys ∪ new rows executed as one Spark
+plan whose write action streams straight to snapshot N+1 — no driver
+materialization at any point, so the write path scales with the
+cluster, not the driver. Every write (upsert, delete, compact, restore)
+prepares invisible snapshots and commits them through one multi-table
+manifest rename (:meth:`MieStore._commit_txn`, poor-man's MVCC); on a
+warehouse deployment the same call maps to one Delta `MERGE INTO` (not
+shippable in this container). GC keeps the 2 newest snapshots, so a
+lazy reader survives exactly ONE commit after it was opened; a handle
+held across two or more commits loses its files — re-open via table()
+for fresh reads (the same contract as Delta's VACUUM horizon, just
+shorter).
+
+Snapshots are PARTITIONED by a stable key-hash bucket (``bkt=K``
+subdirs, ``merge_buckets`` of them): a merge or delete reads and
+rewrites ONLY the buckets the batch touches (partition pruning on the
+read, ``partitionBy`` on the write) and hard-links every untouched
+bucket's files from the previous snapshot — O(batch) I/O per commit
+instead of O(table), which is the difference between a usable and an
+unusable write path at 100 TB. Hard links keep each snapshot a
+self-contained full table, so the pointer flip, GC, pinning, time
+travel, and backup all work unchanged (deleting an old version only
+drops link counts, never shared file content).
 
 Upsert parity with CozoDB `:put` (writer.go:61-67 etc.): insert or
 replace whole row by key — idempotent with content-hash IDs.
@@ -44,14 +45,16 @@ replace whole row by key — idempotent with content-hash IDs.
 
 from __future__ import annotations
 
+import atexit
 import json
+import math
 import os
 import shutil
+import tempfile
 import threading
 import time
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from mie_spark.schemas import (
@@ -128,8 +131,8 @@ def _file_zone_stats(path: str) -> dict[str, list]:
 
 
 def _py_native(value: Any, dtype) -> Any:  # noqa: ANN001
-    """Coerce pandas/numpy values to the python types Spark's row
-    verifier accepts for the given Spark type."""
+    """Coerce numpy values to the python types Spark's row verifier
+    accepts for the given Spark type."""
     import numpy as np
 
     from pyspark.sql.types import (
@@ -141,7 +144,7 @@ def _py_native(value: Any, dtype) -> Any:  # noqa: ANN001
         LongType,
     )
 
-    if value is None or (isinstance(value, float) and pd.isna(value)):
+    if value is None or (isinstance(value, float) and math.isnan(value)):
         return None
     if isinstance(dtype, ArrayType):
         if isinstance(value, (list, tuple, np.ndarray)):
@@ -191,6 +194,11 @@ class MieStore:
         if merge_buckets < 1:
             raise ValueError(f"merge_buckets must be >= 1, got {merge_buckets}")
         self.spark = spark
+        if not path:
+            # Ephemeral store: removed at exit, never on GC, because a
+            # lazy DataFrame read from it may outlive this object.
+            path = tempfile.mkdtemp(prefix="mie-store-")
+            atexit.register(shutil.rmtree, path, ignore_errors=True)
         self.path = path
         self.embedding_dim = embedding_dim
         # Bucket count for the partitioned-merge layout. Buckets are a
@@ -207,16 +215,14 @@ class MieStore:
         # opened N commits ago keeps its files — the same knob as
         # Delta's VACUUM retention horizon.
         self.snapshot_retention = snapshot_retention
-        self._mem: dict[str, pd.DataFrame] = {}
         # Writers fully serialize, matching the reference's single
         # RWMutex over the DB (storage/embedded.go:23-25,88-133): every
         # mutation is read-snapshot -> modify -> commit-pointer, so two
         # unserialized writers would lose one's rows. Reads need no lock
         # (snapshots are immutable; the pointer flip is atomic).
         self._write_lock = threading.RLock()
-        if path:
-            os.makedirs(path, exist_ok=True)
-            self._recover_txn()
+        os.makedirs(path, exist_ok=True)
+        self._recover_txn()
         self.ensure_schema()
 
     # -- schema ---------------------------------------------------------
@@ -229,11 +235,7 @@ class MieStore:
 
     # -- engine plumbing --------------------------------------------------
 
-    def _empty_pdf(self, table: str) -> pd.DataFrame:
-        return pd.DataFrame({f.name: pd.Series(dtype="object") for f in table_schema(table)})
-
     def _snapshot_dir(self, table: str) -> str | None:
-        assert self.path is not None
         pointer = os.path.join(self.path, table, "_CURRENT")
         version = None
         if os.path.exists(pointer):
@@ -257,7 +259,6 @@ class MieStore:
         """The committed multi-table transaction, if one is mid-roll-
         forward ({} otherwise). Best-effort read: a torn tmp file never
         exists at this path (os.replace is atomic), but guard anyway."""
-        assert self.path is not None
         p = os.path.join(self.path, TXN_FILE)
         if not os.path.exists(p):
             return {}
@@ -291,16 +292,6 @@ class MieStore:
                 self._commit_snapshot(table, version)
         os.remove(os.path.join(self.path, TXN_FILE))
 
-    def _read_pdf(self, table: str) -> pd.DataFrame:
-        """Mem-engine read (driver pandas). On-disk reads go through
-        Spark in table() — never through pandas."""
-        assert self.path is None
-        return self._mem.get(table, self._empty_pdf(table))
-
-    def _write_pdf(self, table: str, pdf: pd.DataFrame) -> None:
-        assert self.path is None
-        self._mem[table] = pdf.reset_index(drop=True)
-
     def _next_snapshot(self, table: str) -> tuple[str, str]:
         """(dir, version) for the next snapshot write."""
         tdir = os.path.join(self.path, table)
@@ -312,17 +303,18 @@ class MieStore:
         return os.path.join(tdir, next_v), next_v
 
     def _commit_snapshot(self, table: str, version: str) -> None:
-        """Atomic pointer flip, then GC all but the `snapshot_retention`
-        newest versions (default 2: the previous one stays so lazy
-        readers opened before this commit keep their files). Pinned
-        versions (see pin_current) are exempt from GC — they back named
-        backups and long-lived readers, the same contract as Delta's
-        VACUUM retention."""
+        """Roll-forward step of a committed transaction (called only by
+        _commit_txn and _recover_txn): atomic pointer flip, then GC all
+        but the `snapshot_retention` newest versions (default 2: the
+        previous one stays so lazy readers opened before this commit
+        keep their files). Pinned versions (see pin_current) are exempt
+        from GC — they back named backups and long-lived readers, the
+        same contract as Delta's VACUUM retention."""
         tdir = os.path.join(self.path, table)
         tmp_pointer = os.path.join(tdir, "_CURRENT.tmp")
         with open(tmp_pointer, "w") as fh:
             fh.write(version)
-        os.replace(tmp_pointer, os.path.join(tdir, "_CURRENT"))  # commit point
+        os.replace(tmp_pointer, os.path.join(tdir, "_CURRENT"))
         pinned = set(self.pinned_versions(table))
         versions = sorted(
             (d for d in os.listdir(tdir) if d.startswith("v") and d[1:].isdigit()),
@@ -343,28 +335,64 @@ class MieStore:
             F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.merge_buckets)
         ).cast("int")
 
-    def _write_df(
-        self, table: str, df: DataFrame, defer_commit: bool = False
+    def _touched_buckets(
+        self, table: str, snap: str, keys_df: DataFrame
+    ) -> list[int] | None:
+        """The buckets a batch's keys hash to ([] for an empty batch),
+        or None when the rewrite must cover the whole table: the
+        snapshot predates the bucketed layout, or the batch touches
+        every bucket anyway."""
+        touched = sorted(
+            r["bkt"]
+            for r in keys_df.select(self._bkt(table).alias("bkt"))
+            .distinct()
+            .collect()
+        )
+        if touched and (
+            not self._is_bucketed(snap) or len(touched) >= self.merge_buckets
+        ):
+            return None
+        return touched
+
+    def _scan_buckets(
+        self, table: str, snap: str, touched: list[int] | None
+    ) -> DataFrame:
+        """Canonical rows plus ``bkt`` of the snapshot's touched buckets
+        (partition pruning on the scan), or of the whole table when
+        ``touched`` is None."""
+        from pyspark.sql import functions as F
+
+        schema = table_schema(table)
+        raw = self._read_snapshot(table, snap)
+        if touched is None:
+            return _canon_select(raw, schema).withColumn("bkt", self._bkt(table))
+        return _canon_select(
+            raw.filter(F.col("bkt").isin(touched)), schema, extra=("bkt",)
+        )
+
+    def _rewrite_buckets(
+        self,
+        table: str,
+        df: DataFrame,
+        prev: str | None,
+        touched: list[int] | None = None,
     ) -> str:
-        """Spark-native FULL snapshot write (first write, legacy-layout
-        upgrade, or full-coverage batch): the plan executes distributed
-        and streams to the next version directory partitioned by bucket;
-        nothing passes through the driver. Incremental merges go through
-        :meth:`_merge_and_write`, which rewrites only touched buckets.
-        ``defer_commit=True`` leaves the snapshot invisible (no pointer
-        flip) for the multi-table transaction path; returns the
-        version either way."""
+        """Prepare the next snapshot, invisible until :meth:`_commit_txn`
+        flips it in, and return its version. ``df`` (canonical columns
+        plus ``bkt``) is written distributed, partitioned by bucket
+        (nothing passes through the driver); when ``touched`` lists the buckets ``df`` replaces,
+        every other bucket of ``prev`` is hard-linked across, otherwise
+        ``df`` is the whole table. The one write step under merge,
+        delete and compact."""
         snap, version = self._next_snapshot(table)
-        if "bkt" not in df.columns:
-            df = df.withColumn("bkt", self._bkt(table))
         df.write.mode("overwrite").partitionBy("bkt").parquet(snap)
-        self._write_zone_manifest(snap, self._snapshot_dir(table))
-        if not defer_commit:
-            self._commit_snapshot(table, version)
+        if touched is not None:
+            self._link_untouched(prev, snap, touched)
+        self._write_zone_manifest(snap, prev)
         return version
 
     def _table_has_no_snapshot(self, name: str) -> bool:
-        """True when a path-backed table has no committed, non-empty
+        """True when a table has no committed, non-empty
         snapshot — i.e. ``table(name)`` would return
         ``createDataFrame([], schema)``. THE single emptiness check:
         table() and meta_get's fast path (ADVICE r13) both call this,
@@ -446,9 +474,7 @@ class MieStore:
 
     def zones(self, table: str) -> dict[str, dict] | None:
         """The current snapshot's zone manifest (None when the table is
-        empty, on the mem engine, or for pre-zone-map snapshots)."""
-        if self.path is None:
-            return None
+        empty or for pre-zone-map snapshots)."""
         snap = self._snapshot_dir(table)
         if snap is None:
             return None
@@ -533,40 +559,23 @@ class MieStore:
 
     def table(self, name: str) -> DataFrame:
         """Spark view of a table; all query operators build on this.
-        On-disk: a lazy distributed parquet scan (filters push down,
-        columns prune); the cast-select re-asserts the canonical schema
-        so float/int widths survive round-trips through any writer."""
+        A lazy distributed parquet scan (filters push down, columns
+        prune); the cast-select re-asserts the canonical schema so
+        float/int widths survive round-trips through any writer."""
         if name not in ALL_TABLES and name not in AUX_TABLES:
             raise KeyError(f"unknown table {name!r}")
         schema = table_schema(name)
-        if self.path is not None:
-            if self._table_has_no_snapshot(name):
-                return self.spark.createDataFrame([], schema)
-            snap = self._snapshot_dir(name)
-            from pyspark.sql import functions as F
-
-            # SCHEMA EVOLUTION: a snapshot written by an older build is
-            # read through _read_snapshot's explicit-schema contract —
-            # added columns arrive as typed NULLs, dropped columns are
-            # ignored, and int->long / float->double widenings up-cast
-            # in the scan. The next merge writes the full current
-            # schema, so evolution completes lazily per table, one
-            # commit after the code ships (the Delta read contract).
-            return _canon_select(self._read_snapshot(name, snap), schema)
-        pdf = self._read_pdf(name)
-        if pdf.empty:
+        if self._table_has_no_snapshot(name):
             return self.spark.createDataFrame([], schema)
-        for f in schema:  # mem engine: same add-column contract
-            if f.name not in pdf.columns:
-                pdf[f.name] = None
-        # parquet round-trips hand back numpy scalars/arrays, which
-        # createDataFrame's strict type checks reject (e.g. numpy.float64
-        # inside an ArrayType(FloatType) column) — coerce to python-native
-        rows = [
-            tuple(_py_native(row[f.name], f.dataType) for f in schema)
-            for _, row in pdf.iterrows()
-        ]
-        return self.spark.createDataFrame(rows, schema)
+        # SCHEMA EVOLUTION: a snapshot written by an older build is
+        # read through _read_snapshot's explicit-schema contract —
+        # added columns arrive as typed NULLs, dropped columns are
+        # ignored, and int->long / float->double widenings up-cast
+        # in the scan. The next merge writes the full current
+        # schema, so evolution completes lazily per table, one
+        # commit after the code ships (the Delta read contract).
+        snap = self._snapshot_dir(name)
+        return _canon_select(self._read_snapshot(name, snap), schema)
 
     def table_at(self, name: str, version: str) -> DataFrame:
         """Time-travel read of a specific snapshot version (pair with
@@ -575,8 +584,6 @@ class MieStore:
         the version was never written or has been GC'd."""
         if name not in ALL_TABLES:
             raise KeyError(f"unknown table {name!r}")
-        if self.path is None:
-            raise ValueError("table_at requires the parquet engine (mem has no versions)")
         snap = os.path.join(self.path, name, version)
         if not os.path.isdir(snap):
             raise FileNotFoundError(
@@ -591,15 +598,17 @@ class MieStore:
         return _canon_select(self._read_snapshot(name, snap), schema)
 
     # -- writes -----------------------------------------------------------
+    #
+    # Every write prepares invisible snapshots (_merge_and_write,
+    # _rewrite_buckets) and publishes them through _commit_txn — one
+    # commit path, so a single-table write and an N-table transaction
+    # have the same crash and visibility guarantees.
 
     def upsert_rows(self, table: str, rows: list[dict[str, Any]]) -> int:
         """Insert-or-replace by key (`:put` parity). Returns rows
         actually written: intra-batch duplicates of the same key
         collapse last-write-wins, so the count can be < len(rows)."""
-        if not rows:
-            return 0
-        with self._write_lock:
-            return self._upsert_rows_locked(table, rows)
+        return self._upsert_rows({table: rows}).get(table, 0)
 
     def _rows_to_df(self, table: str, rows: list[dict[str, Any]]):
         """Dict rows → (key-unique DataFrame in canonical order, n).
@@ -619,48 +628,6 @@ class MieStore:
         )
         return new, len(by_key)
 
-    def _merge_pdf(
-        self, table: str, rows: list[dict[str, Any]]
-    ) -> tuple[pd.DataFrame, int]:
-        """Mem-engine merge: NULL-fill the batch to the table schema,
-        replace existing rows on key match, intra-batch dedup (last
-        write wins, like sequential :put). Shared by the single-table
-        and transactional upsert paths — key/schema semantics live in
-        exactly one place. Returns (merged frame, unique-key count)."""
-        cols = [f.name for f in table_schema(table)]
-        keys = key_columns(table)
-        new = pd.DataFrame(rows)
-        for col in set(cols) - set(new.columns):
-            new[col] = None
-        new = new[cols]
-        existing = self._read_pdf(table)
-        if existing.empty:
-            out = new
-        else:
-            # drop existing rows whose key matches an incoming row
-            merged_keys = new[keys].apply(tuple, axis=1)
-            mask = existing[keys].apply(tuple, axis=1).isin(set(merged_keys))
-            out = pd.concat([existing[~mask], new], ignore_index=True)
-        out = out.drop_duplicates(subset=keys, keep="last")
-        n = len({tuple(r.get(k) for k in keys) for r in rows})
-        return out, n
-
-    def _upsert_rows_locked(self, table: str, rows: list[dict[str, Any]]) -> int:
-        if self.path is not None:
-            new, n = self._rows_to_df(table, rows)
-            self._merge_and_write(table, new)
-            return n
-        out, n = self._merge_pdf(table, rows)
-        self._write_pdf(table, out)
-        return n
-
-    def upsert_df(self, table: str, df: DataFrame) -> int:
-        """Distributed upsert: used by bulk ingest paths where the new
-        rows are already a DataFrame (e.g. streaming foreachBatch).
-        Executes the anti-join in Spark, materializes the snapshot."""
-        with self._write_lock:
-            return self._upsert_df_locked(table, df)
-
     def atomic_upsert_rows(
         self, updates: dict[str, list[dict[str, Any]]]
     ) -> dict[str, int]:
@@ -670,11 +637,11 @@ class MieStore:
         documented window where readers saw the fact flipped but the
         edge missing).
 
-        Disk engine protocol (write-ahead roll-forward, the manifest
-        rename is the commit point):
+        Protocol (write-ahead roll-forward, the manifest rename is the
+        commit point):
 
-        1. PREPARE — write every table's next snapshot with the pointer
-           flip deferred; nothing is visible yet. A crash here leaves
+        1. PREPARE — write every table's next snapshot without a
+           pointer flip; nothing is visible yet. A crash here leaves
            only orphan version dirs that the next write overwrites.
         2. COMMIT — one atomic ``os.replace`` of the {table: version}
            manifest to ``_TXN_CURRENT``. Readers resolve a table's
@@ -685,28 +652,24 @@ class MieStore:
            _recover_txn on the next open; readers in the window still
            see the committed state via the manifest.
 
-        Mem engine: build every table's merged frame first, then
-        assign all under the lock — an exception during the build
-        mutates nothing. Returns per-table written-row counts."""
+        Returns per-table written-row counts."""
+        return self._upsert_rows(updates)
+
+    def _upsert_rows(
+        self, updates: dict[str, list[dict[str, Any]]]
+    ) -> dict[str, int]:
+        """Body of :meth:`atomic_upsert_rows`, shared with
+        :meth:`upsert_rows` (calling the public method would nest one
+        traced write inside another)."""
         updates = {t: rows for t, rows in updates.items() if rows}
         if not updates:
             return {}
         with self._write_lock:
-            if self.path is None:
-                built: dict[str, pd.DataFrame] = {}
-                counts: dict[str, int] = {}
-                for table, rows in sorted(updates.items()):
-                    built[table], counts[table] = self._merge_pdf(table, rows)
-                for table, out in built.items():  # all-or-nothing assign
-                    self._write_pdf(table, out)
-                return counts
-            # 1. PREPARE: invisible snapshots
             versions: dict[str, str] = {}
-            counts = {}
+            counts: dict[str, int] = {}
             for table, rows in sorted(updates.items()):
-                new, n = self._rows_to_df(table, rows)
-                v = self._merge_and_write(table, new, defer_commit=True)
-                counts[table] = n
+                new, counts[table] = self._rows_to_df(table, rows)
+                v = self._merge_and_write(table, new)
                 if v is not None:
                     versions[table] = v
             self._commit_txn(versions)
@@ -716,7 +679,7 @@ class MieStore:
         """Steps 2+3 of the transaction protocol: the atomic manifest
         rename (commit point), then per-table pointer roll-forward and
         manifest removal. Callers hold the write lock and have already
-        prepared every snapshot with defer_commit=True.
+        prepared every snapshot.
 
         A pending manifest from an EARLIER commit whose roll-forward
         raised mid-flip (process still alive, exception swallowed by
@@ -756,40 +719,15 @@ class MieStore:
         if not updates:
             return {}
         with self._write_lock:
-            counts: dict[str, int] = {}
-            if self.path is None:
-                built: dict[str, pd.DataFrame] = {}
-                for table, df in sorted(updates.items()):
-                    keys = key_columns(table)
-                    cols = [f.name for f in table_schema(table)]
-                    deduped = df.dropDuplicates(keys)
-                    if checkpoint:
-                        deduped = deduped.localCheckpoint()
-                    existing = self.table(table)
-                    kept = existing.join(
-                        deduped.select(*keys), keys, "left_anti"
-                    )
-                    merged = kept.select(*cols).unionByName(
-                        deduped.select(*cols)
-                    )
-                    built[table] = merged.toPandas()
-                    # unique-key count, matching atomic_upsert_rows
-                    counts[table] = deduped.count()
-                for table, pdf in built.items():  # all-or-nothing assign
-                    self._write_pdf(table, pdf)
-                return counts
             versions: dict[str, str] = {}
+            counts: dict[str, int] = {}
             for table, df in sorted(updates.items()):
                 keys = key_columns(table)
                 cols = [f.name for f in table_schema(table)]
                 deduped = df.dropDuplicates(keys)
                 if checkpoint:
                     deduped = deduped.localCheckpoint()
-                v = self._merge_and_write(
-                    table,
-                    deduped.select(*cols),
-                    defer_commit=True,
-                )
+                v = self._merge_and_write(table, deduped.select(*cols))
                 # unique-key count, matching atomic_upsert_rows
                 counts[table] = deduped.count()
                 if v is not None:
@@ -797,78 +735,30 @@ class MieStore:
             self._commit_txn(versions)
             return counts
 
-    def _merge_and_write(
-        self, table: str, new: DataFrame, defer_commit: bool = False
-    ) -> str | None:
-        """Bucket-pruned MERGE: current snapshot anti-join keys(new) ∪
-        new, restricted to the buckets the batch touches — ONE Spark
-        plan whose scan partition-prunes to the touched ``bkt=K`` dirs
-        and whose write produces only those dirs; untouched buckets are
-        hard-linked from the previous snapshot. O(batch) I/O per commit,
-        not O(table). ``new`` must already be key-unique and in
-        canonical column order. Falls back to a full (bucketed) rewrite
-        when the current snapshot predates the bucketed layout or the
-        batch touches every bucket anyway."""
-        from pyspark.sql import functions as F
-
-        schema = table_schema(table)
+    def _merge_and_write(self, table: str, new: DataFrame) -> str | None:
+        """Bucket-pruned MERGE, prepared but not committed: current
+        snapshot anti-join keys(new) ∪ new, restricted to the buckets
+        the batch touches — ONE Spark plan whose scan partition-prunes
+        to the touched ``bkt=K`` dirs and whose write produces only
+        those dirs; untouched buckets are hard-linked from the previous
+        snapshot. O(batch) I/O per commit, not O(table). ``new`` must
+        already be key-unique and in canonical column order. Falls back
+        to a full (bucketed) rewrite when the current snapshot predates
+        the bucketed layout or the batch touches every bucket anyway.
+        Returns the prepared version, or None for an empty batch."""
         keys = key_columns(table)
         new = new.withColumn("bkt", self._bkt(table))
         snap = self._snapshot_dir(table)
         if snap is None or not self._has_parquet(snap):
             # first write: all buckets are new
-            return self._write_df(table, new, defer_commit=defer_commit)
-        touched = sorted(
-            r["bkt"] for r in new.select("bkt").distinct().collect()
-        )
-        if not touched:  # empty batch: nothing to merge
+            return self._rewrite_buckets(table, new, snap)
+        touched = self._touched_buckets(table, snap, new)
+        if touched == []:  # empty batch: nothing to merge
             return None
-        if not self._is_bucketed(snap) or len(touched) >= self.merge_buckets:
-            existing = _canon_select(
-                self._read_snapshot(table, snap), schema
-            ).withColumn("bkt", self._bkt(table))
-            kept = existing.join(
-                new.select(*keys).dropDuplicates(keys), keys, "left_anti"
-            )
-            return self._write_df(
-                table, kept.unionByName(new), defer_commit=defer_commit
-            )
-        raw = self._read_snapshot(table, snap)
-        kept = _canon_select(
-            raw.filter(F.col("bkt").isin(touched)),  # partition pruning
-            schema,
-            extra=("bkt",),
-        ).join(new.select(*keys).dropDuplicates(keys), keys, "left_anti")
-        nsnap, version = self._next_snapshot(table)
-        kept.unionByName(new).write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(nsnap)
-        self._link_untouched(snap, nsnap, touched)
-        self._write_zone_manifest(nsnap, snap)
-        if not defer_commit:
-            self._commit_snapshot(table, version)
-        return version
-
-    def _upsert_df_locked(self, table: str, df: DataFrame) -> int:
-        keys = key_columns(table)
-        cols = [f.name for f in table_schema(table)]
-        if self.path is not None:
-            # checkpoint first: the merge write AND the returned count
-            # both consume df — without this an expensive input lineage
-            # (e.g. a mapInPandas embedding stage) would execute twice
-            df = df.localCheckpoint()
-            self._merge_and_write(
-                table, df.dropDuplicates(keys).select(*cols)
-            )
-            return df.count()
-        existing = self.table(table)
-        kept = existing.join(df.select(*keys).dropDuplicates(keys), keys, "left_anti")
-        merged = kept.select(*cols).unionByName(
-            df.dropDuplicates(keys).select(*cols)
+        kept = self._scan_buckets(table, snap, touched).join(
+            new.select(*keys).dropDuplicates(keys), keys, "left_anti"
         )
-        pdf = merged.toPandas()  # mem engine: tiny tables by contract
-        self._write_pdf(table, pdf)
-        return df.count()
+        return self._rewrite_buckets(table, kept.unionByName(new), snap, touched)
 
     def compact(self, table: str, cluster_by: tuple[str, ...] = ()) -> int:
         """Rewrite the table's current snapshot with ONE file per
@@ -880,7 +770,7 @@ class MieStore:
         have fragmented below efficient scan size. Upgrades a
         pre-bucketing snapshot to the bucketed layout as a side effect.
         Returns the number of part files in the new snapshot. No-op
-        (returns 0) on an empty table or the mem engine (no files).
+        (returns 0) on an empty table.
 
         ``cluster_by`` is the OPTIMIZE ZORDER analog: range-partition
         and sort the rewrite by the given NON-key columns so each part
@@ -891,19 +781,13 @@ class MieStore:
         snapshot has up to ``merge_buckets`` files per bucket instead
         of one — the standard layout tension between hash bucketing
         (key lookups) and value clustering (range scans)."""
-        if self.path is None:
-            return 0
         with self._write_lock:
             snap = self._snapshot_dir(table)
             if snap is None or not self._has_parquet(snap):
                 return 0
             from pyspark.sql import functions as F
 
-            schema = table_schema(table)
-            df = _canon_select(self._read_snapshot(table, snap), schema).withColumn(
-                "bkt", self._bkt(table)
-            )
-            nsnap, version = self._next_snapshot(table)
+            df = self._scan_buckets(table, snap, None)
             if cluster_by:
                 arranged = df.repartitionByRange(
                     self.merge_buckets, *[F.col(c) for c in cluster_by]
@@ -911,103 +795,66 @@ class MieStore:
             else:
                 # one task per bucket -> one file per bucket
                 arranged = df.repartition(self.merge_buckets, F.col("bkt"))
-            arranged.write.mode("overwrite").partitionBy("bkt").parquet(nsnap)
-            self._write_zone_manifest(nsnap, snap)
-            self._commit_snapshot(table, version)
+            version = self._rewrite_buckets(table, arranged, snap)
+            self._commit_txn({table: version})
             return sum(
                 1
-                for _, _, fs in os.walk(nsnap)
+                for _, _, fs in os.walk(os.path.join(self.path, table, version))
                 for f in fs
                 if f.endswith(".parquet")
             )
 
     def delete_rows(self, table: str, key_values: list[tuple]) -> int:
-        with self._write_lock:
-            return self._delete_rows_locked(table, key_values)
+        """Delete rows by key; returns how many existed. Bucket-pruned
+        like a merge: only the doomed keys' buckets are scanned and
+        rewritten, the rest hard-link across. A touched bucket losing
+        ALL its rows simply produces no bkt dir — correct."""
+        from pyspark.sql.types import StructType
 
-    def _delete_rows_locked(self, table: str, key_values: list[tuple]) -> int:
         keys = key_columns(table)
-        if self.path is not None:
-            from pyspark.sql import functions as F
-            from pyspark.sql.types import StructType
-
-            schema = table_schema(table)
-            key_schema = StructType([schema[k] for k in keys])
-            doomed = self.spark.createDataFrame(
-                [tuple(kv) for kv in key_values], key_schema
-            )
+        schema = table_schema(table)
+        with self._write_lock:
             snap = self._snapshot_dir(table)
             if snap is None or not self._has_parquet(snap):
                 return 0
-            if not self._is_bucketed(snap):
-                existing = self.table(table)
-                removed = existing.join(doomed, keys, "left_semi").count()
-                if removed:
-                    self._write_df(table, existing.join(doomed, keys, "left_anti"))
-                return removed
-            # bucket-pruned delete: only the doomed keys' buckets are
-            # scanned and rewritten; the rest hard-link across (same
-            # shape as _merge_and_write). A touched bucket losing ALL
-            # its rows simply produces no bkt dir — correct.
-            touched = sorted(
-                r["bkt"]
-                for r in doomed.withColumn("bkt", self._bkt(table))
-                .select("bkt")
-                .distinct()
-                .collect()
+            doomed = self.spark.createDataFrame(
+                [tuple(kv) for kv in key_values],
+                StructType([schema[k] for k in keys]),
             )
-            if not touched:
+            touched = self._touched_buckets(table, snap, doomed)
+            if touched == []:
                 return 0
-            raw = self._read_snapshot(table, snap)
-            scanned = _canon_select(
-                raw.filter(F.col("bkt").isin(touched)), schema, extra=("bkt",)
-            )
+            scanned = self._scan_buckets(table, snap, touched)
             removed = scanned.join(doomed, keys, "left_semi").count()
             if removed:
-                nsnap, version = self._next_snapshot(table)
-                scanned.join(doomed, keys, "left_anti").write.mode(
-                    "overwrite"
-                ).partitionBy("bkt").parquet(nsnap)
-                self._link_untouched(snap, nsnap, touched)
-                self._write_zone_manifest(nsnap, snap)
-                self._commit_snapshot(table, version)
+                kept = scanned.join(doomed, keys, "left_anti")
+                self._commit_txn(
+                    {table: self._rewrite_buckets(table, kept, snap, touched)}
+                )
             return removed
-        existing = self._read_pdf(table)
-        if existing.empty:
-            return 0
-        mask = existing[keys].apply(tuple, axis=1).isin(set(key_values))
-        removed = int(mask.sum())
-        self._write_pdf(table, existing[~mask])
-        return removed
 
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 
     def meta_get(self, key: str) -> str | None:
-        if self.path is not None:
-            # Fast path (r13 optimization, measured): no committed
-            # snapshot means the table is empty, so every key is
-            # absent — exactly what the Spark path below concludes by
-            # collecting a filter over createDataFrame([], schema),
-            # at the cost of a full job round-trip (~0.4 s). Shares
-            # table()'s emptiness check via _table_has_no_snapshot
-            # (ADVICE r13: one helper, so the two paths cannot drift);
-            # every fresh-store open pays this via ensure_schema.
-            if self._table_has_no_snapshot("mie_meta"):
-                return None
-            from pyspark.sql import functions as F
-
-            hit = (
-                self.table("mie_meta")
-                .filter(F.col("key") == key)
-                .select("value")
-                .collect()
-            )
-            return None if not hit else str(hit[-1]["value"])
-        pdf = self._read_pdf("mie_meta")
-        if pdf.empty:
+        # Fast path (r13 optimization, measured): no committed snapshot
+        # means the table is empty, so every key is absent — exactly
+        # what the Spark path below concludes by collecting a filter
+        # over createDataFrame([], schema), at the cost of a full job
+        # round-trip (~0.4 s). Shares table()'s emptiness check via
+        # _table_has_no_snapshot (ADVICE r13: one helper, so the two
+        # paths cannot drift); every fresh-store open pays this via
+        # ensure_schema.
+        if self._table_has_no_snapshot("mie_meta"):
             return None
-        hit = pdf[pdf["key"] == key]
-        return None if hit.empty else str(hit.iloc[-1]["value"])
+        from pyspark.sql import functions as F
+
+        hit = (
+            self.table("mie_meta")
+            .filter(F.col("key") == key)
+            .select("value")
+            .collect()
+        )
+        return None if not hit else str(hit[-1]["value"])
 
     def meta_set(self, key: str, value: str) -> None:
         self.upsert_rows("mie_meta", [{"key": key, "value": str(value)}])
@@ -1041,13 +888,10 @@ class MieStore:
     # -- snapshot pinning ---------------------------------------------------
 
     def _pin_file(self, table: str) -> str:
-        assert self.path is not None
         return os.path.join(self.path, table, "_PINNED")
 
     def pinned_versions(self, table: str) -> list[str]:
         """Versions exempt from snapshot GC, oldest first."""
-        if self.path is None:
-            return []
         pf = self._pin_file(table)
         if not os.path.exists(pf):
             return []
@@ -1059,8 +903,6 @@ class MieStore:
         it (cozodb.go:174-201 Backup keeps a full point-in-time copy;
         pinning is the zero-copy equivalent on the versioned layout).
         Returns the pinned version, or None if the table has no data."""
-        if self.path is None:
-            return None  # mem engine: no snapshot files to pin
         with self._write_lock:
             snap = self._snapshot_dir(table)
             if snap is None:
@@ -1076,8 +918,6 @@ class MieStore:
     def unpin(self, table: str, version: str) -> None:
         """Release a pin; the version becomes GC-eligible at the next
         commit (it is NOT deleted eagerly — a reader may hold it)."""
-        if self.path is None:
-            return
         with self._write_lock:
             pins = [v for v in self.pinned_versions(table) if v != version]
             pf = self._pin_file(table)
@@ -1163,50 +1003,34 @@ class MieStore:
             manifest: dict[str, str] = {}
             for t in ALL_TABLES:
                 tdest = os.path.join(dest, t)
-                if self.path is not None:
-                    snap = self._snapshot_dir(t)
-                    if snap is None or not self._has_parquet(snap):
-                        # re-using a backup dir: drop any stale copy of a
-                        # table that is now empty, or restore would read it
-                        shutil.rmtree(tdest, ignore_errors=True)
-                        continue
-                    # clear first — part-file names never collide across
-                    # snapshots, so dirs_exist_ok would MERGE a previous
-                    # backup's files into this one and corrupt restores
-                    shutil.rmtree(tdest, ignore_errors=True)
-                    shutil.copytree(snap, tdest)
-                    manifest[t] = os.path.basename(snap)
-                else:
-                    pdf = self._read_pdf(t)
-                    if pdf.empty:
-                        # same dest-reuse rule as the parquet branch: a
-                        # stale copy of a now-empty table must not linger
-                        # for external parquet readers of the backup
-                        shutil.rmtree(tdest, ignore_errors=True)
-                        continue
-                    # route through Spark so array columns serialize with
-                    # the canonical schema, not pandas object guessing
-                    self.table(t).write.mode("overwrite").parquet(tdest)
-                    manifest[t] = "mem"
-            import json as _json
-
+                # clear first: a re-used backup dir must not keep a stale
+                # copy of a table that is now empty (restore would read
+                # it), and part-file names never collide across
+                # snapshots, so copying over an old copy would MERGE the
+                # two and corrupt restores
+                shutil.rmtree(tdest, ignore_errors=True)
+                if self._table_has_no_snapshot(t):
+                    continue
+                snap = self._snapshot_dir(t)
+                shutil.copytree(snap, tdest)
+                manifest[t] = os.path.basename(snap)
             with open(os.path.join(dest, "_MANIFEST.json"), "w") as fh:
-                _json.dump({"tables": manifest}, fh)
+                json.dump({"tables": manifest}, fh)
             return manifest
 
     def restore(self, src: str) -> dict[str, str]:
-        """Replace the store's state with a backup's (cozodb.go:203-232).
-        Tables present in the backup are committed as a NEW snapshot
-        version (the versioned-write path — lazy readers opened before
-        the restore keep their files); tables absent from the backup are
-        cleared. Returns the {table: version} manifest restored."""
-        import json as _json
-
+        """Replace the store's state with a backup's (cozodb.go:203-232),
+        all-or-nothing. Every table present in the backup is copied into
+        a NEW, still invisible snapshot version (lazy readers opened
+        before the restore keep their files); every table absent from
+        it gets an empty one; then ONE manifest rename commits them all
+        (:meth:`_commit_txn`), so a failure partway leaves the store as
+        it was. Returns the {table: version} manifest restored."""
         manifest_path = os.path.join(src, "_MANIFEST.json")
         if not os.path.exists(manifest_path):
             raise FileNotFoundError(f"not a mie backup (no _MANIFEST.json): {src}")
         with open(manifest_path) as fh:
-            manifest = _json.load(fh)["tables"]
+            manifest = json.load(fh)["tables"]
         # validate BEFORE touching any state: a manifest-listed table
         # whose directory is missing means a truncated/partial backup —
         # restoring it would silently wipe live data to empty
@@ -1219,24 +1043,18 @@ class MieStore:
                 "but the directories are missing"
             )
         with self._write_lock:
+            versions: dict[str, str] = {}
             for t in ALL_TABLES:
-                tsrc = os.path.join(src, t)
-                has_data = t in manifest and os.path.isdir(tsrc)
-                if self.path is not None:
-                    if has_data:
-                        snap, version = self._next_snapshot(t)
-                        shutil.copytree(tsrc, snap, dirs_exist_ok=True)
-                        self._commit_snapshot(t, version)
-                    elif self._snapshot_dir(t) is not None:
-                        snap, version = self._next_snapshot(t)
-                        os.makedirs(snap, exist_ok=True)  # empty snapshot
-                        self._commit_snapshot(t, version)
+                if t not in manifest and self._snapshot_dir(t) is None:
+                    continue
+                snap, versions[t] = self._next_snapshot(t)
+                # an orphan left by an interrupted prepare may hold files
+                shutil.rmtree(snap, ignore_errors=True)
+                if t in manifest:
+                    shutil.copytree(os.path.join(src, t), snap)
                 else:
-                    if has_data:
-                        pdf = self._read_snapshot(t, tsrc).toPandas()
-                        self._write_pdf(t, pdf)
-                    else:
-                        self._mem.pop(t, None)
+                    os.makedirs(snap)  # empty snapshot
+            self._commit_txn(versions)
             self.ensure_schema()
             return manifest
 
@@ -1245,11 +1063,6 @@ class MieStore:
     def reset(self) -> None:
         """Drop everything (cmd/mie/reset.go:17-60 deletes the data dir)."""
         with self._write_lock:
-            self._reset_locked()
-
-    def _reset_locked(self) -> None:
-        self._mem.clear()
-        if self.path and os.path.isdir(self.path):
-            shutil.rmtree(self.path)
+            shutil.rmtree(self.path, ignore_errors=True)
             os.makedirs(self.path, exist_ok=True)
-        self.ensure_schema()
+            self.ensure_schema()

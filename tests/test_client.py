@@ -1,4 +1,4 @@
-"""MieClient integration tests against the in-memory engine, modeled on
+"""MieClient integration tests against an ephemeral store, modeled on
 the reference's integration suite (pkg/memory/integration_test.go):
 lifecycle (:104), semantic ranking (:237), conflicts (:287), idempotency
 (:338), traversal (:388), export (:465), stats (:540), edge cases
@@ -468,6 +468,7 @@ def test_backup_restore_roundtrip_disk(spark, tmp_path):
 
 
 def test_backup_restore_roundtrip_mem(spark, tmp_path):
+    """Backup/restore on an ephemeral (path-less) store."""
     bdir = str(tmp_path / "bak")
     c = MieClient(spark, path=None, embedding_dim=4)
     fid = c.store_fact("mem engine fact", "general")
@@ -492,6 +493,97 @@ def test_restore_rejects_non_backup_dir(spark, tmp_path):
     c = MieClient(spark, path=None, embedding_dim=4)
     with pytest.raises(FileNotFoundError, match="_MANIFEST"):
         c.restore(str(tmp_path))
+
+
+def _all_rows(store):
+    from mie_spark.schemas import ALL_TABLES
+
+    return {
+        t: sorted(map(str, store.table(t).collect())) for t in ALL_TABLES
+    }
+
+
+def test_restore_failure_partway_changes_no_table(spark, tmp_path, monkeypatch):
+    """restore is all-or-nothing: a copy that fails on the second table
+    must leave EVERY table serving its pre-restore rows (the first
+    table's copy is prepared but never committed), and a retried
+    restore then succeeds over the orphan it left."""
+    import os
+    import shutil
+
+    from mie_spark.storage import MieStore
+
+    path = str(tmp_path / "s")
+    store = MieStore(spark, path=path, embedding_dim=4)
+    store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "backed up"}])
+    store.upsert_rows("mie_entity", [{"id": "ent:1", "name": "backed up"}])
+    bdir = str(tmp_path / "bak")
+    store.backup(bdir)
+    at_backup = _all_rows(store)
+    store.upsert_rows("mie_fact", [{"id": "fact:2", "content": "later"}])
+    store.upsert_rows("mie_entity", [{"id": "ent:2", "name": "later"}])
+    before = _all_rows(store)
+
+    real_copytree = shutil.copytree
+    copied = []
+
+    def copytree_fails_second_table(src, *args, **kwargs):
+        # copytree recurses through itself: count only table-level calls
+        if os.path.dirname(os.fspath(src)) == bdir:
+            copied.append(os.path.basename(src))
+            if len(copied) == 2:
+                raise OSError("injected copy failure")
+        return real_copytree(src, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "copytree", copytree_fails_second_table)
+    with pytest.raises(OSError, match="injected copy failure"):
+        store.restore(bdir)
+    monkeypatch.undo()
+
+    assert _all_rows(store) == before
+    assert _all_rows(MieStore(spark, path=path, embedding_dim=4)) == before
+    store.restore(bdir)
+    assert _all_rows(store) == at_backup
+
+
+def test_ephemeral_store_has_versions_and_zones(spark):
+    """A path-less store is the parquet engine on a temp dir, so
+    pinning, time travel and zone maps work on it too."""
+    from mie_spark.storage import MieStore
+
+    store = MieStore(spark, embedding_dim=4)
+    store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "v1"}])
+    pinned = store.pin_current("mie_fact")
+    assert pinned is not None
+    store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "v2"}])
+    assert [r["content"] for r in store.table_at("mie_fact", pinned).collect()] == ["v1"]
+    assert [r["content"] for r in store.table("mie_fact").collect()] == ["v2"]
+    zones = store.zones("mie_fact")
+    assert zones and all("id" in z for z in zones.values())
+
+
+def test_ephemeral_stores_are_isolated(spark):
+    from mie_spark.storage import MieStore
+
+    a = MieStore(spark, embedding_dim=4)
+    b = MieStore(spark, embedding_dim=4)
+    a.upsert_rows("mie_fact", [{"id": "fact:a", "content": "only in a"}])
+    b.upsert_rows("mie_fact", [{"id": "fact:b", "content": "only in b"}])
+    assert [r["id"] for r in a.table("mie_fact").collect()] == ["fact:a"]
+    assert [r["id"] for r in b.table("mie_fact").collect()] == ["fact:b"]
+
+
+def test_ephemeral_store_reset_leaves_empty_usable_store(spark):
+    from mie_spark.schemas import SCHEMA_VERSION
+    from mie_spark.storage import MieStore
+
+    store = MieStore(spark, embedding_dim=4)
+    store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "gone"}])
+    store.reset()
+    assert store.table("mie_fact").count() == 0
+    assert store.meta_get("schema_version") == str(SCHEMA_VERSION)
+    store.upsert_rows("mie_fact", [{"id": "fact:2", "content": "after"}])
+    assert [r["id"] for r in store.table("mie_fact").collect()] == ["fact:2"]
 
 
 def test_pinned_snapshot_survives_gc(spark, tmp_path):
@@ -726,7 +818,7 @@ def test_compact_one_file_per_bucket(spark, tmp_path):
     # empty table: no-op
     empty = MieStore(spark, path=str(tmp_path / "e"), embedding_dim=4)
     assert empty.compact("mie_fact") == 0
-    # mem engine: no files to compact, graceful no-op
+    # ephemeral store, nothing written yet: graceful no-op
     assert MieStore(spark, path=None, embedding_dim=4).compact("mie_fact") == 0
 
 
@@ -817,8 +909,8 @@ def test_atomic_upsert_crash_before_commit_leaves_old_state(spark, tmp_path):
     calls = {"n": 0}
     orig = store._merge_and_write
 
-    def crashing(table, new, defer_commit=False):
-        out = orig(table, new, defer_commit=defer_commit)
+    def crashing(table, new):
+        out = orig(table, new)
         calls["n"] += 1
         if calls["n"] >= 2:  # both snapshots prepared, commit imminent
             raise RuntimeError("injected crash before manifest rename")
@@ -907,9 +999,8 @@ def test_atomic_upsert_crash_after_commit_rolls_forward(spark, tmp_path):
 
 
 def test_atomic_upsert_mem_engine_all_or_nothing(spark):
-    """Mem engine: a bad batch (schema violation in table 2) must leave
-    table 1 untouched — the build phase completes for every table
-    before any assignment happens."""
+    """Ephemeral store: a bad batch (unknown table 2) must leave table
+    1 untouched — every table is prepared before anything commits."""
     from mie_spark.storage import MieStore
 
     store = MieStore(spark, path=None, embedding_dim=4)

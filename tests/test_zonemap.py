@@ -86,7 +86,7 @@ def test_scan_pruned_falls_back_without_manifest(spark, tmp_path):
     assert {r["id"] for r in out.collect()} == {
         f"fact:{i}" for i in range(30) if 1100 <= 1000 + i * 10 <= 1200
     }
-    # mem engine: no files, same semantics
+    # ephemeral store: same semantics
     mem = MieStore(spark, path=None)
     mem.upsert_rows("mie_fact", _rows(10))
     out = mem.scan_pruned("mie_fact", {"created_at": (1000, 1030)})
