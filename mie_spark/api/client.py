@@ -3,9 +3,12 @@
 Reproduces the reference's memory layer semantics (pkg/memory/{reader,
 writer,conflicts}.go) over MieStore tables. Every read is a DataFrame
 plan (filters/joins/top-k stay declarative for Catalyst); writes are
-key-upserts with content-hash identity, embeddings written
-synchronously (the reference writes them fire-and-forget,
-writer.go:71-73 — synchronous keeps tests deterministic; SURVEY §2.7 V6).
+key-upserts with content-hash identity. Each write call — a store, a
+tool call, an update, an import — builds its rows into one batch and
+commits it as ONE store transaction (MieClient._commit): the nodes,
+their embeddings, the edges and the usage counter become visible
+together, and a failure anywhere writes nothing. (The reference writes
+embeddings fire-and-forget, writer.go:71-73; SURVEY §2.7 V6.)
 
 Deliberate semantic fix, documented in SURVEY §2.10: `threshold`
 ALWAYS means minimum cosine *similarity* here. The reference's
@@ -15,7 +18,7 @@ bound (tools/conflicts.go:20-22 vs memory/conflicts.go:95).
 
 from __future__ import annotations
 
-import json
+import re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +32,6 @@ from mie_spark.schemas import (
     EDGE_TABLES,
     EMBEDDING_TABLES,
     NODE_TABLES,
-    key_columns,
 )
 from mie_spark.storage import MieStore, now_s
 
@@ -41,8 +43,8 @@ _EMBED_SOURCE = {
     "mie_event": ("mie_event_embedding", "event_id"),
 }
 
-# embedding input text per node table — must stay in lockstep with the
-# store_* methods' _store_embedding calls below
+# embedding input text per node table — the only definition: _commit
+# embeds every node row it writes through it
 _EMBED_TEXT = {
     "mie_fact": lambda r: r.get("content") or "",
     "mie_decision": lambda r: f"{r.get('title') or ''} {r.get('rationale') or ''}",
@@ -67,6 +69,88 @@ _TYPE_ALIASES = {
     "event": "mie_event",
     "topic": "mie_topic",
 }
+
+# usage kind → (counter key, last-at key) in mie_meta
+_USAGE_KEYS = {
+    "store": ("total_stores", "last_store_at"),
+    "query": ("total_queries", "last_query_at"),
+}
+
+
+def node_row(table: str, item: dict[str, Any]) -> dict[str, Any]:
+    """One store item → its validated node row: content-hash id,
+    defaults and timestamps (writer.go Store*). ``item`` holds the
+    node's fields by column name; the id inputs are required, every
+    other text column defaults to "". The single type dispatch behind
+    the store_* methods, tools.store, tools.bulk_store and import_json."""
+    get = item.get
+    if table == "mie_fact":
+        category = V.coerce_category(get("category"))
+        row = {
+            "id": ids.fact_id(item["content"], category),
+            "category": category,
+            "confidence": V.clamp_confidence(get("confidence")),
+            "valid": True,
+        }
+    elif table == "mie_decision":
+        row = {
+            "id": ids.decision_id(item["title"], item["rationale"]),
+            "alternatives": get("alternatives") or "[]",
+            "status": get("status", "active"),
+        }
+        V.validate_decision_status(row["status"])
+    elif table == "mie_entity":
+        V.validate_entity_kind(item["kind"])
+        row = {"id": ids.entity_id(item["name"], item["kind"])}
+    elif table == "mie_event":
+        row = {"id": ids.event_id(item["title"], get("event_date", ""))}
+    elif table == "mie_topic":
+        row = {"id": ids.topic_id(item["name"])}
+    else:
+        raise ValueError(f"unknown node table {table!r}")
+    ts = now_s()
+    for f in NODE_TABLES[table]:
+        if f.name in ("created_at", "updated_at"):
+            row[f.name] = ts
+        else:
+            row.setdefault(f.name, get(f.name, ""))
+    return row
+
+
+def item_row(item: dict[str, Any]) -> tuple[str, dict[str, Any]]:
+    """(table, node row) of a tool-call store item, dispatched on its
+    ``type`` (fact/decision/entity/event/topic)."""
+    node_type = item.get("type")
+    table = _TYPE_ALIASES.get(node_type) if isinstance(node_type, str) else None
+    if table is None:
+        raise ValueError(f"unknown store type {node_type!r}")
+    return table, node_row(table, item)
+
+
+def edge_rows(
+    edge_table: str, from_id: str, to_id: str, values: dict[str, Any]
+) -> dict[str, list[dict[str, Any]]]:
+    """One whitelisted edge (writer.go:264-310) as a one-row batch; the
+    edge table's value columns (role, reason) are read from ``values``."""
+    if edge_table not in EDGE_TABLES:
+        raise ValueError(
+            f"invalid edge table {edge_table!r}; valid: {sorted(EDGE_TABLES)}"
+        )
+    keys, vals = EDGE_TABLES[edge_table]
+    if "role" in values:
+        V.validate_entity_role(values["role"])
+    row = {keys[0]: from_id, keys[1]: to_id}
+    for col in vals:
+        row[col] = values.get(col, "")
+    return {edge_table: [row]}
+
+
+def extend_batch(
+    batch: dict[str, list[dict[str, Any]]], rows: dict[str, list[dict[str, Any]]]
+) -> None:
+    """Append ``rows`` to ``batch`` table by table, keeping write order."""
+    for table, more in rows.items():
+        batch.setdefault(table, []).extend(more)
 
 
 class MieClient:
@@ -144,27 +228,10 @@ class MieClient:
         source_agent: str = "",
         source_conversation: str = "",
     ) -> str:
-        category = V.coerce_category(category)
-        fid = ids.fact_id(content, category)
-        ts = now_s()
-        self.store.upsert_rows(
-            "mie_fact",
-            [
-                {
-                    "id": fid,
-                    "content": content,
-                    "category": category,
-                    "confidence": V.clamp_confidence(confidence),
-                    "source_agent": source_agent,
-                    "source_conversation": source_conversation,
-                    "valid": True,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            ],
+        return self._store_node(
+            "mie_fact", content=content, category=category, confidence=confidence,
+            source_agent=source_agent, source_conversation=source_conversation,
         )
-        self._store_embedding("mie_fact", fid, content)
-        return fid
 
     def store_decision(
         self,
@@ -176,51 +243,19 @@ class MieClient:
         source_agent: str = "",
         source_conversation: str = "",
     ) -> str:
-        V.validate_decision_status(status)
-        did = ids.decision_id(title, rationale)
-        ts = now_s()
-        self.store.upsert_rows(
-            "mie_decision",
-            [
-                {
-                    "id": did,
-                    "title": title,
-                    "rationale": rationale,
-                    "alternatives": alternatives or "[]",
-                    "context": context,
-                    "source_agent": source_agent,
-                    "source_conversation": source_conversation,
-                    "status": status,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            ],
+        return self._store_node(
+            "mie_decision", title=title, rationale=rationale,
+            alternatives=alternatives, context=context, status=status,
+            source_agent=source_agent, source_conversation=source_conversation,
         )
-        self._store_embedding("mie_decision", did, f"{title} {rationale}")
-        return did
 
     def store_entity(
         self, name: str, kind: str, description: str = "", source_agent: str = ""
     ) -> str:
-        V.validate_entity_kind(kind)
-        eid = ids.entity_id(name, kind)
-        ts = now_s()
-        self.store.upsert_rows(
-            "mie_entity",
-            [
-                {
-                    "id": eid,
-                    "name": name,
-                    "kind": kind,
-                    "description": description,
-                    "source_agent": source_agent,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            ],
+        return self._store_node(
+            "mie_entity", name=name, kind=kind, description=description,
+            source_agent=source_agent,
         )
-        self._store_embedding("mie_entity", eid, f"{name} {description}")
-        return eid
 
     def store_event(
         self,
@@ -230,102 +265,78 @@ class MieClient:
         source_agent: str = "",
         source_conversation: str = "",
     ) -> str:
-        evid = ids.event_id(title, event_date)
-        ts = now_s()
-        self.store.upsert_rows(
-            "mie_event",
-            [
-                {
-                    "id": evid,
-                    "title": title,
-                    "description": description,
-                    "event_date": event_date,
-                    "source_agent": source_agent,
-                    "source_conversation": source_conversation,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            ],
+        return self._store_node(
+            "mie_event", title=title, description=description, event_date=event_date,
+            source_agent=source_agent, source_conversation=source_conversation,
         )
-        self._store_embedding("mie_event", evid, f"{title} {description}")
-        return evid
 
     def store_topic(self, name: str, description: str = "") -> str:
-        tid = ids.topic_id(name)
-        ts = now_s()
-        self.store.upsert_rows(
-            "mie_topic",
-            [
-                {
-                    "id": tid,
-                    "name": name,
-                    "description": description,
-                    "created_at": ts,
-                    "updated_at": ts,
-                }
-            ],
-        )
-        return tid
+        return self._store_node("mie_topic", name=name, description=description)
 
-    def _store_embedding(self, node_table: str, node_id: str, text: str) -> None:
-        emb_table, id_col = _EMBED_SOURCE[node_table]
-        vec = self.embedder.embed([text])[0]
-        self.store.upsert_rows(emb_table, [{id_col: node_id, "embedding": vec}])
+    def _store_node(self, table: str, **item: Any) -> str:
+        row = node_row(table, item)
+        self._commit({table: [row]})
+        return row["id"]
 
     def add_relationship(
         self, edge_table: str, from_id: str, to_id: str, **values: str
     ) -> None:
         """Whitelisted edge insert (writer.go:264-310)."""
-        if edge_table not in EDGE_TABLES:
-            raise ValueError(
-                f"invalid edge table {edge_table!r}; valid: {sorted(EDGE_TABLES)}"
-            )
-        keys, vals = EDGE_TABLES[edge_table]
-        if "role" in values:
-            V.validate_entity_role(values["role"])
-        row = {keys[0]: from_id, keys[1]: to_id}
-        for col in vals:
-            row[col] = values.get(col, "")
-        self.store.upsert_rows(edge_table, [row])
+        self._commit(edge_rows(edge_table, from_id, to_id, values))
 
     def invalidate_fact(
         self, new_fact_id: str | None, old_fact_id: str, reason: str = ""
     ) -> None:
         """Flip valid=false on the old fact and — when a superseding
-        fact is given — insert the invalidation edge (writer.go:230-261).
-        Both writes land in ONE multi-table transaction
-        (store.atomic_upsert_rows): the manifest rename commits fact
-        update and edge insert together, so readers can never observe
-        the fact flipped without its edge or vice versa — closing the
-        SURVEY §7 risk-register window the previous ordered-two-MERGE
-        form documented. ``new_fact_id=None`` invalidates without a
-        replacement: NO edge is written (a self-loop edge claiming the
-        fact supersedes itself would corrupt the invalidation chain
-        and every export carrying it)."""
+        fact is given — insert the invalidation edge (writer.go:230-261),
+        in one transaction: readers never see the fact flipped without
+        its edge or vice versa. ``new_fact_id=None`` invalidates without
+        a replacement: NO edge is written (a self-loop edge claiming the
+        fact supersedes itself would corrupt the invalidation chain and
+        every export carrying it)."""
+        self._commit(
+            self._invalidation_rows(new_fact_id, old_fact_id, reason), embed=False
+        )
+
+    def _invalidation_rows(
+        self,
+        new_fact_id: str | None,
+        old_fact_id: str,
+        reason: str,
+        pending: dict[str, list[dict[str, Any]]] | None = None,
+    ) -> dict[str, list[dict[str, Any]]]:
+        """The rows of one invalidation. The old fact is read from
+        ``pending`` (a batch not yet committed) when staged there, so
+        an invalidation sees the writes staged before it."""
         # both ids must be fact ids: get_node_by_id dispatches on the
         # prefix, so an entity/decision id would otherwise fetch a row
         # of the WRONG table and upsert it into mie_fact as garbage
         for nid in (new_fact_id, old_fact_id):
             if nid is not None and ids.node_type_of(nid) != "mie_fact":
                 raise ValueError(f"invalidate_fact requires fact ids, got {nid!r}")
-        old = self.get_node_by_id(old_fact_id)
+        staged = [
+            r for r in (pending or {}).get("mie_fact", []) if r["id"] == old_fact_id
+        ]
+        old = dict(staged[-1]) if staged else self.get_node_by_id(old_fact_id)
         if old is None:
             raise KeyError(f"fact not found: {old_fact_id}")
         old["valid"] = False
         old["updated_at"] = now_s()
-        updates: dict[str, list[dict]] = {"mie_fact": [old]}
+        rows: dict[str, list[dict[str, Any]]] = {"mie_fact": [old]}
         if new_fact_id is not None and new_fact_id != old_fact_id:
-            updates["mie_invalidates"] = [
+            rows["mie_invalidates"] = [
                 {
                     "new_fact_id": new_fact_id,
                     "old_fact_id": old_fact_id,
                     "reason": reason,
                 }
             ]
-        self.store.atomic_upsert_rows(updates)
+        return rows
 
     def update_description(self, node_id: str, description: str) -> None:
-        """RMW description update for entity/event/topic (writer.go:313-362)."""
+        """RMW description update for entity/event/topic (writer.go:313-362).
+        The node is re-embedded with it: the description is part of
+        the embedded text."""
         table = ids.node_type_of(node_id)
         if table not in ("mie_entity", "mie_event", "mie_topic"):
             raise ValueError(f"{table} does not have a description update path")
@@ -334,7 +345,7 @@ class MieClient:
             raise KeyError(f"node not found: {node_id}")
         row["description"] = description
         row["updated_at"] = now_s()
-        self.store.upsert_rows(table, [row])
+        self._commit({table: [row]})
 
     def update_status(self, decision_id: str, status: str) -> None:
         V.validate_decision_status(status)
@@ -343,7 +354,43 @@ class MieClient:
             raise KeyError(f"decision not found: {decision_id}")
         row["status"] = status
         row["updated_at"] = now_s()
-        self.store.upsert_rows("mie_decision", [row])
+        self._commit({"mie_decision": [row]}, embed=False)
+
+    def _commit(
+        self,
+        batch: dict[str, list[dict[str, Any]]],
+        usage: str | None = None,
+        n: int = 1,
+        embed: bool = True,
+    ) -> dict[str, int]:
+        """Publish one write batch ({table: rows in write order}) as ONE
+        store transaction — the single write path of every store,
+        update, import and usage record. With ``embed``, every node row
+        is embedded (one ``embed`` call per table, text from
+        ``_EMBED_TEXT``, the last staged row of an id wins like the
+        upsert itself). ``usage`` ("store"/"query") adds ``n`` to that
+        usage counter and stamps its last-at time. Nodes, embeddings,
+        edges and counter become visible together or not at all."""
+        updates = {t: rows for t, rows in batch.items() if rows}
+        if embed:
+            for table, (emb_table, id_col) in _EMBED_SOURCE.items():
+                latest = {r["id"]: r for r in updates.get(table, ())}
+                if latest:
+                    vecs = self.embedder.embed(
+                        [_EMBED_TEXT[table](r) for r in latest.values()]
+                    )
+                    updates[emb_table] = [
+                        {id_col: nid, "embedding": v} for nid, v in zip(latest, vecs)
+                    ]
+        counters = None
+        if usage is not None and n:
+            counter, stamp = _USAGE_KEYS[usage]
+            updates["mie_meta"] = [
+                *updates.get("mie_meta", []),
+                {"key": stamp, "value": str(now_s())},
+            ]
+            counters = {counter: n}
+        return self.store.atomic_upsert_rows(updates, counters)
 
     # ------------------------------------------------------------------
     # read path (reader.go)
@@ -898,70 +945,37 @@ class MieClient:
     def increment_counter(self, key: str) -> int:
         return self.store.meta_increment(key)
 
-    def import_json(self, data: dict[str, list[dict[str, Any]]]) -> int:
+    def import_json(
+        self, data: dict[str, list[dict[str, Any]]], dry_run: bool = False
+    ) -> int:
         """Re-store imported nodes: IDs re-derive from content and
         embeddings regenerate, exactly like the reference import
         (cmd/mie/import.go:116-207). Provenance fields (source_agent /
         source_conversation) survive the round trip, and facts exported
         with valid=False are re-flagged after the re-store — the
         mie_invalidates edges import verbatim, so leaving the flag True
-        would desync the graph from its own invalidation edges."""
-        n = 0
-        invalid_ids: list[str] = []
-        for row in data.get("mie_fact", []):
-            fid = self.store_fact(
-                row["content"],
-                row.get("category"),
-                row.get("confidence"),
-                row.get("source_agent", ""),
-                row.get("source_conversation", ""),
-            )
-            if row.get("valid") is False:
-                invalid_ids.append(fid)
-            n += 1
-        for row in data.get("mie_decision", []):
-            self.store_decision(
-                row["title"],
-                row["rationale"],
-                row.get("alternatives", "[]"),
-                row.get("context", ""),
-                row.get("status", "active"),
-                row.get("source_agent", ""),
-                row.get("source_conversation", ""),
-            )
-            n += 1
-        for row in data.get("mie_entity", []):
-            self.store_entity(
-                row["name"],
-                row["kind"],
-                row.get("description", ""),
-                row.get("source_agent", ""),
-            )
-            n += 1
-        for row in data.get("mie_event", []):
-            self.store_event(
-                row["title"],
-                row.get("description", ""),
-                row.get("event_date", ""),
-                row.get("source_agent", ""),
-                row.get("source_conversation", ""),
-            )
-            n += 1
-        for row in data.get("mie_topic", []):
-            self.store_topic(row["name"], row.get("description", ""))
-            n += 1
-        if invalid_ids:
-            rows = [
-                dict(node, valid=False)
-                for fid in invalid_ids
-                if (node := self.get_node_by_id(fid)) is not None
-            ]
-            self.store.upsert_rows("mie_fact", rows)
-        for table in EDGE_TABLES:
-            rows = data.get(table, [])
-            if rows:
-                self.store.upsert_rows(table, rows)
-                n += len(rows)
+        would desync the graph from its own invalidation edges.
+
+        Every row is built and validated before anything is written,
+        and the import commits as one transaction: a bad row imports
+        nothing. Returns the number of node and edge rows (embedding
+        tables in the input are regenerated, not counted); ``dry_run``
+        validates and counts without writing (import.go's --dry-run)."""
+        batch = {
+            t: [node_row(t, item) for item in data.get(t, [])] for t in NODE_TABLES
+        }
+        batch.update({t: list(data.get(t, [])) for t in EDGE_TABLES})
+        n = sum(len(rows) for rows in batch.values())
+        if dry_run:
+            return n
+        facts = batch["mie_fact"]
+        latest = {r["id"]: r for r in facts}
+        facts += [
+            dict(latest[r["id"]], valid=False)
+            for r, item in zip(facts, data.get("mie_fact", []))
+            if item.get("valid") is False
+        ]
+        self._commit(batch)
         return n
 
     def export_sql_script(self) -> str:
@@ -989,24 +1003,20 @@ class MieClient:
         through the store's idempotent upsert, so importing the same
         script twice is a no-op). Statements are split quote-aware
         (content strings may contain ``;``, ``,``, newlines, escaped
-        quotes). Returns the number of rows parsed; ``dry_run`` parses
-        and validates without writing (import.go's --dry-run).
+        quotes). The whole script commits as one transaction. Returns
+        the number of rows parsed; ``dry_run`` parses and validates
+        without writing (import.go's --dry-run).
 
         ``regenerate_embeddings`` (default on) re-embeds imported nodes
         so semantic search and conflict detection see them immediately —
         scripts carry no vectors. The reference's raw replay skips this
         (imported facts stay invisible to vector search until its async
         embedder is poked); pass False for byte-faithful parity."""
-        import re
-
-        stmt_re = re.compile(
-            r"INSERT INTO (\w+)\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)$", re.DOTALL
-        )
         known = set(NODE_TABLES) | set(EDGE_TABLES)
         batches: dict[str, list[dict[str, Any]]] = {}
         n = 0
         for stmt in _split_sql_statements(script):
-            m = stmt_re.match(stmt)
+            m = _SQL_INSERT.match(stmt)
             if not m:
                 raise ValueError(f"unsupported statement: {stmt[:80]!r}")
             table = m.group(1)
@@ -1022,19 +1032,7 @@ class MieClient:
             n += 1
         if dry_run:
             return n
-        for table, rows in batches.items():  # script order: nodes first
-            self.store.upsert_rows(table, rows)
-            if regenerate_embeddings and table in _EMBED_SOURCE:
-                emb_table, id_col = _EMBED_SOURCE[table]
-                texts = [_EMBED_TEXT[table](r) for r in rows]
-                vecs = self.embedder.embed(texts)
-                self.store.upsert_rows(
-                    emb_table,
-                    [
-                        {id_col: r["id"], "embedding": v}
-                        for r, v in zip(rows, vecs)
-                    ],
-                )
+        self._commit(batches, embed=regenerate_embeddings)
         return n
 
     def raw_query(self, sql: str) -> DataFrame:
@@ -1047,19 +1045,27 @@ class MieClient:
         return self.spark.sql(sql)
 
     def record_query(self) -> None:
-        self.store.meta_touch("total_queries", "last_query_at", str(now_s()))
+        self._commit({}, usage="query")
 
     def record_store(self) -> None:
-        self.store.meta_touch("total_stores", "last_store_at", str(now_s()))
+        self._commit({}, usage="store")
 
     def get_usage(self) -> dict[str, Any]:
-        g = self.store.meta_get
+        meta = self.store.meta_values(
+            [
+                "total_queries",
+                "total_stores",
+                "last_query_at",
+                "last_store_at",
+                "schema_version",
+            ]
+        )
         return {
-            "total_queries": int(g("total_queries") or 0),
-            "total_stores": int(g("total_stores") or 0),
-            "last_query_at": g("last_query_at"),
-            "last_store_at": g("last_store_at"),
-            "schema_version": g("schema_version"),
+            "total_queries": int(meta.get("total_queries") or 0),
+            "total_stores": int(meta.get("total_stores") or 0),
+            "last_query_at": meta.get("last_query_at"),
+            "last_store_at": meta.get("last_store_at"),
+            "schema_version": meta.get("schema_version"),
         }
 
     def reset(self) -> None:
@@ -1099,86 +1105,42 @@ def _sql_literal(value: Any) -> str:
     return f"'{escaped}'"
 
 
+_SQL_INSERT = re.compile(
+    r"INSERT INTO (\w+)\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)$", re.DOTALL
+)
+# one statement: string literals ('' escapes a quote) or any run of
+# characters other than ``;`` and quotes
+_SQL_STATEMENT = re.compile(r"(?:'(?:[^']|'')*'|[^;'])+")
+# one VALUES item: a string literal, or a bare token up to the next comma
+_SQL_VALUE = re.compile(r"'((?:[^']|'')*)'|([^,\s][^,]*)")
+
+
 def _split_sql_statements(script: str) -> list[str]:
     """Split on ``;`` outside string literals ('' is the escape)."""
-    out: list[str] = []
-    buf: list[str] = []
-    in_str = False
-    i = 0
-    while i < len(script):
-        ch = script[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < len(script) and script[i + 1] == "'":
-                    buf.append("'")
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append(stmt)
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
+    if script.count("'") % 2:
+        raise ValueError("unterminated string literal in script")
+    return [s.strip() for s in _SQL_STATEMENT.findall(script) if s.strip()]
 
 
 def _parse_sql_row(values: str) -> list[Any]:
     """Parse one VALUES(...) body back into python values — the exact
     inverse of _sql_literal (strings with '' escapes, ints, floats,
     TRUE/FALSE/NULL)."""
-    import re
-
     vals: list[Any] = []
-    i, n = 0, len(values)
-    while i < n:
-        while i < n and values[i] in " ,\n\t":
-            i += 1
-        if i >= n:
-            break
-        if values[i] == "'":
-            i += 1
-            buf: list[str] = []
-            while i < n:
-                if values[i] == "'":
-                    if i + 1 < n and values[i + 1] == "'":
-                        buf.append("'")
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                buf.append(values[i])
-                i += 1
-            vals.append("".join(buf))
+    for m in _SQL_VALUE.finditer(values):
+        if m.group(1) is not None:
+            vals.append(m.group(1).replace("''", "'"))
+            continue
+        tok = m.group(2).strip()
+        up = tok.upper()
+        if up == "NULL":
+            vals.append(None)
+        elif up == "TRUE":
+            vals.append(True)
+        elif up == "FALSE":
+            vals.append(False)
+        elif re.fullmatch(r"-?\d+", tok):
+            vals.append(int(tok))
         else:
-            j = i
-            while j < n and values[j] != ",":
-                j += 1
-            tok = values[i:j].strip()
-            i = j
-            up = tok.upper()
-            if up == "NULL":
-                vals.append(None)
-            elif up == "TRUE":
-                vals.append(True)
-            elif up == "FALSE":
-                vals.append(False)
-            elif re.fullmatch(r"-?\d+", tok):
-                vals.append(int(tok))
-            else:
-                vals.append(float(tok))
+            vals.append(float(tok))
     return vals

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from mie_spark.api.client import MieClient
+from mie_spark.api.client import MieClient, edge_rows, extend_batch, item_row
 from mie_spark.ids import node_type_of
 
 MAX_BULK_ITEMS = 50
@@ -40,75 +40,49 @@ def analyze(client: MieClient, content: str, category: str | None = None) -> dic
 
 def store(client: MieClient, item: dict[str, Any]) -> dict:
     """Type-dispatched store with optional invalidation + relationship
-    edges (pkg/tools/store.go:32-292)."""
-    node_type = item.get("type")
-    if node_type == "fact":
-        node_id = client.store_fact(
-            item["content"],
-            item.get("category"),
-            item.get("confidence"),
-            item.get("source_agent", ""),
-            item.get("source_conversation", ""),
-        )
-    elif node_type == "decision":
-        node_id = client.store_decision(
-            item["title"],
-            item["rationale"],
-            item.get("alternatives", "[]"),
-            item.get("context", ""),
-            item.get("status", "active"),
-            item.get("source_agent", ""),
-            item.get("source_conversation", ""),
-        )
-    elif node_type == "entity":
-        node_id = client.store_entity(
-            item["name"], item["kind"], item.get("description", ""),
-            item.get("source_agent", ""),
-        )
-    elif node_type == "event":
-        node_id = client.store_event(
-            item["title"], item.get("description", ""), item.get("event_date", ""),
-            item.get("source_agent", ""), item.get("source_conversation", ""),
-        )
-    elif node_type == "topic":
-        node_id = client.store_topic(item["name"], item.get("description", ""))
-    else:
-        raise ValueError(f"unknown store type {node_type!r}")
-
+    edges (pkg/tools/store.go:32-292), committed with the usage counter
+    as ONE transaction: a bad invalidation or relationship writes
+    nothing, not even the node."""
+    table, row = item_row(item)
+    batch = {table: [row]}
     if item.get("invalidates"):
-        client.invalidate_fact(
-            node_id, item["invalidates"], item.get("invalidation_reason", "")
+        extend_batch(
+            batch,
+            client._invalidation_rows(
+                row["id"], item["invalidates"], item.get("invalidation_reason", ""),
+                batch,
+            ),
         )
     for rel in item.get("relationships", []):
-        client.add_relationship(
-            rel["edge_table"], rel["from_id"], rel["to_id"],
-            **{k: v for k, v in rel.items() if k not in ("edge_table", "from_id", "to_id")},
+        extend_batch(
+            batch, edge_rows(rel["edge_table"], rel["from_id"], rel["to_id"], rel)
         )
-    client.record_store()
-    return {"id": node_id, "type": node_type}
+    client._commit(batch, usage="store")
+    return {"id": row["id"], "type": item.get("type")}
 
 
 def bulk_store(client: MieClient, items: list[dict[str, Any]]) -> dict:
     """Two-phase bulk store with intra-batch `target_ref` resolution
-    (pkg/tools/bulk_store.go:23-138): phase 1 stores every node and
-    records its id by batch index; phase 2 applies invalidations and
+    (pkg/tools/bulk_store.go:23-138): phase 1 builds every node and
+    records its id by batch index; phase 2 builds invalidations and
     relationships, where `target_ref: N` means "the node stored from
     item N of this batch" (J7, bulk_store.go:142-170). Per-item errors
-    accumulate; one bad item never aborts the batch."""
+    accumulate; one bad item never aborts the batch — a failing item's
+    rows of that phase are left out. Everything that succeeded commits
+    as ONE transaction, with the usage counter raised once per node."""
     if len(items) > MAX_BULK_ITEMS:
         raise ValueError(f"bulk store limited to {MAX_BULK_ITEMS} items")
+    batch: dict[str, list[dict[str, Any]]] = {}
     stored_ids: dict[int, str] = {}
     errors: list[dict[str, Any]] = []
     for idx, item in enumerate(items):
         try:
-            phase1 = {
-                k: v
-                for k, v in item.items()
-                if k not in ("invalidates", "invalidates_ref", "relationships")
-            }
-            stored_ids[idx] = store(client, phase1)["id"]
+            table, row = item_row(item)
         except Exception as exc:  # noqa: BLE001 — error accumulation semantics
             errors.append({"index": idx, "error": str(exc)})
+            continue
+        batch.setdefault(table, []).append(row)
+        stored_ids[idx] = row["id"]
 
     def resolve(ref_or_id: Any) -> str:
         if ref_or_id is None:
@@ -125,26 +99,29 @@ def bulk_store(client: MieClient, items: list[dict[str, Any]]) -> dict:
     for idx, item in enumerate(items):
         if idx not in stored_ids:
             continue
+        rows: dict[str, list[dict[str, Any]]] = {}
         try:
             target = item.get("invalidates_ref", item.get("invalidates"))
             if target is not None:
-                client.invalidate_fact(
-                    stored_ids[idx], resolve(target), item.get("invalidation_reason", "")
+                rows = client._invalidation_rows(
+                    stored_ids[idx], resolve(target),
+                    item.get("invalidation_reason", ""), batch,
                 )
             for rel in item.get("relationships", []):
-                client.add_relationship(
-                    rel["edge_table"],
-                    resolve(rel.get("from_ref", rel.get("from_id", idx))),
-                    resolve(rel.get("to_ref", rel.get("to_id"))),
-                    **{
-                        k: v
-                        for k, v in rel.items()
-                        if k
-                        not in ("edge_table", "from_id", "to_id", "from_ref", "to_ref")
-                    },
+                extend_batch(
+                    rows,
+                    edge_rows(
+                        rel["edge_table"],
+                        resolve(rel.get("from_ref", rel.get("from_id", idx))),
+                        resolve(rel.get("to_ref", rel.get("to_id"))),
+                        rel,
+                    ),
                 )
         except Exception as exc:  # noqa: BLE001
             errors.append({"index": idx, "phase": 2, "error": str(exc)})
+            continue
+        extend_batch(batch, rows)
+    client._commit(batch, usage="store", n=len(stored_ids))
     return {
         "stored": [
             {"index": i, "id": stored_ids[i]} for i in sorted(stored_ids)

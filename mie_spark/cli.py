@@ -171,17 +171,7 @@ def cmd_import(args: argparse.Namespace) -> int:
         payload = sys.stdin.read()
     c = _client(cfg)
     if args.format == "json":
-        from mie_spark.schemas import EDGE_TABLES, NODE_TABLES
-
-        data = json.loads(payload)
-        if args.dry_run:
-            # count only what import_json actually writes — embedding
-            # tables in an --include-embeddings export are regenerated,
-            # not imported, so they must not inflate the preview
-            importable = set(NODE_TABLES) | set(EDGE_TABLES)
-            n = sum(len(v) for t, v in data.items() if t in importable)
-        else:
-            n = c.import_json(data)
+        n = c.import_json(json.loads(payload), dry_run=args.dry_run)
     elif args.format in ("sql", "datalog"):
         n = c.import_sql_script(payload, dry_run=args.dry_run)
     else:

@@ -395,7 +395,7 @@ class MieStore:
         """True when a table has no committed, non-empty
         snapshot — i.e. ``table(name)`` would return
         ``createDataFrame([], schema)``. THE single emptiness check:
-        table() and meta_get's fast path (ADVICE r13) both call this,
+        table() and meta_values' fast path both call this,
         so the two can never drift."""
         snap = self._snapshot_dir(name)
         return snap is None or not self._has_parquet(snap)
@@ -608,7 +608,7 @@ class MieStore:
         """Insert-or-replace by key (`:put` parity). Returns rows
         actually written: intra-batch duplicates of the same key
         collapse last-write-wins, so the count can be < len(rows)."""
-        return self._upsert_rows({table: rows}).get(table, 0)
+        return self._upsert_rows({table: rows})[0].get(table, 0)
 
     def _rows_to_df(self, table: str, rows: list[dict[str, Any]]):
         """Dict rows → (key-unique DataFrame in canonical order, n).
@@ -629,13 +629,12 @@ class MieStore:
         return new, len(by_key)
 
     def atomic_upsert_rows(
-        self, updates: dict[str, list[dict[str, Any]]]
+        self,
+        updates: dict[str, list[dict[str, Any]]],
+        counters: dict[str, int] | None = None,
     ) -> dict[str, int]:
         """Multi-table TRANSACTIONAL upsert: either every table's batch
-        becomes visible or none does (closes SURVEY §7's last risk-
-        register item — invalidate_fact's two ordered MERGEs had a
-        documented window where readers saw the fact flipped but the
-        edge missing).
+        becomes visible or none does.
 
         Protocol (write-ahead roll-forward, the manifest rename is the
         commit point):
@@ -652,28 +651,53 @@ class MieStore:
            _recover_txn on the next open; readers in the window still
            see the committed state via the manifest.
 
+        ``counters`` ({meta key: n}) adds n to each integer counter in
+        ``mie_meta`` inside the same transaction: the read-modify-write
+        runs under the write lock and its rows commit with the batch
+        (after any ``mie_meta`` rows of ``updates``).
+
         Returns per-table written-row counts."""
-        return self._upsert_rows(updates)
+        return self._upsert_rows(updates, counters)[0]
 
     def _upsert_rows(
-        self, updates: dict[str, list[dict[str, Any]]]
-    ) -> dict[str, int]:
+        self,
+        updates: dict[str, list[dict[str, Any]]],
+        counters: dict[str, int] | None = None,
+    ) -> tuple[dict[str, int], dict[str, int]]:
         """Body of :meth:`atomic_upsert_rows`, shared with
-        :meth:`upsert_rows` (calling the public method would nest one
-        traced write inside another)."""
-        updates = {t: rows for t, rows in updates.items() if rows}
-        if not updates:
-            return {}
+        :meth:`upsert_rows` and :meth:`meta_increment` (calling the
+        public method would nest one traced write inside another).
+        Returns (per-table counts, new counter values)."""
+        updates = {t: list(rows) for t, rows in updates.items() if rows}
+        if not updates and not counters:
+            return {}, {}
         with self._write_lock:
-            versions: dict[str, str] = {}
+            values: dict[str, int] = {}
+            if counters:
+                current = self.meta_values(list(counters))
+                for key, n in counters.items():
+                    old = current.get(key, "")
+                    values[key] = (int(old) if old.isdigit() else 0) + n
+                updates.setdefault("mie_meta", []).extend(
+                    {"key": k, "value": str(v)} for k, v in values.items()
+                )
+            frames: dict[str, DataFrame] = {}
             counts: dict[str, int] = {}
-            for table, rows in sorted(updates.items()):
-                new, counts[table] = self._rows_to_df(table, rows)
-                v = self._merge_and_write(table, new)
-                if v is not None:
-                    versions[table] = v
-            self._commit_txn(versions)
-            return counts
+            for table, rows in updates.items():
+                frames[table], counts[table] = self._rows_to_df(table, rows)
+            self._merge_commit(frames)
+            return counts, values
+
+    def _merge_commit(self, frames: dict[str, DataFrame]) -> None:
+        """Prepare every table's merged snapshot, then publish them all
+        with one :meth:`_commit_txn`. Callers hold the write lock; each
+        frame is key-unique and in canonical column order."""
+        versions: dict[str, str] = {}
+        for table, new in sorted(frames.items()):
+            v = self._merge_and_write(table, new)
+            if v is not None:
+                versions[table] = v
+        self._commit_txn(versions)
 
     def _commit_txn(self, versions: dict[str, str]) -> None:
         """Steps 2+3 of the transaction protocol: the atomic manifest
@@ -719,20 +743,16 @@ class MieStore:
         if not updates:
             return {}
         with self._write_lock:
-            versions: dict[str, str] = {}
+            frames: dict[str, DataFrame] = {}
             counts: dict[str, int] = {}
-            for table, df in sorted(updates.items()):
-                keys = key_columns(table)
-                cols = [f.name for f in table_schema(table)]
-                deduped = df.dropDuplicates(keys)
+            for table, df in updates.items():
+                deduped = df.dropDuplicates(key_columns(table))
                 if checkpoint:
                     deduped = deduped.localCheckpoint()
-                v = self._merge_and_write(table, deduped.select(*cols))
+                frames[table] = deduped.select(*[f.name for f in table_schema(table)])
                 # unique-key count, matching atomic_upsert_rows
                 counts[table] = deduped.count()
-                if v is not None:
-                    versions[table] = v
-            self._commit_txn(versions)
+            self._merge_commit(frames)
             return counts
 
     def _merge_and_write(self, table: str, new: DataFrame) -> str | None:
@@ -835,55 +855,32 @@ class MieStore:
 
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 
-    def meta_get(self, key: str) -> str | None:
-        # Fast path (r13 optimization, measured): no committed snapshot
-        # means the table is empty, so every key is absent — exactly
-        # what the Spark path below concludes by collecting a filter
-        # over createDataFrame([], schema), at the cost of a full job
-        # round-trip (~0.4 s). Shares table()'s emptiness check via
-        # _table_has_no_snapshot (ADVICE r13: one helper, so the two
-        # paths cannot drift); every fresh-store open pays this via
-        # ensure_schema.
+    def meta_values(self, keys: list[str]) -> dict[str, str]:
+        """{key: value} for the present ``keys``, read in one scan.
+
+        Fast path: no committed snapshot means the table is empty, so
+        every key is absent — what the Spark path would conclude after
+        a full job round-trip (~0.4 s). It shares table()'s emptiness
+        check (_table_has_no_snapshot), so the two cannot drift; every
+        fresh-store open takes it via ensure_schema."""
         if self._table_has_no_snapshot("mie_meta"):
-            return None
+            return {}
         from pyspark.sql import functions as F
 
-        hit = (
-            self.table("mie_meta")
-            .filter(F.col("key") == key)
-            .select("value")
-            .collect()
-        )
-        return None if not hit else str(hit[-1]["value"])
+        rows = self.table("mie_meta").filter(F.col("key").isin(keys)).collect()
+        return {r["key"]: str(r["value"]) for r in rows}
+
+    def meta_get(self, key: str) -> str | None:
+        return self.meta_values([key]).get(key)
 
     def meta_set(self, key: str, value: str) -> None:
         self.upsert_rows("mie_meta", [{"key": key, "value": str(value)}])
 
     def meta_increment(self, key: str) -> int:
-        """Counter RMW done as one upsert (the reference's two-statement
-        version is non-atomic, client.go:251-292 — noted in SURVEY §2.4)."""
-        with self._write_lock:  # RMW atomic under the writer lock
-            current = self.meta_get(key)
-            value = (int(current) if current and current.isdigit() else 0) + 1
-            self.meta_set(key, str(value))
-            return value
-
-    def meta_touch(self, counter_key: str, ts_key: str, ts_value: str) -> int:
-        """Counter increment + timestamp set as ONE snapshot write —
-        usage recording runs on every tool call, and on a disk store
-        each write is a Spark merge job, so batching the pair halves
-        the per-call write cost."""
-        with self._write_lock:
-            current = self.meta_get(counter_key)
-            value = (int(current) if current and current.isdigit() else 0) + 1
-            self.upsert_rows(
-                "mie_meta",
-                [
-                    {"key": counter_key, "value": str(value)},
-                    {"key": ts_key, "value": str(ts_value)},
-                ],
-            )
-            return value
+        """Counter RMW done as one transaction (the reference's
+        two-statement version is non-atomic, client.go:251-292 — noted
+        in SURVEY §2.4); the ``counters`` path of atomic_upsert_rows."""
+        return self._upsert_rows({}, {key: 1})[1][key]
 
     # -- snapshot pinning ---------------------------------------------------
 

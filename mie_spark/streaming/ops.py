@@ -49,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mie_spark import generations
+from mie_spark import generations, ids
 from mie_spark.session import conf_overrides
 
 SESSION_GAP_SECONDS = 30 * 60
@@ -717,7 +717,6 @@ def embed_and_upsert_stream(
 
     out_schema = StructType(
         [
-            StructField("id", StringType()),
             StructField("content", StringType()),
             StructField("embedding", ArrayType(FloatType())),
         ]
@@ -731,21 +730,10 @@ def embed_and_upsert_stream(
     embed = make_worker_embed(embed_dim)
 
     def embed_batch(it: "Any") -> "Any":
-        import hashlib
-
         for pdf in it:
             texts = pdf["text"].astype(str)
-            ids = [
-                "fact:"
-                + hashlib.sha256(f"{t}|general".encode()).hexdigest()[:16]
-                for t in texts
-            ]
             yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "content": texts,
-                    "embedding": [embed(t) for t in texts],
-                }
+                {"content": texts, "embedding": [embed(t) for t in texts]}
             )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -756,6 +744,7 @@ def embed_and_upsert_stream(
         embedded = (
             batch_df.select(F.col(text_col).cast("string").alias("text"))
             .mapInPandas(embed_batch, schema=out_schema)
+            .withColumn("id", ids.fact_id_expr(F.col("content"), F.lit("general")))
             .localCheckpoint()
         )
         facts = embedded.select(

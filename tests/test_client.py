@@ -1433,3 +1433,139 @@ def test_table_at_reads_pre_evolution_snapshot(spark, tmp_path):
     # diff across the evolution boundary works too
     diff = store.diff_versions("mie_fact", pinned, store._snapshot_dir("mie_fact").rsplit("/", 1)[-1])
     assert diff.count() >= 1
+
+
+# ----------------------------------------------------------------------
+# one write path: every write call is one transaction
+# ----------------------------------------------------------------------
+
+
+def _table_counts(client):
+    tables = ["mie_fact", "mie_fact_embedding", "mie_entity",
+              "mie_entity_embedding", "mie_invalidates", "mie_fact_entity"]
+    return {t: client.store.table(t).count() for t in tables}
+
+
+@pytest.mark.parametrize(
+    "extra, error",
+    [
+        ({"invalidates": "ent:0123456789abcdef"}, "requires fact ids"),
+        ({"relationships": [{"edge_table": "mie_bogus", "from_id": "fact:a",
+                             "to_id": "ent:b"}]}, "invalid edge table"),
+        ({"relationships": [{"edge_table": "mie_decision_entity",
+                             "from_id": "dec:a", "to_id": "ent:b",
+                             "role": "not-a-role"}]}, "role"),
+    ],
+)
+def test_tool_store_failure_writes_nothing(client, extra, error):
+    """A store whose invalidation or relationship is bad raises before
+    anything is written: no node, no embedding, no usage count."""
+    item = {"type": "fact", "content": "never lands", "category": "general", **extra}
+    with pytest.raises(ValueError, match=error):
+        tools.store(client, item)
+    assert client.find_fact_by_content("never lands") is None
+    assert client.store.table("mie_fact_embedding").count() == 0
+    assert client.get_usage()["total_stores"] == 0
+
+
+def test_import_json_bad_row_imports_nothing(client):
+    """Every row is validated before the import writes: one invalid
+    entity kind leaves the store exactly as it was."""
+    client.store_fact("already here", "general")
+    before = _table_counts(client)
+    data = {
+        "mie_fact": [{"content": f"imported {i}", "category": "general"} for i in range(3)],
+        "mie_entity": [
+            {"name": "fine", "kind": "technology"},
+            {"name": "broken", "kind": "not-a-kind"},
+        ],
+    }
+    with pytest.raises(ValueError):
+        client.import_json(data)
+    assert _table_counts(client) == before
+    assert client.find_fact_by_content("imported 0") is None
+
+
+def test_store_crash_in_embedding_merge_exposes_nothing(spark, tmp_path):
+    """A crash while the embedding table's snapshot is prepared leaves
+    neither the fact nor its embedding visible, to this store or to a
+    fresh open of the same path."""
+    from mie_spark.storage import MieStore
+
+    path = str(tmp_path / "crash")
+    client = MieClient(spark, path=path, embedding_dim=4)
+    orig = client.store._merge_and_write
+
+    def crashing(table, new):
+        if table == "mie_fact_embedding":
+            raise RuntimeError("injected crash in embedding merge")
+        return orig(table, new)
+
+    client.store._merge_and_write = crashing
+    with pytest.raises(RuntimeError, match="injected crash"):
+        tools.store(client, {"type": "fact", "content": "half written", "category": "general"})
+    client.store._merge_and_write = orig
+    for store in (client.store, MieStore(spark, path=path, embedding_dim=4)):
+        assert store.table("mie_fact").count() == 0
+        assert store.table("mie_fact_embedding").count() == 0
+        assert store.meta_get("total_stores") is None
+
+
+def _count_commits(client):
+    calls = []
+    orig = client.store._commit_txn
+
+    def counted(versions):
+        calls.append(sorted(versions))
+        return orig(versions)
+
+    client.store._commit_txn = counted
+    return calls
+
+
+def test_write_calls_commit_once(client, spark):
+    """Each write call — bulk_store, tools.store with relationships,
+    update, query's usage record, import_json, import_sql_script —
+    reaches the store's commit exactly once."""
+    calls = _count_commits(client)
+    items = [{"type": "topic", "name": "bulk topic"}]
+    items += [
+        {"type": "fact", "content": f"bulk fact {j}", "category": "general",
+         "relationships": [{"edge_table": "mie_fact_topic", "to_ref": 0}]}
+        for j in range(8)
+    ]
+    items.append({"type": "fact", "content": "bulk replacement", "category": "general",
+                  "invalidates_ref": 1})
+    out = tools.bulk_store(client, items)
+    assert out["errors"] == [] and len(out["stored"]) == 10
+    assert calls == [["mie_fact", "mie_fact_embedding", "mie_fact_topic",
+                      "mie_invalidates", "mie_meta", "mie_topic"]]
+    assert client.get_node_by_id(out["stored"][1]["id"])["valid"] is False
+    assert client.store.table("mie_fact_topic").count() == 8
+    assert client.get_usage()["total_stores"] == 10
+
+    calls.clear()
+    fid = out["stored"][2]["id"]
+    res = tools.store(client, {
+        "type": "entity", "name": "Postgres", "kind": "technology",
+        "relationships": [{"edge_table": "mie_fact_entity", "from_id": fid,
+                           "to_id": "ent:placeholder"}],
+    })
+    assert len(calls) == 1 and "mie_fact_entity" in calls[0]
+    assert client.get_usage()["total_stores"] == 11
+
+    calls.clear()
+    tools.update(client, "update_description", res["id"], description="db")
+    assert len(calls) == 1
+    calls.clear()
+    tools.query(client, "bulk", mode="exact")
+    assert calls == [["mie_meta"]]
+
+    data = client.export_json()
+    script = client.export_sql_script()
+    for replay in (lambda c: c.import_json(data), lambda c: c.import_sql_script(script)):
+        other = MieClient(spark, path=None, embedding_dim=4)
+        other_calls = _count_commits(other)
+        replay(other)
+        assert len(other_calls) == 1
+        assert other.store.table("mie_fact_embedding").count() == 9

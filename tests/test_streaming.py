@@ -177,6 +177,10 @@ def test_streaming_embedding_pipeline_feeds_semantic_search(spark):
         client.store.table("mie_fact_embedding").count()
         == client.store.table("mie_fact").count()
     )
+    from mie_spark import ids
+
+    stored = client.store.table("mie_fact").select("id", "content").collect()
+    assert all(r["id"] == ids.fact_id(r["content"], "general") for r in stored)
     sample = client.store.table("mie_fact").select("content").first()[0]
     hits = client.semantic_search(sample, limit=3, node_types=["fact"])
     assert hits and hits[0]["content"] == sample
