@@ -294,6 +294,7 @@ class MieClient:
         a replacement: NO edge is written (a self-loop edge claiming the
         fact supersedes itself would corrupt the invalidation chain and
         every export carrying it)."""
+        # embed=False: flipping `valid` leaves the embedded text as it was
         self._commit(
             self._invalidation_rows(new_fact_id, old_fact_id, reason), embed=False
         )
@@ -354,7 +355,7 @@ class MieClient:
             raise KeyError(f"decision not found: {decision_id}")
         row["status"] = status
         row["updated_at"] = now_s()
-        self._commit({"mie_decision": [row]}, embed=False)
+        self._commit({"mie_decision": [row]}, embed=False)  # text unchanged
 
     def _commit(
         self,
@@ -953,7 +954,7 @@ class MieClient:
         (cmd/mie/import.go:116-207). Provenance fields (source_agent /
         source_conversation) survive the round trip, and facts exported
         with valid=False are re-flagged after the re-store — the
-        mie_invalidates edges import verbatim, so leaving the flag True
+        mie_invalidates edges import as exported, so leaving the flag True
         would desync the graph from its own invalidation edges.
 
         Every row is built and validated before anything is written,
@@ -964,7 +965,9 @@ class MieClient:
         batch = {
             t: [node_row(t, item) for item in data.get(t, [])] for t in NODE_TABLES
         }
-        batch.update({t: list(data.get(t, [])) for t in EDGE_TABLES})
+        for t, (keys, _) in EDGE_TABLES.items():
+            for r in data.get(t, []):
+                extend_batch(batch, edge_rows(t, r[keys[0]], r[keys[1]], r))
         n = sum(len(rows) for rows in batch.values())
         if dry_run:
             return n

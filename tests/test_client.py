@@ -1468,19 +1468,25 @@ def test_tool_store_failure_writes_nothing(client, extra, error):
     assert client.get_usage()["total_stores"] == 0
 
 
-def test_import_json_bad_row_imports_nothing(client):
+@pytest.mark.parametrize(
+    "bad, error",
+    [
+        ({"mie_entity": [{"name": "fine", "kind": "technology"},
+                         {"name": "broken", "kind": "not-a-kind"}]}, ValueError),
+        ({"mie_fact_entity": [{"fact_id": "fact:x"}]}, KeyError),
+    ],
+)
+def test_import_json_bad_row_imports_nothing(client, bad, error):
     """Every row is validated before the import writes: one invalid
-    entity kind leaves the store exactly as it was."""
+    entity kind, or an edge row without its key, leaves the store
+    exactly as it was."""
     client.store_fact("already here", "general")
     before = _table_counts(client)
     data = {
         "mie_fact": [{"content": f"imported {i}", "category": "general"} for i in range(3)],
-        "mie_entity": [
-            {"name": "fine", "kind": "technology"},
-            {"name": "broken", "kind": "not-a-kind"},
-        ],
+        **bad,
     }
-    with pytest.raises(ValueError):
+    with pytest.raises(error):
         client.import_json(data)
     assert _table_counts(client) == before
     assert client.find_fact_by_content("imported 0") is None
