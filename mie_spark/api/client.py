@@ -18,7 +18,6 @@ bound (tools/conflicts.go:20-22 vs memory/conflicts.go:95).
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -275,7 +274,8 @@ class MieClient:
 
     def _store_node(self, table: str, **item: Any) -> str:
         row = node_row(table, item)
-        self._commit({table: [row]})
+        batch = {table: [row]}
+        self._commit({**batch, **self._embedding_rows(batch)})
         return row["id"]
 
     def add_relationship(
@@ -294,10 +294,7 @@ class MieClient:
         a replacement: NO edge is written (a self-loop edge claiming the
         fact supersedes itself would corrupt the invalidation chain and
         every export carrying it)."""
-        # embed=False: flipping `valid` leaves the embedded text as it was
-        self._commit(
-            self._invalidation_rows(new_fact_id, old_fact_id, reason), embed=False
-        )
+        self._commit(self._invalidation_rows(new_fact_id, old_fact_id, reason))
 
     def _invalidation_rows(
         self,
@@ -335,9 +332,7 @@ class MieClient:
         return rows
 
     def update_description(self, node_id: str, description: str) -> None:
-        """RMW description update for entity/event/topic (writer.go:313-362).
-        The node is re-embedded with it: the description is part of
-        the embedded text."""
+        """RMW description update for entity/event/topic (writer.go:313-362)."""
         table = ids.node_type_of(node_id)
         if table not in ("mie_entity", "mie_event", "mie_topic"):
             raise ValueError(f"{table} does not have a description update path")
@@ -355,34 +350,41 @@ class MieClient:
             raise KeyError(f"decision not found: {decision_id}")
         row["status"] = status
         row["updated_at"] = now_s()
-        self._commit({"mie_decision": [row]}, embed=False)  # text unchanged
+        self._commit({"mie_decision": [row]})
+
+    def _embedding_rows(
+        self, batch: dict[str, list[dict[str, Any]]]
+    ) -> dict[str, list[dict[str, Any]]]:
+        """The embedding rows of the node rows in ``batch``: one
+        ``embed`` call per node table, text from ``_EMBED_TEXT``, the
+        last staged row of an id wins like the upsert itself. Callers
+        pass the nodes they build; rows that keep their text (an
+        invalidation's flipped fact, a status update) are not embedded."""
+        out: dict[str, list[dict[str, Any]]] = {}
+        for table, (emb_table, id_col) in _EMBED_SOURCE.items():
+            latest = {r["id"]: r for r in batch.get(table, ())}
+            if latest:
+                vecs = self.embedder.embed(
+                    [_EMBED_TEXT[table](r) for r in latest.values()]
+                )
+                out[emb_table] = [
+                    {id_col: nid, "embedding": v} for nid, v in zip(latest, vecs)
+                ]
+        return out
 
     def _commit(
         self,
         batch: dict[str, list[dict[str, Any]]],
         usage: str | None = None,
         n: int = 1,
-        embed: bool = True,
     ) -> dict[str, int]:
         """Publish one write batch ({table: rows in write order}) as ONE
         store transaction — the single write path of every store,
-        update, import and usage record. With ``embed``, every node row
-        is embedded (one ``embed`` call per table, text from
-        ``_EMBED_TEXT``, the last staged row of an id wins like the
-        upsert itself). ``usage`` ("store"/"query") adds ``n`` to that
-        usage counter and stamps its last-at time. Nodes, embeddings,
-        edges and counter become visible together or not at all."""
+        update, import and usage record. ``usage`` ("store"/"query")
+        adds ``n`` to that usage counter and stamps its last-at time.
+        Nodes, embeddings, edges and counter become visible together or
+        not at all."""
         updates = {t: rows for t, rows in batch.items() if rows}
-        if embed:
-            for table, (emb_table, id_col) in _EMBED_SOURCE.items():
-                latest = {r["id"]: r for r in updates.get(table, ())}
-                if latest:
-                    vecs = self.embedder.embed(
-                        [_EMBED_TEXT[table](r) for r in latest.values()]
-                    )
-                    updates[emb_table] = [
-                        {id_col: nid, "embedding": v} for nid, v in zip(latest, vecs)
-                    ]
         counters = None
         if usage is not None and n:
             counter, stamp = _USAGE_KEYS[usage]
@@ -967,10 +969,14 @@ class MieClient:
         }
         for t, (keys, _) in EDGE_TABLES.items():
             for r in data.get(t, []):
-                extend_batch(batch, edge_rows(t, r[keys[0]], r[keys[1]], r))
+                # role "" or NULL is how an edge without a role is stored
+                # (add_relationship with no role): it imports as such
+                values = {k: v for k, v in r.items() if k != "role" or v}
+                extend_batch(batch, edge_rows(t, r[keys[0]], r[keys[1]], values))
         n = sum(len(rows) for rows in batch.values())
         if dry_run:
             return n
+        extend_batch(batch, self._embedding_rows(batch))
         facts = batch["mie_fact"]
         latest = {r["id"]: r for r in facts}
         facts += [
@@ -1015,11 +1021,16 @@ class MieClient:
         scripts carry no vectors. The reference's raw replay skips this
         (imported facts stay invisible to vector search until its async
         embedder is poked); pass False for byte-faithful parity."""
+        import re
+
+        stmt_re = re.compile(
+            r"INSERT INTO (\w+)\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)$", re.DOTALL
+        )
         known = set(NODE_TABLES) | set(EDGE_TABLES)
         batches: dict[str, list[dict[str, Any]]] = {}
         n = 0
         for stmt in _split_sql_statements(script):
-            m = _SQL_INSERT.match(stmt)
+            m = stmt_re.match(stmt)
             if not m:
                 raise ValueError(f"unsupported statement: {stmt[:80]!r}")
             table = m.group(1)
@@ -1035,7 +1046,9 @@ class MieClient:
             n += 1
         if dry_run:
             return n
-        self._commit(batches, embed=regenerate_embeddings)
+        if regenerate_embeddings:
+            extend_batch(batches, self._embedding_rows(batches))
+        self._commit(batches)
         return n
 
     def raw_query(self, sql: str) -> DataFrame:
@@ -1108,42 +1121,86 @@ def _sql_literal(value: Any) -> str:
     return f"'{escaped}'"
 
 
-_SQL_INSERT = re.compile(
-    r"INSERT INTO (\w+)\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)$", re.DOTALL
-)
-# one statement: string literals ('' escapes a quote) or any run of
-# characters other than ``;`` and quotes
-_SQL_STATEMENT = re.compile(r"(?:'(?:[^']|'')*'|[^;'])+")
-# one VALUES item: a string literal, or a bare token up to the next comma
-_SQL_VALUE = re.compile(r"'((?:[^']|'')*)'|([^,\s][^,]*)")
-
-
 def _split_sql_statements(script: str) -> list[str]:
     """Split on ``;`` outside string literals ('' is the escape)."""
-    if script.count("'") % 2:
-        raise ValueError("unterminated string literal in script")
-    return [s.strip() for s in _SQL_STATEMENT.findall(script) if s.strip()]
+    out: list[str] = []
+    buf: list[str] = []
+    in_str = False
+    i = 0
+    while i < len(script):
+        ch = script[i]
+        if in_str:
+            buf.append(ch)
+            if ch == "'":
+                if i + 1 < len(script) and script[i + 1] == "'":
+                    buf.append("'")
+                    i += 2
+                    continue
+                in_str = False
+            i += 1
+            continue
+        if ch == "'":
+            in_str = True
+            buf.append(ch)
+            i += 1
+            continue
+        if ch == ";":
+            stmt = "".join(buf).strip()
+            if stmt:
+                out.append(stmt)
+            buf = []
+            i += 1
+            continue
+        buf.append(ch)
+        i += 1
+    tail = "".join(buf).strip()
+    if tail:
+        out.append(tail)
+    return out
 
 
 def _parse_sql_row(values: str) -> list[Any]:
     """Parse one VALUES(...) body back into python values — the exact
     inverse of _sql_literal (strings with '' escapes, ints, floats,
     TRUE/FALSE/NULL)."""
+    import re
+
     vals: list[Any] = []
-    for m in _SQL_VALUE.finditer(values):
-        if m.group(1) is not None:
-            vals.append(m.group(1).replace("''", "'"))
-            continue
-        tok = m.group(2).strip()
-        up = tok.upper()
-        if up == "NULL":
-            vals.append(None)
-        elif up == "TRUE":
-            vals.append(True)
-        elif up == "FALSE":
-            vals.append(False)
-        elif re.fullmatch(r"-?\d+", tok):
-            vals.append(int(tok))
+    i, n = 0, len(values)
+    while i < n:
+        while i < n and values[i] in " ,\n\t":
+            i += 1
+        if i >= n:
+            break
+        if values[i] == "'":
+            i += 1
+            buf: list[str] = []
+            while i < n:
+                if values[i] == "'":
+                    if i + 1 < n and values[i + 1] == "'":
+                        buf.append("'")
+                        i += 2
+                        continue
+                    i += 1
+                    break
+                buf.append(values[i])
+                i += 1
+            vals.append("".join(buf))
         else:
-            vals.append(float(tok))
+            j = i
+            while j < n and values[j] != ",":
+                j += 1
+            tok = values[i:j].strip()
+            i = j
+            up = tok.upper()
+            if up == "NULL":
+                vals.append(None)
+            elif up == "TRUE":
+                vals.append(True)
+            elif up == "FALSE":
+                vals.append(False)
+            elif re.fullmatch(r"-?\d+", tok):
+                vals.append(int(tok))
+            else:
+                vals.append(float(tok))
     return vals

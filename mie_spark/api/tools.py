@@ -57,32 +57,49 @@ def store(client: MieClient, item: dict[str, Any]) -> dict:
         extend_batch(
             batch, edge_rows(rel["edge_table"], rel["from_id"], rel["to_id"], rel)
         )
+    # only the new node is embedded: an invalidated fact keeps its text
+    extend_batch(batch, client._embedding_rows({table: [row]}))
     client._commit(batch, usage="store")
     return {"id": row["id"], "type": item.get("type")}
 
 
 def bulk_store(client: MieClient, items: list[dict[str, Any]]) -> dict:
     """Two-phase bulk store with intra-batch `target_ref` resolution
-    (pkg/tools/bulk_store.go:23-138): phase 1 builds every node and
-    records its id by batch index; phase 2 builds invalidations and
-    relationships, where `target_ref: N` means "the node stored from
+    (pkg/tools/bulk_store.go:23-138): phase 1 builds and embeds every
+    node and records its id by batch index; phase 2 builds invalidations
+    and relationships, where `target_ref: N` means "the node stored from
     item N of this batch" (J7, bulk_store.go:142-170). Per-item errors
     accumulate; one bad item never aborts the batch — a failing item's
-    rows of that phase are left out. Everything that succeeded commits
-    as ONE transaction, with the usage counter raised once per node."""
+    rows of that phase are left out, and when the batch fails to embed,
+    the items are embedded one by one so only those whose text fails are
+    reported. Everything that succeeded commits as ONE transaction, with
+    the usage counter raised once per node."""
     if len(items) > MAX_BULK_ITEMS:
         raise ValueError(f"bulk store limited to {MAX_BULK_ITEMS} items")
-    batch: dict[str, list[dict[str, Any]]] = {}
-    stored_ids: dict[int, str] = {}
+    staged: dict[int, tuple[str, dict[str, Any]]] = {}
     errors: list[dict[str, Any]] = []
     for idx, item in enumerate(items):
         try:
-            table, row = item_row(item)
+            staged[idx] = item_row(item)
         except Exception as exc:  # noqa: BLE001 — error accumulation semantics
             errors.append({"index": idx, "error": str(exc)})
-            continue
-        batch.setdefault(table, []).append(row)
-        stored_ids[idx] = row["id"]
+    nodes: dict[str, list[dict[str, Any]]] = {}
+    for table, row in staged.values():
+        nodes.setdefault(table, []).append(row)
+    try:
+        embedded = client._embedding_rows(nodes)
+    except Exception:  # noqa: BLE001 — embed item by item to find the failing ones
+        embedded = {}
+        for idx, (table, row) in list(staged.items()):
+            try:
+                extend_batch(embedded, client._embedding_rows({table: [row]}))
+            except Exception as exc:  # noqa: BLE001
+                errors.append({"index": idx, "error": str(exc)})
+                del staged[idx]
+                nodes[table].remove(row)
+        errors.sort(key=lambda e: e["index"])
+    batch = {**nodes, **embedded}
+    stored_ids = {idx: row["id"] for idx, (_, row) in staged.items()}
 
     def resolve(ref_or_id: Any) -> str:
         if ref_or_id is None:

@@ -11,6 +11,7 @@ import pytest
 
 from mie_spark.api import MieClient
 from mie_spark.api import tools
+from mie_spark.embedding import MockEmbeddingProvider
 
 
 @pytest.fixture()
@@ -1575,3 +1576,73 @@ def test_write_calls_commit_once(client, spark):
         replay(other)
         assert len(other_calls) == 1
         assert other.store.table("mie_fact_embedding").count() == 9
+
+
+def test_import_json_keeps_roleless_decision_edges(client, spark):
+    """A decision→entity edge stored without a role exports with role ""
+    (or NULL, from a replayed SQL script) and imports back as such."""
+    did = client.store_decision("Pick a queue", "durability")
+    eid = client.store_entity("Kafka", "technology")
+    client.add_relationship("mie_decision_entity", did, eid)
+    data = client.export_json()
+    assert data["mie_decision_entity"][0]["role"] == ""
+    for role in ("", None):
+        data["mie_decision_entity"][0]["role"] = role
+        other = MieClient(spark, path=None, embedding_dim=4)
+        assert other.import_json(data) == 3
+        rels = other.get_entities_for_decision(did)
+        assert [r["id"] for r in rels] == [eid]
+        assert other.store.table("mie_decision_entity").first()["role"] == ""
+
+
+class _RecordingEmbedder(MockEmbeddingProvider):
+    """Mock embedder that records every text and fails on marked ones."""
+
+    def __init__(self, dimension: int = 4):
+        super().__init__(dimension)
+        self.texts: list[str] = []
+
+    def embed(self, texts):
+        if any("unembeddable" in t for t in texts):
+            raise RuntimeError("embedding provider rejected the text")
+        self.texts.extend(texts)
+        return super().embed(texts)
+
+
+def test_bulk_store_embedding_failure_reports_only_its_item(client):
+    """A text the provider rejects fails its own item, as any other
+    per-item error does; the rest of the batch commits with embeddings."""
+    client.embedder = _RecordingEmbedder()
+    out = tools.bulk_store(client, [
+        {"type": "entity", "name": "Redis", "kind": "technology"},
+        {"type": "fact", "content": "an unembeddable text", "category": "general"},
+        {"type": "fact", "content": "Redis is in memory", "category": "technical",
+         "relationships": [{"edge_table": "mie_fact_entity", "to_ref": 0}]},
+        {"type": "fact", "content": "depends on the failed one", "category": "general",
+         "invalidates_ref": 1},
+    ])
+    assert [s["index"] for s in out["stored"]] == [0, 2, 3]
+    assert [e["index"] for e in out["errors"]] == [1, 3]
+    assert "rejected" in out["errors"][0]["error"]
+    assert client.find_fact_by_content("an unembeddable text") is None
+    assert client.store.table("mie_fact_embedding").count() == 2
+    assert client.store.table("mie_entity_embedding").count() == 1
+    assert client.store.table("mie_fact_entity").count() == 1
+    assert client.get_usage()["total_stores"] == 3
+
+
+def test_only_new_node_text_is_embedded(client):
+    """An invalidation, a status update and a description update embed
+    nothing: only a newly stored node's text goes to the provider."""
+    old = client.store_fact("the old belief", "general")
+    did = client.store_decision("Use a cache", "latency")
+    tid = client.store_topic("caching")
+    client.embedder = _RecordingEmbedder()
+    tools.store(client, {"type": "fact", "content": "the new belief",
+                         "category": "general", "invalidates": old})
+    assert client.embedder.texts == ["the new belief"]
+    assert client.get_node_by_id(old)["valid"] is False
+    tools.update(client, "update_status", did, status="superseded")
+    tools.update(client, "update_description", tid, description="cache layers")
+    tools.update(client, "invalidate", old)
+    assert client.embedder.texts == ["the new belief"]
