@@ -332,7 +332,9 @@ class MieClient:
         return rows
 
     def update_description(self, node_id: str, description: str) -> None:
-        """RMW description update for entity/event/topic (writer.go:313-362)."""
+        """RMW description update for entity/event/topic (writer.go:313-362).
+        The description is part of an entity's or event's embedded text,
+        so its vector is re-embedded and commits with the row."""
         table = ids.node_type_of(node_id)
         if table not in ("mie_entity", "mie_event", "mie_topic"):
             raise ValueError(f"{table} does not have a description update path")
@@ -341,7 +343,8 @@ class MieClient:
             raise KeyError(f"node not found: {node_id}")
         row["description"] = description
         row["updated_at"] = now_s()
-        self._commit({table: [row]})
+        batch = {table: [row]}
+        self._commit({**batch, **self._embedding_rows(batch)})
 
     def update_status(self, decision_id: str, status: str) -> None:
         V.validate_decision_status(status)

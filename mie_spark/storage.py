@@ -3,8 +3,8 @@
 Engine mapping (SURVEY.md §1.5 — the reference opens CozoDB as `mem`,
 `rocksdb`, or `sqlite`, storage/embedded.go:35-70, one query engine
 under every back end). Here every store is versioned parquet snapshots
-per table with an atomic `_CURRENT` pointer file, read and written
-entirely by Spark; the back end is only WHERE the snapshots live:
+per table with an atomic `_CURRENT` pointer file; the back end is only
+WHERE the snapshots live:
 
 - a ``path``   → a durable store directory (the reference's
                  ``rocksdb``/``sqlite``).
@@ -15,26 +15,36 @@ entirely by Spark; the back end is only WHERE the snapshots live:
                  files.
 
 ``table()`` is a lazy ``spark.read.parquet`` (scans distribute, filters
-push down); upsert = anti-join on keys ∪ new rows executed as one Spark
-plan whose write action streams straight to snapshot N+1 — no driver
-materialization at any point, so the write path scales with the
-cluster, not the driver. Every write (upsert, delete, compact, restore)
-prepares invisible snapshots and commits them through one multi-table
-manifest rename (:meth:`MieStore._commit_txn`, poor-man's MVCC); on a
-warehouse deployment the same call maps to one Delta `MERGE INTO` (not
-shippable in this container). GC keeps the 2 newest snapshots, so a
-lazy reader survives exactly ONE commit after it was opened; a handle
-held across two or more commits loses its files — re-open via table()
-for fresh reads (the same contract as Delta's VACUUM horizon, just
-shorter).
+push down). Writes take one of two merge paths by input kind, into the
+same snapshot layout:
+
+- row batches (:meth:`MieStore.atomic_upsert_rows`, every agent-sized
+  write) already live on the driver, so the driver merges them with
+  pyarrow: read the touched buckets' part files, drop the batch's keys,
+  append the batch, write one part file per bucket — no Spark job;
+- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the streaming sink),
+  deletes and compaction run as one Spark plan (anti-join on keys ∪ new
+  rows) whose write streams straight to snapshot N+1, so those scale
+  with the cluster, not the driver.
+
+The ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) are
+driver-side pyarrow reads too. Every write (upsert, delete, compact,
+restore) prepares invisible snapshots and commits them through one
+multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
+MVCC); on a warehouse deployment the same call maps to one Delta
+`MERGE INTO` (not shippable in this container). GC keeps the 2 newest
+snapshots, so a lazy reader survives exactly ONE commit after it was
+opened; a handle held across two or more commits loses its files —
+re-open via table() for fresh reads (the same contract as Delta's
+VACUUM horizon, just shorter).
 
 Snapshots are PARTITIONED by a stable key-hash bucket (``bkt=K``
-subdirs, ``merge_buckets`` of them): a merge or delete reads and
-rewrites ONLY the buckets the batch touches (partition pruning on the
-read, ``partitionBy`` on the write) and hard-links every untouched
-bucket's files from the previous snapshot — O(batch) I/O per commit
-instead of O(table), which is the difference between a usable and an
-unusable write path at 100 TB. Hard links keep each snapshot a
+subdirs, ``merge_buckets`` of them; Spark's ``xxhash64`` on the driver
+side too, see :func:`_key_bucket`): a merge or delete reads and
+rewrites ONLY the buckets the batch touches and hard-links every
+untouched bucket's files from the previous snapshot — O(batch) I/O per
+commit instead of O(table), which is the difference between a usable
+and an unusable write path at 100 TB. Hard links keep each snapshot a
 self-contained full table, so the pointer flip, GC, pinning, time
 travel, and backup all work unchanged (deleting an old version only
 drops link counts, never shared file content).
@@ -53,9 +63,19 @@ import shutil
 import tempfile
 import threading
 import time
+import uuid
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+)
 
 from mie_spark.schemas import (
     DEFAULT_EMBEDDING_DIM,
@@ -131,25 +151,19 @@ def _file_zone_stats(path: str) -> dict[str, list]:
 
 
 def _py_native(value: Any, dtype) -> Any:  # noqa: ANN001
-    """Coerce numpy values to the python types Spark's row verifier
-    accepts for the given Spark type."""
-    import numpy as np
-
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-    )
-
+    """Coerce a row value (numpy scalars and arrays included) to the
+    python type of the given Spark type; NaN becomes NULL."""
     if value is None or (isinstance(value, float) and math.isnan(value)):
         return None
     if isinstance(dtype, ArrayType):
-        if isinstance(value, (list, tuple, np.ndarray)):
-            return [_py_native(v, dtype.elementType) for v in value]
-        return None
+        if not isinstance(value, (list, tuple, np.ndarray)):
+            return None
+        if isinstance(value, np.ndarray):
+            value = value.tolist()  # python scalars: far faster to walk
+        if isinstance(dtype.elementType, (FloatType, DoubleType)):
+            # embeddings: the hot case, inlined
+            return [None if v is None or v != v else float(v) for v in value]
+        return [_py_native(v, dtype.elementType) for v in value]
     if isinstance(dtype, (FloatType, DoubleType)):
         return float(value)
     if isinstance(dtype, (IntegerType, LongType)):
@@ -176,6 +190,109 @@ def _canon_select(df: DataFrame, schema, extra: tuple[str, ...] = ()) -> DataFra
         ],
         *extra,
     )
+
+
+def _arrow_schema(table: str):  # noqa: ANN202
+    """The table's canonical schema as an Arrow schema (looked up per
+    call: the canonical schema is the one this build declares)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(table_schema(table))
+
+
+def _read_arrow(table: str, files: list[str]):  # noqa: ANN202
+    """Part files → one Arrow table in the canonical schema, the driver
+    twin of :meth:`MieStore._read_snapshot`'s schema-evolution contract:
+    columns a file predates arrive as typed NULLs, stale columns are
+    never read, narrower types (int->long, float->double) are up-cast."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = _arrow_schema(table)
+    pieces = []
+    for path in files:
+        pf = pq.ParquetFile(path)
+        have = set(pf.schema_arrow.names)
+        t = pf.read(columns=[c for c in schema.names if c in have])
+        pieces.append(
+            pa.Table.from_arrays(
+                [
+                    t[f.name].cast(f.type)
+                    if f.name in have
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            )
+        )
+    return pa.concat_tables(pieces) if pieces else schema.empty_table()
+
+
+# -- driver-side bucket hash -----------------------------------------------
+#
+# A pure-Python twin of MieStore._bkt, i.e. Spark's
+# ``pmod(xxhash64(k1, k2, ...), merge_buckets)``: XXH64 with seed 42,
+# each non-NULL key column hashed with the previous column's hash as
+# its seed (NULLs are skipped), strings as their UTF-8 bytes and longs
+# as 8 little-endian bytes. Driver-merged rows land in exactly the
+# bucket a Spark merge would put them in.
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _lane(data: bytes, i: int, width: int = 8) -> int:
+    return int.from_bytes(data[i : i + width], "little")
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(acc, _lane(data, i + 8 * j)) for j, acc in enumerate(v)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for acc in v:
+            h = ((h ^ _round(0, acc)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, _lane(data, i)), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (_lane(data, i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _key_bucket(key: tuple, n: int) -> int:
+    """The ``bkt`` MieStore._bkt gives a row with these key values
+    (strings and longs, the key types of schemas.py)."""
+    h = 42
+    for v in key:
+        if v is not None:
+            data = v.encode() if isinstance(v, str) else (v & _M64).to_bytes(8, "little")
+            h = _xxh64(data, h)
+    return (h - (1 << 64) if h >> 63 else h) % n
 
 
 class MieStore:
@@ -293,14 +410,18 @@ class MieStore:
         os.remove(os.path.join(self.path, TXN_FILE))
 
     def _next_snapshot(self, table: str) -> tuple[str, str]:
-        """(dir, version) for the next snapshot write."""
+        """(dir, version) for the next snapshot write. The dir does not
+        exist on return: an orphan left there by an interrupted prepare
+        (never visible, see _recover_txn) is removed first."""
         tdir = os.path.join(self.path, table)
         os.makedirs(tdir, exist_ok=True)
         current = self._snapshot_dir(table)
         next_v = (
             f"v{int(os.path.basename(current)[1:]) + 1}" if current else "v1"
         )
-        return os.path.join(tdir, next_v), next_v
+        snap = os.path.join(tdir, next_v)
+        shutil.rmtree(snap, ignore_errors=True)
+        return snap, next_v
 
     def _commit_snapshot(self, table: str, version: str) -> None:
         """Roll-forward step of a committed transaction (called only by
@@ -394,21 +515,22 @@ class MieStore:
     def _table_has_no_snapshot(self, name: str) -> bool:
         """True when a table has no committed, non-empty
         snapshot — i.e. ``table(name)`` would return
-        ``createDataFrame([], schema)``. THE single emptiness check:
-        table() and meta_values' fast path both call this,
-        so the two can never drift."""
+        ``createDataFrame([], schema)``."""
         snap = self._snapshot_dir(name)
-        return snap is None or not self._has_parquet(snap)
+        return snap is None or not self._part_files(snap)
 
-    def _has_parquet(self, snap: str) -> bool:
-        # Spark writes no part files for an empty DataFrame — only
-        # _SUCCESS — and spark.read can't infer schema from that.
-        # Walk: part files live inside bkt=K partition subdirs.
-        if not os.path.isdir(snap):
-            return False
-        return any(
-            f.endswith(".parquet") for _, _, fs in os.walk(snap) for f in fs
-        )
+    @staticmethod
+    def _part_files(snap: str) -> list[str]:
+        """Every parquet part file under a snapshot (or one of its
+        ``bkt=K`` dirs); [] when the dir does not exist. Spark writes no
+        part files for an empty DataFrame — only _SUCCESS — and
+        spark.read can't infer a schema from that."""
+        return [
+            os.path.join(root, f)
+            for root, _, fs in os.walk(snap)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
 
     def _is_bucketed(self, snap: str) -> bool:
         return any(d.startswith("bkt=") for d in os.listdir(snap))
@@ -591,7 +713,7 @@ class MieStore:
                 f"pin versions you need to keep (pin_current)"
             )
         schema = table_schema(name)
-        if not self._has_parquet(snap):
+        if not self._part_files(snap):
             return self.spark.createDataFrame([], schema)
         # same add-column NULL-fill as table(): a pinned version is the
         # reader MOST likely to predate a schema evolution
@@ -610,23 +732,24 @@ class MieStore:
         collapse last-write-wins, so the count can be < len(rows)."""
         return self._upsert_rows({table: rows})[0].get(table, 0)
 
-    def _rows_to_df(self, table: str, rows: list[dict[str, Any]]):
-        """Dict rows → (key-unique DataFrame in canonical order, n).
-        Intra-batch dedup (last write wins, like sequential :put)
-        happens driver-side while the rows are still a dict list —
-        cheaper than a window over the batch."""
+    def _rows_to_arrow(self, table: str, rows: list[dict[str, Any]]):  # noqa: ANN202
+        """Dict rows → key-unique Arrow table in canonical column order.
+        Values are coerced to the column types first, then intra-batch
+        duplicates of a key collapse last-write-wins, like sequential
+        :put."""
+        import pyarrow as pa
+
         schema = table_schema(table)
-        cols = [f.name for f in schema]
-        keys = key_columns(table)
-        by_key = {tuple(r.get(k) for k in keys): r for r in rows}
-        new = self.spark.createDataFrame(
-            [
-                tuple(_py_native(r.get(c), f.dataType) for c, f in zip(cols, schema))
-                for r in by_key.values()
-            ],
-            schema,
+        key_idx = [schema.names.index(k) for k in key_columns(table)]
+        by_key: dict[tuple, tuple] = {}
+        for r in rows:
+            vals = tuple(_py_native(r.get(f.name), f.dataType) for f in schema)
+            by_key[tuple(vals[i] for i in key_idx)] = vals
+        arrow = _arrow_schema(table)
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(zip(*by_key.values()), arrow)],
+            schema=arrow,
         )
-        return new, len(by_key)
 
     def atomic_upsert_rows(
         self,
@@ -639,9 +762,10 @@ class MieStore:
         Protocol (write-ahead roll-forward, the manifest rename is the
         commit point):
 
-        1. PREPARE — write every table's next snapshot without a
+        1. PREPARE — merge every table's batch into its next snapshot
+           on the driver (:meth:`_merge_arrow`, no Spark job) without a
            pointer flip; nothing is visible yet. A crash here leaves
-           only orphan version dirs that the next write overwrites.
+           only orphan version dirs that the next write removes.
         2. COMMIT — one atomic ``os.replace`` of the {table: version}
            manifest to ``_TXN_CURRENT``. Readers resolve a table's
            current version as max(pointer, manifest entry), so this
@@ -681,17 +805,15 @@ class MieStore:
                 updates.setdefault("mie_meta", []).extend(
                     {"key": k, "value": str(v)} for k, v in values.items()
                 )
-            frames: dict[str, DataFrame] = {}
-            counts: dict[str, int] = {}
-            for table, rows in updates.items():
-                frames[table], counts[table] = self._rows_to_df(table, rows)
-            self._merge_commit(frames)
-            return counts, values
+            batches = {t: self._rows_to_arrow(t, rows) for t, rows in updates.items()}
+            self._merge_commit(batches)
+            return {t: b.num_rows for t, b in batches.items()}, values
 
-    def _merge_commit(self, frames: dict[str, DataFrame]) -> None:
+    def _merge_commit(self, frames: dict[str, Any]) -> None:
         """Prepare every table's merged snapshot, then publish them all
         with one :meth:`_commit_txn`. Callers hold the write lock; each
-        frame is key-unique and in canonical column order."""
+        frame (Arrow table or DataFrame) is key-unique and in canonical
+        column order."""
         versions: dict[str, str] = {}
         for table, new in sorted(frames.items()):
             v = self._merge_and_write(table, new)
@@ -755,21 +877,97 @@ class MieStore:
             self._merge_commit(frames)
             return counts
 
-    def _merge_and_write(self, table: str, new: DataFrame) -> str | None:
-        """Bucket-pruned MERGE, prepared but not committed: current
+    def _merge_and_write(self, table: str, new: Any) -> str | None:
+        """Prepare one table's merged snapshot, not yet committed: the
+        current snapshot with ``new``'s keys replaced by ``new``'s rows.
+        ``new`` is key-unique and in canonical column order: an Arrow
+        table (a row batch, merged on the driver by :meth:`_merge_arrow`)
+        or a DataFrame (merged by one Spark plan, :meth:`_merge_df`).
+        Returns the prepared version, or None for an empty batch."""
+        if isinstance(new, DataFrame):
+            return self._merge_df(table, new)
+        return self._merge_arrow(table, new)
+
+    def _merge_arrow(self, table: str, new: Any) -> str | None:
+        """Driver-side bucket MERGE of an Arrow batch: for each bucket
+        the batch touches, read the current snapshot's ``bkt=K`` part
+        files with pyarrow, drop the batch's keys (last write wins),
+        append the batch's rows of that bucket and write ONE part file
+        into the next snapshot; untouched buckets are hard-linked. This
+        is the layout a Spark merge writes (each row goes to the bucket
+        :func:`_key_bucket` gives it, the twin of ``_bkt``), with no
+        Spark job; peak driver memory is one touched bucket plus the
+        batch. A snapshot that predates the bucketed layout is read
+        whole and rewritten bucketed."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if new.num_rows == 0:
+            return None
+        keys = key_columns(table)
+        batch = self._split_buckets(table, new)
+        prev = self._snapshot_dir(table)
+        files = self._part_files(prev) if prev else []
+        bucketed = bool(files) and self._is_bucketed(prev)
+        legacy = (
+            self._split_buckets(table, _read_arrow(table, files))
+            if files and not bucketed
+            else {}
+        )
+        snap, version = self._next_snapshot(table)
+        for b in sorted(batch.keys() | legacy.keys()):
+            old = (
+                _read_arrow(table, self._part_files(os.path.join(prev, f"bkt={b}")))
+                if bucketed
+                else legacy.get(b)
+            )
+            rows = batch.get(b)
+            if rows is not None and old is not None:
+                replaced = set(zip(*(rows[k].to_pylist() for k in keys)))
+                # a NULL key never matches, as in the Spark anti-join
+                keep = [
+                    None in k or k not in replaced
+                    for k in zip(*(old[c].to_pylist() for c in keys))
+                ]
+                old = old.filter(pa.array(keep, pa.bool_()))
+            bdir = os.path.join(snap, f"bkt={b}")
+            os.makedirs(bdir)
+            pq.write_table(
+                pa.concat_tables([t for t in (old, rows) if t is not None]),
+                os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
+            )
+        if bucketed:
+            self._link_untouched(prev, snap, list(batch))
+        self._write_zone_manifest(snap, prev)
+        return version
+
+    def _split_buckets(self, table: str, t: Any) -> dict[int, Any]:
+        """{bkt: rows of ``t`` in that bucket} for an Arrow table."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        bkts = pa.array(
+            [
+                _key_bucket(k, self.merge_buckets)
+                for k in zip(*(t[c].to_pylist() for c in key_columns(table)))
+            ],
+            pa.int32(),
+        )
+        return {b: t.filter(pc.equal(bkts, b)) for b in set(bkts.to_pylist())}
+
+    def _merge_df(self, table: str, new: DataFrame) -> str | None:
+        """Bucket-pruned MERGE of a DataFrame: current
         snapshot anti-join keys(new) ∪ new, restricted to the buckets
         the batch touches — ONE Spark plan whose scan partition-prunes
         to the touched ``bkt=K`` dirs and whose write produces only
         those dirs; untouched buckets are hard-linked from the previous
-        snapshot. O(batch) I/O per commit, not O(table). ``new`` must
-        already be key-unique and in canonical column order. Falls back
+        snapshot. O(batch) I/O per commit, not O(table). Falls back
         to a full (bucketed) rewrite when the current snapshot predates
-        the bucketed layout or the batch touches every bucket anyway.
-        Returns the prepared version, or None for an empty batch."""
+        the bucketed layout or the batch touches every bucket anyway."""
         keys = key_columns(table)
         new = new.withColumn("bkt", self._bkt(table))
         snap = self._snapshot_dir(table)
-        if snap is None or not self._has_parquet(snap):
+        if snap is None or not self._part_files(snap):
             # first write: all buckets are new
             return self._rewrite_buckets(table, new, snap)
         touched = self._touched_buckets(table, snap, new)
@@ -803,7 +1001,7 @@ class MieStore:
         (key lookups) and value clustering (range scans)."""
         with self._write_lock:
             snap = self._snapshot_dir(table)
-            if snap is None or not self._has_parquet(snap):
+            if snap is None or not self._part_files(snap):
                 return 0
             from pyspark.sql import functions as F
 
@@ -817,12 +1015,7 @@ class MieStore:
                 arranged = df.repartition(self.merge_buckets, F.col("bkt"))
             version = self._rewrite_buckets(table, arranged, snap)
             self._commit_txn({table: version})
-            return sum(
-                1
-                for _, _, fs in os.walk(os.path.join(self.path, table, version))
-                for f in fs
-                if f.endswith(".parquet")
-            )
+            return len(self._part_files(os.path.join(self.path, table, version)))
 
     def delete_rows(self, table: str, key_values: list[tuple]) -> int:
         """Delete rows by key; returns how many existed. Bucket-pruned
@@ -835,7 +1028,7 @@ class MieStore:
         schema = table_schema(table)
         with self._write_lock:
             snap = self._snapshot_dir(table)
-            if snap is None or not self._has_parquet(snap):
+            if snap is None or not self._part_files(snap):
                 return 0
             doomed = self.spark.createDataFrame(
                 [tuple(kv) for kv in key_values],
@@ -856,19 +1049,17 @@ class MieStore:
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 
     def meta_values(self, keys: list[str]) -> dict[str, str]:
-        """{key: value} for the present ``keys``, read in one scan.
-
-        Fast path: no committed snapshot means the table is empty, so
-        every key is absent — what the Spark path would conclude after
-        a full job round-trip (~0.4 s). It shares table()'s emptiness
-        check (_table_has_no_snapshot), so the two cannot drift; every
-        fresh-store open takes it via ensure_schema."""
-        if self._table_has_no_snapshot("mie_meta"):
-            return {}
-        from pyspark.sql import functions as F
-
-        rows = self.table("mie_meta").filter(F.col("key").isin(keys)).collect()
-        return {r["key"]: str(r["value"]) for r in rows}
+        """{key: value} for the present ``keys``: a driver-side pyarrow
+        read of the current ``mie_meta`` snapshot (a handful of rows),
+        no Spark job."""
+        snap = self._snapshot_dir("mie_meta")
+        meta = _read_arrow("mie_meta", self._part_files(snap) if snap else [])
+        want = set(keys)
+        return {
+            k: str(v)
+            for k, v in zip(meta["key"].to_pylist(), meta["value"].to_pylist())
+            if k in want
+        }
 
     def meta_get(self, key: str) -> str | None:
         return self.meta_values([key]).get(key)
@@ -1045,8 +1236,6 @@ class MieStore:
                 if t not in manifest and self._snapshot_dir(t) is None:
                     continue
                 snap, versions[t] = self._next_snapshot(t)
-                # an orphan left by an interrupted prepare may hold files
-                shutil.rmtree(snap, ignore_errors=True)
                 if t in manifest:
                     shutil.copytree(os.path.join(src, t), snap)
                 else:

@@ -365,6 +365,29 @@ def test_tool_update_and_status(client):
     assert st["stats"]["entities"] == 1
 
 
+@pytest.mark.parametrize("kind", ["entity", "event"])
+def test_update_description_reembeds(client, kind):
+    """The description is part of an entity's and an event's embedded
+    text, so an update re-embeds the node in the same commit: the stored
+    vector is the new text's embedding and semantic search follows it."""
+    if kind == "entity":
+        nid = client.store_entity("alpha", "other", "old words")
+        emb_table, id_col = "mie_entity_embedding", "entity_id"
+    else:
+        nid = client.store_event("alpha", "old words", "2024-01-02")
+        emb_table, id_col = "mie_event_embedding", "event_id"
+    other = client.store_entity("beta", "other", "zebra quantum")
+    tools.update(client, "update_description", nid, description="zebra quantum")
+
+    rows = client.store.table(emb_table).filter(f"{id_col} = '{nid}'").collect()
+    want = client.embedder.embed(["alpha zebra quantum"])[0]
+    assert len(rows) == 1
+    assert rows[0]["embedding"] == pytest.approx(want, rel=1e-6)
+    hits = client.semantic_search("alpha zebra quantum", limit=2)
+    assert [h["id"] for h in hits] == [nid, other]
+    assert hits[0]["similarity"] == pytest.approx(1.0, abs=1e-5)
+
+
 def test_tool_conflicts_recommendation(client):
     a = client.store_fact("the sky is blue", "general")
     b = client.store_fact("the sky is blue", "technical")
