@@ -1,14 +1,19 @@
-"""MieClient — the knowledge-graph memory API, Spark-first.
+"""MieClient — the knowledge-graph memory API over MieStore.
 
 Reproduces the reference's memory layer semantics (pkg/memory/{reader,
-writer,conflicts}.go) over MieStore tables. Every read is a DataFrame
-plan (filters/joins/top-k stay declarative for Catalyst); writes are
-key-upserts with content-hash identity. Each write call — a store, a
-tool call, an update, an import — builds its rows into one batch and
-commits it as ONE store transaction (MieClient._commit): the nodes,
-their embeddings, the edges and the usage counter become visible
-together, and a failure anywhere writes nothing. (The reference writes
-embeddings fire-and-forget, writer.go:71-73; SURVEY §2.7 V6.)
+writer,conflicts}.go) over MieStore tables. The agent tools' reads —
+semantic, exact and graph queries, listing, point lookups, the conflict
+probe and stats — run on the driver over ``MieStore.table_arrow`` with
+pyarrow and numpy, no Spark job (the reference answers them in-process
+from its embedded engine). Whole-store work — pairwise conflict
+detection, hybrid search's BM25 side, export and ``raw_query`` — stays
+a DataFrame plan. Writes are key-upserts with content-hash identity.
+Each write call — a store, a tool call, an update, an import — builds
+its rows into one batch and commits it as ONE store transaction
+(MieClient._commit): the nodes, their embeddings, the edges and the
+usage counter become visible together, and a failure anywhere writes
+nothing. (The reference writes embeddings fire-and-forget,
+writer.go:71-73; SURVEY §2.7 V6.)
 
 Deliberate semantic fix, documented in SURVEY §2.10: `threshold`
 ALWAYS means minimum cosine *similarity* here. The reference's
@@ -20,13 +25,15 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mie_spark import ids
 from mie_spark import validators as V
 from mie_spark.embedding import MockEmbeddingProvider
-from mie_spark.functions.vectors import cosine_sim
 from mie_spark.schemas import (
     EDGE_TABLES,
     EMBEDDING_TABLES,
@@ -403,29 +410,23 @@ class MieClient:
     # ------------------------------------------------------------------
 
     def _fetch_nodes_by_ids(self, node_ids: list[str]) -> dict[str, dict[str, Any]]:
-        """Batch point-lookup: ONE filtered scan per node type instead
-        of one scan per id (search result assembly is the hot caller —
-        a per-id loop costs limit × full scans on the disk engine)."""
+        """Batch point-lookup: ONE driver-side read per node type
+        instead of one per id."""
         by_table: dict[str, list[str]] = {}
         for nid in node_ids:
             by_table.setdefault(ids.node_type_of(nid), []).append(nid)
         out: dict[str, dict[str, Any]] = {}
         for table, nids in by_table.items():
-            for r in (
-                self.store.table(table)
-                .filter(F.col("id").isin(nids))
-                .collect()
-            ):
-                out[r["id"]] = r.asDict()
+            t = self.store.table_arrow(table)
+            for r in t.filter(_in(t["id"], nids)).to_pylist():
+                out[r["id"]] = r
         return out
 
     def get_node_by_id(self, node_id: str) -> dict[str, Any] | None:
         """Point lookup with prefix dispatch (reader.go:308-382)."""
-        table = ids.node_type_of(node_id)
-        rows = (
-            self.store.table(table).filter(F.col("id") == F.lit(node_id)).collect()
-        )
-        return rows[0].asDict() if rows else None
+        t = self.store.table_arrow(ids.node_type_of(node_id))
+        rows = t.filter(pc.equal(t["id"], node_id)).to_pylist()
+        return rows[0] if rows else None
 
     def exact_search(
         self,
@@ -434,25 +435,20 @@ class MieClient:
         limit: int = 50,
         valid_only: bool = True,
     ) -> list[dict[str, Any]]:
-        """Substring search (F2/F3): `contains` on the type's text
-        columns, two-column OR where the reference ORs
-        (reader.go:138-162)."""
+        """Substring search (F2/F3): byte-wise UTF-8 substring match on
+        the type's text columns, two-column OR where the reference ORs
+        (reader.go:138-162), newest first. NULL text never matches."""
         out: list[dict[str, Any]] = []
         for table in self._tables_for(node_types):
-            df = self.store.table(table)
-            cols = _SEARCH_COLS[table]
-            cond = F.col(cols[0]).contains(query)
-            for col in cols[1:]:
-                cond = cond | F.col(col).contains(query)
+            t = self.store.table_arrow(table)
+            hit = None
+            for col in _SEARCH_COLS[table]:
+                m = pc.match_substring(t[col], query)
+                hit = m if hit is None else pc.or_kleene(hit, m)
             if table == "mie_fact" and valid_only:
-                cond = cond & F.col("valid")
-            hits = (
-                df.filter(cond)
-                .orderBy(F.col("created_at").desc(), F.col("id"))
-                .limit(limit)
-                .collect()
-            )
-            out.extend({**r.asDict(), "node_type": table} for r in hits)
+                hit = pc.and_kleene(hit, t["valid"])
+            hits = _order(t.filter(hit), _NEWEST_FIRST).slice(0, limit)
+            out.extend({**r, "node_type": table} for r in hits.to_pylist())
         return out[:limit]
 
     def semantic_search(
@@ -463,63 +459,77 @@ class MieClient:
         valid_only: bool = True,
     ) -> list[dict[str, Any]]:
         """Exact top-k cosine over the requested types' embeddings,
-        merged and truncated (reader.go:38-119). One unioned plan, one
-        TakeOrderedAndProject — no per-type over-fetch (the reference
-        needs k·5 because it post-filters `valid` after ANN; we filter
-        before ranking)."""
-        merged = self._semantic_ranking(query, node_types, valid_only)
-        if merged is None:
-            return []
-        top = (
-            merged.orderBy(F.col("similarity").desc(), F.col("node_id"))
-            .limit(limit)
-            .collect()
-        )
-        nodes = self._fetch_nodes_by_ids([r["node_id"] for r in top])
-        results = []
-        for r in top:
-            results.append(
-                {
-                    **nodes.get(r["node_id"], {}),
-                    "node_type": r["node_type"],
-                    "similarity": float(r["similarity"]),
-                    "distance": 1.0 - float(r["similarity"]),
-                }
+        merged and truncated (reader.go:38-119), ranked on the driver
+        by :meth:`_cosine_top` — no Spark job, and no per-type
+        over-fetch (the reference needs k·5 because it post-filters
+        `valid` after ANN; we filter before ranking)."""
+        return [
+            {
+                **row,
+                "node_type": table,
+                "similarity": sim,
+                "distance": 1.0 - sim,
+            }
+            for row, table, sim in self._cosine_top(
+                query, self._embedded_nodes(node_types, valid_only), limit
             )
-        return results
+        ]
 
-    def _semantic_ranking(
-        self,
-        query: str,
-        node_types: list[str] | None,
-        valid_only: bool,
-    ) -> DataFrame | None:
-        """(node_id, node_type, similarity) across the requested types'
-        embeddings as ONE unioned lazy plan — the shared ranking core of
-        semantic_search and hybrid_search."""
-        qvec = self.embedder.embed_query(query)
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-        per_type: list[DataFrame] = []
+    def _embedded_nodes(
+        self, node_types: list[str] | None, valid_only: bool
+    ) -> dict[str, Any]:
+        """{node table: its rows} for the requested types that carry an
+        embedding table (topics do not, schema.go); invalid facts are
+        left out when ``valid_only``."""
+        out = {}
         for table in self._tables_for(node_types):
-            if table == "mie_topic":
-                continue  # topics carry no embedding table (schema.go)
+            if table in _EMBED_SOURCE:
+                t = self.store.table_arrow(table)
+                if table == "mie_fact" and valid_only:
+                    t = t.filter(t["valid"])
+                out[table] = t
+        return out
+
+    def _cosine_top(
+        self, query: str, nodes: dict[str, Any], k: int
+    ) -> list[tuple[dict[str, Any], str, float]]:
+        """The top ``k`` (node row, node table, similarity) of the
+        ``nodes`` ({node table: Arrow rows}) by cosine similarity of
+        their stored embedding to ``query``'s, ranked (similarity desc,
+        node id asc) across the tables: the one ranking core of
+        semantic, hybrid and conflict search. A node without an
+        embedding row is left out, as by the inner join it replaces;
+        so is one whose vector :func:`_cosine` cannot score."""
+        if not nodes:
+            return []
+        q = np.asarray(self.embedder.embed_query(query), dtype=np.float64)
+        parts = []
+        for table, t in nodes.items():
             emb_table, id_col = _EMBED_SOURCE[table]
-            emb = self.store.table(emb_table)
-            nodes = self.store.table(table)
-            if table == "mie_fact" and valid_only:
-                nodes = nodes.filter(F.col("valid"))
-            joined = emb.join(nodes, emb[id_col] == nodes["id"]).select(
-                F.col("id").alias("node_id"),
-                F.lit(table).alias("node_type"),
-                cosine_sim(F.col("embedding"), q).alias("similarity"),
+            emb = self.store.table_arrow(emb_table)
+            emb = emb.filter(_in(emb[id_col], t["id"]))
+            sims = _cosine(emb["embedding"], q)
+            parts.append(
+                pa.table(
+                    {
+                        "node_id": emb[id_col],
+                        "node_type": pa.array([table] * len(sims), pa.string()),
+                        "similarity": sims,
+                    }
+                ).filter(~np.isnan(sims))
             )
-            per_type.append(joined)
-        if not per_type:
-            return None
-        merged = per_type[0]
-        for df in per_type[1:]:
-            merged = merged.unionByName(df)
-        return merged
+        top = _order(
+            pa.concat_tables(parts), [("similarity", True), ("node_id", False)]
+        ).slice(0, k)
+        rows = {
+            r["id"]: r
+            for table, t in nodes.items()
+            for r in t.filter(_in(t["id"], top["node_id"])).to_pylist()
+        }
+        return [
+            (rows[r["node_id"]], r["node_type"], r["similarity"])
+            for r in top.to_pylist()
+        ]
 
     def hybrid_search(
         self,
@@ -536,9 +546,10 @@ class MieClient:
         node). This is the fourth query mode the reference lacks — its
         exact and semantic modes (pkg/tools/query.go:32-41) run as
         separate probes with a client-side merge (reader.go:110-118);
-        here both rankings and the fusion are one declarative plan per
-        side, truncated to ``k_each`` before ranks are assigned (so no
-        global-rank shuffle, see operators/retrieval.py).
+        here each ranking is truncated to ``k_each`` before ranks are
+        assigned (so no global-rank shuffle, see operators/retrieval.py)
+        and the fusion is one plan. The keyword side is a Spark plan;
+        the semantic side is the driver-side :meth:`_cosine_top`.
 
         Returns nodes sorted by fused score; each carries ``rrf`` plus
         its keyword/semantic ranks (None where absent from that list).
@@ -574,12 +585,19 @@ class MieClient:
         kw_scores = bm25_scores(corpus, terms, id_col="node_id")
         kw = rank_topk(kw_scores, "score_u", "node_id", k_each)
 
-        sem_ranking = self._semantic_ranking(query, node_types, valid_only)
+        embedded = self._embedded_nodes(node_types, valid_only)
         fused_rankings = [kw]
         rank_cols = ["rank_kw"]
-        if sem_ranking is not None:
-            sem = rank_topk(sem_ranking, "similarity", "node_id", k_each)
-            fused_rankings.append(sem)
+        if embedded:
+            # the semantic half is ranked on the driver; its top k_each
+            # joins the fusion as a small (node_id, rank) frame
+            sem_top = self._cosine_top(query, embedded, k_each)
+            fused_rankings.append(
+                self.spark.createDataFrame(
+                    [(row["id"], i) for i, (row, _, _) in enumerate(sem_top, 1)],
+                    "node_id string, rank int",
+                )
+            )
             rank_cols.append("rank_sem")
         fused = rrf_fuse(fused_rankings, "node_id", rank_cols, k=rrf_k)
         top = fused.limit(limit).collect()
@@ -592,46 +610,31 @@ class MieClient:
                     "node_type": ids.node_type_of(r["node_id"]),
                     "rrf": float(r["rrf"]),
                     "rank_kw": r["rank_kw"],
-                    "rank_sem": r["rank_sem"] if sem_ranking is not None else None,
+                    "rank_sem": r["rank_sem"] if embedded else None,
                 }
             )
         return results
 
     def find_entity_by_name(self, name: str) -> dict[str, Any] | None:
-        """Case-insensitive first match (reader.go:384-393)."""
-        rows = (
-            self.store.table("mie_entity")
-            .filter(F.lower(F.col("name")) == name.lower())
-            .orderBy("id")
-            .limit(1)
-            .collect()
-        )
-        return rows[0].asDict() if rows else None
+        """Case-insensitive first match (reader.go:384-393); both sides
+        are lower-cased by Python's ``str.lower``."""
+        t = self.store.table_arrow("mie_entity")
+        want = name.lower()
+        hit = [n is not None and n.lower() == want for n in t["name"].to_pylist()]
+        return _first(t.filter(pa.array(hit, pa.bool_())))
 
     def find_fact_by_content(self, content: str) -> dict[str, Any] | None:
-        rows = (
-            self.store.table("mie_fact")
-            .filter(F.col("content") == content)
-            .orderBy("id")
-            .limit(1)
-            .collect()
-        )
-        return rows[0].asDict() if rows else None
+        t = self.store.table_arrow("mie_fact")
+        return _first(t.filter(pc.equal(t["content"], content)))
 
     def find_decision_by_title(self, title: str) -> dict[str, Any] | None:
         """Substring first match on decision title (reader.go:438-462:
         `str_includes(title, ...)` + limit 1). Completes the reference's
         find-trio alongside find_entity_by_name / find_fact_by_content;
-        orderBy(id) makes the limit-1 pick deterministic where Cozo's
-        unordered `:limit 1` is not."""
-        rows = (
-            self.store.table("mie_decision")
-            .filter(F.col("title").contains(title))
-            .orderBy("id")
-            .limit(1)
-            .collect()
-        )
-        return rows[0].asDict() if rows else None
+        the lowest id wins, which makes the pick deterministic where
+        Cozo's unordered `:limit 1` is not."""
+        t = self.store.table_arrow("mie_decision")
+        return _first(t.filter(pc.match_substring(t["title"], title)))
 
     def list_nodes(
         self,
@@ -647,59 +650,41 @@ class MieClient:
         Limit clamped to 100 like the tool layer (list.go:28-35)."""
         limit = max(1, min(limit, 100))
         table = self._resolve_type(node_type)
-        df = self.store.table(table)
-        if category and table == "mie_fact":
-            df = df.filter(F.col("category") == category)
-        if kind and table == "mie_entity":
-            df = df.filter(F.col("kind") == kind)
-        if status and table == "mie_decision":
-            df = df.filter(F.col("status") == status)
+        t = self.store.table_arrow(table)
+        for col, value, owner in (
+            ("category", category, "mie_fact"),
+            ("kind", kind, "mie_entity"),
+            ("status", status, "mie_decision"),
+        ):
+            if value and table == owner:
+                t = t.filter(pc.equal(t[col], value))
         if valid_only and table == "mie_fact":
-            df = df.filter(F.col("valid"))
-        total = df.count()
-        rows = (
-            df.orderBy(F.col("created_at").desc(), F.col("id"))
-            .offset(offset)
-            .limit(limit)
-            .collect()
-        )
-        return [r.asDict() for r in rows], total
+            t = t.filter(t["valid"])
+        rows = _order(t, _NEWEST_FIRST).slice(offset, limit)
+        return rows.to_pylist(), t.num_rows
 
     def get_stats(self) -> dict[str, int]:
-        """Node/edge census (reader.go:616-665). Facts sweep in ONE
-        conditional-aggregate pass instead of the reference's 8 counts."""
-        stats: dict[str, int] = {}
-        fact_agg = (
-            self.store.table("mie_fact")
-            .agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("valid"),
-            )
-            .collect()[0]
-        )
-        stats["facts"] = fact_agg["total"] or 0
-        stats["valid_facts"] = int(fact_agg["valid"] or 0)
+        """Node/edge census (reader.go:616-665), from driver-side reads
+        of the node and edge tables."""
+        facts = self.store.table_arrow("mie_fact")
+        decisions = self.store.table_arrow("mie_decision")
+        stats = {
+            "facts": facts.num_rows,
+            "valid_facts": facts.filter(facts["valid"]).num_rows,
+            "decisions": decisions.num_rows,
+            "active_decisions": decisions.filter(
+                pc.equal(decisions["status"], "active")
+            ).num_rows,
+        }
         stats["invalid_facts"] = stats["facts"] - stats["valid_facts"]
-        dec_agg = (
-            self.store.table("mie_decision")
-            .agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("status") == "active", 1).otherwise(0)).alias(
-                    "active"
-                ),
-            )
-            .collect()[0]
-        )
-        stats["decisions"] = dec_agg["total"] or 0
-        stats["active_decisions"] = int(dec_agg["active"] or 0)
         for table, key in (
             ("mie_entity", "entities"),
             ("mie_event", "events"),
             ("mie_topic", "topics"),
         ):
-            stats[key] = self.store.table(table).count()
+            stats[key] = self.store.table_arrow(table).num_rows
         stats["relationships"] = sum(
-            self.store.table(t).count() for t in EDGE_TABLES
+            self.store.table_arrow(t).num_rows for t in EDGE_TABLES
         )
         return stats
 
@@ -711,16 +696,18 @@ class MieClient:
         self, edge_table: str, filter_col: str, node_table: str, join_col: str,
         node_id: str, extra_cols: list[str] | None = None,
     ) -> list[dict[str, Any]]:
-        edges = self.store.table(edge_table).filter(
-            F.col(filter_col) == F.lit(node_id)
-        )
-        nodes = self.store.table(node_table)
-        joined = F.broadcast(edges).join(
-            nodes, edges[join_col] == nodes["id"]
-        )
-        cols = [nodes[c.name] for c in NODE_TABLES[node_table]]
-        cols += [edges[c] for c in (extra_cols or [])]
-        return [r.asDict() for r in joined.select(*cols).collect()]
+        """The ``node_table`` rows joined to ``node_id`` by an edge of
+        ``edge_table`` (plus the edge's ``extra_cols``), by node id."""
+        edges = self.store.table_arrow(edge_table)
+        edges = edges.filter(pc.equal(edges[filter_col], node_id))
+        # the edge key is (filter_col, join_col): one edge per neighbour
+        by_node = {e[join_col]: e for e in edges.to_pylist()}
+        nodes = self.store.table_arrow(node_table)
+        hits = nodes.filter(_in(nodes["id"], edges[join_col]))
+        return [
+            {**n, **{c: by_node[n["id"]][c] for c in extra_cols or ()}}
+            for n in _order(hits, [("id", False)]).to_pylist()
+        ]
 
     def get_entities_for_fact(self, fact_id: str) -> list[dict[str, Any]]:
         return self._traverse(
@@ -756,25 +743,34 @@ class MieClient:
     def get_invalidation_chain(self, fact_id: str) -> list[dict[str, Any]]:
         """Both-direction chain (reader.go:547-583). The reference needs
         a two-rule Datalog union because or() can't wrap `=`; one OR
-        filter + two aliased joins replaces it (J6)."""
-        edges = self.store.table("mie_invalidates").filter(
-            (F.col("new_fact_id") == fact_id) | (F.col("old_fact_id") == fact_id)
-        )
-        facts = self.store.table("mie_fact")
-        old_f = facts.alias("old_f")
-        new_f = facts.alias("new_f")
-        joined = (
-            edges.join(old_f, edges["old_fact_id"] == F.col("old_f.id"))
-            .join(new_f, edges["new_fact_id"] == F.col("new_f.id"))
-            .select(
-                edges["new_fact_id"],
-                edges["old_fact_id"],
-                edges["reason"],
-                F.col("old_f.content").alias("old_content"),
-                F.col("new_f.content").alias("new_content"),
+        filter replaces it (J6). An edge shows only when both of its
+        facts exist; edges come ordered by (new, old) fact id."""
+        edges = self.store.table_arrow("mie_invalidates")
+        edges = edges.filter(
+            pc.or_kleene(
+                pc.equal(edges["new_fact_id"], fact_id),
+                pc.equal(edges["old_fact_id"], fact_id),
             )
         )
-        return [r.asDict() for r in joined.collect()]
+        facts = self.store.table_arrow("mie_fact")
+        ends = edges["new_fact_id"].to_pylist() + edges["old_fact_id"].to_pylist()
+        content = {
+            r["id"]: r["content"]
+            for r in facts.filter(_in(facts["id"], ends)).to_pylist()
+        }
+        return [
+            {
+                "new_fact_id": e["new_fact_id"],
+                "old_fact_id": e["old_fact_id"],
+                "reason": e["reason"],
+                "old_content": content[e["old_fact_id"]],
+                "new_content": content[e["new_fact_id"]],
+            }
+            for e in _order(
+                edges, [("new_fact_id", False), ("old_fact_id", False)]
+            ).to_pylist()
+            if e["old_fact_id"] in content and e["new_fact_id"] in content
+        ]
 
     # ------------------------------------------------------------------
     # conflicts (conflicts.go) — V3/V4, vectorized
@@ -837,22 +833,23 @@ class MieClient:
         threshold: float = 0.85,
         k: int = 10,
     ) -> list[dict[str, Any]]:
-        """New-content probe before store (conflicts.go:172-241)."""
-        qvec = self.embedder.embed_query(content)
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-        emb = self.store.table("mie_fact_embedding")
-        facts = self.store.table("mie_fact").filter(F.col("valid"))
+        """New-content probe before store (conflicts.go:172-241): the
+        valid facts (of ``category``, when given) whose similarity to
+        ``content`` is at least ``threshold``, top ``k``."""
+        facts = self.store.table_arrow("mie_fact")
+        facts = facts.filter(facts["valid"])
         if category:
-            facts = facts.filter(F.col("category") == category)
-        joined = (
-            emb.join(facts, emb["fact_id"] == facts["id"])
-            .withColumn("similarity", cosine_sim(F.col("embedding"), q))
-            .filter(F.col("similarity") >= threshold)
-            .orderBy(F.col("similarity").desc(), F.col("fact_id"))
-            .limit(k)
-            .select("fact_id", "content", "category", "similarity")
-        )
-        return [r.asDict() for r in joined.collect()]
+            facts = facts.filter(pc.equal(facts["category"], category))
+        return [
+            {
+                "fact_id": row["id"],
+                "content": row["content"],
+                "category": row["category"],
+                "similarity": sim,
+            }
+            for row, _, sim in self._cosine_top(content, {"mie_fact": facts}, k)
+            if sim >= threshold
+        ]
 
     # ------------------------------------------------------------------
     # export / import / raw query / usage (S5-S7, A5)
@@ -1111,6 +1108,67 @@ class MieClient:
         if not node_types:
             return list(NODE_TABLES)
         return [self._resolve_type(t) for t in node_types]
+
+
+# list order of exact search and list_nodes: newest first, then id
+_NEWEST_FIRST = [("created_at", True), ("id", False)]
+
+
+def _in(values: Any, candidates: Any) -> Any:
+    """Mask: which of ``values`` are among ``candidates``; a NULL value
+    matches nothing, as in a join."""
+    return pc.is_in(
+        values, value_set=pa.array(candidates, pa.string()), skip_nulls=True
+    )
+
+
+def _order(t: Any, keys: list[tuple[str, bool]]) -> Any:
+    """The rows of Arrow table ``t`` in Spark's ORDER BY order for
+    ``keys`` ((column, descending) pairs; no NaN in the columns):
+    ascending puts NULLs first and descending puts them last, Spark's
+    defaults. Stable, so equal keys keep their row order."""
+    cols: dict[str, Any] = {}
+    sort_keys = []
+    for i, (col, desc) in enumerate(keys):
+        if not desc:
+            cols[f"valid{i}"] = pc.is_valid(t[col])
+            sort_keys.append((f"valid{i}", "ascending"))
+        cols[f"key{i}"] = t[col]
+        sort_keys.append((f"key{i}", "descending" if desc else "ascending"))
+    order = pc.sort_indices(
+        pa.table(cols), sort_keys=sort_keys, null_placement="at_end"
+    )
+    return t.take(order)
+
+
+def _first(t: Any) -> dict[str, Any] | None:
+    """The lowest-id row of Arrow table ``t`` (None when empty)."""
+    rows = _order(t, [("id", False)]).slice(0, 1).to_pylist()
+    return rows[0] if rows else None
+
+
+def _cosine(emb: Any, q: np.ndarray) -> np.ndarray:
+    """Cosine similarity of each vector in ``emb`` (an Arrow list
+    column) to ``q``, bit-identical to Spark's ``cosine_sim``
+    (functions/vectors.py): elements widened to float64, each dot
+    product and squared norm folded left to right from 0.0 (the last
+    column of a row-wise cumsum), then dot / (|e|·|q|). NaN where
+    Spark's value is NULL or NaN — a NULL vector or element, a length
+    other than ``q``'s, a zero norm — so callers drop those rows."""
+    d = len(q)
+    sims = np.full(len(emb), np.nan)
+    fits = pc.fill_null(pc.equal(pc.list_value_length(emb), d), False)
+    fits = fits.to_numpy(zero_copy_only=False)
+    if d == 0 or not fits.any():
+        return sims
+    flat = pc.list_flatten(emb.filter(pa.array(fits))).to_numpy(zero_copy_only=False)
+    e = flat.astype(np.float64).reshape(-1, d)
+    # + 0.0: the fold starts at +0.0, so an all-zero sum is +0.0, never -0.0
+    dots = np.cumsum(e * q, axis=1)[:, -1] + 0.0
+    den = np.sqrt(np.cumsum(e * e, axis=1)[:, -1]) * np.sqrt(np.cumsum(q * q)[-1])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims[fits] = np.where(den != 0, dots / den, np.nan)
+    return sims
 
 
 def _sql_literal(value: Any) -> str:

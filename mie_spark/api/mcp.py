@@ -239,9 +239,10 @@ def main() -> None:
     # Build from the SAME config plane as the CLI (--mcp) path: a bare
     # MieClient(spark, path=path) would pin embedding_dim to its 4-dim
     # default, and serving a store written by the 768-dim configured
-    # mock would then mix vector widths — cosine_sim over mismatched
-    # lengths is NULL, silently dropping every pre-existing row from
-    # semantic search. Config discovery failures fall back to defaults
+    # mock would then mix vector widths — semantic search and the
+    # conflict probe skip every stored vector whose width differs from
+    # the query's (client._cosine), so no pre-existing row would ever be
+    # found. Config discovery failures fall back to defaults
     # (same tolerance as cli._load_cfg with fallback).
     try:
         cfg = load_config()

@@ -213,8 +213,8 @@ def update(client: MieClient, operation: str, node_id: str, **kwargs: Any) -> di
 def list_nodes(client: MieClient, node_type: str, **filters: Any) -> dict:
     """Filters + sort + pagination + total (pkg/tools/list.go:19-134)."""
     limit = max(1, min(int(filters.pop("limit", MAX_LIST_LIMIT)), MAX_LIST_LIMIT))
-    # JSON "number" arrives as float (10.0); DataFrame.offset needs an
-    # int and Py4J has no double overload — coerce and clamp like limit
+    # JSON "number" arrives as float (10.0); slicing the listed rows
+    # needs an int — coerce and clamp like limit
     offset = max(0, int(filters.pop("offset", 0)))
     rows, total = client.list_nodes(node_type, limit=limit, offset=offset, **filters)
     return {"results": rows, "total": total, "limit": limit}

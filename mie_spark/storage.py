@@ -14,9 +14,19 @@ WHERE the snapshots live:
                  collection, so a lazy DataFrame never outlives its
                  files.
 
-``table()`` is a lazy ``spark.read.parquet`` (scans distribute, filters
-push down). Writes take one of two merge paths by input kind, into the
-same snapshot layout:
+Reads take one of two paths over the same snapshot files:
+
+- ``table()`` is a lazy ``spark.read.parquet`` (scans distribute,
+  filters push down): the path of ``raw_query``, conflict detection,
+  export and every registry query;
+- :meth:`MieStore.table_arrow` reads the current snapshot's part files
+  on the driver with pyarrow into one Arrow table — no Spark job. The
+  agent tools' reads (search, traversal, listing, point lookups) and
+  the ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) use
+  it. Both paths apply the same schema-evolution contract.
+
+Writes take one of two merge paths by input kind, into the same
+snapshot layout:
 
 - row batches (:meth:`MieStore.atomic_upsert_rows`, every agent-sized
   write) already live on the driver, so the driver merges them with
@@ -27,10 +37,8 @@ same snapshot layout:
   rows) whose write streams straight to snapshot N+1, so those scale
   with the cluster, not the driver.
 
-The ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) are
-driver-side pyarrow reads too. Every write (upsert, delete, compact,
-restore) prepares invisible snapshots and commits them through one
-multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
+Every write (upsert, delete, compact, restore) prepares invisible
+snapshots and commits them through one multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
 MVCC); on a warehouse deployment the same call maps to one Delta
 `MERGE INTO` (not shippable in this container). GC keeps the 2 newest
 snapshots, so a lazy reader survives exactly ONE commit after it was
@@ -699,6 +707,19 @@ class MieStore:
         snap = self._snapshot_dir(name)
         return _canon_select(self._read_snapshot(name, snap), schema)
 
+    def table_arrow(self, name: str):  # noqa: ANN201
+        """The table's current snapshot as ONE Arrow table in the
+        canonical schema, read on the driver with pyarrow — no Spark
+        job. The driver twin of :meth:`table` (same rows, same
+        schema-evolution contract through :func:`_read_arrow`; a
+        pre-bucketing snapshot's part files are read the same way). The
+        read path of the agent tools, where a request touches a few
+        hundred rows and a Spark job's fixed cost would dominate."""
+        if name not in ALL_TABLES and name not in AUX_TABLES:
+            raise KeyError(f"unknown table {name!r}")
+        snap = self._snapshot_dir(name)
+        return _read_arrow(name, self._part_files(snap) if snap else [])
+
     def table_at(self, name: str, version: str) -> DataFrame:
         """Time-travel read of a specific snapshot version (pair with
         pin_current, which guarantees the version survives GC) — the
@@ -1049,11 +1070,10 @@ class MieStore:
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 
     def meta_values(self, keys: list[str]) -> dict[str, str]:
-        """{key: value} for the present ``keys``: a driver-side pyarrow
-        read of the current ``mie_meta`` snapshot (a handful of rows),
-        no Spark job."""
-        snap = self._snapshot_dir("mie_meta")
-        meta = _read_arrow("mie_meta", self._part_files(snap) if snap else [])
+        """{key: value} for the present ``keys``: a driver-side read of
+        the current ``mie_meta`` snapshot (a handful of rows), no Spark
+        job."""
+        meta = self.table_arrow("mie_meta")
         want = set(keys)
         return {
             k: str(v)
