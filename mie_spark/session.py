@@ -60,6 +60,14 @@ def get_spark(app_name: str = "mie_spark", master: str | None = None) -> SparkSe
         # coercions; ANSI-on would change overflow/cast semantics.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # lower/upper through the JVM (UTF8String.toLowerCase: an ASCII
+        # fast path, else String.toLowerCase in the default locale), as
+        # in Spark 3.x. Spark 4's default ICU case mapping loads ICU's
+        # data on the first call in a JVM: after the benchmark's warm-up
+        # (4 vCPUs, C1 JIT), the first lower() over its 800-document
+        # corpus took 2.9-3.6 s with ICU and 0.3-0.5 s without (0.1-0.3 s
+        # warm). tests/test_session.py pins the results.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -3,6 +3,7 @@ from mie_spark.sources.catalog import (
     load_table,
     normalize_event_ts,
     parquet_ts_is_nanos,
+    read_parquet,
     register_views,
 )
 
@@ -11,5 +12,6 @@ __all__ = [
     "load_table",
     "normalize_event_ts",
     "parquet_ts_is_nanos",
+    "read_parquet",
     "register_views",
 ]

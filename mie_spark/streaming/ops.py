@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 
 from mie_spark import generations, ids
 from mie_spark.session import conf_overrides
+from mie_spark.sources import normalize_event_ts, read_parquet
 
 SESSION_GAP_SECONDS = 30 * 60
 
@@ -61,21 +62,16 @@ def read_events_stream(
     """File-source stream over ``events.parquet``.
 
     The file source needs an explicit schema (no inference on streams);
-    we take it from the parquet footer via a zero-row batch read. The
+    we take it from the parquet footer (``read_parquet``, no job). The
     corpus has shipped ``ts`` as both TIMESTAMP(NANOS) (readable only as
     long) and TIMESTAMP(MICROS)/NTZ; we normalize to session-tz TIMESTAMP
     in-plan, identically to the batch path (sources/catalog.py), so
     streaming and batch plans see the same column types.
     """
-    from mie_spark.sources import normalize_event_ts, parquet_ts_is_nanos
-
-    # same footer-sniffed, set-only-when-needed policy as the batch
-    # catalog: the conf is session-sticky by necessity (it must hold
-    # through execution of the lazy streaming plan), so a micros/NTZ
-    # corpus must never flip legacy nanos handling for later reads
-    if parquet_ts_is_nanos(f"{sf_dir}/events.parquet"):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # same footer-sniffed, set-only-when-needed nanosAsLong policy as the
+    # batch catalog: a micros/NTZ corpus never flips legacy nanos
+    # handling for later reads
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet", nanos_ts=True).schema
     # FileStreamSource forces basePath to the source path unless the path
     # is a glob, and basePath must be a directory — so feed it a glob
     # that matches exactly the one file, anchored at the sf dir.
@@ -1328,7 +1324,7 @@ def read_documents_stream(
 ) -> "DataFrame":
     """File-source stream over ``documents.parquet`` (the documents
     twin of read_events_stream — no timestamp normalization needed)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     path = f"{sf_dir}/documents.parquet*"
     reader = spark.readStream.schema(schema).option("basePath", sf_dir)
     if max_files_per_trigger is not None:
@@ -1342,7 +1338,7 @@ def read_lineitem_stream(
     """File-source stream over ``lineitem.parquet`` (same shape as
     read_documents_stream; feeds the streaming census twins that run
     over fact-table values, e.g. st_exact_quantiles)."""
-    schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/lineitem.parquet").schema
     path = f"{sf_dir}/lineitem.parquet*"
     reader = spark.readStream.schema(schema).option("basePath", sf_dir)
     if max_files_per_trigger is not None:

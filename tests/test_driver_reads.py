@@ -571,18 +571,7 @@ def test_stats_match_spark(graph):
 # -- no Spark job per agent tool call ------------------------------------------
 
 
-def _jobs(spark, group: str, fn) -> int:  # noqa: ANN001
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_agent_tool_reads_run_no_spark_job(spark, graph):
-    spark.range(1).count()  # warm session
+def test_agent_tool_reads_run_no_spark_job(spark_jobs, graph):
     calls = {
         "semantic": lambda: tools.query(graph, "café", "semantic"),
         "exact": lambda: tools.query(graph, "café", "exact"),
@@ -601,11 +590,11 @@ def test_agent_tool_reads_run_no_spark_job(spark, graph):
                       ("topics_for_fact", "fact:a"), ("invalidation_chain", "fact:c")]:
         calls[hop] = lambda hop=hop, node=node: tools.query(
             graph, "", "graph", graph_traversal=hop, node_id=node)
-    jobs = {name: _jobs(spark, f"tool-{name}", fn) for name, fn in calls.items()}
+    jobs = {name: spark_jobs(fn) for name, fn in calls.items()}
     assert jobs == dict.fromkeys(calls, 0)
     assert graph.get_node_by_id("ent:1")["description"] == "new"
     # the counter does see Spark jobs: the Spark plan of the same read runs some
-    assert _jobs(spark, "oracle", lambda: _spark_semantic(graph, "café")) >= 1
+    assert spark_jobs(lambda: _spark_semantic(graph, "café")) >= 1
 
 
 def test_hybrid_semantic_ranks_follow_semantic_search(spark):

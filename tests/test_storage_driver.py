@@ -246,28 +246,17 @@ def test_driver_merge_rewrites_pre_bucketing_snapshot(spark, tmp_path):
 # -- no Spark job for an agent-sized write or meta read ----------------------
 
 
-def _jobs(spark, group: str, fn) -> int:  # noqa: ANN001
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_small_writes_and_meta_reads_run_no_spark_job(spark, tmp_path):
-    spark.range(1).count()  # warm session
+def test_small_writes_and_meta_reads_run_no_spark_job(spark, spark_jobs, tmp_path):
     path = str(tmp_path / "jobs")
     stores: list[MieStore] = []
-    assert _jobs(spark, "open", lambda: stores.append(MieStore(spark, path=path))) == 0
+    assert spark_jobs(lambda: stores.append(MieStore(spark, path=path))) == 0
     store = stores[0]
     assert store.meta_get("schema_version") == S.SCHEMA_VERSION
-    assert _jobs(spark, "meta_values", lambda: store.meta_values(["schema_version"])) == 0
-    assert _jobs(spark, "meta_increment", lambda: store.meta_increment("n")) == 0
-    assert _jobs(spark, "ephemeral", lambda: MieStore(spark)) == 0
+    assert spark_jobs(lambda: store.meta_values(["schema_version"])) == 0
+    assert spark_jobs(lambda: store.meta_increment("n")) == 0
+    assert spark_jobs(lambda: MieStore(spark)) == 0
     batch = _batch([1, 2, 3])
-    assert _jobs(spark, "upsert", lambda: store.atomic_upsert_rows(batch, {"n": 1})) == 0
+    assert spark_jobs(lambda: store.atomic_upsert_rows(batch, {"n": 1})) == 0
     assert store.meta_get("n") == "2"
     # the counter does see Spark jobs: a table scan runs at least one
-    assert _jobs(spark, "scan", lambda: store.table("mie_fact").count()) >= 1
+    assert spark_jobs(lambda: store.table("mie_fact").count()) >= 1
