@@ -166,17 +166,12 @@ class MieClient:
         path: str | None = None,
         embedder=None,
         embedding_dim: int = 4,
-        snapshot_retention: int = 2,
         merge_buckets: int = 16,
     ):
         self.spark = spark
         self.embedder = embedder or MockEmbeddingProvider(embedding_dim)
         self.store = MieStore(
-            spark,
-            path,
-            embedding_dim=embedding_dim,
-            snapshot_retention=snapshot_retention,
-            merge_buckets=merge_buckets,
+            spark, path, embedding_dim=embedding_dim, merge_buckets=merge_buckets
         )
 
     @classmethod

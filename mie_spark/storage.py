@@ -32,13 +32,13 @@ snapshot layout:
   write) already live on the driver, so the driver merges them with
   pyarrow: read the touched buckets' part files, drop the batch's keys,
   append the batch, write one part file per bucket — no Spark job;
-- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the streaming sink),
-  deletes and compaction run as one Spark plan (anti-join on keys ∪ new
-  rows) whose write streams straight to snapshot N+1, so those scale
-  with the cluster, not the driver.
+- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the streaming sink)
+  merge as one Spark plan (anti-join on keys ∪ new rows) whose write
+  streams straight to snapshot N+1, so they scale with the cluster,
+  not the driver.
 
-Every write (upsert, delete, compact, restore) prepares invisible
-snapshots and commits them through one multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
+Every write (upsert, restore) prepares invisible snapshots and commits
+them through one multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
 MVCC); on a warehouse deployment the same call maps to one Delta
 `MERGE INTO` (not shippable in this container). GC keeps the 2 newest
 snapshots, so a lazy reader survives exactly ONE commit after it was
@@ -48,14 +48,14 @@ VACUUM horizon, just shorter).
 
 Snapshots are PARTITIONED by a stable key-hash bucket (``bkt=K``
 subdirs, ``merge_buckets`` of them; Spark's ``xxhash64`` on the driver
-side too, see :func:`_key_bucket`): a merge or delete reads and
-rewrites ONLY the buckets the batch touches and hard-links every
-untouched bucket's files from the previous snapshot — O(batch) I/O per
-commit instead of O(table), which is the difference between a usable
-and an unusable write path at 100 TB. Hard links keep each snapshot a
-self-contained full table, so the pointer flip, GC, pinning, time
-travel, and backup all work unchanged (deleting an old version only
-drops link counts, never shared file content).
+side too, see :func:`_key_bucket`): a merge reads and rewrites ONLY
+the buckets the batch touches and hard-links every untouched bucket's
+files from the previous snapshot — O(batch) I/O per commit instead of
+O(table), which is the difference between a usable and an unusable
+write path at 100 TB. Hard links keep each snapshot a self-contained
+full table, so the pointer flip, GC and backup all work unchanged
+(deleting an old version only drops link counts, never shared file
+content).
 
 Upsert parity with CozoDB `:put` (writer.go:61-67 etc.): insert or
 replace whole row by key — idempotent with content-hash IDs.
@@ -100,11 +100,6 @@ def now_s() -> int:
     return int(time.time())
 
 
-# Per-snapshot zone-map sidecar: {relative part file -> {column ->
-# [min, max]}}, collected from parquet FOOTER statistics (no data
-# read). The Delta/Iceberg file-stats analog for the snapshot layout.
-ZONES_FILE = "_ZONES.json"
-
 # Store-level multi-table transaction manifest: {table -> version}.
 # Its atomic rename is the single commit point for a cross-table
 # write — readers resolve a table's current version as max(per-table
@@ -113,49 +108,6 @@ ZONES_FILE = "_ZONES.json"
 # forward and the manifest is removed; a crash in between is repaired
 # by _recover_txn on the next open (roll-forward, never roll-back).
 TXN_FILE = "_TXN_CURRENT"
-
-
-def _file_zone_stats(path: str) -> dict[str, list]:
-    """Column min/max for one parquet file from its footer row-group
-    statistics — a metadata-only read (~KB), never the data pages.
-    Only top-level primitive columns with full stats coverage are
-    emitted: a column missing stats in ANY row group is omitted
-    (absence always means "cannot prune this file on this column",
-    which is the safe direction). Values are kept JSON-native
-    (int/float/str/bool); anything else is dropped."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    zones: dict[str, list] = {}
-    poisoned: set[str] = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name or name in poisoned:  # nested leaf: skip
-                continue
-            st = col.statistics
-            mn = st.min if st is not None and st.has_min_max else None
-            mx = st.max if st is not None and st.has_min_max else None
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    mn = None
-            ok = all(
-                isinstance(v, (int, float, str, bool)) and v == v
-                for v in (mn, mx)
-            )
-            if not ok:
-                poisoned.add(name)
-                zones.pop(name, None)
-                continue
-            if name in zones:
-                zones[name] = [min(zones[name][0], mn), max(zones[name][1], mx)]
-            else:
-                zones[name] = [mn, mx]
-    return zones
 
 
 def _py_native(value: Any, dtype) -> Any:  # noqa: ANN001
@@ -181,11 +133,10 @@ def _py_native(value: Any, dtype) -> Any:  # noqa: ANN001
     return str(value)
 
 
-def _canon_select(df: DataFrame, schema, extra: tuple[str, ...] = ()) -> DataFrame:  # noqa: ANN001
+def _canon_select(df: DataFrame, schema) -> DataFrame:  # noqa: ANN001
     """Cast-select to the canonical schema, filling columns the source
     predates with typed NULLs (add-column schema evolution; see
-    MieStore.table). ``extra`` carries layout columns (``bkt``) that
-    live outside the logical schema."""
+    MieStore.table)."""
     from pyspark.sql import functions as F
 
     present = set(df.columns)
@@ -195,8 +146,7 @@ def _canon_select(df: DataFrame, schema, extra: tuple[str, ...] = ()) -> DataFra
             if f.name in present
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema
-        ],
-        *extra,
+        ]
     )
 
 
@@ -309,13 +259,8 @@ class MieStore:
         spark: SparkSession,
         path: str | None = None,
         embedding_dim: int = DEFAULT_EMBEDDING_DIM,
-        snapshot_retention: int = 2,
         merge_buckets: int = 16,
     ):
-        if snapshot_retention < 1:
-            raise ValueError(
-                f"snapshot_retention must be >= 1, got {snapshot_retention}"
-            )
         if merge_buckets < 1:
             raise ValueError(f"merge_buckets must be >= 1, got {merge_buckets}")
         self.spark = spark
@@ -334,12 +279,6 @@ class MieStore:
         # (16 is right for memory-graph scale; a lake deployment would
         # use hundreds).
         self.merge_buckets = merge_buckets
-        # How many newest snapshot versions GC keeps per table (plus any
-        # pinned versions). Default 2 = the historical contract (a lazy
-        # reader survives exactly one commit); raise it so a reader
-        # opened N commits ago keeps its files — the same knob as
-        # Delta's VACUUM retention horizon.
-        self.snapshot_retention = snapshot_retention
         # Writers fully serialize, matching the reference's single
         # RWMutex over the DB (storage/embedded.go:23-25,88-133): every
         # mutation is read-snapshot -> modify -> commit-pointer, so two
@@ -434,24 +373,19 @@ class MieStore:
     def _commit_snapshot(self, table: str, version: str) -> None:
         """Roll-forward step of a committed transaction (called only by
         _commit_txn and _recover_txn): atomic pointer flip, then GC all
-        but the `snapshot_retention` newest versions (default 2: the
-        previous one stays so lazy readers opened before this commit
-        keep their files). Pinned versions (see pin_current) are exempt
-        from GC — they back named backups and long-lived readers, the
-        same contract as Delta's VACUUM retention."""
+        but the 2 newest versions (the previous one stays so lazy
+        readers opened before this commit keep their files)."""
         tdir = os.path.join(self.path, table)
         tmp_pointer = os.path.join(tdir, "_CURRENT.tmp")
         with open(tmp_pointer, "w") as fh:
             fh.write(version)
         os.replace(tmp_pointer, os.path.join(tdir, "_CURRENT"))
-        pinned = set(self.pinned_versions(table))
         versions = sorted(
             (d for d in os.listdir(tdir) if d.startswith("v") and d[1:].isdigit()),
             key=lambda d: int(d[1:]),
         )
-        for stale in versions[: -self.snapshot_retention]:
-            if stale not in pinned:
-                shutil.rmtree(os.path.join(tdir, stale), ignore_errors=True)
+        for stale in versions[:-2]:
+            shutil.rmtree(os.path.join(tdir, stale), ignore_errors=True)
 
     def _bkt(self, table: str):  # noqa: ANN202
         """Stable key-hash bucket for the partitioned-merge layout: a
@@ -463,62 +397,6 @@ class MieStore:
         return F.pmod(
             F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.merge_buckets)
         ).cast("int")
-
-    def _touched_buckets(
-        self, table: str, snap: str, keys_df: DataFrame
-    ) -> list[int] | None:
-        """The buckets a batch's keys hash to ([] for an empty batch),
-        or None when the rewrite must cover the whole table: the
-        snapshot predates the bucketed layout, or the batch touches
-        every bucket anyway."""
-        touched = sorted(
-            r["bkt"]
-            for r in keys_df.select(self._bkt(table).alias("bkt"))
-            .distinct()
-            .collect()
-        )
-        if touched and (
-            not self._is_bucketed(snap) or len(touched) >= self.merge_buckets
-        ):
-            return None
-        return touched
-
-    def _scan_buckets(
-        self, table: str, snap: str, touched: list[int] | None
-    ) -> DataFrame:
-        """Canonical rows plus ``bkt`` of the snapshot's touched buckets
-        (partition pruning on the scan), or of the whole table when
-        ``touched`` is None."""
-        from pyspark.sql import functions as F
-
-        schema = table_schema(table)
-        raw = self._read_snapshot(table, snap)
-        if touched is None:
-            return _canon_select(raw, schema).withColumn("bkt", self._bkt(table))
-        return _canon_select(
-            raw.filter(F.col("bkt").isin(touched)), schema, extra=("bkt",)
-        )
-
-    def _rewrite_buckets(
-        self,
-        table: str,
-        df: DataFrame,
-        prev: str | None,
-        touched: list[int] | None = None,
-    ) -> str:
-        """Prepare the next snapshot, invisible until :meth:`_commit_txn`
-        flips it in, and return its version. ``df`` (canonical columns
-        plus ``bkt``) is written distributed, partitioned by bucket
-        (nothing passes through the driver); when ``touched`` lists the buckets ``df`` replaces,
-        every other bucket of ``prev`` is hard-linked across, otherwise
-        ``df`` is the whole table. The one write step under merge,
-        delete and compact."""
-        snap, version = self._next_snapshot(table)
-        df.write.mode("overwrite").partitionBy("bkt").parquet(snap)
-        if touched is not None:
-            self._link_untouched(prev, snap, touched)
-        self._write_zone_manifest(snap, prev)
-        return version
 
     def _table_has_no_snapshot(self, name: str) -> bool:
         """True when a table has no committed, non-empty
@@ -561,107 +439,6 @@ class MieStore:
                     os.link(os.path.join(sdir, fn), os.path.join(ddir, fn))
                 except OSError:  # cross-device fallback
                     shutil.copy2(os.path.join(sdir, fn), os.path.join(ddir, fn))
-
-    # -- zone maps (file-level data skipping) -----------------------------
-
-    def _write_zone_manifest(self, snap: str, prev: str | None = None) -> None:
-        """Collect per-file column min/max into the snapshot's
-        ``_ZONES.json`` sidecar, BEFORE the pointer flip commits it.
-        Files carried over from the previous snapshot by hard link keep
-        their stats without a re-read (detected by inode identity at
-        the same relative path), so an incremental merge pays footer
-        reads only for the files it actually wrote — the same
-        commit-time stats collection Delta/Iceberg do, minus the
-        transaction log. At lake scale the footer walk would move into
-        the write tasks; here the driver-side walk is O(files) metadata
-        I/O and touches no data pages."""
-        prev_manifest: dict[str, dict] = {}
-        if prev is not None:
-            p = os.path.join(prev, ZONES_FILE)
-            if os.path.exists(p):
-                with open(p) as fh:
-                    prev_manifest = json.load(fh)
-        manifest: dict[str, dict] = {}
-        for root, _, fs in os.walk(snap):
-            for fn in fs:
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, fn)
-                rel = os.path.relpath(full, snap)
-                if rel in prev_manifest and prev is not None:
-                    prev_file = os.path.join(prev, rel)
-                    try:
-                        if os.path.samefile(prev_file, full):  # hard link
-                            manifest[rel] = prev_manifest[rel]
-                            continue
-                    except OSError:
-                        pass
-                manifest[rel] = _file_zone_stats(full)
-        tmp = os.path.join(snap, ZONES_FILE + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(snap, ZONES_FILE))
-
-    def zones(self, table: str) -> dict[str, dict] | None:
-        """The current snapshot's zone manifest (None when the table is
-        empty or for pre-zone-map snapshots)."""
-        snap = self._snapshot_dir(table)
-        if snap is None:
-            return None
-        p = os.path.join(snap, ZONES_FILE)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
-
-    def scan_pruned(
-        self, table: str, ranges: dict[str, tuple[Any, Any]]
-    ) -> DataFrame:
-        """Zone-map-pruned scan: read ONLY the part files whose
-        ``[min,max]`` zones can intersect every ``col: (lo, hi)`` range
-        (inclusive bounds; ``None`` leaves that side open), then apply
-        the same ranges as a residual filter so the result is exactly
-        ``table(name)`` filtered — pruning is a physical optimization,
-        never a semantics change. A file with no stats for a column is
-        always kept (safe direction). Complements bucket pruning:
-        buckets serve key point-lookups, zones serve range predicates
-        on NON-key columns (created_at, confidence, ...), which is the
-        dominant scan shape at lake scale. Falls back to the full scan
-        when no manifest exists."""
-        from pyspark.sql import functions as F
-
-        schema = table_schema(table)
-
-        def residual(df: DataFrame) -> DataFrame:
-            for col, (lo, hi) in ranges.items():
-                if lo is not None:
-                    df = df.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(col) <= F.lit(hi))
-            return df
-
-        manifest = self.zones(table)
-        if manifest is None:
-            return residual(self.table(table))
-        snap = self._snapshot_dir(table)
-        keep = []
-        for rel, fz in manifest.items():
-            ok = True
-            for col, (lo, hi) in ranges.items():
-                z = fz.get(col)
-                if z is None:
-                    continue  # no stats: cannot prune on this column
-                zmin, zmax = z
-                if (hi is not None and zmin > hi) or (
-                    lo is not None and zmax < lo
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.append(os.path.join(snap, rel))
-        if not keep:
-            return self.spark.createDataFrame([], schema)
-        return residual(_canon_select(self._read_snapshot(table, *keep), schema))
 
     # -- reads ------------------------------------------------------------
 
@@ -720,30 +497,10 @@ class MieStore:
         snap = self._snapshot_dir(name)
         return _read_arrow(name, self._part_files(snap) if snap else [])
 
-    def table_at(self, name: str, version: str) -> DataFrame:
-        """Time-travel read of a specific snapshot version (pair with
-        pin_current, which guarantees the version survives GC) — the
-        Delta `VERSION AS OF` analog on the versioned layout. Raises if
-        the version was never written or has been GC'd."""
-        if name not in ALL_TABLES:
-            raise KeyError(f"unknown table {name!r}")
-        snap = os.path.join(self.path, name, version)
-        if not os.path.isdir(snap):
-            raise FileNotFoundError(
-                f"{name}@{version} does not exist (GC'd or never written); "
-                f"pin versions you need to keep (pin_current)"
-            )
-        schema = table_schema(name)
-        if not self._part_files(snap):
-            return self.spark.createDataFrame([], schema)
-        # same add-column NULL-fill as table(): a pinned version is the
-        # reader MOST likely to predate a schema evolution
-        return _canon_select(self._read_snapshot(name, snap), schema)
-
     # -- writes -----------------------------------------------------------
     #
     # Every write prepares invisible snapshots (_merge_and_write,
-    # _rewrite_buckets) and publishes them through _commit_txn — one
+    # restore) and publishes them through _commit_txn — one
     # commit path, so a single-table write and an N-table transaction
     # have the same crash and visibility guarantees.
 
@@ -959,7 +716,6 @@ class MieStore:
             )
         if bucketed:
             self._link_untouched(prev, snap, list(batch))
-        self._write_zone_manifest(snap, prev)
         return version
 
     def _split_buckets(self, table: str, t: Any) -> dict[int, Any]:
@@ -977,95 +733,41 @@ class MieStore:
         return {b: t.filter(pc.equal(bkts, b)) for b in set(bkts.to_pylist())}
 
     def _merge_df(self, table: str, new: DataFrame) -> str | None:
-        """Bucket-pruned MERGE of a DataFrame: current
-        snapshot anti-join keys(new) ∪ new, restricted to the buckets
-        the batch touches — ONE Spark plan whose scan partition-prunes
-        to the touched ``bkt=K`` dirs and whose write produces only
+        """Bucket-pruned MERGE of a DataFrame: current snapshot
+        anti-join keys(new) ∪ new, restricted to the buckets the batch
+        touches — ONE Spark plan whose scan partition-prunes to the
+        touched ``bkt=K`` dirs and whose write, streamed to the next
+        snapshot (nothing passes through the driver), produces only
         those dirs; untouched buckets are hard-linked from the previous
-        snapshot. O(batch) I/O per commit, not O(table). Falls back
-        to a full (bucketed) rewrite when the current snapshot predates
-        the bucketed layout or the batch touches every bucket anyway."""
+        snapshot. O(batch) I/O per commit, not O(table). Falls back to a
+        full (bucketed) rewrite when the current snapshot predates the
+        bucketed layout or the batch touches every bucket anyway."""
+        from pyspark.sql import functions as F
+
         keys = key_columns(table)
         new = new.withColumn("bkt", self._bkt(table))
-        snap = self._snapshot_dir(table)
-        if snap is None or not self._part_files(snap):
-            # first write: all buckets are new
-            return self._rewrite_buckets(table, new, snap)
-        touched = self._touched_buckets(table, snap, new)
-        if touched == []:  # empty batch: nothing to merge
-            return None
-        kept = self._scan_buckets(table, snap, touched).join(
-            new.select(*keys).dropDuplicates(keys), keys, "left_anti"
-        )
-        return self._rewrite_buckets(table, kept.unionByName(new), snap, touched)
-
-    def compact(self, table: str, cluster_by: tuple[str, ...] = ()) -> int:
-        """Rewrite the table's current snapshot with ONE file per
-        occupied bucket — the Delta OPTIMIZE analog for the bucketed
-        layout. Merges deliberately do NOT coalesce (multiple part
-        files per bucket preserve write parallelism and each rewrite
-        replaces them wholesale, so counts never accumulate); compact
-        is the explicit maintenance call for when a table's buckets
-        have fragmented below efficient scan size. Upgrades a
-        pre-bucketing snapshot to the bucketed layout as a side effect.
-        Returns the number of part files in the new snapshot. No-op
-        (returns 0) on an empty table.
-
-        ``cluster_by`` is the OPTIMIZE ZORDER analog: range-partition
-        and sort the rewrite by the given NON-key columns so each part
-        file covers a narrow value band and the zone-map sidecar
-        (:meth:`scan_pruned`) can skip files on range predicates.
-        Clustering trades file count for skippability: every range
-        task writes into each bucket dir it holds rows for, so the
-        snapshot has up to ``merge_buckets`` files per bucket instead
-        of one — the standard layout tension between hash bucketing
-        (key lookups) and value clustering (range scans)."""
-        with self._write_lock:
-            snap = self._snapshot_dir(table)
-            if snap is None or not self._part_files(snap):
-                return 0
-            from pyspark.sql import functions as F
-
-            df = self._scan_buckets(table, snap, None)
-            if cluster_by:
-                arranged = df.repartitionByRange(
-                    self.merge_buckets, *[F.col(c) for c in cluster_by]
-                ).sortWithinPartitions(*cluster_by)
+        prev = self._snapshot_dir(table)
+        touched = None
+        if prev is not None and self._part_files(prev):
+            touched = sorted(r["bkt"] for r in new.select("bkt").distinct().collect())
+            if not touched:  # empty batch: nothing to merge
+                return None
+            old = self._read_snapshot(table, prev)
+            if self._is_bucketed(prev) and len(touched) < self.merge_buckets:
+                old = old.filter(F.col("bkt").isin(touched))
             else:
-                # one task per bucket -> one file per bucket
-                arranged = df.repartition(self.merge_buckets, F.col("bkt"))
-            version = self._rewrite_buckets(table, arranged, snap)
-            self._commit_txn({table: version})
-            return len(self._part_files(os.path.join(self.path, table, version)))
-
-    def delete_rows(self, table: str, key_values: list[tuple]) -> int:
-        """Delete rows by key; returns how many existed. Bucket-pruned
-        like a merge: only the doomed keys' buckets are scanned and
-        rewritten, the rest hard-link across. A touched bucket losing
-        ALL its rows simply produces no bkt dir — correct."""
-        from pyspark.sql.types import StructType
-
-        keys = key_columns(table)
-        schema = table_schema(table)
-        with self._write_lock:
-            snap = self._snapshot_dir(table)
-            if snap is None or not self._part_files(snap):
-                return 0
-            doomed = self.spark.createDataFrame(
-                [tuple(kv) for kv in key_values],
-                StructType([schema[k] for k in keys]),
+                touched = None  # rewrite the whole table, link nothing
+            new = (
+                _canon_select(old, table_schema(table))
+                .withColumn("bkt", self._bkt(table))
+                .join(new.select(*keys).dropDuplicates(keys), keys, "left_anti")
+                .unionByName(new)
             )
-            touched = self._touched_buckets(table, snap, doomed)
-            if touched == []:
-                return 0
-            scanned = self._scan_buckets(table, snap, touched)
-            removed = scanned.join(doomed, keys, "left_semi").count()
-            if removed:
-                kept = scanned.join(doomed, keys, "left_anti")
-                self._commit_txn(
-                    {table: self._rewrite_buckets(table, kept, snap, touched)}
-                )
-            return removed
+        snap, version = self._next_snapshot(table)
+        new.write.mode("overwrite").partitionBy("bkt").parquet(snap)
+        if touched is not None:
+            self._link_untouched(prev, snap, touched)
+        return version
 
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 
@@ -1092,107 +794,6 @@ class MieStore:
         two-statement version is non-atomic, client.go:251-292 — noted
         in SURVEY §2.4); the ``counters`` path of atomic_upsert_rows."""
         return self._upsert_rows({}, {key: 1})[1][key]
-
-    # -- snapshot pinning ---------------------------------------------------
-
-    def _pin_file(self, table: str) -> str:
-        return os.path.join(self.path, table, "_PINNED")
-
-    def pinned_versions(self, table: str) -> list[str]:
-        """Versions exempt from snapshot GC, oldest first."""
-        pf = self._pin_file(table)
-        if not os.path.exists(pf):
-            return []
-        with open(pf) as fh:
-            return [v for v in fh.read().split() if v]
-
-    def pin_current(self, table: str) -> str | None:
-        """Pin the table's current snapshot version so GC never deletes
-        it (cozodb.go:174-201 Backup keeps a full point-in-time copy;
-        pinning is the zero-copy equivalent on the versioned layout).
-        Returns the pinned version, or None if the table has no data."""
-        with self._write_lock:
-            snap = self._snapshot_dir(table)
-            if snap is None:
-                return None
-            version = os.path.basename(snap)
-            pins = self.pinned_versions(table)
-            if version not in pins:
-                pins.append(version)
-                with open(self._pin_file(table), "w") as fh:
-                    fh.write("\n".join(pins))
-            return version
-
-    def unpin(self, table: str, version: str) -> None:
-        """Release a pin; the version becomes GC-eligible at the next
-        commit (it is NOT deleted eagerly — a reader may hold it)."""
-        with self._write_lock:
-            pins = [v for v in self.pinned_versions(table) if v != version]
-            pf = self._pin_file(table)
-            if pins:
-                with open(pf, "w") as fh:
-                    fh.write("\n".join(pins))
-            elif os.path.exists(pf):
-                os.remove(pf)
-
-    def diff_versions(self, table: str, v_from: str, v_to: str) -> DataFrame:
-        """Row-level change feed between two snapshot versions — the
-        Delta CDF analog on the versioned layout: a full-outer join on
-        the table's key columns classifies every row as 'added',
-        'removed', or 'changed' (non-key attributes differ), with the
-        newer version's attributes for added/changed and the older
-        version's for removed. Fully distributed — the join carries
-        (keys, fingerprint) plus the projected attributes; nothing
-        collects. Pair with pin_current so both endpoints survive GC.
-
-        Change detection hashes the non-key columns (null-safe: a
-        sha2 over '\\x01'-joined casts with an explicit null sentinel)
-        rather than comparing column-by-column, so adding attributes
-        to a table never changes this method."""
-        from pyspark.sql import functions as F
-
-        keys = key_columns(table)
-        schema = table_schema(table)
-        attrs = [f.name for f in schema if f.name not in keys]
-
-        def fp(df: DataFrame) -> DataFrame:
-            parts = [
-                F.coalesce(F.col(c).cast("string"), F.lit("\x00<null>"))
-                for c in attrs
-            ]
-            return df.withColumn(
-                "_fp", F.sha2(F.concat_ws("\x01", *parts), 256)
-            )
-
-        old = fp(self.table_at(table, v_from)).select(
-            *[F.col(k).alias(f"_k_{k}") for k in keys],
-            F.col("_fp").alias("_fp_old"),
-            *[F.col(c).alias(f"_old_{c}") for c in attrs],
-        )
-        new = fp(self.table_at(table, v_to)).select(
-            *[F.col(k).alias(f"_k_{k}") for k in keys],
-            F.col("_fp").alias("_fp_new"),
-            *[F.col(c).alias(f"_new_{c}") for c in attrs],
-        )
-        j = old.join(new, [f"_k_{k}" for k in keys], "full_outer")
-        change = (
-            F.when(F.col("_fp_old").isNull(), F.lit("added"))
-            .when(F.col("_fp_new").isNull(), F.lit("removed"))
-            .when(F.col("_fp_old") != F.col("_fp_new"), F.lit("changed"))
-        )
-        out_attrs = [
-            F.coalesce(F.col(f"_new_{c}"), F.col(f"_old_{c}")).alias(c)
-            for c in attrs
-        ]
-        return (
-            j.withColumn("change", change)
-            .filter(F.col("change").isNotNull())
-            .select(
-                "change",
-                *[F.col(f"_k_{k}").alias(k) for k in keys],
-                *out_attrs,
-            )
-        )
 
     # -- backup / restore (cozodb.go:174-232 Backup/Restore) ----------------
 

@@ -570,20 +570,15 @@ def test_restore_failure_partway_changes_no_table(spark, tmp_path, monkeypatch):
     assert _all_rows(store) == at_backup
 
 
-def test_ephemeral_store_has_versions_and_zones(spark):
-    """A path-less store is the parquet engine on a temp dir, so
-    pinning, time travel and zone maps work on it too."""
+def test_ephemeral_store_reads_latest_version(spark):
+    """A path-less store is the parquet engine on a temp dir: a second
+    write of a key replaces the first."""
     from mie_spark.storage import MieStore
 
     store = MieStore(spark, embedding_dim=4)
     store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "v1"}])
-    pinned = store.pin_current("mie_fact")
-    assert pinned is not None
     store.upsert_rows("mie_fact", [{"id": "fact:1", "content": "v2"}])
-    assert [r["content"] for r in store.table_at("mie_fact", pinned).collect()] == ["v1"]
     assert [r["content"] for r in store.table("mie_fact").collect()] == ["v2"]
-    zones = store.zones("mie_fact")
-    assert zones and all("id" in z for z in zones.values())
 
 
 def test_ephemeral_stores_are_isolated(spark):
@@ -610,62 +605,79 @@ def test_ephemeral_store_reset_leaves_empty_usable_store(spark):
     assert [r["id"] for r in store.table("mie_fact").collect()] == ["fact:2"]
 
 
-def test_pinned_snapshot_survives_gc(spark, tmp_path):
+def test_lazy_reader_survives_exactly_one_commit(spark, tmp_path):
+    """GC keeps the 2 newest snapshot versions: a lazy table() reader
+    opened before one commit still reads its files, and its snapshot
+    dir is gone after a second commit."""
     import os
 
     path = str(tmp_path / "s")
     c = MieClient(spark, path=path, embedding_dim=4)
-    c.store_fact("pin me", "general")
-    pinned = c.store.pin_current("mie_fact")
-    assert pinned is not None
-    # three more commits would normally GC the pinned version (GC keeps 2)
-    for i in range(3):
-        c.store_fact(f"churn {i}", "general")
-    assert os.path.isdir(os.path.join(path, "mie_fact", pinned))
-    assert c.store.pinned_versions("mie_fact") == [pinned]
-    # unpin → next commit GCs it
-    c.store.unpin("mie_fact", pinned)
-    c.store_fact("one more", "general")
-    assert not os.path.isdir(os.path.join(path, "mie_fact", pinned))
-
-
-def test_snapshot_retention_knob(spark, tmp_path):
-    """A lazy reader held across N commits survives when
-    snapshot_retention >= N+1 (VERDICT r5 item #7: the GC-horizon-of-2
-    footgun gets an opt-in knob; default stays 2)."""
-    import os
-
-    path = str(tmp_path / "s")
-    c = MieClient(spark, path=path, embedding_dim=4, snapshot_retention=4)
     c.store_fact("version one", "general")
     reader = c.store.table("mie_fact")  # lazy scan of snapshot v(k)
     first_snap = c.store._snapshot_dir("mie_fact")
-    for i in range(3):  # N=3 commits later, retention 4 keeps our files
-        c.store_fact(f"churn {i}", "general")
+    c.store_fact("churn", "general")
     assert os.path.isdir(first_snap)
     assert reader.count() == 1  # the held handle still reads its files
     # one more commit pushes the first snapshot past the horizon
     c.store_fact("one more", "general")
     assert not os.path.isdir(first_snap)
-    # invalid retention fails loudly
-    with pytest.raises(ValueError, match="snapshot_retention"):
-        MieClient(spark, path=path, embedding_dim=4, snapshot_retention=0)
 
 
-def test_table_at_time_travel_with_pin(spark, tmp_path):
-    """pin_current + table_at = zero-copy point-in-time read that
-    survives later commits (the Delta VERSION AS OF analog)."""
-    c = MieClient(spark, path=str(tmp_path / "s"), embedding_dim=4)
-    fid = c.store_fact("version one", "general")
-    pinned = c.store.pin_current("mie_fact")
+def test_store_with_zone_and_pin_files_still_works(spark, tmp_path):
+    """Stores written by earlier builds carry a ``_ZONES.json`` zone-map
+    sidecar in every snapshot dir and may carry a ``_PINNED`` list in a
+    table dir. Such a store opens, reads the same rows through both
+    reads, merges through both merge paths and round-trips through
+    backup and restore. GC no longer honours the pin file: a version it
+    lists is removed once two newer commits exist."""
+    import json
+    import os
+
+    from mie_spark import schemas as S
+    from mie_spark.storage import MieStore
+
+    path = str(tmp_path / "old")
+    old = MieStore(spark, path=path, embedding_dim=4)
     for i in range(3):
-        c.store_fact(f"later fact {i}", "general")
-    old = c.store.table_at("mie_fact", pinned)
-    assert old.count() == 1
-    assert old.collect()[0]["id"] == fid
-    assert c.store.table("mie_fact").count() == 4
-    with pytest.raises(FileNotFoundError, match="GC'd or never written"):
-        c.store.table_at("mie_fact", "v999")
+        old.upsert_rows("mie_fact", [{"id": f"fact:{i}", "content": f"c{i}"}])
+    for table in os.listdir(path):
+        tdir = os.path.join(path, table)
+        for v in os.listdir(tdir):
+            snap = os.path.join(tdir, v)
+            if v.startswith("v") and os.path.isdir(snap):
+                zones = {
+                    os.path.relpath(p, snap): {"id": ["a", "z"]}
+                    for p in MieStore._part_files(snap)
+                }
+                with open(os.path.join(snap, "_ZONES.json"), "w") as fh:
+                    json.dump(zones, fh)
+    pinned = os.path.basename(old._snapshot_dir("mie_fact"))
+    with open(os.path.join(path, "mie_fact", "_PINNED"), "w") as fh:
+        fh.write(pinned)
+
+    store = MieStore(spark, path=path, embedding_dim=4)
+    expected = {f"fact:{i}": f"c{i}" for i in range(3)}
+    assert {r["id"]: r["content"] for r in store.table("mie_fact").collect()} == expected
+    arrow = store.table_arrow("mie_fact")
+    assert dict(zip(arrow["id"].to_pylist(), arrow["content"].to_pylist())) == expected
+
+    store.atomic_upsert_rows({"mie_fact": [{"id": "fact:1", "content": "rows"}]})
+    assert os.path.isdir(os.path.join(path, "mie_fact", pinned))
+    frame = spark.createDataFrame(
+        [tuple({"id": "fact:9", "content": "df"}.get(f.name) for f in S.FACT)],
+        S.FACT,
+    )
+    store.atomic_upsert_dfs({"mie_fact": frame})
+    assert not os.path.isdir(os.path.join(path, "mie_fact", pinned))
+    expected.update({"fact:1": "rows", "fact:9": "df"})
+    assert {r["id"]: r["content"] for r in store.table("mie_fact").collect()} == expected
+
+    bdir = str(tmp_path / "bak")
+    store.backup(bdir)
+    fresh = MieStore(spark, path=str(tmp_path / "fresh"), embedding_dim=4)
+    fresh.restore(bdir)
+    assert {r["id"]: r["content"] for r in fresh.table("mie_fact").collect()} == expected
 
 
 def test_backup_dir_reuse_does_not_merge_snapshots(spark, tmp_path):
@@ -786,88 +798,6 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(rows) == 200
     assert rows["fact:7"] == "UPDATED"
     assert rows["fact:8"] == "c8"
-
-
-def test_bucketed_delete_prunes_and_preserves_rows(spark, tmp_path):
-    """delete_rows on the bucketed layout scans and rewrites only the
-    doomed keys' buckets; surviving rows in other buckets hard-link
-    across unchanged, and counts/reads stay exact."""
-    from mie_spark.storage import MieStore
-
-    store = MieStore(
-        spark, path=str(tmp_path / "d"), embedding_dim=4, merge_buckets=8
-    )
-    store.upsert_rows(
-        "mie_fact",
-        [{"id": f"fact:{i}", "content": f"c{i}"} for i in range(60)],
-    )
-    v1 = store._snapshot_dir("mie_fact")
-    before = _bucket_inodes(v1)
-    assert store.delete_rows("mie_fact", [("fact:3",), ("fact:44",)]) == 2
-    after = _bucket_inodes(store._snapshot_dir("mie_fact"))
-    linked = [d for d in after if after[d] and after[d] <= before[d]]
-    assert len(linked) >= len(before) - 2  # at most 2 buckets rewritten
-    ids = {r["id"] for r in store.table("mie_fact").collect()}
-    assert len(ids) == 58 and "fact:3" not in ids and "fact:44" not in ids
-    # deleting a missing key is a no-op commit-wise
-    assert store.delete_rows("mie_fact", [("fact:nope",)]) == 0
-
-
-def test_compact_one_file_per_bucket(spark, tmp_path):
-    """compact() rewrites the current snapshot to one part file per
-    occupied bucket (the OPTIMIZE analog); reads are unchanged and the
-    versioned-commit contract holds (new version, old GC-eligible)."""
-    import os
-
-    from mie_spark.storage import MieStore
-
-    store = MieStore(
-        spark, path=str(tmp_path / "c"), embedding_dim=4, merge_buckets=4
-    )
-    for batch in range(3):  # several merges -> multiple files per bucket
-        store.upsert_rows(
-            "mie_fact",
-            [{"id": f"fact:{batch}-{i}", "content": "x"} for i in range(40)],
-        )
-    v_before = store._snapshot_dir("mie_fact")
-    n_files = store.compact("mie_fact")
-    v_after = store._snapshot_dir("mie_fact")
-    assert v_after != v_before
-    buckets = [d for d in os.listdir(v_after) if d.startswith("bkt=")]
-    assert n_files == len(buckets)  # exactly one file per occupied bucket
-    for d in buckets:
-        parts = [f for f in os.listdir(os.path.join(v_after, d)) if f.endswith(".parquet")]
-        assert len(parts) == 1
-    assert store.table("mie_fact").count() == 120
-    # empty table: no-op
-    empty = MieStore(spark, path=str(tmp_path / "e"), embedding_dim=4)
-    assert empty.compact("mie_fact") == 0
-    # ephemeral store, nothing written yet: graceful no-op
-    assert MieStore(spark, path=None, embedding_dim=4).compact("mie_fact") == 0
-
-
-def test_diff_versions_change_feed(spark, tmp_path):
-    """diff_versions = the Delta CDF analog between two pinned
-    snapshots: added / removed / changed rows classified by a
-    null-safe attribute fingerprint over a full-outer key join, with
-    the newer attributes for added/changed and the older for removed.
-    Identical endpoints diff to empty."""
-    c = MieClient(spark, path=str(tmp_path / "s"), embedding_dim=4)
-    e1 = c.store_entity("alice", "person", "first version")
-    e2 = c.store_entity("bob", "person", "leaves later")
-    v1 = c.store.pin_current("mie_entity")
-    c.update_description(e1, "second version")          # changed
-    e3 = c.store_entity("carol", "person", "new row")   # added
-    c.store.delete_rows("mie_entity", [(e2,)])          # removed
-    v2 = c.store.pin_current("mie_entity")
-
-    rows = c.store.diff_versions("mie_entity", v1, v2).collect()
-    got = {(r["change"], r["id"]) for r in rows}
-    assert got == {("changed", e1), ("added", e3), ("removed", e2)}
-    by_id = {r["id"]: r for r in rows}
-    assert by_id[e1]["description"] == "second version"  # newer attrs win
-    assert by_id[e2]["description"] == "leaves later"    # removed keeps old
-    assert c.store.diff_versions("mie_entity", v2, v2).count() == 0
 
 
 def test_export_graph_options_and_aliases(spark, tmp_path):
@@ -1157,9 +1087,8 @@ def test_atomic_upsert_dfs_crash_exposes_neither_table(spark, tmp_path):
 def test_schema_evolution_add_column_read_and_merge(spark, tmp_path):
     """Add-column schema evolution: a snapshot written BEFORE a column
     entered the canonical schema must (a) read back with the new
-    column as typed NULLs, (b) survive a point-lookup scan_pruned
-    path, and (c) be upsert-mergeable — the next merge writes the
-    full current schema. Simulated by writing a snapshot with a
+    column as typed NULLs, and (b) be upsert-mergeable — the next
+    merge writes the full current schema. Simulated by writing a snapshot with a
     REDUCED schema (as an old build would have) and reading with the
     current one."""
     from pyspark.sql import functions as F
@@ -1275,8 +1204,6 @@ def test_schema_evolution_type_widening_mixed_vintages(spark, tmp_path):
     assert by_id["fact:1"]["created_at"] == 2000
     assert by_id["fact:2"]["confidence"] == pytest.approx(0.5)
     assert by_id["fact:2"]["created_at"] == 1002
-    # point-lookup path (zone-map pruned scan) survives the mix too
-    assert store.scan_pruned("mie_fact", {"id": ("fact:3", "fact:3")}).count() == 1
 
 
 def test_schema_evolution_drop_column_read_and_merge(spark, tmp_path):
@@ -1426,37 +1353,6 @@ def test_second_txn_finishes_pending_rollforward_first(spark, tmp_path):
     store.upsert_rows("mie_fact", [{"id": "fact:2", "content": "later"}])
     by_id = {r["id"]: r["content"] for r in store.table("mie_fact").collect()}
     assert by_id == {"fact:1": "TXN1", "fact:2": "later"}
-
-
-def test_table_at_reads_pre_evolution_snapshot(spark, tmp_path):
-    """Review finding (r8): time-travel (and diff_versions on top of
-    it) is the reader MOST likely to hit a snapshot written before a
-    column existed — it must NULL-fill like table() does."""
-    from unittest import mock
-
-    from mie_spark import schemas as S
-    from mie_spark.storage import MieStore
-
-    path = str(tmp_path / "evo_tt")
-    full = S.table_schema("mie_fact")
-    reduced = type(full)([f for f in full.fields if f.name != "confidence"])
-    with mock.patch.object(
-        S, "NODE_TABLES", {**S.NODE_TABLES, "mie_fact": reduced}
-    ):
-        old = MieStore(spark, path=path, embedding_dim=4)
-        old.upsert_rows("mie_fact", [{"id": "fact:1", "content": "v1"}])
-
-    store = MieStore(spark, path=path, embedding_dim=4)
-    pinned = store.pin_current("mie_fact")
-    store.upsert_rows(
-        "mie_fact", [{"id": "fact:1", "content": "v2", "confidence": 0.5}]
-    )
-    tt = store.table_at("mie_fact", pinned).collect()
-    assert [r["content"] for r in tt] == ["v1"]
-    assert tt[0]["confidence"] is None
-    # diff across the evolution boundary works too
-    diff = store.diff_versions("mie_fact", pinned, store._snapshot_dir("mie_fact").rsplit("/", 1)[-1])
-    assert diff.count() >= 1
 
 
 # ----------------------------------------------------------------------
