@@ -15,7 +15,7 @@ Layout:
     functions   — vector / text / hashing column expressions
     operators   — relational, join/graph, vector, dedup, text, multimodal
     streaming   — Structured Streaming ingest + stateful ops
-    generations — versioned-directory commits (HNSW index, stream state)
+    generations — versioned-directory commits (streaming state)
     api         — MieClient: the reference's 9-tool semantic surface
 """
 

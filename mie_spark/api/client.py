@@ -854,7 +854,7 @@ class MieClient:
         """Full-graph JSON export (reader.go:707-764)."""
         out: dict[str, list[dict[str, Any]]] = {}
         for table in list(NODE_TABLES) + list(EDGE_TABLES):
-            out[table] = [r.asDict() for r in self.store.table(table).collect()]
+            out[table] = self.store.table_arrow(table).to_pylist()
         return out
 
     def export_graph(
@@ -896,9 +896,7 @@ class MieClient:
             "stats": {},
         }
         for nt in chosen:
-            rows = [
-                r.asDict() for r in self.store.table(f"mie_{nt}").collect()
-            ]
+            rows = self.store.table_arrow(f"mie_{nt}").to_pylist()
             out[plural[nt]] = rows
             out["stats"][plural[nt]] = len(rows)
         prefixes = {
@@ -913,9 +911,7 @@ class MieClient:
         rels: dict[str, list[dict[str, Any]]] = {}
         for table, (a, b) in prefixes.items():
             if a in chosen and b in chosen:
-                rels[table] = [
-                    r.asDict() for r in self.store.table(table).collect()
-                ]
+                rels[table] = self.store.table_arrow(table).to_pylist()
         if rels:
             out["relationships"] = rels
         if include_embeddings:
@@ -923,9 +919,7 @@ class MieClient:
             for table, key in EMBEDDING_TABLES.items():
                 nt = key.removesuffix("_id")
                 if nt in chosen:
-                    emb[table] = [
-                        r.asDict() for r in self.store.table(table).collect()
-                    ]
+                    emb[table] = self.store.table_arrow(table).to_pylist()
             out["embeddings"] = emb
         return out
 
@@ -988,8 +982,7 @@ class MieClient:
         (pkg/tools/export.go:59-115)."""
         lines: list[str] = []
         for table in list(NODE_TABLES) + list(EDGE_TABLES):
-            for row in self.store.table(table).collect():
-                d = row.asDict()
+            for d in self.store.table_arrow(table).to_pylist():
                 cols = ", ".join(d.keys())
                 vals = ", ".join(_sql_literal(v) for v in d.values())
                 lines.append(f"INSERT INTO {table} ({cols}) VALUES ({vals});")

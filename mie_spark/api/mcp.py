@@ -225,17 +225,13 @@ class McpStdioServer:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from mie_spark.config import default_config, load_config
+    from mie_spark.session import get_spark
 
     path = sys.argv[1] if len(sys.argv) > 1 else None
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("mie_mcp")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the session factory `cli --mcp` uses, so raw_query has one SQL
+    # semantics (ANSI off, UTC) however the server was started
+    spark = get_spark("mie_mcp")
     # Build from the SAME config plane as the CLI (--mcp) path: a bare
     # MieClient(spark, path=path) would pin embedding_dim to its 4-dim
     # default, and serving a store written by the 768-dim configured

@@ -119,8 +119,7 @@ def _apply_env_overrides(cfg: Config) -> None:
     # "ollama" default (config.go:232-244); this engine's default is
     # "mock", so both defaults flip — otherwise setting NOMIC_API_KEY
     # against an `init`-written config would silently keep writing mock
-    # embeddings, diverging from provider_from_env's semantics for the
-    # same env var.
+    # embeddings.
     explicit = bool(env.get("MIE_EMBEDDING_PROVIDER"))
     openai_key = env.get("OPENAI_API_KEY")
     nomic_key = env.get("NOMIC_API_KEY")

@@ -217,24 +217,3 @@ class NomicEmbeddingProvider:
     def embed_query(self, text: str) -> list[float]:
         return self._call([text], "search_query")[0]
 
-
-def provider_from_env(dimension: int = 4):
-    """Factory mirroring the reference's provider selection
-    (embedding.go:572-613): explicit env opt-in, mock otherwise.
-    Matching cmd/mie/config.go:238-244, a set NOMIC_API_KEY implies
-    the nomic provider when no explicit provider was chosen."""
-    name = os.environ.get("MIE_EMBEDDING_PROVIDER", "").lower()
-    if not name:
-        name = "nomic" if os.environ.get("NOMIC_API_KEY") else "mock"
-    if name == "ollama":
-        return OllamaEmbeddingProvider()
-    if name == "openai":
-        return OpenAIEmbeddingProvider()
-    if name == "nomic":
-        return NomicEmbeddingProvider(
-            model=os.environ.get("NOMIC_EMBED_MODEL", "nomic-embed-text-v1.5"),
-            base_url=os.environ.get(
-                "NOMIC_BASE_URL", "https://api-atlas.nomic.ai/v1"
-            ),
-        )
-    return MockEmbeddingProvider(dimension)

@@ -1,10 +1,10 @@
 """Versioned generation directories behind an atomic ``_CURRENT`` manifest.
 
-The one commit protocol for persisted state outside ``MieStore`` (the
-materialized HNSW index and every foreachBatch-maintained streaming
-state). A writer never mutates committed files: it writes a COMPLETE
-new generation directory ``gNNNNNNNNN/`` under the root and then
-commits by replacing ``_CURRENT``, a newline-separated manifest of the
+The one commit protocol for persisted state outside ``MieStore``: every
+foreachBatch-maintained streaming state in ``streaming/ops.py``. A
+writer never mutates committed files: it writes a COMPLETE new
+generation directory ``gNNNNNNNNN/`` under the root and then commits
+by replacing ``_CURRENT``, a newline-separated manifest of the
 generations that make up the live state (one entry for a full
 snapshot, several for a delta log merged by the reader). Readers
 resolve the manifest once and read only those directories, so an

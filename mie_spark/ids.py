@@ -19,17 +19,12 @@ e.g. ``generate_id("fact", "", "|") == generate_id("fact", "|", "")``
 the threshold comparison in SURVEY §2.10: documented, tested at the
 boundary, deliberately not "fixed".
 
-Provided both as plain Python (driver-side single writes) and
-as Spark column expressions (bulk ingest: sha2 + substring stay in
-whole-stage codegen, so a 100 TB ingest derives IDs with zero Python).
+Plain Python: every write path derives its ids on the driver.
 """
 
 from __future__ import annotations
 
 import hashlib
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 PREFIXES = ("fact", "dec", "ent", "evt", "top")
 
@@ -71,37 +66,3 @@ def node_type_of(node_id: str) -> str:
         if node_id.startswith(prefix):
             return table
     raise ValueError(f"unrecognized node id prefix: {node_id!r}")
-
-
-# --- column-expression variants (bulk/distributed ingest) -------------------
-
-def id_expr(prefix: str, *field_cols: Column) -> Column:
-    """concat_ws silently SKIPS null fields (and their separator), which
-    would let ('a', NULL, 'b') collide with ('a', 'b') and let a NULL
-    category hash differently from the driver path's coerced value — so
-    nulls are made explicit before joining. The driver-path Python ids
-    never see nulls (coercion happens first); this keeps the column
-    variant on the same footing."""
-    joined = F.concat_ws("|", *[F.coalesce(c.cast("string"), F.lit("\x00")) for c in field_cols])
-    return F.concat(F.lit(prefix), F.lit(":"), F.substring(F.sha2(joined, 256), 1, 16))
-
-
-def fact_id_expr(content: Column, category: Column) -> Column:
-    """Mirrors ids.fact_id + validators.coerce_category: a NULL/unknown
-    category coerces to 'general' BEFORE hashing, so bulk-ingest ids
-    equal driver-path ids for the same logical fact (the dedup
-    invariant: same content => same ID)."""
-    from mie_spark.validators import VALID_FACT_CATEGORIES
-
-    coerced = F.when(
-        category.isin(*sorted(VALID_FACT_CATEGORIES)), category
-    ).otherwise(F.lit("general"))
-    return id_expr("fact", content, coerced)
-
-
-def entity_id_expr(name: Column, kind: Column) -> Column:
-    return id_expr("ent", F.lower(name), kind)
-
-
-def topic_id_expr(name: Column) -> Column:
-    return id_expr("top", F.lower(name))

@@ -117,19 +117,6 @@ def bloom_prefilter(
     )
 
 
-def bloom_might_contain(
-    key_col: str, bitmap: list[int], k: int = DEFAULT_K
-) -> Column:
-    """Membership test as a single Column over an INLINE literal
-    bitmap. Correct at any size but O(len(bitmap)) PER ROW (the
-    CreateArray is rebuilt each evaluation) — use only for small
-    bitmaps or small inputs; hot paths go through bloom_prefilter."""
-    n_bits = len(bitmap) * 64
-    bm = F.array(*[F.lit(w).cast("long") for w in bitmap])
-    masks = F.array(*[F.lit(m).cast("long") for m in _MASKS])
-    return _membership_cond(key_col, bm, masks, n_bits, k)
-
-
 def bloom_semi_join(
     probe: DataFrame,
     build: DataFrame,

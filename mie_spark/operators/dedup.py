@@ -246,21 +246,6 @@ def _signatures_from_shingles(
     return hashed.mapInPandas(batches, schema=out_schema)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc, array<long> signature): sig[i] = min over shingles of
-    ((a_i * h + b_i) mod M31), h = xxhash64(shingle) folded to 31 bits."""
-    return _signatures_from_shingles(
-        _doc_shingles(df, id_col, text_col, n), num_hashes, seed
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

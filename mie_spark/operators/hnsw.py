@@ -36,8 +36,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mie_spark import generations
-
 # Reference operating point (pkg/memory/schema.go:145-152; reader.go:63,69).
 DEFAULT_M = 16
 DEFAULT_EF_CONSTRUCTION = 200
@@ -269,8 +267,7 @@ def build_hnsw(
     Returns (layers, entry_point): ``layers[lev][node]`` is the
     neighbor list of ``node`` at level ``lev`` (empty above the node's
     level). Insert-at-a-time construction per the paper via
-    :func:`_insert_node` — the same kernel :func:`append_hnsw` uses to
-    grow an existing graph."""
+    :func:`_insert_node`."""
     n = len(vecs)
     if n == 0:
         return [], -1
@@ -284,41 +281,6 @@ def build_hnsw(
         entry, top = _insert_node(
             layers, entry, vecs, i, int(node_level[i]), m, ef_construction,
             heuristic=heuristic,
-        )
-    return layers, entry
-
-
-def append_hnsw(
-    layers: list[list[list[int]]],
-    entry: int,
-    vecs: np.ndarray,
-    n_old: int,
-    m: int = DEFAULT_M,
-    ef_construction: int = DEFAULT_EF_CONSTRUCTION,
-    seed: int = 42,
-    heuristic: bool = True,
-) -> tuple[list[list[list[int]]], int]:
-    """Grow an existing graph in place: insert nodes n_old..len(vecs)-1
-    (``vecs`` = old unit vectors with the new ones appended). Level
-    draws are seeded by (seed, n_old) so a given growth step is
-    deterministic. This is the incremental-index path — the reference
-    inserts embeddings into its cozo HNSW the same one-at-a-time way
-    (async writer, pkg/memory/writer.go:71-73)."""
-    n_new = len(vecs) - n_old
-    if n_new <= 0:
-        return layers, entry
-    if n_old == 0 or not layers:
-        return build_hnsw(
-            vecs, m=m, ef_construction=ef_construction, seed=seed,
-            heuristic=heuristic,
-        )
-    node_level = _levels_for(n_new, m, seed + 1_000_003 * n_old)
-    for lev in range(len(layers)):
-        layers[lev].extend([] for _ in range(n_new))
-    for j in range(n_new):
-        entry, _ = _insert_node(
-            layers, entry, vecs, n_old + j, int(node_level[j]), m,
-            ef_construction, heuristic=heuristic,
         )
     return layers, entry
 
@@ -375,21 +337,9 @@ def _resolve_shards(df: DataFrame, id_col: str, shards: int | str) -> int:
     return int(shards)
 
 
-# Segment-routing hash scheme, stamped into the ANN meta at build time
-# and VERIFIED at append time (ADVICE r11): the r11 switch from
-# xxhash64 to md5 silently re-routed ids, and append's replay-
-# idempotence check ("known ids in THIS shard") only looks in the
-# shard the CURRENT hash picks — replaying a batch against an index
-# built under a different scheme would insert duplicate vec_ids into a
-# second segment and search could return the same id twice. The stamp
-# makes the mismatch loud instead of silent. Bump the tag whenever
-# shard_of's expression changes.
-SHARD_HASH_SCHEME = "md5-15"
-
-
 def shard_of(id_col: F.Column, n_shards: int) -> F.Column:
-    """Deterministic segment assignment for every HNSW path (build,
-    append, on-the-fly) — ENGINE-PORTABLE md5 arithmetic (the repo's
+    """Deterministic segment assignment for hnsw_topk —
+    ENGINE-PORTABLE md5 arithmetic (the repo's
     standard hash-rule construction) rather than xxhash64, so the
     sharding stage is replayable in a SQL oracle (v_hnsw_rerank):
     DuckDB `('0x' || substr(md5(id::VARCHAR), 1, 15))::BIGINT % n`.
@@ -461,378 +411,3 @@ def hnsw_topk(
     local = sharded.groupBy("_shard").applyInPandas(per_shard, schema=out_schema)
     # exact global re-rank of <= shards x k candidate rows
     return local.orderBy(F.col("sim").desc(), id_col).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Index generations (ADVICE r9, medium): the materialized index is
-# never mutated in place. Every (re)build or append writes a COMPLETE
-# new generation directory and commits it through the shared
-# generation protocol (mie_spark/generations.py): in-flight readers
-# keep the generation they resolved, and a crash mid-append leaves the
-# live generation untouched.
-# ---------------------------------------------------------------------------
-
-
-def _current_generation(spark, path: str) -> str | None:
-    """Resolve the live generation dir, or None for an empty/missing
-    index. Pre-generation indexes (graph rows at the path root) are
-    read as-is — the first append upgrades them to the versioned
-    layout."""
-    live = generations.manifest(spark, path)
-    if live:
-        return live[-1]
-    # legacy layout: shard=K dirs directly under path
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath) and any(
-        st.getPath().getName().startswith("shard=")
-        for st in fs.listStatus(jpath)
-    ):
-        return path
-    return None
-
-
-def _forward_untouched_shards(
-    spark, src_gen: str, dst_gen: str, touched: set[int]
-) -> None:
-    """Carry untouched `shard=K` partitions from the previous
-    generation into the new one. Local filesystems hard-link (O(files)
-    metadata ops, zero data copy — the MieStore vintage pattern,
-    storage.py _link_untouched); anything else goes through Hadoop
-    FileUtil.copy (on S3 a server-side copy — bytes never transit the
-    driver). Either way append stays O(touched segments) in compute
-    and local-disk I/O."""
-    import os
-    import shutil
-
-    jvm = spark._jvm
-    jsrc = jvm.org.apache.hadoop.fs.Path(src_gen)
-    fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
-    conf = spark._jsc.hadoopConfiguration()
-    local = src_gen.startswith("/") or src_gen.startswith("file:")
-    for st in fs.listStatus(jsrc):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("shard=")):
-            continue
-        if int(name.split("=", 1)[1]) in touched:
-            continue
-        if local:
-            sdir = src_gen.replace("file:", "", 1).rstrip("/") + "/" + name
-            ddir = dst_gen.replace("file:", "", 1).rstrip("/") + "/" + name
-            os.makedirs(ddir, exist_ok=True)
-            for fn in os.listdir(sdir):
-                try:
-                    os.link(
-                        os.path.join(sdir, fn), os.path.join(ddir, fn)
-                    )
-                except OSError:  # cross-device or FS without hard links
-                    shutil.copy2(
-                        os.path.join(sdir, fn), os.path.join(ddir, fn)
-                    )
-        else:
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs,
-                st.getPath(),
-                fs,
-                jvm.org.apache.hadoop.fs.Path(
-                    dst_gen.rstrip("/") + "/" + name
-                ),
-                False,
-                conf,
-            )
-
-
-def write_ann_hnsw_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    shards: int | str = 8,
-    m: int = DEFAULT_M,
-    ef_construction: int = DEFAULT_EF_CONSTRUCTION,
-    seed: int = 42,
-) -> None:
-    """Materialize the segment-parallel HNSW index: each shard's graph
-    builds inside applyInPandas and lands as ONE parquet row (ids,
-    unit vectors, layered adjacency, entry point) in a `shard=K`
-    partition — the Lucene segment file, in parquet. Rebuilding the
-    index is the only way the graphs change, exactly like rebuilding
-    the reference's cozo HNSW index. Serving reads the graph rows and
-    never re-runs construction.
-
-    The build lands in a fresh generation directory and commits via
-    a generation commit (see the generation block above), so a
-    rebuild over a live index never disturbs concurrent readers."""
-    from mie_spark.operators.vector import _require_nonempty, _write_ann_meta
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    _require_nonempty(df, id_col, "write_ann_hnsw_index")
-    shards = _resolve_shards(df, id_col, shards)
-    out_schema = StructType(
-        [
-            StructField("shard", IntegerType()),
-            StructField("ids", ArrayType(df.schema[id_col].dataType)),
-            StructField("vecs", ArrayType(ArrayType(DoubleType()))),
-            StructField("entry", IntegerType()),
-            StructField(
-                "adj",
-                ArrayType(ArrayType(ArrayType(IntegerType()))),
-            ),
-        ]
-    )
-
-    def build_shard(pdf):  # noqa: ANN001
-        import pandas as pd
-
-        if pdf.empty:
-            return pd.DataFrame(
-                {"shard": [], "ids": [], "vecs": [], "entry": [], "adj": []}
-            )
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        vecs = _unit(
-            np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        )
-        shard = int(pdf["_shard"].iloc[0])
-        layers, entry = build_hnsw(
-            vecs, m=m, ef_construction=ef_construction, seed=seed + shard
-        )
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "ids": [list(pdf[id_col])],
-                "vecs": [[list(map(float, v)) for v in vecs]],
-                "entry": [entry],
-                "adj": [layers],
-            }
-        )
-
-    sharded = df.select(
-        id_col,
-        vec_col,
-        shard_of(F.col(id_col), shards).cast("int").alias("_shard"),
-    )
-    spark = df.sparkSession
-    gen_path = generations.allocate(spark, path)
-    (
-        sharded.groupBy("_shard")
-        .applyInPandas(build_shard, schema=out_schema)
-        .repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(gen_path)
-    )
-    _write_ann_meta(
-        spark,
-        path,
-        {
-            "kind": "hnsw",
-            "shards": shards,
-            "m": m,
-            "ef_construction": ef_construction,
-            "seed": seed,
-            "shard_hash": SHARD_HASH_SCHEME,
-        },
-    )
-    generations.commit(spark, path, [gen_path])
-
-
-def ann_topk_hnsw_indexed(
-    spark,  # SparkSession
-    path: str,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    ef: int = DEFAULT_EF_SEARCH,
-) -> DataFrame:
-    """Serve top-k from a materialized segment-parallel HNSW index:
-    every shard's graph row is searched in parallel (mapInPandas, one
-    row per shard — graph walks never leave the executor), then the
-    <= shards x k candidates re-rank exactly. Same (id, sim) contract
-    as hnsw_topk / cosine_topk."""
-    from mie_spark.operators.vector import _read_ann_meta
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    meta = _read_ann_meta(spark, path)
-    if meta.get("kind") != "hnsw":
-        # runtime input validation, not an internal invariant —
-        # assert would vanish under python -O and let a non-HNSW
-        # index layout proceed into the graph reader (ADVICE r9)
-        raise ValueError(f"not an HNSW index: {meta}")
-    gen_path = _current_generation(spark, path)
-    if gen_path is None:
-        raise ValueError(f"HNSW index at {path} has no committed generation")
-    graphs = spark.read.parquet(gen_path)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-    q = q / qn if qn > 0 else q
-    out_schema = StructType(
-        [
-            StructField(id_col, graphs.schema["ids"].dataType.elementType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def search_shard(it):  # noqa: ANN001
-        import pandas as pd
-
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                vecs = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in row["vecs"]]
-                )
-                layers = [
-                    [list(nbrs) for nbrs in level] for level in row["adj"]
-                ]
-                hits = search_hnsw(
-                    layers, int(row["entry"]), vecs, q, k=k, ef=ef
-                )
-                yield pd.DataFrame(
-                    {
-                        id_col: [row["ids"][n] for _, n in hits],
-                        "sim": [s for s, _ in hits],
-                    }
-                )
-
-    local = graphs.mapInPandas(search_shard, schema=out_schema)
-    return local.orderBy(F.col("sim").desc(), id_col).limit(k)
-
-
-def append_ann_hnsw_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Insert a batch of new vectors into a materialized
-    segment-parallel HNSW index: only the touched segments RECOMPUTE
-    (each grows via append_hnsw inside one cogrouped applyInPandas
-    pass), and the result commits as a NEW generation — touched
-    `shard=K` partitions written fresh, untouched ones hard-linked /
-    server-side-copied forward — then the generation commits
-    (ADVICE r9 medium: the previous in-place dynamic-partition
-    overwrite let a concurrent reader observe a mix of old and new
-    segments mid-commit, and a crash between partition delete and
-    stage-move lost the segment; now readers hold a consistent
-    generation and a crash leaves the live one untouched). Ids already
-    present in a segment are SKIPPED, so a replayed micro-batch is a
-    detectable no-op — no new generation is even committed — replay
-    exactness by idempotence, the bitmap/minhash-state doctrine. This
-    is the incremental path the reference's async embedding writer
-    takes into its cozo HNSW (pkg/memory/writer.go:71-73), minus its
-    search-lags-store window."""
-    import pandas as pd
-
-    from mie_spark.operators.vector import _read_ann_meta
-
-    spark = df.sparkSession
-    meta = _read_ann_meta(spark, path)
-    if meta.get("kind") != "hnsw":
-        # runtime input validation, not an internal invariant —
-        # assert would vanish under python -O and let a non-HNSW
-        # index layout proceed into the graph reader (ADVICE r9)
-        raise ValueError(f"not an HNSW index: {meta}")
-    recorded_hash = meta.get("shard_hash")
-    if recorded_hash != SHARD_HASH_SCHEME:
-        # Appending with a different routing hash than the index was
-        # built under would bypass the per-shard replay-idempotence
-        # check and duplicate ids across segments (ADVICE r11). A
-        # missing stamp means a pre-stamp index whose scheme is
-        # unknowable — refuse rather than guess; rebuild is the fix.
-        raise ValueError(
-            f"HNSW index at {path} was built with shard_hash="
-            f"{recorded_hash!r} but this engine routes with "
-            f"{SHARD_HASH_SCHEME!r}; appending would mis-route ids "
-            f"and break replay idempotence. Rebuild the index with "
-            f"write_ann_hnsw_index."
-        )
-    shards = int(meta["shards"])
-    m = int(meta["m"])
-    ef_c = int(meta["ef_construction"])
-    seed = int(meta.get("seed", 42))
-    cur_gen_path = _current_generation(spark, path)
-    if cur_gen_path is None:
-        raise ValueError(f"HNSW index at {path} has no committed generation")
-    graphs = spark.read.parquet(cur_gen_path)
-    out_schema = graphs.schema
-
-    new = df.select(
-        id_col,
-        vec_col,
-        shard_of(F.col(id_col), shards).cast("int").alias("shard"),
-    )
-
-    def grow(key, new_pdf, graph_pdf):  # noqa: ANN001
-        shard = int(key[0])
-        if new_pdf.empty:
-            return pd.DataFrame(columns=out_schema.fieldNames())
-        new_pdf = new_pdf.drop_duplicates(id_col).sort_values(id_col)
-        if graph_pdf.empty:
-            ids: list = []
-            vecs = np.zeros((0, len(new_pdf[vec_col].iloc[0])))
-            layers: list = []
-            entry = -1
-        else:
-            row = graph_pdf.iloc[0]
-            ids = list(row["ids"])
-            vecs = np.array([np.asarray(v, dtype=np.float64) for v in row["vecs"]])
-            layers = [[list(nbrs) for nbrs in level] for level in row["adj"]]
-            entry = int(row["entry"])
-        known = set(ids)
-        fresh = new_pdf[~new_pdf[id_col].isin(known)]
-        if fresh.empty:  # pure replay: nothing to change
-            return pd.DataFrame(columns=out_schema.fieldNames())
-        add = _unit(
-            np.array([np.asarray(v, dtype=np.float64) for v in fresh[vec_col]])
-        )
-        n_old = len(ids)
-        all_vecs = add if n_old == 0 else np.vstack([vecs, add])
-        layers, entry = append_hnsw(
-            layers, entry, all_vecs, n_old, m=m, ef_construction=ef_c,
-            seed=seed + shard,
-        )
-        ids = ids + list(fresh[id_col])
-        return pd.DataFrame(
-            {
-                "ids": [ids],
-                "vecs": [[list(map(float, v)) for v in all_vecs]],
-                "entry": [entry],
-                "adj": [layers],
-                "shard": [shard],
-            }
-        )[out_schema.fieldNames()]
-
-    updated = (
-        new.groupBy("shard")
-        .cogroup(graphs.groupBy("shard"))
-        .applyInPandas(grow, schema=out_schema)
-    )
-    gen_path = generations.allocate(spark, path)
-    # Stage the recomputed segments into the new generation. Reading
-    # cur_gen_path while writing gen_path — never the same files.
-    updated.repartition("shard").write.mode("overwrite").partitionBy(
-        "shard"
-    ).parquet(gen_path)
-    jvm = spark._jvm
-    jgen = jvm.org.apache.hadoop.fs.Path(gen_path)
-    fs = jgen.getFileSystem(spark._jsc.hadoopConfiguration())
-    touched = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(jgen)
-        if st.isDirectory() and st.getPath().getName().startswith("shard=")
-    }
-    if not touched:
-        # pure replay: every id already present — leave the live
-        # generation exactly as committed (idempotence is observable:
-        # no pointer flip, no new generation)
-        fs.delete(jgen, True)
-        return
-    _forward_untouched_shards(spark, cur_gen_path, gen_path, touched)
-    generations.commit(spark, path, [gen_path])

@@ -7,20 +7,20 @@ sampling, feature extraction) runs in Arrow-batched `mapInPandas` so a
 per task, without ever collecting to the driver.
 
 Codec status (honesty boundary, closed for images in round 7):
-- REAL with no codec library: `parse_wav`/`decode_audio_meta`
-  (RIFF/WAVE PCM16), `parse_ppm`/`resize_ppm` (binary PPM P6),
+- REAL with no codec library: RIFF/WAVE PCM16 (`audio_fingerprint`),
+  binary PPM P6 and BMP (`parse_ppm`, `parse_bmp`),
   compressed-image METADATA — `decode_image_meta(codec='header')`
   parses actual PNG/JPEG/GIF headers (`sniff_image_meta`) — full
-  PNG PIXEL decode/encode/resize (`parse_png`/`png_from_array`/
-  `resize_png`: zlib IDAT + all five scanline filters, stdlib+numpy),
+  PNG PIXEL decode/encode (`parse_png`/`png_from_array`: zlib IDAT +
+  all five scanline filters, stdlib+numpy),
   animated-GIF frame extraction (`parse_gif`, stdlib LZW, behind
   `decode_frames(codec='gif')`), and BASELINE JPEG pixel
   decode/encode (operators/jpeg.py: Huffman + DCT are pure
   arithmetic — `parse_jpeg` handles baseline SOF0/SOF1 AND
   progressive SOF2, any chroma subsampling, restart markers;
   `jpeg_from_array` encodes with Annex-K tables).
-  `resize_images(codec='auto')` dispatches PNG/PPM/GIF/JPEG through
-  these stdlib codecs.
+  `resize_images(codec='auto')` dispatches PNG/PPM/BMP/GIF/JPEG
+  through these stdlib codecs.
 - REAL behind an optional dependency: exotic JPEG modes (arithmetic
   coding, CMYK, 12-bit) and every other Pillow-readable format fall
   through to Pillow when it is importable (`codec='pil'` forces that
@@ -587,73 +587,9 @@ def chunk_audio(
 # The "no codec libraries in this container" limitation only applies to
 # COMPRESSED media (JPEG/PNG/MP3/H.264). Uncompressed container formats
 # parse with stdlib struct + numpy, so those decoders are REAL here:
-# WAV/PCM16 and binary PPM (P6). The parse functions are plain-Python
-# (unit-testable without Spark) and the operators wrap them in the same
-# Arrow-batched mapInPandas shape as the stubs above. Everything the
-# worker closures need is imported inside the closure — workers may not
-# have mie_spark importable (driver contract).
-
-
-def parse_wav(raw: bytes):
-    """Minimal RIFF/WAVE PCM16 decoder → (sample_rate, n_channels,
-    mono float32 samples in [-1, 1)). Chunk-walks the container (fmt
-    may not be the first chunk; odd-sized chunks pad)."""
-    import struct
-
-    import numpy as np
-
-    if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    fmt = data = None
-    pos = 12
-    while pos + 8 <= len(raw):
-        cid = raw[pos : pos + 4]
-        size = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        body = raw[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, n_channels, sample_rate = struct.unpack("<HHI", fmt[:8])
-    bit_depth = struct.unpack("<H", fmt[14:16])[0]
-    if audio_format != 1 or bit_depth != 16:
-        raise ValueError(f"only PCM16 supported (format={audio_format}, bits={bit_depth})")
-    pcm = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32768.0
-    if n_channels > 1:
-        pcm = pcm.reshape(-1, n_channels).mean(axis=1)
-    return sample_rate, n_channels, pcm
-
-
-def wav_from_array(samples, sample_rate: int = 16_000) -> bytes:  # noqa: ANN001
-    """RIFF/WAVE PCM16 mono encoder (the parse_wav inverse): floats in
-    [-1, 1] clip-quantize to int16 little-endian — the export path for
-    audio chunk pipelines, and the fixture generator for the decoder's
-    tests."""
-    import struct
-
-    import numpy as np
-
-    a = np.asarray(samples, dtype=np.float64)
-    if a.ndim != 1:
-        raise ValueError("expected a 1-D mono sample array")
-    if sample_rate < 1:
-        raise ValueError(f"sample_rate must be >= 1, got {sample_rate}")
-    pcm = np.clip(np.rint(a * 32768.0), -32768, 32767).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    chunks = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(pcm))
-        + pcm
-        + (b"\x00" if len(pcm) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+# binary PPM (P6) and BMP. The parse functions are plain-Python
+# (unit-testable without Spark); resize_images(codec='auto') and the
+# pHash path run them inside Arrow-batched mapInPandas.
 
 
 def parse_ppm(raw: bytes):
@@ -726,161 +662,6 @@ def parse_bmp(raw: bytes):
     if height_s > 0:  # bottom-up storage → flip to top-down
         img = img[::-1]
     return width, height, np.ascontiguousarray(img)
-
-
-def bmp_from_array(img) -> bytes:  # noqa: ANN001
-    """24-bit BI_RGB BMP encoder (the parse_bmp inverse): BGR bottom-up
-    rows padded to 4 bytes — the export path for tools that only take
-    BMP, and the fixture generator for the decoder's tests."""
-    import numpy as np
-
-    a = np.asarray(img, dtype=np.uint8)
-    if a.ndim != 3 or a.shape[2] != 3:
-        raise ValueError("expected HxWx3 uint8 array")
-    h, w = a.shape[:2]
-    stride = (w * 3 + 3) & ~3
-    raster = np.zeros((h, stride), dtype=np.uint8)
-    raster[:, : w * 3] = a[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    size = 54 + stride * h
-    header = (
-        b"BM"
-        + size.to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + (stride * h).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2  # 72 DPI
-        + (0).to_bytes(4, "little") * 2
-    )
-    return header + raster.tobytes()
-
-
-AUDIO_META_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("rms", StringType()),  # rounded decimal string, engine-stable
-    ]
-)
-
-
-def decode_audio_meta(assets: DataFrame) -> DataFrame:
-    """REAL audio decode (WAV/PCM16) → per-asset metadata + RMS level.
-    Same plan shape as the stubs: Arrow batches through mapInPandas,
-    partition-preserving, nothing to the driver."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def parse(raw: bytes):
-            if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            fmt = data = None
-            pos = 12
-            while pos + 8 <= len(raw):
-                cid = raw[pos : pos + 4]
-                size = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-                body = raw[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt = body
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if fmt is None or data is None:
-                raise ValueError("missing fmt/data chunk")
-            audio_format, n_channels, sample_rate = struct.unpack("<HHI", fmt[:8])
-            bit_depth = struct.unpack("<H", fmt[14:16])[0]
-            if audio_format != 1 or bit_depth != 16:
-                raise ValueError("only PCM16 supported")
-            pcm = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32768.0
-            if n_channels > 1:
-                pcm = pcm.reshape(-1, n_channels).mean(axis=1)
-            return sample_rate, n_channels, pcm
-
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                sr, ch, pcm = parse(bytes(payload))
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "sample_rate": sr,
-                        "n_channels": ch,
-                        "n_samples": len(pcm),
-                        "duration_ms": int(len(pcm) * 1000 / sr),
-                        "rms": f"{float(np.sqrt((pcm ** 2).mean())):.6f}",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_META_SCHEMA])
-
-    return assets.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
-
-
-def resize_ppm(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """REAL image resize (binary PPM in → PPM out) via nearest-neighbor
-    index maps — two numpy gathers per image, no interpolation libs."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def parse(raw: bytes):
-            if not raw.startswith(b"P6"):
-                raise ValueError("not a binary PPM (P6) payload")
-            tokens = []
-            i = 2
-            while len(tokens) < 3 and i < len(raw):
-                c = raw[i : i + 1]
-                if c == b"#":
-                    while i < len(raw) and raw[i : i + 1] != b"\n":
-                        i += 1
-                elif c.isspace():
-                    i += 1
-                else:
-                    j = i
-                    while j < len(raw) and not raw[j : j + 1].isspace():
-                        j += 1
-                    tokens.append(raw[i:j])
-                    i = j
-            i += 1
-            width, height, maxval = (int(t) for t in tokens)
-            if maxval != 255:
-                raise ValueError("only 8-bit PPM supported")
-            px = np.frombuffer(raw[i : i + width * height * 3], dtype=np.uint8)
-            if px.size != width * height * 3:
-                raise ValueError("truncated PPM raster")
-            return px.reshape(height, width, 3)
-
-        for pdf in it:
-            out_ids, out_payloads = [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = parse(bytes(payload))
-                h, w = img.shape[:2]
-                ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                resized = img[ys][:, xs]
-                header = f"P6\n{out_w} {out_h}\n255\n".encode()
-                out_ids.append(asset_id)
-                out_payloads.append(header + resized.tobytes())
-            yield pd.DataFrame(
-                {
-                    "asset_id": out_ids,
-                    "payload": out_payloads,
-                    "width": [out_w] * len(out_ids),
-                    "height": [out_h] * len(out_ids),
-                }
-            )
-
-    return assets.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
 PHASH_SCHEMA = StructType(
@@ -1088,7 +869,7 @@ def parse_png(raw: bytes):
     RGBA (6), both non-interlaced and Adam7-interlaced. 16-bit depths
     raise with the reason. Returns (width, height, H x W x channels uint8 array).
 
-    This is the same honesty move as parse_wav/parse_ppm: the
+    This is the same honesty move as parse_ppm: the
     compressed-codec boundary for PNG is just DEFLATE, which Python
     ships — so pixel decode is real here with no optional dependency,
     and only JPEG pixel decode still needs Pillow (resize_images
@@ -1251,32 +1032,6 @@ def png_from_array(img) -> bytes:  # noqa: ANN001
         + chunk(b"IDAT", zlib.compress(scan))
         + chunk(b"IEND", b"")
     )
-
-
-def resize_png(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """REAL compressed-image resize with no optional dependency: PNG in
-    (parse_png: inflate + unfilter) → nearest-neighbor gather → PNG out
-    (png_from_array). Same mapInPandas shape as resize_ppm; at 100 TB
-    this is the normalize-before-embed pass running directly on crawl
-    bytes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = {"asset_id": [], "payload": [], "width": [], "height": []}
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, img = parse_png(bytes(payload))
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                resized = img[ys][:, xs]
-                out["asset_id"].append(asset_id)
-                out["payload"].append(png_from_array(resized))
-                out["width"].append(out_w)
-                out["height"].append(out_h)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
 def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
@@ -1705,7 +1460,7 @@ def synthetic_wav_corpus(
 ) -> DataFrame:
     """Deterministic audio corpus for exercising the fingerprint
     pipeline without codec libraries: every document gets a real
-    RIFF/WAVE PCM16 payload parse_wav accepts, with near-dup structure
+    RIFF/WAVE PCM16 payload audio_fingerprint decodes, with near-dup structure
     by construction — documents in the same group (``id //
     group_size``) are the same signal up to one small edit, documents
     in different groups are independent.

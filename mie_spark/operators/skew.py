@@ -1,10 +1,10 @@
-"""Skew mitigation: salted joins and salted two-stage aggregation.
+"""Skew mitigation: salted two-stage aggregation.
 
 At 1000-executor scale a single hot key (one user with 10% of all
-events, one null-ish default id) turns a shuffle join into one straggler
+events, one null-ish default id) turns a shuffle into one straggler
 task that runs for hours. AQE's skew-join splitting handles sort-merge
-cases adaptively; explicit salting is the deterministic fallback that
-also works for aggregations and for engines/paths AQE doesn't cover.
+cases adaptively, but not aggregations; explicit salting is the
+deterministic fallback for them.
 
 Semantics are identical to the unsalted operation — tests assert
 row-for-row equality with the plain plan.
@@ -12,53 +12,8 @@ row-for-row equality with the plain plan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    n_salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed``'s key distribution is pathological.
-
-    The skewed side gets a per-ROW salt in [0, n_salt) from
-    monotonically_increasing_id — NOT a hash of the row's columns: the
-    canonical hot key ("one null-ish default id") is usually millions
-    of byte-identical rows, which a content hash maps to ONE salt,
-    silently restoring the straggler the salt exists to kill. Row-id
-    round-robin spreads duplicates too. Any salt assignment yields the
-    same join result (the other side is replicated to every salt), so
-    the value being partition-layout-dependent is harmless — a retried
-    task recomputes its whole output partition. The other side is
-    replicated n_salt times via explode of a literal range; the join
-    key becomes (key, salt), so a hot key's rows spread over n_salt
-    reducers instead of one.
-
-    Cost: |other| × n_salt replication — use for medium `other` sides;
-    truly small sides should broadcast instead (no salt needed), truly
-    huge ones should pre-bucket (sources/writers.py).
-
-    Only inner and left joins are supported: the replicated side makes
-    right/full outer joins WRONG (an unmatched right row appears once
-    per salt replica, n_salt null-padded duplicates) — refuse rather
-    than silently corrupt.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r}: "
-            "replicating the right side duplicates unmatched right rows "
-            "under right/full outer semantics"
-        )
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(n_salt)).cast("int")
-    left = skewed.withColumn("_salt", salt)
-    right = other.select(
-        "*", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])).alias("_salt")
-    )
-    return left.join(right, [on, "_salt"], how).drop("_salt")
 
 
 _PARTIAL = {
@@ -86,9 +41,11 @@ def salted_groupby_agg(
     applies the matching combiner). Spark's hash aggregate already does
     map-side partials, but every partial for a key still meets in ONE
     reducer; the salt stage caps any reducer's share of a hot key at
-    1/n_salt. The salt is row-id round-robin, not a content hash, so
-    byte-identical duplicate rows spread too (see salted_join); every
-    decomposable aggregate here is salt-assignment-invariant.
+    1/n_salt. The salt is row-id round-robin, not a content hash: the
+    canonical hot key ("one null-ish default id") is usually millions
+    of byte-identical rows, which a content hash would map to ONE salt.
+    Every decomposable aggregate here is salt-assignment-invariant, so
+    the layout-dependent salt is harmless.
     """
     for name, (agg, _) in aggs.items():
         if agg not in _PARTIAL:

@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mie_spark import generations
 from mie_spark.functions.vectors import cosine_sim, dot, l2_normalize
 from mie_spark.operators import ensure_parallelism
 
@@ -379,11 +378,8 @@ def ann_topk_lsh(
     bucket — multi-probe by default, which also visits every bucket at
     Hamming distance 1 from the query signature (a near neighbor that
     straddles one hyperplane lands there; probing n+1 of 2^n buckets
-    roughly doubles recall for ~(n+1)/2^n of the scan). At 100 TB the
-    bucket filter is a pushed-down IN on a precomputed signature column,
-    so the scan prunes to the probed buckets — that form exists as
-    write_ann_lsh_index + ann_topk_lsh_indexed below; here the
-    signature is computed on the fly for index-free corpora."""
+    roughly doubles recall for ~(n+1)/2^n of the scan). The signature
+    is computed on the fly, so the corpus needs no index."""
     planes = _planes(df, vec_col, n_planes)
     if not planes:  # empty input: no buckets, empty top-k, not a crash
         return cosine_topk(df, vec_col, query_vec, k, id_col=id_col)
@@ -562,13 +558,9 @@ def ann_topk_ivf(
     n_probe: int = 6,
 ) -> DataFrame:
     """IVF-flat approximate top-k: rank only the n_probe cells whose
-    centroids are closest to the query. At 100 TB the cell id is a
-    precomputed partition/cluster column, so probing is partition
-    pruning (reads n_probe/n_centroids of the data) — that form exists
-    as write_ann_ivf_index + ann_topk_ivf_indexed below; here the
-    assignment expression runs on the fly (and k-means retrains per
-    call). Recall is tested against the exact ranking in
-    tests/test_vector.py."""
+    centroids are closest to the query. The assignment expression runs
+    on the fly (and k-means retrains per call). Recall is tested
+    against the exact ranking in tests/test_vector.py."""
     centroids = train_ivf_centroids(
         df, vec_col, n_centroids=n_centroids, id_col=id_col
     )
@@ -585,178 +577,10 @@ def ann_topk_ivf(
     return cosine_topk(candidates, vec_col, query_vec, k, id_col=id_col)
 
 
-# --- materialized ANN index: the 100 TB path --------------------------------
-#
-# The on-the-fly ann_topk_lsh / ann_topk_ivf above compute the bucket
-# expression per query — fine when the corpus is re-scanned anyway, but
-# at 100 TB the whole point of an index is NOT scanning. These writers
-# materialize the bucket as a *partition column* (parquet
-# `partitionBy`), so a probe becomes Catalyst partition pruning: the
-# scan touches n_probe/n_buckets of the files and the plan shows it
-# (tests assert via DataFrame.inputFiles()). The plane matrix /
-# centroid list rides along in a JSON sidecar — the analog of an index
-# header — so query time needs no retraining and stays bit-identical
-# to the expression path.
-
-_ANN_META = "_ann_meta.json"
-
-
-def _write_ann_meta(spark, path: str, meta: dict) -> None:
-    """Write the index header through the Hadoop FileSystem API so the
-    sidecar lands wherever the parquet did — local disk in tests,
-    s3a://... or hdfs://... in production. A driver-local open() would
-    leave object-store indexes half-built (data without header)."""
-    import json
-
-    generations.write_sidecar(spark, path, _ANN_META, json.dumps(meta))
-
-
-def _read_ann_meta(spark, path: str) -> dict:
-    import json
-
-    text = generations.read_sidecar(spark, path, _ANN_META)
-    if text is None:
-        raise FileNotFoundError(f"no ANN index header at {path}/{_ANN_META}")
-    return json.loads(text)
-
-
-def _require_nonempty(df: DataFrame, id_col: str, op: str) -> None:
-    """Index writers need data to train planes/centroids/codebooks on;
-    an empty input used to surface as an opaque numpy AxisError /
-    IndexError from deep inside the trainer — name the cause instead."""
-    if df.select(id_col).first() is None:
-        raise ValueError(
-            f"{op}: input table is empty — an ANN index cannot be built "
-            "without vectors (planes/centroids/codebooks train on data)"
-        )
-
-
-def write_ann_lsh_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    seed: int = 42,
-) -> None:
-    """Materialize a hyperplane-LSH index: rows land in `sig=<bucket>`
-    partitions; the plane matrix is stored in the sidecar. One shuffle
-    (the partitioned write); rewriting the index is the only way bucket
-    assignments change, exactly like rebuilding the reference's HNSW."""
-    _require_nonempty(df, id_col, "write_ann_lsh_index")
-    planes = _planes(df, vec_col, n_planes, seed=seed)
-    sig = _hyperplane_signature(F.col(vec_col), planes)
-    (
-        df.select(id_col, vec_col, sig.alias("sig"))
-        .repartition("sig")
-        .write.mode("overwrite")
-        .partitionBy("sig")
-        .parquet(path)
-    )
-    _write_ann_meta(
-        df.sparkSession, path, {"kind": "lsh", "planes": planes, "n_planes": n_planes}
-    )
-
-
-def ann_topk_lsh_indexed(
-    spark,  # SparkSession
-    path: str,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multi_probe: bool = True,
-) -> DataFrame:
-    """Probe a materialized LSH index: the signature filter is a
-    partition-column IN, so the scan reads only the probed buckets'
-    files — the pruning the on-the-fly variant's docstring promises."""
-
-    meta = _read_ann_meta(spark, path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"not an LSH index: {meta}")
-    planes = meta["planes"]
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(float(a) * float(b) for a, b in zip(query_vec, p)) >= 0:
-            qsig |= 1 << i
-    probes = [qsig]
-    if multi_probe:
-        probes += [qsig ^ (1 << i) for i in range(meta["n_planes"])]
-    candidates = spark.read.parquet(path).filter(F.col("sig").isin(*probes))
-    return cosine_topk(candidates.drop("sig"), vec_col, query_vec, k, id_col=id_col)
-
-
-def write_ann_ivf_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    lloyd_iters: int = 2,
-) -> None:
-    """Materialize an IVF index: k-means trains ONCE at build time (vs
-    per-query in ann_topk_ivf), rows land in `cell=<i>` partitions, and
-    the centroid matrix goes to the sidecar."""
-    _require_nonempty(df, id_col, "write_ann_ivf_index")
-    centroids = train_ivf_centroids(
-        df, vec_col, n_centroids=n_centroids, lloyd_iters=lloyd_iters, id_col=id_col
-    )
-    cell = _nearest_centroid(F.col(vec_col), centroids)
-    (
-        df.select(id_col, vec_col, cell.alias("cell"))
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    _write_ann_meta(df.sparkSession, path, {"kind": "ivf", "centroids": centroids})
-
-
-def ann_topk_ivf_indexed(
-    spark,  # SparkSession
-    path: str,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 6,
-    metadata: DataFrame | None = None,
-    pre_filter: "F.Column | None" = None,
-) -> DataFrame:
-    """Probe a materialized IVF index: rank only the n_probe closest
-    cells; the cell filter is partition pruning, so IO scales with
-    n_probe/n_centroids of the corpus, not the corpus.
-
-    Filtered search (``metadata`` + ``pre_filter``): the index stores
-    only (id, vector, cell), so metadata predicates join the sidecar
-    table onto the PROBED candidates by id — after partition pruning,
-    before ranking. PRE-filter semantics: k means k results satisfying
-    the predicate; recall degrades only through cell probing, never
-    through the filter (the filtered exact ranking restricted to the
-    probed cells is reproduced identically — pinned in
-    tests/test_vector.py)."""
-
-    meta = _read_ann_meta(spark, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"not an IVF index: {meta}")
-    centroids = meta["centroids"]
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_driver_cos(query_vec, centroids[i]), i)
-    )[:n_probe]
-    candidates = spark.read.parquet(path).filter(F.col("cell").isin(*probe))
-    candidates = candidates.drop("cell")
-    if metadata is not None:
-        candidates = candidates.join(metadata, id_col)
-    if pre_filter is not None:
-        candidates = candidates.filter(pre_filter)
-    return cosine_topk(candidates, vec_col, query_vec, k, id_col=id_col)
-
-
 # --- product quantization: IVF-PQ, the compressed 100 TB path ---------------
 #
-# IVF-flat above prunes IO to n_probe/n_centroids of the corpus but
-# still stores (and reads) full vectors inside each probed cell. PQ
+# IVF-flat above prunes to n_probe/n_centroids of the corpus but
+# still reads full vectors inside each probed cell. PQ
 # compresses every vector to m one-byte codes — for 768-dim float32
 # that is 3072 bytes → m bytes (384× at m=8) — so the probed scan
 # reads codes, not vectors, and the candidate scoring is m table
@@ -911,8 +735,7 @@ def ann_topk_pq(
     """Flat-PQ approximate top-k with exact rerank: ADC-score the whole
     table from codes, shortlist k × rerank_factor ids, then exact-rank
     the shortlist with true cosine. On-the-fly form (codebooks train per
-    call) mirroring ann_topk_lsh/ivf; the materialized form below is
-    the actual scale path. Plan: scan → encode+score (two pandas UDFs)
+    call) mirroring ann_topk_lsh/ivf. Plan: scan → encode+score (two pandas UDFs)
     → TakeOrderedAndProject shortlist → broadcast semi-join → exact
     top-k. No shuffle of the corpus at any point."""
     if df.select(id_col).first() is None:
@@ -932,99 +755,6 @@ def ann_topk_pq(
         .select(id_col)
     )
     candidates = df.join(F.broadcast(shortlist), id_col)
-    return cosine_topk(candidates, vec_col, query_vec, k, id_col=id_col)
-
-
-def write_ann_ivfpq_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    m: int = 16,
-    k_codes: int = 32,
-    lloyd_iters: int = 2,
-    pq_sample_rows: int = 4096,
-) -> None:
-    """Materialize an IVF-PQ index: coarse k-means cell as the partition
-    column (probe = partition pruning, as write_ann_ivf_index) plus the
-    m-byte PQ code per row — the index stores NO vectors, so its
-    footprint is ~(id + m bytes)/row regardless of dim. Centroids and
-    codebooks ride in the sidecar."""
-    _require_nonempty(df, id_col, "write_ann_ivfpq_index")
-    centroids = train_ivf_centroids(
-        df, vec_col, n_centroids=n_centroids, lloyd_iters=lloyd_iters, id_col=id_col
-    )
-    codebooks = train_pq_codebooks(
-        df, vec_col, m=m, k_codes=k_codes, sample_rows=pq_sample_rows, id_col=id_col
-    )
-    cell = _nearest_centroid(F.col(vec_col), centroids)
-    codes = _pq_encode(F.col(vec_col), codebooks)
-    (
-        df.select(id_col, codes.alias("pq_code"), cell.alias("cell"))
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    _write_ann_meta(
-        df.sparkSession,
-        path,
-        {
-            "kind": "ivfpq",
-            "centroids": centroids,
-            "codebooks": codebooks,
-            "m": m,
-            "k_codes": k_codes,
-        },
-    )
-
-
-def ann_topk_ivfpq_indexed(
-    spark,  # SparkSession
-    path: str,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    n_probe: int = 6,
-    rerank_df: DataFrame | None = None,
-    vec_col: str = "embedding",
-    rerank_factor: int = 8,
-) -> DataFrame:
-    """Probe a materialized IVF-PQ index: partition-pruned scan of the
-    n_probe closest cells, ADC scoring over codes. With rerank_df (the
-    vector source table) the ADC shortlist is broadcast-semi-joined
-    back and exact-ranked — IO is then n_probe/n_centroids of the
-    *codes* plus k·rerank_factor full vectors, the IVF-PQ contract.
-    Without it, returns ADC-ranked ids with the approximate score."""
-
-    meta = _read_ann_meta(spark, path)
-    if meta.get("kind") != "ivfpq":
-        raise ValueError(f"not an IVF-PQ index: {meta}")
-    centroids = meta["centroids"]
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_driver_cos(query_vec, centroids[i]), i)
-    )[:n_probe]
-    scored = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(*probe))
-        .withColumn(
-            "_adc", _pq_adc_score(F.col("pq_code"), query_vec, meta["codebooks"])
-        )
-    )
-    if rerank_df is None:
-        return (
-            scored.orderBy(F.col("_adc").desc(), F.col(id_col))
-            .limit(k)
-            .select(id_col, F.col("_adc").alias("sim"))
-        )
-    shortlist = (
-        scored.orderBy(F.col("_adc").desc(), F.col(id_col))
-        .limit(k * rerank_factor)
-        .select(id_col)
-    )
-    candidates = rerank_df.join(F.broadcast(shortlist), id_col)
     return cosine_topk(candidates, vec_col, query_vec, k, id_col=id_col)
 
 
@@ -1148,38 +878,6 @@ def mmr_rerank(
         pooled.mapInPandas(_greedy, schema=out_schema)
         .withColumn("rel", F.round("rel", 6))
         .withColumn("mmr", F.round("mmr", 6))
-    )
-
-
-def append_ann_ivf_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incrementally extend a materialized IVF index: new vectors are
-    assigned to cells using the INDEX'S OWN stored centroids (sidecar)
-    and appended into the matching `cell=<i>` partitions — no retrain,
-    no rewrite of existing partitions, and probes over the grown index
-    keep their partition-pruning plan unchanged.
-
-    Keeping the original centroids is the point (cell assignment must
-    stay consistent with what probes prune on), and also the documented
-    liability: as the appended distribution drifts from the training
-    sample, cells unbalance and recall degrades — production schedules
-    a periodic write_ann_ivf_index rebuild, exactly like OPTIMIZE /
-    reindex cycles on any write-heavy index.
-    """
-    meta = _read_ann_meta(df.sparkSession, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not ivf")
-    cell = _nearest_centroid(F.col(vec_col), meta["centroids"])
-    (
-        df.select(id_col, vec_col, cell.alias("cell"))
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
     )
 
 

@@ -203,8 +203,8 @@ def v_hnsw_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pool itself.
 
     What this grades deterministically: the md5 shard assignment
-    (operators/hnsw.py shard_of — the SAME expression hnsw_topk,
-    write_ann_hnsw_index and the streaming append use), the per-shard
+    (operators/hnsw.py shard_of — the SAME expression hnsw_topk
+    uses), the per-shard
     pooling shape (k per shard by sim desc, id asc), and the exact
     global re-rank hnsw_topk applies to its shards x k candidates.
     The one stage this can't replay is the graph traversal itself —
@@ -304,8 +304,7 @@ def v_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the signature is 4 fused dot-product expressions over
     the scan (JVM, whole-stage codegen), the query signature is one
-    driver-side 64-float fold — map-only, zero shuffles, the same
-    pushable-signature form the materialized index writes out."""
+    driver-side 64-float fold — map-only, zero shuffles."""
     from mie_spark.operators.vector import _hyperplane_signature, _planes
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
@@ -441,8 +440,7 @@ def v_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting the assignment instead of filtering by it. Plan: training
     is one shuffle per Lloyd round over (batches × cells) partial rows;
     the graded projection is map-only — scan → Arrow-batched BLAS
-    argmax → project, zero shuffles, the same expression the
-    materialized write_ann_ivf_index writes as a partition column."""
+    argmax → project, zero shuffles."""
     from mie_spark.operators.vector import (
         _driver_cos,
         _nearest_centroid,
@@ -467,9 +465,8 @@ def v_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("v_ann_pq_topk")
 def v_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ compressed path: ADC over 16-byte codes (32× smaller than the
-    64-dim float vectors) shortlists candidates, exact cosine reranks.
-    The materialized IVF-PQ index variant (write_ann_ivfpq_index) is the
-    100 TB form; recall asserted in tests/test_vector.py."""
+    64-dim float vectors) shortlists candidates, exact cosine reranks;
+    recall asserted in tests/test_vector.py."""
     from mie_spark.operators.vector import ann_topk_pq
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
@@ -585,13 +582,11 @@ def v_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_lsh_buckets pattern completing the ANN family): the PQ path's
     COMPRESSED REPRESENTATION — every vector's 16 nearest-codebook-
     entry indexes under the deterministically trained codebooks — is
-    what ADC scores and the materialized IVF-PQ index stores, and it
-    grades exactly. With this, every ANN variant's approximation
+    what ADC scores, and it grades exactly. With this, every ANN variant's approximation
     structure is driver-hash-graded (LSH signatures, IVF cells, PQ
     codes) and only the recall-graded top-k cuts remain rows-only.
 
-    Spark side is the exact encoder ann_topk_pq / write_ann_ivfpq_index
-    use (_pq_codes_matrix — one BLAS matmul per subspace per Arrow
+    Spark side is the exact encoder ann_topk_pq uses (_pq_codes_matrix — one BLAS matmul per subspace per Arrow
     batch), long-form (vec_id, subspace, code). Plan: training touches
     one bounded sample collect (size-independent of the table); the
     graded projection is scan → Arrow encode → posexplode, zero
@@ -995,9 +990,7 @@ def v_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter fuses into the embedding scan (pushed to parquet when
     label is a scan column) and the exact top-k heap runs on the
     pruned stream — same no-shuffle TakeOrderedAndProject plan as
-    v2_cosine_topk. On a materialized ANN index the same pre-filter
-    rides the pruned partition scan (ann_topk_*_indexed), degrading
-    recall only through cell probing, never through the filter."""
+    v2_cosine_topk."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") != 0) & F.col("label").isin(1, 3, 7)
     )
@@ -1432,7 +1425,7 @@ def v_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the v_batch_knn shape); the two top-k windows partition by qid;
     the corpus rollup is one global window over the <= |panel| rows
     (registered bounded exception). At 100 TB the exact scoring pass
-    swaps for the ANN index probe (ann_topk_*_indexed) with the same
+    swaps for an ANN probe (hnsw_topk / ann_topk_*) with the same
     overlap arithmetic — the gate's cost is then |panel| index
     probes, not a corpus scan."""
     from mie_spark.functions.numeric import int_div

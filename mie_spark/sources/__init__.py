@@ -2,7 +2,6 @@ from mie_spark.sources.catalog import (
     TABLES,
     load_table,
     normalize_event_ts,
-    parquet_ts_is_nanos,
     read_parquet,
     register_views,
 )
@@ -11,7 +10,6 @@ __all__ = [
     "TABLES",
     "load_table",
     "normalize_event_ts",
-    "parquet_ts_is_nanos",
     "read_parquet",
     "register_views",
 ]

@@ -108,14 +108,10 @@ def read_parquet(spark: SparkSession, path: str, nanos_ts: bool = False) -> Data
     return reader.parquet(path)
 
 
-def parquet_ts_is_nanos(path: str) -> bool:
-    """Footer sniff via pyarrow: Spark refuses TIMESTAMP(NANOS) columns
-    outright unless legacy.parquet.nanosAsLong is set, so the conf
-    decision needs the physical type BEFORE the first spark.read."""
-    return _ts_is_nanos(_footer_schema(path))
-
-
 def _ts_is_nanos(footer: pa.Schema | None) -> bool:
+    """Spark refuses TIMESTAMP(NANOS) columns outright unless
+    legacy.parquet.nanosAsLong is set, so the conf decision needs the
+    footer's physical type BEFORE the first spark.read."""
     if footer is None:
         return True  # conservative: Spark may still meet nanos
     ts = footer.field("ts").type

@@ -18,12 +18,12 @@ Reads take one of two paths over the same snapshot files:
 
 - ``table()`` is a lazy ``spark.read.parquet`` (scans distribute,
   filters push down): the path of ``raw_query``, conflict detection,
-  export and every registry query;
+  hybrid search's BM25 side and the exactly-once streaming rollup;
 - :meth:`MieStore.table_arrow` reads the current snapshot's part files
   on the driver with pyarrow into one Arrow table — no Spark job. The
   agent tools' reads (search, traversal, listing, point lookups) and
   the ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) use
-  it. Both paths apply the same schema-evolution contract.
+  it, and so do the JSON and SQL-script exports. Both paths apply the same schema-evolution contract.
 
 Writes take one of two merge paths by input kind, into the same
 snapshot layout:
@@ -32,7 +32,8 @@ snapshot layout:
   write) already live on the driver, so the driver merges them with
   pyarrow: read the touched buckets' part files, drop the batch's keys,
   append the batch, write one part file per bucket — no Spark job;
-- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the streaming sink)
+- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the sink of the
+  exactly-once streaming rollup)
   merge as one Spark plan (anti-join on keys ∪ new rows) whose write
   streams straight to snapshot N+1, so they scale with the cluster,
   not the driver.
@@ -622,23 +623,17 @@ class MieStore:
             self._commit_snapshot(table, version)
         os.remove(os.path.join(self.path, TXN_FILE))
 
-    def atomic_upsert_dfs(
-        self, updates: dict[str, DataFrame], checkpoint: bool = True
-    ) -> dict[str, int]:
+    def atomic_upsert_dfs(self, updates: dict[str, DataFrame]) -> dict[str, int]:
         """DataFrame form of :meth:`atomic_upsert_rows` — the streaming
         foreachBatch sink shape: a micro-batch that lands rows in N
-        tables (e.g. nodes + their embeddings) commits them with ONE
-        manifest rename, so a reader never sees a node its embedding
-        hasn't reached (or a crash mid-batch expose half a batch).
-        Each input is localCheckpoint'ed once (after key-dedup): the
-        merge write and the returned count both consume it, and an
-        expensive lineage (a mapInPandas embedding stage) must not
-        execute twice. Callers whose inputs already branch from a
-        checkpoint (the embed sink checkpoints once and derives both
-        tables' frames from it) pass ``checkpoint=False`` to skip a
-        redundant materialization per table per micro-batch. Returned
-        counts are unique-KEY counts after intra-batch dedup, the same
-        contract as :meth:`atomic_upsert_rows`."""
+        tables (the exactly-once rollup's state and its commit marker)
+        commits them with ONE manifest rename, so a reader never sees
+        one without the other (or a crash mid-batch expose half a
+        batch). Each input is localCheckpoint'ed once (after key-dedup):
+        the merge write and the returned count both consume it, so an
+        expensive lineage never executes twice. Returned counts are
+        unique-KEY counts after intra-batch dedup, the same contract as
+        :meth:`atomic_upsert_rows`."""
         updates = dict(updates)
         if not updates:
             return {}
@@ -646,9 +641,7 @@ class MieStore:
             frames: dict[str, DataFrame] = {}
             counts: dict[str, int] = {}
             for table, df in updates.items():
-                deduped = df.dropDuplicates(key_columns(table))
-                if checkpoint:
-                    deduped = deduped.localCheckpoint()
+                deduped = df.dropDuplicates(key_columns(table)).localCheckpoint()
                 frames[table] = deduped.select(*[f.name for f in table_schema(table)])
                 # unique-key count, matching atomic_upsert_rows
                 counts[table] = deduped.count()

@@ -49,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mie_spark import generations, ids
+from mie_spark import generations
 from mie_spark.session import conf_overrides
 from mie_spark.sources import normalize_event_ts, read_parquet
 
@@ -551,7 +551,7 @@ def stream_heavy_hitters_summary(
 ) -> None:
     """Maintain a mergeable Misra-Gries heavy-hitter summary across
     micro-batches (operators/sketch.py is the batch form; this is its
-    incremental twin, the sketch analog of stream_append_ivf_index).
+    incremental twin).
 
     Per micro-batch: per-partition MG summaries of the batch (bounded
     k rows each, vectorized), merged with the stored summary by key,
@@ -616,158 +616,6 @@ def load_heavy_hitter_candidates(
         return []
     with open(state_path) as fh:
         return [int(key) for key in json.load(fh)]
-
-
-def stream_append_ivf_index(
-    stream_df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    timeout_s: int = _DRAIN_TIMEOUT_S,
-) -> None:
-    """Incremental ANN index maintenance: each micro-batch of new
-    vectors is cell-assigned with the index's stored centroids and
-    appended into the matching partitions (operators/vector.py
-    append_ann_ivf_index) — probes keep their partition-pruning plan
-    while the index grows with the stream.
-
-    Exactly-once caveat, stated rather than hidden: a bare parquet
-    append is NOT idempotent under micro-batch retry. A production
-    deployment keys writes by batchId (overwrite a
-    ``batch=<id>`` subdirectory per micro-batch, which this layout
-    permits) or routes through the storage layer's content-hash MERGE
-    (storage.py) when duplicate vectors must collapse. The bounded
-    availableNow path used in tests drains each batch exactly once.
-    """
-    from mie_spark.operators.vector import append_ann_ivf_index
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_ann_ivf_index(batch_df, path, vec_col=vec_col, id_col=id_col)
-
-    foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
-
-
-def stream_append_hnsw_index(
-    stream_df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    timeout_s: int = _DRAIN_TIMEOUT_S,
-) -> None:
-    """Incremental HNSW maintenance: each micro-batch of new vectors is
-    shard-assigned and INSERTED into the matching segments' graphs
-    (operators/hnsw.append_ann_hnsw_index — cogrouped applyInPandas;
-    only touched segments recompute, and each batch commits as a new
-    index GENERATION through the shared generation commit, so
-    concurrent readers never see a torn index). Unlike the IVF
-    appender above, this one IS replay-idempotent: ids already present
-    in a segment are skipped and the replayed batch commits NOTHING
-    (no pointer flip). The streaming twin of the reference's async
-    embedding-writer inserts into its cozo HNSW
-    (pkg/memory/writer.go:71-73), without its search-lags-store
-    window."""
-    from mie_spark.operators.hnsw import append_ann_hnsw_index
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_ann_hnsw_index(batch_df, path, vec_col=vec_col, id_col=id_col)
-
-    foreach_batch_upsert(stream_df, _apply, timeout_s=timeout_s)
-
-
-def embed_and_upsert_stream(
-    stream_df: DataFrame,
-    store: Any,
-    embed_dim: int = 4,
-    text_col: str = "props",
-    timeout_s: int = _DRAIN_TIMEOUT_S,
-) -> None:
-    """Streaming embedding pipeline: each micro-batch derives content-
-    hash fact IDs, computes embeddings (deterministic mock provider —
-    swap for an HTTP provider in production) inside an Arrow-batched
-    mapInPandas, and MERGE-upserts BOTH the node rows and the embedding
-    rows through the store's writer lock.
-
-    This is the scale form of the reference's per-store embedding
-    goroutine (V6, writer.go:71-73,390-406): instead of one async HTTP
-    call per row, embeddings amortize over micro-batches, and
-    idempotent upserts + checkpointed offsets give exactly-once — with
-    the SAME eventual-consistency contract (search sees a node only
-    after its batch commits). Since r8 both tables land through ONE
-    multi-table transaction (store.atomic_upsert_dfs): the node row
-    and its embedding become visible together, strictly stronger than
-    the reference's async goroutine (where search can see a fact whose
-    embedding hasn't landed) — and a crash mid-batch exposes nothing.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("content", StringType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-
-    from mie_spark.embedding import make_worker_embed
-
-    # the factory is called HERE (driver side); the returned closure is
-    # captured by embed_batch and shipped by value — workers never need
-    # mie_spark importable, and there is exactly one mock definition
-    embed = make_worker_embed(embed_dim)
-
-    def embed_batch(it: "Any") -> "Any":
-        for pdf in it:
-            texts = pdf["text"].astype(str)
-            yield pd.DataFrame(
-                {"content": texts, "embedding": [embed(t) for t in texts]}
-            )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the micro-batch never visits the driver: embeddings compute in
-        # the workers (checkpointed once — both upserts branch from the
-        # same materialization) and flow straight into the store's
-        # Spark-native MERGE writes
-        embedded = (
-            batch_df.select(F.col(text_col).cast("string").alias("text"))
-            .mapInPandas(embed_batch, schema=out_schema)
-            .withColumn("id", ids.fact_id_expr(F.col("content"), F.lit("general")))
-            .localCheckpoint()
-        )
-        facts = embedded.select(
-            "id",
-            "content",
-            F.lit("general").alias("category"),
-            F.lit(0.8).cast("double").alias("confidence"),
-            F.lit("stream").alias("source_agent"),
-            F.lit("").alias("source_conversation"),
-            F.lit(True).alias("valid"),
-            F.lit(0).cast("long").alias("created_at"),
-            F.lit(0).cast("long").alias("updated_at"),
-        )
-        # checkpoint=False: both frames branch from `embedded`, which
-        # is already localCheckpoint'ed above — re-materializing each
-        # would cost two extra block-manager writes per micro-batch
-        store.atomic_upsert_dfs(
-            {
-                "mie_fact": facts,
-                "mie_fact_embedding": embedded.select(
-                    F.col("id").alias("fact_id"), "embedding"
-                ),
-            },
-            checkpoint=False,
-        )
-
-    foreach_batch_upsert(stream_df, apply_batch, timeout_s=timeout_s)
 
 
 def attribution_join(
@@ -862,7 +710,6 @@ def enriched_segment_spend(
 __all__ = [
     "SESSION_GAP_SECONDS",
     "attribution_join",
-    "embed_and_upsert_stream",
     "enriched_segment_spend",
     "exact_cents",
     "foreach_batch_upsert",
@@ -871,8 +718,6 @@ __all__ = [
     "run_to_checkpoint_sink",
     "sessionized_stream",
     "stateful_user_totals",
-    "stream_append_hnsw_index",
-    "stream_append_ivf_index",
     "stream_heavy_hitters_summary",
     "stream_minhash_signatures",
     "stream_benchmark_shingles",

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from mie_spark.operators.bloom import (
     bloom_build,
-    bloom_might_contain,
     bloom_prefilter,
     bloom_semi_join,
 )
@@ -54,9 +53,9 @@ def test_bloom_no_false_negatives(spark):
     bitmap = bloom_build(o, "o_orderkey")
     n_keys = o.count()
     assert bloom_prefilter(o, "o_orderkey", bitmap).count() == n_keys
-    # the inline-literal Column form must agree (small input, so the
-    # per-row CreateArray cost documented on bloom_might_contain is ok)
-    assert o.filter(bloom_might_contain("o_orderkey", bitmap)).count() == n_keys
+    # the semi-join's membership path keeps every key too: a false
+    # negative would drop the row before the exact join could keep it
+    assert bloom_semi_join(o, o, "o_orderkey", "o_orderkey").count() == n_keys
 
 
 def test_bloom_false_positive_rate_bounded(spark):

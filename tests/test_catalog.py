@@ -30,7 +30,6 @@ from mie_spark.sources.catalog import (
     TABLES,
     load_table,
     normalize_event_ts,
-    parquet_ts_is_nanos,
     read_parquet,
 )
 from mie_spark.streaming import (
@@ -73,17 +72,16 @@ _EXPECTED = [t.strftime("%Y-%m-%d %H:%M:%S.%f") for t in _TIMES]
 
 
 @pytest.mark.parametrize(
-    "ts_type,is_nanos",
+    "ts_type",
     [
-        (pa.timestamp("ns"), True),  # TIMESTAMP(NANOS): nanosAsLong path
-        (pa.timestamp("us"), False),  # MICROS / NTZ: cast path
-        (pa.timestamp("us", tz="UTC"), False),  # UTC micros: passthrough
+        pa.timestamp("ns"),  # TIMESTAMP(NANOS): nanosAsLong path
+        pa.timestamp("us"),  # MICROS / NTZ: cast path
+        pa.timestamp("us", tz="UTC"),  # UTC micros: passthrough
     ],
     ids=["nanos", "micros-ntz", "micros-utc"],
 )
-def test_ts_encodings_normalize_identically(spark, tmp_path, ts_type, is_nanos):
+def test_ts_encodings_normalize_identically(spark, tmp_path, ts_type):
     sf_dir = _write_events(tmp_path, ts_type)
-    assert parquet_ts_is_nanos(f"{sf_dir}/events.parquet") is is_nanos
     df = load_table(spark, sf_dir, "events")
     assert str(df.schema["ts"].dataType) == "TimestampType()"
     # nanos falls back to Spark's inference (nanosAsLong); the others map

@@ -167,8 +167,8 @@ def test_api_key_flips_mock_default_but_not_explicit_choice(
     tmp_path, monkeypatch
 ):
     """NOMIC_API_KEY against an init-written (mock-default) config must
-    select nomic — matching provider_from_env — but never override an
-    explicit MIE_EMBEDDING_PROVIDER."""
+    select nomic, but never override an explicit
+    MIE_EMBEDDING_PROVIDER."""
     p = config_path(str(tmp_path))
     save_config(default_config(), p)  # provider: mock
     monkeypatch.setenv("NOMIC_API_KEY", "nk")

@@ -284,41 +284,6 @@ def test_tokenizer_whitespace_class_matches_re2(spark):
     assert srow["fp"] == drow[1]
 
 
-def test_minhash_signatures_public_api_matches_kernel(spark):
-    """minhash_signatures (the offline signature-materialization API:
-    write signatures once, band/join many times) must stay in lockstep
-    with the text→shingle→signature path the LSH pair operator uses —
-    same tokenizer, same shingling, same hash family and seed."""
-    from mie_spark.operators.dedup import (
-        _doc_shingles,
-        minhash_signatures,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy cat"),
-        (3, "completely different text with other words entirely"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    via_api = {
-        r["doc"]: list(r["signature"])
-        for r in minhash_signatures(df, "doc_id", num_hashes=16).collect()
-    }
-    via_kernel = {
-        r["doc"]: list(r["signature"])
-        for r in _signatures_from_shingles(
-            _doc_shingles(df, "doc_id", "text", 3), num_hashes=16, seed=42
-        ).collect()
-    }
-    assert via_api == via_kernel
-    assert set(via_api) == {1, 2, 3}
-    # near-dup docs 1/2 agree on most hash slots; doc 3 on almost none
-    agree_12 = sum(a == b for a, b in zip(via_api[1], via_api[2]))
-    agree_13 = sum(a == b for a, b in zip(via_api[1], via_api[3]))
-    assert agree_12 > agree_13
-    assert all(0 <= v < _MERSENNE31 for v in via_api[1])
-
-
 def test_bpe_trainer_matches_hand_computed_merges(spark):
     """Classic BPE on a tiny vocab with known pair counts: the trainer
     must pick merges in (count desc, pair lex asc) order and re-count

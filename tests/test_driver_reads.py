@@ -11,6 +11,7 @@ must match bit for bit and orders exactly.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -606,3 +607,96 @@ def test_hybrid_semantic_ranks_follow_semantic_search(spark):
     hits = client.hybrid_search("kafka lag", limit=10, k_each=3)
     ranks = {h["id"]: h["rank_sem"] for h in hits if h["rank_sem"] is not None}
     assert ranks == {nid: i for i, nid in enumerate(sem, 1)}
+
+
+# -- exports read on the driver -----------------------------------------------
+
+
+def test_exports_equal_the_spark_collect_form_and_run_no_spark_job(
+    spark, spark_jobs, tmp_path, monkeypatch
+):
+    """The JSON, graph and SQL-script exports, and the CLI's
+    ``export --include-embeddings``, read every table with
+    ``table_arrow``: on a store with embeddings, an invalidated fact and
+    an edge with a NULL role, every exported row serializes byte-equal
+    to the old ``table().collect()`` form, and no export runs a Spark
+    job. Rows are compared in key order: neither read defines one
+    (Spark's follows part-file sizes)."""
+    from mie_spark.api.client import _sql_literal
+    from mie_spark.cli import main as cli_main
+    from mie_spark.config import default_config, save_config
+
+    path = str(tmp_path / "store")
+    client = MieClient(spark, path=path, embedding_dim=4)
+    facts = [client.store_fact(f"café fact {i}", "technical") for i in range(12)]
+    client.invalidate_fact(facts[1], facts[0], "superseded")
+    ent = client.store_entity("Straße", "place", "a street")
+    dec = client.store_decision("Use café", "close by")
+    client.store_topic("food", "")
+    client.add_relationship("mie_fact_entity", facts[2], ent)
+    client.store.atomic_upsert_rows(
+        {"mie_decision_entity": [{"decision_id": dec, "entity_id": ent, "role": None}]}
+    )
+
+    def spark_rows(table: str) -> list[dict]:
+        return [r.asDict() for r in client.store.table(table).collect()]
+
+    def by_key(data: dict[str, list[dict]]) -> str:
+        return json.dumps(
+            {
+                t: sorted(rows, key=lambda r: [r[k] for k in S.key_columns(t)])
+                for t, rows in data.items()
+            },
+            default=str,
+            indent=2,
+        )
+
+    def sql_lines(table: str, rows: list[dict]) -> list[str]:
+        return [
+            f"INSERT INTO {table} ({', '.join(d)}) VALUES "
+            f"({', '.join(_sql_literal(v) for v in d.values())});"
+            for d in rows
+        ]
+
+    tables = list(S.NODE_TABLES) + list(S.EDGE_TABLES)
+    want = {t: spark_rows(t) for t in tables}
+    want_emb = {t: spark_rows(t) for t in S.EMBEDDING_TABLES}
+    assert want["mie_decision_entity"][0]["role"] is None
+    assert [f["valid"] for f in want["mie_fact"]].count(False) == 1
+    assert len(want_emb["mie_fact_embedding"]) == 12
+    assert by_key(client.export_json()) == by_key(want)
+    graph = client.export_graph(include_embeddings=True)
+    assert by_key(graph["embeddings"]) == by_key(want_emb)
+    assert by_key(graph["relationships"]) == by_key(
+        {t: want[t] for t in graph["relationships"]}
+    )
+    script = client.export_sql_script().split("\n")
+    assert sorted(script) == sorted(
+        line for t in tables for line in sql_lines(t, want[t])
+    )
+
+    for k in ("MIE_CONFIG_PATH", "MIE_STORAGE_ENGINE", "MIE_STORAGE_PATH",
+              "MIE_EMBEDDING_PROVIDER", "NOMIC_API_KEY", "OPENAI_API_KEY"):
+        monkeypatch.delenv(k, raising=False)
+    cfg = default_config()
+    cfg.storage.engine = "parquet"
+    cfg.storage.path = path
+    cfg.embedding.dimensions = 4
+    cfg_file = str(tmp_path / "config.yaml")
+    save_config(cfg, cfg_file)
+    out = tmp_path / "export.json"
+
+    def cli_export() -> None:
+        argv = ["--config", cfg_file, "export", "--include-embeddings", "-o", str(out)]
+        assert cli_main(argv) == 0
+
+    jobs = {
+        "json": spark_jobs(client.export_json),
+        "graph": spark_jobs(lambda: client.export_graph(include_embeddings=True)),
+        "sql": spark_jobs(client.export_sql_script),
+        "cli": spark_jobs(cli_export),
+    }
+    assert jobs == dict.fromkeys(jobs, 0)
+    assert by_key(json.loads(out.read_text())) == by_key(
+        json.loads(json.dumps({**want, **want_emb}, default=str))
+    )

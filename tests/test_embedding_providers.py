@@ -1,8 +1,9 @@
 """HTTP embedding providers, exercised against a mocked transport.
 
-Reference analog: pkg/memory/embedding_test.go — provider selection,
-request shaping (nomic task_type vs ollama prompt prefixes), error
-surfaces, and L2 normalization of whatever the API returns.
+Reference analog: pkg/memory/embedding_test.go — request shaping
+(nomic task_type vs ollama prompt prefixes), error surfaces, and L2
+normalization of whatever the API returns. Provider selection is
+tested in tests/test_config.py.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from mie_spark.embedding import (
     MockEmbeddingProvider,
     NomicEmbeddingProvider,
     OllamaEmbeddingProvider,
-    provider_from_env,
 )
 
 
@@ -106,30 +106,6 @@ def test_ollama_prefixes_documents_and_queries(monkeypatch):
     p.embed_query("query text")
     assert fake.calls[0][1]["prompt"] == "search_document: doc text"
     assert fake.calls[1][1]["prompt"] == "search_query: query text"
-
-
-def test_provider_from_env_selection(monkeypatch):
-    monkeypatch.delenv("MIE_EMBEDDING_PROVIDER", raising=False)
-    monkeypatch.delenv("NOMIC_API_KEY", raising=False)
-    assert isinstance(provider_from_env(), MockEmbeddingProvider)
-
-    monkeypatch.setenv("MIE_EMBEDDING_PROVIDER", "nomic")
-    monkeypatch.setenv("NOMIC_API_KEY", "k")
-    monkeypatch.setenv("NOMIC_EMBED_MODEL", "nomic-embed-text-v2")
-    monkeypatch.setenv("NOMIC_BASE_URL", "http://localhost:9999/v1")
-    p = provider_from_env()
-    assert isinstance(p, NomicEmbeddingProvider)
-    assert p.model == "nomic-embed-text-v2"
-    assert p.base_url == "http://localhost:9999/v1"
-
-    # a set NOMIC_API_KEY implies nomic when no provider chosen
-    # (cmd/mie/config.go:238-244)
-    monkeypatch.delenv("MIE_EMBEDDING_PROVIDER", raising=False)
-    monkeypatch.delenv("NOMIC_EMBED_MODEL", raising=False)
-    monkeypatch.delenv("NOMIC_BASE_URL", raising=False)
-    p = provider_from_env()
-    assert isinstance(p, NomicEmbeddingProvider)
-    assert p.model == "nomic-embed-text-v1.5"
 
 
 def test_payloads_are_json_serializable(monkeypatch):

@@ -36,22 +36,6 @@ def test_prefixes_dispatch():
     assert ids.node_type_of(ids.topic_id("n")) == "mie_topic"
 
 
-def test_id_expr_matches_python(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [("PostgreSQL is fast", "technical"), ("unicode 日本語 ✓", "general")],
-        ["content", "category"],
-    )
-    rows = df.select(
-        ids.fact_id_expr(F.col("content"), F.col("category")).alias("id"),
-        "content",
-        "category",
-    ).collect()
-    for r in rows:
-        assert r["id"] == ids.fact_id(r["content"], r["category"])
-
-
 def test_mock_embedding_deterministic():
     from mie_spark.embedding import MockEmbeddingProvider
 
@@ -67,27 +51,3 @@ def test_mock_embedding_deterministic():
     # uint64 wraparound stays in range for long inputs
     assert MockEmbeddingProvider._hash("x" * 10_000) < (1 << 64)
 
-
-def test_fact_id_expr_matches_python_path_on_nulls(spark):
-    """Bulk-ingest ids must equal driver-path ids for the same logical
-    fact: NULL/unknown categories coerce to 'general' BEFORE hashing,
-    and null fields hash explicitly (concat_ws would silently drop
-    them, colliding ('a', NULL) with ('a',))."""
-    from pyspark.sql import functions as F
-
-    from mie_spark import ids
-    from mie_spark.ids import fact_id_expr
-
-    df = spark.createDataFrame(
-        [("x", None), ("x", "bogus"), ("x", "preference")],
-        ["content", "category"],
-    )
-    got = [
-        r[0]
-        for r in df.select(
-            fact_id_expr(F.col("content"), F.col("category"))
-        ).collect()
-    ]
-    assert got[0] == ids.fact_id("x", "general")
-    assert got[1] == ids.fact_id("x", "general")
-    assert got[2] == ids.fact_id("x", "preference")

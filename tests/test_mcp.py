@@ -217,3 +217,30 @@ def test_analyze_and_conflicts_over_mcp(server):
     assert conf["recommendations"], "near-identical facts must be flagged"
     rec = conf["recommendations"][0]
     assert {"keep", "supersede", "similarity"} <= set(rec)
+
+
+def test_module_entry_point_uses_the_session_factory(spark, tmp_path, monkeypatch):
+    """``python -m mie_spark.api.mcp`` builds its session through
+    ``get_spark``, like ``cli --mcp``, so both entry points give
+    raw_query the same SQL semantics; an EOF on stdin ends the loop."""
+    import sys
+
+    from mie_spark import session
+    from mie_spark.api import mcp
+
+    calls = []
+
+    def factory(app_name="mie_spark", master=None):
+        calls.append(app_name)
+        return spark
+
+    monkeypatch.setattr(session, "get_spark", factory)
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("MIE_CONFIG_PATH", raising=False)
+    monkeypatch.setattr(sys, "argv", ["mcp", str(tmp_path / "store")])
+    monkeypatch.setattr(sys, "stdin", io.StringIO(""))
+    out = io.StringIO()
+    monkeypatch.setattr(sys, "stdout", out)
+    mcp.main()
+    assert calls == ["mie_mcp"]
+    assert out.getvalue() == ""

@@ -113,22 +113,6 @@ def test_chunk_audio_boundaries_and_determinism(spark):
     assert {(r["asset_id"], r["chunk_idx"]): r["rms"] for r in rows} == again
 
 
-def _wav_bytes(sample_rate=8000, freq=440.0, n=1600, channels=1):
-    import math
-    import struct
-
-    samples = []
-    for i in range(n):
-        v = int(0.5 * 32767 * math.sin(2 * math.pi * freq * i / sample_rate))
-        samples.extend([v] * channels)
-    data = b"".join(struct.pack("<h", v) for v in samples)
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate,
-                      sample_rate * channels * 2, channels * 2, 16)
-    body = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
 def _ppm_bytes(w=8, h=6):
     import numpy as np
 
@@ -136,17 +120,6 @@ def _ppm_bytes(w=8, h=6):
     img[..., 0] = np.arange(w, dtype=np.uint8) * 30          # red gradient →
     img[..., 1] = np.arange(h, dtype=np.uint8)[:, None] * 40  # green gradient ↓
     return f"P6\n# comment\n{w} {h}\n255\n".encode() + img.tobytes(), img
-
-
-def test_parse_wav_real_codec():
-    from mie_spark.operators.multimodal import parse_wav
-
-    sr, ch, pcm = parse_wav(_wav_bytes())
-    assert (sr, ch, len(pcm)) == (8000, 1, 1600)
-    assert abs(float(pcm.max()) - 0.5) < 0.01  # sine peak ≈ amplitude
-    # stereo folds to mono
-    sr2, ch2, pcm2 = parse_wav(_wav_bytes(channels=2))
-    assert ch2 == 2 and len(pcm2) == 1600
 
 
 def test_parse_ppm_real_codec():
@@ -158,29 +131,14 @@ def test_parse_ppm_real_codec():
     assert (px == img).all()
 
 
-def test_decode_audio_meta_spark(spark):
-    from mie_spark.operators.multimodal import decode_audio_meta, parse_wav
-
-    payloads = [(0, _wav_bytes(sample_rate=8000)), (1, _wav_bytes(sample_rate=16000, n=3200))]
-    df = spark.createDataFrame(payloads, ["asset_id", "payload"])
-    out = {r["asset_id"]: r for r in decode_audio_meta(df).collect()}
-    assert out[0]["sample_rate"] == 8000 and out[0]["duration_ms"] == 200
-    assert out[1]["sample_rate"] == 16000 and out[1]["n_samples"] == 3200
-    # the worker-inlined parser must match the module-level one
-    import numpy as np
-
-    _, _, pcm = parse_wav(_wav_bytes())
-    assert out[0]["rms"] == f"{float(np.sqrt((pcm ** 2).mean())):.6f}"
-
-
 def test_resize_ppm_spark(spark):
-    from mie_spark.operators.multimodal import parse_ppm, resize_ppm
+    from mie_spark.operators.multimodal import parse_png
 
     raw, img = _ppm_bytes(w=8, h=6)
     df = spark.createDataFrame([(7, bytearray(raw))], ["asset_id", "payload"])
-    row = resize_ppm(df, out_w=4, out_h=3).collect()[0]
+    row = resize_images(df, 4, 3, codec="auto").collect()[0]
     assert (row["width"], row["height"]) == (4, 3)
-    w, h, px = parse_ppm(bytes(row["payload"]))
+    w, h, px = parse_png(bytes(row["payload"]))
     assert (w, h) == (4, 3)
     # nearest-neighbor: output pixel (y,x) == input pixel (y*6//3, x*8//4)
     assert (px == img[::2, ::2]).all()
@@ -372,12 +330,13 @@ def test_parse_png_rejects_unsupported():
 
 
 def test_resize_png_spark_roundtrip(spark):
-    """resize_png: real PNG decode -> nearest-neighbor -> PNG re-encode
-    through mapInPandas; output payloads decode to the target size with
-    pixels gathered from the source."""
+    """resize_images(codec='auto') on PNG: real PNG decode ->
+    nearest-neighbor -> PNG re-encode through mapInPandas; output
+    payloads decode to the target size with pixels gathered from the
+    source."""
     import numpy as np
 
-    from mie_spark.operators.multimodal import parse_png, png_from_array, resize_png
+    from mie_spark.operators.multimodal import parse_png, png_from_array
 
     rng = np.random.default_rng(5)
     imgs = {i: rng.integers(0, 256, size=(8, 6, 3), dtype=np.uint8) for i in (1, 2)}
@@ -385,7 +344,7 @@ def test_resize_png_spark_roundtrip(spark):
         [(i, bytearray(png_from_array(m))) for i, m in imgs.items()],
         ["asset_id", "payload"],
     )
-    rows = {r["asset_id"]: r for r in resize_png(df, out_w=3, out_h=4).collect()}
+    rows = {r["asset_id"]: r for r in resize_images(df, 3, 4, codec="auto").collect()}
     for i, m in imgs.items():
         w, h, back = parse_png(bytes(rows[i]["payload"]))
         assert (w, h) == (3, 4)
@@ -796,23 +755,47 @@ def test_decode_frames_real_still_raises(spark):
         decode_frames(df, codec="real")
 
 
+def _bmp_from_array(img) -> bytes:  # noqa: ANN001
+    """24-bit BI_RGB BMP encoder: BGR bottom-up rows padded to 4 bytes."""
+    import numpy as np
+
+    a = np.asarray(img, dtype=np.uint8)
+    h, w = a.shape[:2]
+    stride = (w * 3 + 3) & ~3
+    raster = np.zeros((h, stride), dtype=np.uint8)
+    raster[:, : w * 3] = a[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
+    size = 54 + stride * h
+    header = (
+        b"BM"
+        + size.to_bytes(4, "little")
+        + b"\x00\x00\x00\x00"
+        + (54).to_bytes(4, "little")
+        + (40).to_bytes(4, "little")
+        + w.to_bytes(4, "little", signed=True)
+        + h.to_bytes(4, "little", signed=True)
+        + (1).to_bytes(2, "little")
+        + (24).to_bytes(2, "little")
+        + (0).to_bytes(4, "little")
+        + (stride * h).to_bytes(4, "little")
+        + (2835).to_bytes(4, "little") * 2  # 72 DPI
+        + (0).to_bytes(4, "little") * 2
+    )
+    return header + raster.tobytes()
+
+
 def test_bmp_roundtrip_padding_and_row_orders():
-    """bmp_from_array -> parse_bmp is the identity, including a width
+    """_bmp_from_array -> parse_bmp is the identity, including a width
     whose 3-byte rows need 4-byte padding (w=3: stride 12 vs 9); a
     hand-built TOP-DOWN (negative biHeight) variant decodes to the
     same pixels; the sniffer reports BMP dims; garbage rejects."""
     import numpy as np
     import pytest as _pytest
 
-    from mie_spark.operators.multimodal import (
-        bmp_from_array,
-        parse_bmp,
-        sniff_image_meta,
-    )
+    from mie_spark.operators.multimodal import parse_bmp, sniff_image_meta
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(5, 3, 3), dtype=np.uint8)
-    raw = bmp_from_array(img)
+    raw = _bmp_from_array(img)
     w, h, back = parse_bmp(raw)
     assert (w, h) == (3, 5)
     assert np.array_equal(back, img)
@@ -849,11 +832,9 @@ def test_resize_auto_dispatches_bmp(spark):
     (no Pillow in this container — a dispatch gap would raise)."""
     import numpy as np
 
-    from mie_spark.operators.multimodal import bmp_from_array, resize_images
-
     img = np.arange(6 * 4 * 3, dtype=np.uint8).reshape(6, 4, 3)
     df = spark.createDataFrame(
-        [(1, bytearray(bmp_from_array(img)), "image/bmp")],
+        [(1, bytearray(_bmp_from_array(img)), "image/bmp")],
         ["asset_id", "payload", "media_type"],
     )
     row = resize_images(df, 2, 3, codec="auto").collect()[0]
@@ -861,32 +842,60 @@ def test_resize_auto_dispatches_bmp(spark):
     assert len(row["payload"]) > 0
 
 
-def test_wav_roundtrip_and_odd_length_padding():
-    """wav_from_array -> parse_wav round-trips sample values to within
-    one quantization step, honors the sample rate, clips out-of-range
-    floats instead of wrapping, and word-aligns an odd-sized data
-    chunk (N=3 samples -> 6 bytes is even; a manual odd chunk still
-    parses via the existing walker)."""
+def _wav_from_array(samples, sample_rate: int = 16_000) -> bytes:  # noqa: ANN001
+    """RIFF/WAVE PCM16 mono encoder: floats in [-1, 1] clip-quantize to
+    int16 little-endian."""
+    import struct
+
     import numpy as np
 
-    from mie_spark.operators.multimodal import parse_wav, wav_from_array
+    a = np.asarray(samples, dtype=np.float64)
+    if a.ndim != 1:
+        raise ValueError("expected a 1-D mono sample array")
+    pcm = np.clip(np.rint(a * 32768.0), -32768, 32767).astype("<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
+    chunks = (
+        b"WAVE"
+        + b"fmt "
+        + struct.pack("<I", len(fmt))
+        + fmt
+        + b"data"
+        + struct.pack("<I", len(pcm))
+        + pcm
+        + (b"\x00" if len(pcm) & 1 else b"")
+    )
+    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
-    t = np.linspace(0, 1, 800, endpoint=False)
-    sig = 0.5 * np.sin(2 * np.pi * 440 * t)
-    raw = wav_from_array(sig, sample_rate=8000)
-    rate, ch, back = parse_wav(raw)
-    assert (rate, ch) == (8000, 1)
-    assert back.shape == sig.shape
-    assert np.max(np.abs(back - sig)) <= 1.0 / 32768.0 + 1e-9
 
-    clipped = wav_from_array(np.array([2.0, -2.0]), sample_rate=8000)
-    _, _, cb = parse_wav(clipped)
-    assert cb[0] > 0.99 and cb[1] <= -1.0  # clipped, not wrapped
+def test_wav_roundtrip_and_odd_length_padding(spark):
+    """_wav_from_array payloads decode through the WAV reader of
+    audio_fingerprint: the fingerprint equals the one computed from the
+    quantized samples directly, also when an odd-sized chunk and its pad
+    byte precede ``fmt``. Out-of-range floats clip instead of
+    wrapping."""
+    import struct
 
-    import pytest as _pytest
+    import numpy as np
 
-    with _pytest.raises(ValueError):
-        wav_from_array(np.zeros((2, 2)))
+    from mie_spark.operators.multimodal import audio_fingerprint
+
+    sig = np.random.default_rng(3).uniform(-0.9, 0.9, 800)
+    raw = _wav_from_array(sig, sample_rate=8000)
+    odd = b"LIST" + struct.pack("<I", 3) + b"abc\x00"  # 3 bytes + pad byte
+    padded = raw[:4] + struct.pack("<I", len(raw) - 8 + len(odd)) + raw[8:12] + odd + raw[12:]
+    df = spark.createDataFrame(
+        [(1, bytearray(raw)), (2, bytearray(padded))], ["asset_id", "payload"]
+    )
+    got = {r["asset_id"]: r["afp"] for r in audio_fingerprint(df, seg_len=13).collect()}
+    q = np.clip(np.rint(sig * 32768.0), -32768, 32767).astype(np.int64)
+    e = (q[:793].reshape(61, 13) ** 2).sum(axis=1)
+    want = sum(1 << k for k in range(60) if e[k] > e[k + 1])
+    assert want != 0 and got == {1: want, 2: want}
+
+    clipped = _wav_from_array(np.array([2.0, -2.0]), sample_rate=8000)
+    assert struct.unpack("<2h", clipped[-4:]) == (32767, -32768)  # not wrapped
+    with pytest.raises(ValueError):
+        _wav_from_array(np.zeros((2, 2)))
 
 
 def test_synthetic_png_corpus_closed_form_roundtrip(spark):

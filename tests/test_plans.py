@@ -513,8 +513,7 @@ def test_rerank_pool_scan_is_in_filter_pruned(spark):
 def test_ivf_cells_projection_is_map_only(spark):
     """v_ivf_cells: after training, the graded projection is scan ->
     Arrow argmax -> project with ZERO exchanges (the oracle replays
-    training; the shipping expression is the partition-column
-    precompute of write_ann_ivf_index)."""
+    training)."""
     df = QUERIES["v_ivf_cells"](spark, SF)
     assert exchange_count(df) == 0
     schemas = read_schemas(df)

@@ -1,33 +1,19 @@
-"""Scale-toolkit tests: salted joins/aggs match their unsalted plans
-row-for-row, and bucketed tables join without a shuffle.
-"""
+"""Scale-toolkit tests: salted aggregation matches its unsalted plan
+row-for-row; sketches, hash splits, the parallelism policy and the
+window and graph operators hold their exactness contracts."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from mie_spark.operators.skew import salted_groupby_agg, salted_join
-from mie_spark.plans import exchange_count
+from mie_spark.operators.skew import salted_groupby_agg
 from mie_spark.sources import load_table
-from mie_spark.sources.writers import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
 
 def _sorted_rows(df):
     return sorted([tuple(r) for r in df.collect()])
-
-
-def test_salted_join_equals_plain_join(spark):
-    o = load_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, SF, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    plain = o.join(li, "o_orderkey")
-    salted = salted_join(li, o, on="o_orderkey", n_salt=4)
-    assert _sorted_rows(plain.select("o_orderkey", "o_custkey", "l_quantity")) == \
-        _sorted_rows(salted.select("o_orderkey", "o_custkey", "l_quantity"))
 
 
 def test_salted_groupby_agg_equals_plain(spark):
@@ -58,30 +44,6 @@ def test_salted_groupby_rejects_non_decomposable(spark):
         raise AssertionError("avg must be rejected (not naively combinable)")
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Both sides bucketed on the join key with equal bucket counts →
-    the join plan contains zero shuffle exchanges. This is the layout
-    contract the 100 TB design leans on for recurring fact-fact joins."""
-    o = load_table(spark, SF, "orders")
-    li = load_table(spark, SF, "lineitem")
-    write_bucketed(o, "b_orders", ["o_orderkey"], n_buckets=4, sort_cols=["o_orderkey"])
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        ["o_orderkey"],
-        n_buckets=4,
-        sort_cols=["o_orderkey"],
-    )
-    try:
-        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-        assert exchange_count(joined) == 0
-        # and it still returns the right number of rows
-        assert joined.count() == li.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_approx_distinct_within_rsd(spark):
     """HLL++ estimate at rsd=1% must land within 5% of the exact
     distinct count (5 sigma; deterministic for a fixed dataset)."""
@@ -108,31 +70,6 @@ def test_approx_distinct_within_rsd(spark):
             est,
             exact[et],
         )
-
-
-def test_format_round_trip(spark, tmp_path):
-    """JSON/CSV/ORC round-trips preserve schema and values exactly when
-    read back with the explicit source schema (no inference)."""
-    from mie_spark.sources.writers import read_format, write_format
-
-    src = load_table(spark, SF, "customer")
-    expected = _sorted_rows(src)
-    for fmt in ("json", "csv", "orc"):
-        path = str(tmp_path / f"rt_{fmt}")
-        write_format(src, path, fmt=fmt)
-        back = read_format(spark, path, fmt=fmt, schema=src.schema)
-        assert back.schema == src.schema, fmt
-        assert _sorted_rows(back) == expected, fmt
-
-
-def test_json_csv_read_requires_schema(spark, tmp_path):
-    import pytest as _pytest
-
-    from mie_spark.sources.writers import read_format
-
-    for fmt in ("json", "csv"):
-        with _pytest.raises(ValueError, match="explicit schema"):
-            read_format(spark, str(tmp_path), fmt=fmt)
 
 
 def test_hash_split_deterministic_and_quantized(spark):
@@ -168,50 +105,6 @@ def test_hash_split_boundary_fractions(spark):
         docs, "lang", "doc_id", fractions={}, default_frac=1.0
     )
     assert kept.count() == n
-
-
-def test_compact_small_files(spark, tmp_path):
-    """Many small files compact to the computed target count with
-    identical contents."""
-    from mie_spark.sources.writers import compact_small_files
-
-    path = str(tmp_path / "frag")
-    src = load_table(spark, SF, "orders")
-    src.repartition(24).write.parquet(path)
-    import pathlib
-
-    before = len(list(pathlib.Path(path).glob("*.parquet")))
-    expected = _sorted_rows(src)
-    n_out = compact_small_files(spark, path, target_file_bytes=1 << 30)
-    after = len(list(pathlib.Path(path).glob("*.parquet")))
-    assert before == 24 and n_out == 1 and after == 1
-    assert _sorted_rows(spark.read.parquet(path)) == expected
-
-
-def test_write_clustered_files_cover_disjoint_ranges(spark, tmp_path):
-    """Range clustering must put disjoint key ranges in different files
-    (that disjointness is what row-group stats skipping feeds on)."""
-    import pyarrow.parquet as pq
-    import pathlib
-
-    from mie_spark.sources.writers import write_clustered
-
-    path = str(tmp_path / "clustered")
-    src = load_table(spark, SF, "orders")
-    write_clustered(src, path, ["o_orderkey"], n_files=4)
-    ranges = []
-    for f in pathlib.Path(path).glob("*.parquet"):
-        md = pq.ParquetFile(str(f)).metadata
-        idx = [md.schema.column(i).name for i in range(md.num_columns)].index(
-            "o_orderkey"
-        )
-        st = md.row_group(0).column(idx).statistics
-        ranges.append((st.min, st.max))
-    ranges.sort()
-    assert len(ranges) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, ranges
-    assert _sorted_rows(spark.read.parquet(path)) == _sorted_rows(src)
 
 
 def test_ensure_parallelism_conditional(spark):
@@ -279,38 +172,6 @@ def test_ensure_parallelism_policy_modes(spark):
         )
     finally:
         spark.conf.unset("spark.mie.ensureParallelism")
-
-
-def test_salted_join_rejects_outer_hows(spark):
-    from mie_spark.operators.skew import salted_join
-
-    a = spark.createDataFrame([(1, "x")], ["k", "v"])
-    b = spark.createDataFrame([(1, "y"), (2, "z")], ["k", "w"])
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(a, b, "k", how="full")
-
-
-def test_compact_refuses_partitioned_layout(spark, tmp_path):
-    from mie_spark.sources.writers import compact_small_files
-
-    path = str(tmp_path / "part")
-    spark.range(10).withColumn("p", F.col("id") % 2).write.partitionBy(
-        "p"
-    ).parquet(path)
-    with pytest.raises(ValueError, match="partitioned layout"):
-        compact_small_files(spark, path)
-
-
-def test_compact_csv_keeps_header_schema(spark, tmp_path):
-    from mie_spark.sources.writers import compact_small_files
-
-    path = str(tmp_path / "csv")
-    df = spark.range(100).withColumn("val", F.col("id") * 2)
-    df.repartition(8).write.option("header", "true").csv(path)
-    compact_small_files(spark, path, fmt="csv")
-    back = spark.read.option("header", "true").csv(path)
-    assert set(back.columns) == {"id", "val"}
-    assert back.count() == 100
 
 
 def test_pagerank_empty_edges(spark):

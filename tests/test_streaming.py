@@ -160,108 +160,6 @@ def test_transform_state_profile_matches_batch(spark):
     assert got == want
 
 
-def test_streaming_embedding_pipeline_feeds_semantic_search(spark):
-    """V6 at scale: stream events through the embedding foreachBatch
-    sink, then semantic_search over the store must rank the exact stored
-    content first (mock embeddings are deterministic, so the query
-    vector of an identical text has cosine 1.0 with its stored row)."""
-    from mie_spark.api.client import MieClient
-    from mie_spark.streaming.ops import embed_and_upsert_stream
-
-    client = MieClient(spark, embedding_dim=4)
-    ev = read_events_stream(spark, SF)
-    embed_and_upsert_stream(ev.limit(50), client.store, embed_dim=4)
-
-    assert client.store.table("mie_fact").count() > 0
-    assert (
-        client.store.table("mie_fact_embedding").count()
-        == client.store.table("mie_fact").count()
-    )
-    from mie_spark import ids
-
-    stored = client.store.table("mie_fact").select("id", "content").collect()
-    assert all(r["id"] == ids.fact_id(r["content"], "general") for r in stored)
-    sample = client.store.table("mie_fact").select("content").first()[0]
-    hits = client.semantic_search(sample, limit=3, node_types=["fact"])
-    assert hits and hits[0]["content"] == sample
-    assert hits[0]["similarity"] > 0.999
-
-
-def test_stream_append_ivf_index_grows_index_with_consistent_cells(spark, tmp_path):
-    """Incremental ANN index maintenance end-to-end: build an IVF index
-    on half the embeddings, stream the other half in over 4 micro-
-    batches (foreachBatch append), then verify (a) the grown index
-    holds every vector exactly once, (b) every appended row sits in the
-    partition of its nearest ORIGINAL centroid — assignment never
-    drifts from what probes prune on — and (c) a probe over the grown
-    index equals the logical definition (filter full corpus to probed
-    cells, exact cosine top-k)."""
-    from mie_spark.operators.vector import (
-        _nearest_centroid,
-        _read_ann_meta,
-        ann_topk_ivf_indexed,
-        cosine_topk,
-        write_ann_ivf_index,
-    )
-    from mie_spark.sources import load_table
-    from mie_spark.streaming import stream_append_ivf_index
-
-    SFD = "/root/testdata/sf0.001"
-    emb = load_table(spark, SFD, "embeddings")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    rest = emb.filter(F.col("vec_id") % 2 == 1)
-    idx_path = str(tmp_path / "ivf_idx")
-    write_ann_ivf_index(base, idx_path, n_centroids=8)
-
-    src = str(tmp_path / "new_vectors")
-    rest.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(rest.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_append_ivf_index(stream, idx_path)
-
-    idx = spark.read.parquet(idx_path)
-    assert idx.count() == emb.count()
-    assert idx.select("vec_id").distinct().count() == emb.count()
-
-    meta = _read_ann_meta(spark, idx_path)
-    expected_cell = _nearest_centroid(F.col("embedding"), meta["centroids"])
-    mismatches = (
-        idx.withColumn("want", expected_cell)
-        .filter(F.col("cell") != F.col("want"))
-        .count()
-    )
-    assert mismatches == 0
-
-    qv = list(emb.filter(F.col("vec_id") == 0).first()["embedding"])
-    got = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_ivf_indexed(spark, idx_path, qv, k=10).collect()
-    ]
-    # logical definition: assign every corpus vector with the SAME
-    # centroids, keep the same probed cells, exact top-k
-    import math
-
-    def cos(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a)) or 1.0
-        nb = math.sqrt(sum(y * y for y in b)) or 1.0
-        return num / (na * nb)
-
-    cents = meta["centroids"]
-    probe = sorted(range(len(cents)), key=lambda i: (-cos(qv, cents[i]), i))[:6]
-    logical = emb.withColumn("cell", expected_cell).filter(
-        F.col("cell").isin(*probe)
-    )
-    want = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in cosine_topk(logical.drop("cell"), "embedding", qv, k=10).collect()
-    ]
-    assert got == want
-
-
 def test_exact_cents_rounds_half_away_from_zero():
     """The transformWithState profile's cents rule must match Spark
     F.round / DuckDB round on exact half-cents — pandas .round() is
@@ -495,7 +393,6 @@ def test_minhash_state_incremental_equals_batch_and_replays(spark, tmp_path):
         _doc_shingles,
         minhash_band_candidates,
         minhash_lsh_pairs,
-        minhash_signatures,
         verify_jaccard_pairs,
     )
     from mie_spark.sources import load_table
@@ -972,6 +869,57 @@ def test_checkpoint_sink_removes_scratch_dir(spark):
         drain(extra_confs={"spark.sql.shuffle.partitions": "not-a-number"})
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert set(glob.glob(pattern)) == before
+
+
+def test_generations_commit_atomically(spark, tmp_path):
+    """The commit protocol of every foreachBatch-maintained state
+    (mie_spark/generations.py) never mutates a generation in place:
+    (a) each commit lands in a NEW gNNNNNNNNN dir named by the
+    `_CURRENT` manifest, (b) a reader that resolved the manifest BEFORE
+    a commit keeps a complete generation on disk (the superseded one
+    survives GC), (c) a crash mid-write — a half-written generation no
+    manifest names — is invisible and the next allocation numbers past
+    it, (d) GC bounds the layout to the current and the superseded
+    generation: the next commit removes crash debris numbered below it,
+    never the generation it superseded."""
+    import os
+
+    from mie_spark import generations
+
+    root = str(tmp_path / "state")
+
+    def commit(n: int) -> str:
+        gen = generations.allocate(spark, root)
+        spark.range(n).write.parquet(gen)
+        generations.commit(spark, root, [gen])
+        return gen
+
+    def live_ids() -> list[int]:
+        paths = generations.manifest(spark, root)
+        return sorted(r["id"] for r in spark.read.parquet(*paths).collect())
+
+    g1 = commit(100)
+    assert generations.manifest(spark, root) == [g1]
+    assert os.path.basename(g1).startswith("g")
+
+    held = generations.manifest(spark, root)  # resolved before the commit
+    g2 = commit(200)
+    assert g2 != g1 and generations.manifest(spark, root) == [g2]
+    assert os.path.isdir(g1), "previous generation must survive for in-flight readers"
+    held_ids = sorted(r["id"] for r in spark.read.parquet(*held).collect())
+    assert held_ids == list(range(100))
+
+    # crash mid-write: half-written generation, manifest never replaced
+    os.makedirs(os.path.join(root, "g000000099", "part"))
+    assert live_ids() == list(range(200))
+    g3 = commit(300)
+    assert int(os.path.basename(g3)[1:]) > 99
+    assert live_ids() == list(range(300))
+
+    # GC: the superseded g2 survives the commit past the debris; the
+    # debris and g1 are gone
+    gens = sorted(d for d in os.listdir(root) if d.startswith("g") and d[1:].isdigit())
+    assert gens == [os.path.basename(g2), os.path.basename(g3)]
 
 
 def test_parent_format_state_dir_still_loads(spark, tmp_path):

@@ -5,8 +5,6 @@ IVF training determinism.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from mie_spark.operators.vector import (
@@ -232,78 +230,6 @@ def test_embed_corpus_matches_provider(spark):
         assert out[r["doc_id"]] == (8, norm, round(vec[0], 6))
 
 
-def test_ann_lsh_indexed_equals_on_the_fly(spark, tmp_path):
-    """The materialized LSH index (signature as a partition column) must
-    return exactly what the expression path returns — and the probe must
-    actually prune: the scan touches fewer files than the index has."""
-    import os
-
-    from mie_spark.operators.vector import (
-        ann_topk_lsh_indexed,
-        write_ann_lsh_index,
-    )
-
-    emb, q = _emb_and_query(spark)
-    path = str(tmp_path / "lsh_idx")
-    write_ann_lsh_index(emb, path, "embedding", n_planes=4)
-
-    fly = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_lsh(emb, "embedding", q, 10, n_planes=4).collect()
-    ]
-    idx_df = ann_topk_lsh_indexed(spark, path, q, 10)
-    idx = [(r["vec_id"], round(r["sim"], 9)) for r in idx_df.collect()]
-    assert idx == fly
-
-    # the probe is a partition-column filter: pruning happens at plan
-    # time (inputFiles() is not filter-aware, so assert on the plan)
-    from mie_spark.plans import formatted_plan
-
-    plan = formatted_plan(idx_df)
-    m = re.search(r"PartitionFilters: \[[^\]]*sig[^\]]*IN \(([^)]*)\)", plan)
-    assert m, plan
-    n_probed = len(m.group(1).split(","))
-    n_total = sum(
-        1 for d in os.listdir(path) if d.startswith("sig=")
-    )
-    assert n_probed == 5  # qsig + 4 hamming-1 neighbors
-    assert n_probed < n_total
-
-
-def test_ann_ivf_indexed_equals_on_the_fly(spark, tmp_path):
-    """The materialized IVF index (train once, cell as partition column)
-    must match the per-query-trained path and prune to n_probe cells."""
-    import os
-
-    from mie_spark.operators.vector import (
-        ann_topk_ivf_indexed,
-        write_ann_ivf_index,
-    )
-
-    emb, q = _emb_and_query(spark)
-    path = str(tmp_path / "ivf_idx")
-    write_ann_ivf_index(emb, path, "embedding", n_centroids=8)
-
-    fly = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_ivf(
-            emb, "embedding", q, 10, n_centroids=8, n_probe=3
-        ).collect()
-    ]
-    idx_df = ann_topk_ivf_indexed(spark, path, q, 10, n_probe=3)
-    idx = [(r["vec_id"], round(r["sim"], 9)) for r in idx_df.collect()]
-    assert idx == fly
-
-    from mie_spark.plans import formatted_plan
-
-    plan = formatted_plan(idx_df)
-    m = re.search(r"PartitionFilters: \[[^\]]*cell[^\]]*IN \(([^)]*)\)", plan)
-    assert m, plan
-    n_probed = len(m.group(1).split(","))
-    n_total = sum(1 for d in os.listdir(path) if d.startswith("cell="))
-    assert n_probed == 3 < n_total
-
-
 def test_pq_recall_at_10(spark):
     """Flat PQ (ADC shortlist + exact rerank) must track the exact
     ranking closely — the rerank makes precision exact, so recall is
@@ -325,47 +251,6 @@ def test_pq_codebooks_deterministic(spark):
     c2 = train_pq_codebooks(emb, "embedding", m=8, k_codes=16, lloyd_iters=2)
     assert c1 == c2
     assert len(c1) == 8 and all(len(cb) == 16 for cb in c1)
-
-
-def test_ivfpq_index_compression_and_rerank(spark, tmp_path):
-    """The materialized IVF-PQ index stores m-byte codes, not vectors
-    (the compression that makes 100 TB embedding search feasible); the
-    probe must prune partitions and the reranked result must come from
-    the exact metric over true vectors."""
-    import os
-
-    from mie_spark.operators.vector import (
-        ann_topk_ivfpq_indexed,
-        write_ann_ivfpq_index,
-    )
-
-    emb, q = _emb_and_query(spark)
-    path = str(tmp_path / "ivfpq_idx")
-    write_ann_ivfpq_index(emb, path, "embedding", n_centroids=8, m=16, k_codes=32)
-
-    stored = spark.read.parquet(path)
-    assert set(stored.columns) == {"vec_id", "pq_code", "cell"}
-    assert stored.select(F.length("pq_code")).distinct().collect()[0][0] == 16
-
-    idx_df = ann_topk_ivfpq_indexed(
-        spark, path, q, 10, n_probe=6, rerank_df=emb
-    )
-    got = {r["vec_id"] for r in idx_df.collect()}
-    exact = {r["vec_id"] for r in cosine_topk(emb, "embedding", q, 10).collect()}
-    recall = len(got & exact) / 10
-    assert recall >= 0.6, f"IVF-PQ recall@10 too low: {recall}"
-
-    from mie_spark.plans import formatted_plan
-
-    plan = formatted_plan(idx_df)
-    m = re.search(r"PartitionFilters: \[[^\]]*cell[^\]]*IN \(([^)]*)\)", plan)
-    assert m, plan
-    assert len(m.group(1).split(",")) == 6
-
-    # ADC-only mode returns approximate scores without touching vectors
-    adc = ann_topk_ivfpq_indexed(spark, path, q, 5, n_probe=8)
-    rows = adc.collect()
-    assert len(rows) == 5 and set(adc.columns) == {"vec_id", "sim"}
 
 
 def test_similarity_self_join_empty_input(spark):
@@ -476,63 +361,15 @@ def test_mmr_empty_pool_and_label_free_input(spark):
     assert len(rows) == 5 and [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
 
 
-def test_pq_and_index_writers_empty_input(spark, tmp_path):
+def test_pq_empty_input(spark):
     """Empty-input doctrine: the on-the-fly PQ path returns an empty
-    top-k like its LSH/IVF siblings, and the index WRITERS refuse with
-    an error that names the cause (they used to die deep inside numpy
-    with an AxisError that said nothing about emptiness)."""
-    import pytest as _pytest
-
-    from mie_spark.operators.vector import (
-        ann_topk_pq,
-        write_ann_ivf_index,
-        write_ann_ivfpq_index,
-        write_ann_lsh_index,
-    )
+    top-k like its LSH/IVF siblings (training codebooks on a 0-row
+    sample used to die inside numpy with an AxisError)."""
+    from mie_spark.operators.vector import ann_topk_pq
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     out = ann_topk_pq(empty, "embedding", [1.0, 0.0, 0.0, 0.0], k=5)
     assert out.count() == 0
-    for writer in (write_ann_lsh_index, write_ann_ivf_index, write_ann_ivfpq_index):
-        with _pytest.raises(ValueError, match="empty"):
-            writer(empty, str(tmp_path / writer.__name__))
-
-
-def test_filtered_indexed_probe_matches_filtered_exact_on_probed_cells(spark, tmp_path):
-    """Filtered search on the materialized IVF index: the metadata
-    pre-filter must not change WHICH of the probed vectors rank — the
-    result equals the exact filtered ranking restricted to the probed
-    cells, and with all cells probed it equals the exact filtered
-    ranking outright."""
-    from mie_spark.operators.vector import (
-        ann_topk_ivf_indexed,
-        cosine_topk,
-        write_ann_ivf_index,
-    )
-
-    emb, q = _emb_and_query(spark)
-    path = str(tmp_path / "ivf_idx_filt")
-    write_ann_ivf_index(emb, path, "embedding", n_centroids=8)
-    labels = emb.select("vec_id", "label")
-    pred = F.col("label").isin(1, 3, 7)
-
-    # all cells probed == exact filtered ranking
-    got = ann_topk_ivf_indexed(
-        spark, path, q, 10, n_probe=8, metadata=labels, pre_filter=pred
-    ).collect()
-    exact = cosine_topk(emb.filter(pred), "embedding", q, 10).collect()
-    assert [(r["vec_id"], round(r["sim"], 9)) for r in got] == [
-        (r["vec_id"], round(r["sim"], 9)) for r in exact
-    ]
-    assert all(r["label"] in (1, 3, 7) for r in got)
-
-    # partial probe: k results still all satisfy the filter (pre-filter
-    # semantics — the filter never eats into k)
-    part = ann_topk_ivf_indexed(
-        spark, path, q, 10, n_probe=3, metadata=labels, pre_filter=pred
-    ).collect()
-    assert len(part) == 10
-    assert all(r["label"] in (1, 3, 7) for r in part)
 
 
 def test_binary_quantize_packs_sign_bits(spark):
@@ -597,20 +434,15 @@ def test_hamming_topk_recall_floor(spark):
     assert hits / (10 * len(queries)) >= 0.5
 
 
-def test_hnsw_recall_and_indexed_parity(spark, tmp_path):
+def test_hnsw_recall_and_indexed_parity(spark):
     """Segment-parallel HNSW (operators/hnsw.py) at the reference's
     operating point (m=16, ef_construction=200, ef=200 —
     pkg/memory/schema.go:145-152, reader.go:63,69): recall@10 vs the
     exact ranking must be ~perfect (every shard is searched; with
     ef >= |shard| the beam is effectively exhaustive within a
-    connected segment graph), the result must be deterministic across
-    runs, and serving from the materialized index must return exactly
-    the on-the-fly result."""
-    from mie_spark.operators.hnsw import (
-        ann_topk_hnsw_indexed,
-        hnsw_topk,
-        write_ann_hnsw_index,
-    )
+    connected segment graph), and the result must be deterministic
+    across runs."""
+    from mie_spark.operators.hnsw import hnsw_topk
 
     emb, q = _emb_and_query(spark)
     exact = [
@@ -630,78 +462,6 @@ def test_hnsw_recall_and_indexed_parity(spark, tmp_path):
         for r in hnsw_topk(emb, "embedding", q, k=10).collect()
     ]
     assert got == again
-
-    # materialized index serves the identical ranking
-    path = str(tmp_path / "hnsw_idx")
-    write_ann_hnsw_index(emb, path)
-    served = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_hnsw_indexed(spark, path, q, k=10).collect()
-    ]
-    assert served == got
-
-
-def test_hnsw_incremental_append_grows_index_idempotently(spark, tmp_path):
-    """Incremental HNSW maintenance: build the index on half the
-    corpus, stream the rest in 4 one-file micro-batches
-    (stream_append_hnsw_index), and the grown index must (a) rank the
-    full corpus as well as exact cosine top-k, (b) contain every id
-    exactly once, and (c) be byte-stable under a FULL replay of the
-    stream — ids already present are skipped, so retries rewrite
-    identical graph rows."""
-    from mie_spark.operators.hnsw import (
-        _current_generation,
-        ann_topk_hnsw_indexed,
-        write_ann_hnsw_index,
-    )
-    from mie_spark.streaming import stream_append_hnsw_index
-
-    emb, q = _emb_and_query(spark)
-    first = emb.filter(F.col("vec_id") % 2 == 0)
-    rest = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "hnsw_grow")
-    write_ann_hnsw_index(first, path)
-
-    src = str(tmp_path / "vec_stream")
-    rest.repartition(4).write.parquet(src)
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(rest.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_append_hnsw_index(stream, path)
-
-    run()
-    exact = {r["vec_id"] for r in cosine_topk(emb, "embedding", q, 10).collect()}
-    got = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_hnsw_indexed(spark, path, q, k=10).collect()
-    ]
-    recall = len({v for v, _ in got} & exact) / 10
-    assert recall >= 0.9, f"grown-index recall@10 too low: {recall}"
-
-    gen_after_stream = _current_generation(spark, path)
-    graphs = spark.read.parquet(gen_after_stream)
-    all_ids = [i for r in graphs.select("ids").collect() for i in r["ids"]]
-    assert sorted(all_ids) == sorted(
-        r["vec_id"] for r in emb.select("vec_id").collect()
-    )
-
-    # full replay: every id skips — observable as a pure no-op (the
-    # `_CURRENT` pointer never flips, no new generation appears) and
-    # the served ranking is unchanged
-    run()
-    assert _current_generation(spark, path) == gen_after_stream
-    again = [
-        (r["vec_id"], round(r["sim"], 9))
-        for r in ann_topk_hnsw_indexed(spark, path, q, k=10).collect()
-    ]
-    assert again == got
-    graphs2 = spark.read.parquet(_current_generation(spark, path))
-    all_ids2 = [i for r in graphs2.select("ids").collect() for i in r["ids"]]
-    assert sorted(all_ids2) == sorted(all_ids)
 
 
 def test_hnsw_heuristic_selection_on_clustered_corpus():
@@ -741,88 +501,23 @@ def test_hnsw_heuristic_selection_on_clustered_corpus():
     assert r_heuristic > r_simple
 
 
-def test_hnsw_index_generations_commit_atomically(spark, tmp_path):
-    """ADVICE r9 (medium): the index must never be mutated in place.
-    Contract pinned here: (a) every rebuild/append lands in a NEW
-    gNNNNNNNNN generation dir and commits it in the _CURRENT manifest,
-    (b) a reader that resolved the manifest BEFORE an append keeps a
-    complete, consistent generation on disk (the superseded generation
-    survives GC), (c) a crash mid-append — a half-written generation
-    no manifest names — is invisible to serving and does not confuse
-    the next append, (d) GC bounds the layout to the current and the
-    superseded generation: the next commit removes crash debris
-    numbered below it, never the generation it superseded."""
-    import os
-
-    import numpy as np
-
-    from mie_spark.operators.hnsw import (
-        _current_generation,
-        append_ann_hnsw_index,
-        ann_topk_hnsw_indexed,
-        write_ann_hnsw_index,
-    )
-
-    rng = np.random.RandomState(5)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx")
-    write_ann_hnsw_index(df.filter("vec_id < 100"), path)
-    g1 = _current_generation(spark, path)
-    assert g1 is not None and os.path.basename(g1).startswith("g")
-
-    # a reader holding g1 keeps a complete generation after one append
-    append_ann_hnsw_index(df.filter("vec_id >= 100 and vec_id < 200"), path)
-    g2 = _current_generation(spark, path)
-    assert g2 != g1
-    assert os.path.isdir(g1), "previous generation must survive for in-flight readers"
-    held = spark.read.parquet(g1)  # resolved-before-append reader
-    held_ids = [i for r in held.select("ids").collect() for i in r["ids"]]
-    assert sorted(held_ids) == list(range(100))
-
-    # crash mid-append: half-written generation, pointer never flipped
-    fake = os.path.join(path, "g000000099")
-    os.makedirs(os.path.join(fake, "shard=0"), exist_ok=True)
-    q = [float(x) for x in rng.randn(8)]
-    assert len(ann_topk_hnsw_indexed(spark, path, q, k=5).collect()) == 5
-    # next append skips past the debris and commits a higher generation
-    append_ann_hnsw_index(df.filter("vec_id >= 200"), path)
-    g3 = _current_generation(spark, path)
-    assert int(os.path.basename(g3)[1:]) > 99
-    got_ids = [
-        i
-        for r in spark.read.parquet(g3).select("ids").collect()
-        for i in r["ids"]
-    ]
-    assert sorted(got_ids) == list(range(300))
-
-    # GC: the superseded g2 survives the commit past the debris; the
-    # debris and g1 are gone
-    assert os.path.isdir(g2), "superseded generation must survive for in-flight readers"
-    gens = sorted(
-        d for d in os.listdir(path) if d.startswith("g") and d[1:].isdigit()
-    )
-    assert gens == [os.path.basename(g2), os.path.basename(g3)]
-
-
-def test_hnsw_auto_shards_targets_segment_size(spark, tmp_path):
+def test_hnsw_auto_shards_targets_segment_size(spark):
     """shards="auto" sizes the segment count from the corpus
     (max(AUTO_MIN_SHARDS, ceil(n / AUTO_SHARD_TARGET))) — the Lucene
     lever the scale curve names: at growing n the production answer is
     MORE segments at constant size, never bigger graphs, and below
     8 * target the parallelism floor keeps small corpora on 8 segments
     (the historical fixed default, so auto strictly dominates it).
-    Pins the resolution rule and that the auto-sharded index serves
-    the same exact-rerank contract."""
+    Pins the resolution rule and that hnsw_topk over auto shards keeps
+    the exact-rerank recall contract."""
     import numpy as np
 
     from mie_spark.operators.hnsw import (
         AUTO_MIN_SHARDS,
         AUTO_SHARD_TARGET,
-        _current_generation,
         _resolve_shards,
-        ann_topk_hnsw_indexed,
-        write_ann_hnsw_index,
+        hnsw_topk,
+        shard_of,
     )
     from mie_spark.operators.vector import cosine_topk
 
@@ -839,16 +534,10 @@ def test_hnsw_auto_shards_targets_segment_size(spark, tmp_path):
     big = spark.range(AUTO_MIN_SHARDS * AUTO_SHARD_TARGET + 500)
     assert _resolve_shards(big, "id", "auto") == AUTO_MIN_SHARDS + 1
 
-    path = str(tmp_path / "auto_idx")
-    write_ann_hnsw_index(df, path, shards="auto")
-    import os
-
-    gen = _current_generation(spark, path)
-    assert sorted(
-        d for d in os.listdir(gen) if d.startswith("shard=")
-    ) == [f"shard={i}" for i in range(AUTO_MIN_SHARDS)]
+    shards = df.select(shard_of(F.col("vec_id"), AUTO_MIN_SHARDS)).distinct()
+    assert sorted(r["_shard"] for r in shards.collect()) == list(range(AUTO_MIN_SHARDS))
     q = [float(x) for x in rng.randn(8)]
-    got = {r["vec_id"] for r in ann_topk_hnsw_indexed(spark, path, q, k=10).collect()}
+    got = {r["vec_id"] for r in hnsw_topk(df, "embedding", q, k=10, shards="auto").collect()}
     exact = {r["vec_id"] for r in cosine_topk(df, "embedding", q, 10).collect()}
     assert len(got & exact) / 10 >= 0.9
 
@@ -891,61 +580,6 @@ def test_kcenter_matches_numpy_and_radius_property(spark):
     assert [(r["rank"], r["vec_id"], r["dist"]) for r in got] == expect
     radii = [r["dist"] for r in got][1:]
     assert all(a >= b for a, b in zip(radii, radii[1:]))
-
-
-def test_hnsw_append_refuses_shard_hash_mismatch(spark, tmp_path):
-    """ADVICE r11: the routing hash is stamped into the ANN meta at
-    build time and append refuses a mismatch — appending under a
-    different scheme than the index was built with would mis-route ids
-    past the per-shard replay-idempotence check and duplicate vec_ids
-    across segments. A pre-stamp index (no shard_hash field) is
-    refused too: its scheme is unknowable."""
-    import json
-    import os
-
-    import numpy as np
-    import pytest
-
-    from mie_spark.operators.hnsw import (
-        SHARD_HASH_SCHEME,
-        append_ann_hnsw_index,
-        write_ann_hnsw_index,
-    )
-    from mie_spark.operators.vector import _ANN_META, _read_ann_meta
-
-    rng = np.random.RandomState(7)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx")
-    write_ann_hnsw_index(df.filter("vec_id < 60"), path)
-
-    meta = _read_ann_meta(spark, path)
-    assert meta["shard_hash"] == SHARD_HASH_SCHEME  # stamped at build
-
-    # same scheme: append proceeds
-    append_ann_hnsw_index(df.filter("vec_id >= 60 and vec_id < 90"), path)
-
-    def rewrite_meta(m):
-        # plain open() bypasses Hadoop's LocalFileSystem, whose stale
-        # .crc sidecar would then fail the next checksummed read —
-        # drop it so the tampered meta is actually readable
-        with open(os.path.join(path, _ANN_META), "w") as f:
-            json.dump(m, f)
-        crc = os.path.join(path, "._ann_meta.json.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-
-    # foreign scheme (an index built by a pre-md5 engine): refused
-    meta["shard_hash"] = "xxhash64"
-    rewrite_meta(meta)
-    with pytest.raises(ValueError, match="shard_hash"):
-        append_ann_hnsw_index(df.filter("vec_id >= 90"), path)
-
-    # pre-stamp index (field absent): scheme unknowable, refused
-    del meta["shard_hash"]
-    rewrite_meta(meta)
-    with pytest.raises(ValueError, match="shard_hash"):
-        append_ann_hnsw_index(df.filter("vec_id >= 90"), path)
 
 
 def test_embed_drift_gate_invariants(spark):
