@@ -38,6 +38,7 @@ from mie_spark.schemas import (
     EDGE_TABLES,
     EMBEDDING_TABLES,
     NODE_TABLES,
+    key_columns,
 )
 from mie_spark.storage import MieStore, now_s
 
@@ -850,11 +851,19 @@ class MieClient:
     # export / import / raw query / usage (S5-S7, A5)
     # ------------------------------------------------------------------
 
+    def export_rows(self, table: str) -> list[dict[str, Any]]:
+        """The rows of ``table`` sorted by its key columns, the order
+        every export emits: the store's own row order depends on which
+        buckets commits rewrote, so two exports of the same rows are
+        byte-identical only when sorted."""
+        t = self.store.table_arrow(table)
+        return _order(t, [(k, False) for k in key_columns(table)]).to_pylist()
+
     def export_json(self) -> dict[str, list[dict[str, Any]]]:
         """Full-graph JSON export (reader.go:707-764)."""
         out: dict[str, list[dict[str, Any]]] = {}
         for table in list(NODE_TABLES) + list(EDGE_TABLES):
-            out[table] = self.store.table_arrow(table).to_pylist()
+            out[table] = self.export_rows(table)
         return out
 
     def export_graph(
@@ -896,7 +905,7 @@ class MieClient:
             "stats": {},
         }
         for nt in chosen:
-            rows = self.store.table_arrow(f"mie_{nt}").to_pylist()
+            rows = self.export_rows(f"mie_{nt}")
             out[plural[nt]] = rows
             out["stats"][plural[nt]] = len(rows)
         prefixes = {
@@ -911,7 +920,7 @@ class MieClient:
         rels: dict[str, list[dict[str, Any]]] = {}
         for table, (a, b) in prefixes.items():
             if a in chosen and b in chosen:
-                rels[table] = self.store.table_arrow(table).to_pylist()
+                rels[table] = self.export_rows(table)
         if rels:
             out["relationships"] = rels
         if include_embeddings:
@@ -919,7 +928,7 @@ class MieClient:
             for table, key in EMBEDDING_TABLES.items():
                 nt = key.removesuffix("_id")
                 if nt in chosen:
-                    emb[table] = self.store.table_arrow(table).to_pylist()
+                    emb[table] = self.export_rows(table)
             out["embeddings"] = emb
         return out
 
@@ -982,7 +991,7 @@ class MieClient:
         (pkg/tools/export.go:59-115)."""
         lines: list[str] = []
         for table in list(NODE_TABLES) + list(EDGE_TABLES):
-            for d in self.store.table_arrow(table).to_pylist():
+            for d in self.export_rows(table):
                 cols = ", ".join(d.keys())
                 vals = ", ".join(_sql_literal(v) for v in d.values())
                 lines.append(f"INSERT INTO {table} ({cols}) VALUES ({vals});")
@@ -1139,10 +1148,15 @@ def _cosine(emb: Any, q: np.ndarray) -> np.ndarray:
     """Cosine similarity of each vector in ``emb`` (an Arrow list
     column) to ``q``, bit-identical to Spark's ``cosine_sim``
     (functions/vectors.py): elements widened to float64, each dot
-    product and squared norm folded left to right from 0.0 (the last
-    column of a row-wise cumsum), then dot / (|e|·|q|). NaN where
-    Spark's value is NULL or NaN — a NULL vector or element, a length
-    other than ``q``'s, a zero norm — so callers drop those rows."""
+    product and squared norm folded left to right from +0.0, then
+    dot / (|e|·|q|). NaN where Spark's value is NULL or NaN — a NULL
+    vector or element, a length other than ``q``'s, a zero norm — so
+    callers drop those rows.
+
+    The fold runs column by column over all rows at once, widening one
+    column at a time: its temporaries are O(rows), where widening the
+    whole (rows, d) block took several float64 copies of it (a 50k x
+    768 query drove peak RSS past 1.3 GB)."""
     d = len(q)
     sims = np.full(len(emb), np.nan)
     fits = pc.fill_null(pc.equal(pc.list_value_length(emb), d), False)
@@ -1150,10 +1164,15 @@ def _cosine(emb: Any, q: np.ndarray) -> np.ndarray:
     if d == 0 or not fits.any():
         return sims
     flat = pc.list_flatten(emb.filter(pa.array(fits))).to_numpy(zero_copy_only=False)
-    e = flat.astype(np.float64).reshape(-1, d)
-    # + 0.0: the fold starts at +0.0, so an all-zero sum is +0.0, never -0.0
-    dots = np.cumsum(e * q, axis=1)[:, -1] + 0.0
-    den = np.sqrt(np.cumsum(e * e, axis=1)[:, -1]) * np.sqrt(np.cumsum(q * q)[-1])
+    e = flat.reshape(-1, d)
+    dots = np.zeros(len(e))
+    sq = np.zeros(len(e))
+    for j in range(d):
+        # widen explicitly: float32 * a numpy float64 scalar is float32
+        col = e[:, j].astype(np.float64)
+        dots += col * q[j]
+        sq += col * col
+    den = np.sqrt(sq) * np.sqrt(np.cumsum(q * q)[-1])
     with np.errstate(divide="ignore", invalid="ignore"):
         sims[fits] = np.where(den != 0, dots / den, np.nan)
     return sims

@@ -144,7 +144,7 @@ def cmd_export(args: argparse.Namespace) -> int:
             from mie_spark.schemas import EMBEDDING_TABLES
 
             for t in EMBEDDING_TABLES:
-                data[t] = c.store.table_arrow(t).to_pylist()
+                data[t] = c.export_rows(t)
         payload = json.dumps(data, default=str, indent=2)
     elif args.format in ("sql", "datalog"):
         # the reference's datalog script maps to this engine's SQL script

@@ -24,12 +24,30 @@ Scale stance (100 TB / 1000 executors):
   graphs where plain propagation needs O(n) rounds.
 - Convergence is detected with a cheap aggregate action per round, not
   ``collect()`` of the labels.
+- The fixed-iteration rank operators (``pagerank``,
+  ``personalized_pagerank``, ``hits``) first ask the optimizer how big
+  the edge list is. When its size estimate is at most the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` — the size the session
+  already agrees to collect on the driver for a broadcast join — the
+  edges are collected once and the recurrence runs as numpy
+  scatter-adds over one array per vertex-state column (Pregelix's
+  "state stays put between supersteps", taken to the driver). Each
+  Spark superstep otherwise costs a plan, a checkpoint and a job
+  whatever the graph size: a 200-node supplier graph took 17 jobs and
+  about 3 s as a loop. Above the threshold (or with it at -1) the
+  DataFrame loop below is the only path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 from mie_spark.operators.pregel import (
@@ -45,6 +63,122 @@ def _undirect(edges: DataFrame) -> DataFrame:
     fwd = edges.select(F.col("src"), F.col("dst"))
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev)
+
+
+class _SmallGraph(NamedTuple):
+    """An edge list collected to the driver, nodes mapped to 0..N-1.
+
+    ``src``/``dst`` index ``nodes`` (a NULL endpoint indexes the NULL
+    node, which the Spark loop also counts); ``live_src`` marks edges
+    whose src is not NULL, ``live`` edges with both ends not NULL — the
+    only edges whose messages reach a vertex, because the loop's
+    equi-joins never match a NULL key."""
+
+    node_field: StructField
+    nodes: pa.Array
+    src: np.ndarray
+    dst: np.ndarray
+    live_src: np.ndarray
+    live: np.ndarray
+    seeds: pa.Array | None
+
+
+def _small_graph(
+    edges: DataFrame, sources: DataFrame | None = None
+) -> _SmallGraph | None:
+    """Collect ``edges`` (and ``sources``) in one action when the
+    optimizer's size estimate of both together is at most the session's
+    broadcast threshold; None means run the Spark loop."""
+    spark = edges.sparkSession
+    # the long form: the string conf reads "10485760b"; -1 means never
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    frames = [edges] if sources is None else [edges, sources]
+    est = sum(
+        int(f._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        for f in frames
+    )
+    if limit < 0 or est > limit:
+        return None
+    node_field = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .schema["node"]
+    )
+    t = node_field.dataType
+    rows = edges.select(
+        F.col("src").cast(t).alias("src"),
+        F.col("dst").cast(t).alias("dst"),
+        F.lit(False).alias("seed"),
+    )
+    if sources is not None:
+        # one action for both inputs: the seeds ride in src
+        rows = rows.unionByName(
+            sources.select(
+                F.col("node").cast(t).alias("src"),
+                F.lit(None).cast(t).alias("dst"),
+                F.lit(True).alias("seed"),
+            )
+        )
+    tbl = rows.toArrow()
+    is_seed = tbl.column("seed")
+    e = tbl.filter(pc.invert(is_seed))
+    src = e.column("src").combine_chunks()
+    dst = e.column("dst").combine_chunks()
+    nodes = pc.unique(pa.concat_arrays([src, dst]))
+
+    def index(a: pa.Array) -> np.ndarray:
+        return pc.index_in(a, nodes).to_numpy(zero_copy_only=False).astype(np.intp)
+
+    live_src = src.is_valid().to_numpy(zero_copy_only=False)
+    return _SmallGraph(
+        node_field=node_field,
+        nodes=nodes,
+        src=index(src),
+        dst=index(dst),
+        live_src=live_src,
+        live=live_src & dst.is_valid().to_numpy(zero_copy_only=False),
+        seeds=(
+            None
+            if sources is None
+            else pc.unique(tbl.filter(is_seed).column("src").combine_chunks())
+        ),
+    )
+
+
+def _driver_frame(
+    spark: SparkSession,
+    g: _SmallGraph,
+    cols: dict[str, np.ndarray],
+    nullable: bool,
+) -> DataFrame:
+    """(node, *cols) as a DataFrame with the Spark loop's schema."""
+    schema = StructType(
+        [g.node_field]
+        + [StructField(c, DoubleType(), nullable) for c in cols]
+    )
+    data = {"node": g.nodes}
+    # NaN stands for the loop's NULL (x / 0.0 outside ANSI mode)
+    data.update({c: pa.array(v, from_pandas=True) for c, v in cols.items()})
+    return spark.createDataFrame(pa.table(data), schema)
+
+
+def _rank_driver(
+    g: _SmallGraph,
+    rank: np.ndarray,
+    teleport: np.ndarray,
+    iterations: int,
+    damping: float,
+) -> np.ndarray:
+    """rank_{i+1} = teleport + d·Σ_{u→v} rank_i(u)/outdeg(u), the loop's
+    per-element arithmetic; a NULL-dst edge counts in outdeg but its
+    message is dropped, as the loop's left join drops it."""
+    n = len(g.nodes)
+    outdeg = np.bincount(g.src[g.live_src], minlength=n).astype(np.float64)
+    s, d = g.src[g.live], g.dst[g.live]
+    for _ in range(iterations):
+        contrib = np.bincount(d, weights=rank[s] / outdeg[s], minlength=n)
+        rank = teleport + damping * contrib
+    return rank
 
 
 def connected_components(
@@ -197,10 +331,29 @@ def pagerank(
     mie_spark/queries/graph.py implements the identical recurrence, so
     the two engines agree bit-for-bit up to float rounding.
 
-    One shuffle per iteration (groupBy dst); the degree table is
+    When the optimizer's size estimate of ``edges`` is at most the
+    session's ``spark.sql.autoBroadcastJoinThreshold``, the edges are
+    collected once and the recurrence runs on the driver as numpy
+    scatter-adds (one Spark action in all, instead of a plan, a
+    checkpoint and a job per superstep); the result has the loop's
+    schema and its ranks up to summation order. Above the threshold:
+    one shuffle per iteration (groupBy dst); the degree table is
     computed once and re-joined — at scale both sides are partitioned
     by node id so AQE keeps the join co-located.
     """
+    g = _small_graph(edges)
+    if g is not None:
+        n = len(g.nodes)
+        rank = np.zeros(0)  # empty graph: empty ranks, not a ZeroDivisionError
+        if n:
+            rank = _rank_driver(
+                g,
+                np.full(n, 1.0 / n),
+                np.full(n, (1.0 - damping) / n),
+                iterations,
+                damping,
+            )
+        return _driver_frame(edges.sparkSession, g, {"rank": rank}, False)
     all_nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -271,7 +424,21 @@ def personalized_pagerank(
     checkpoints — which is the point of the primitive: a new
     vertex-centric algorithm is a new ``step`` closure, not a new loop.
     The teleport vector is computed once (broadcast indicator join) and
-    reused every superstep."""
+    reused every superstep. A NULL source counts in |S| but teleports
+    nowhere, as the indicator join never matches it.
+
+    Below the session's broadcast threshold (the estimate of ``edges``
+    plus ``sources``) both are collected in one action and the
+    recurrence runs on the driver, exactly as :func:`pagerank` does."""
+    g = _small_graph(edges, sources)
+    if g is not None:
+        ns = len(g.seeds)
+        if ns == 0:
+            raise ValueError("personalized_pagerank requires a non-empty source set")
+        hit = pc.is_in(g.nodes, value_set=g.seeds, skip_nulls=True)
+        tele = np.where(hit.to_numpy(zero_copy_only=False), 1.0, 0.0) / ns
+        rank = _rank_driver(g, tele, (1.0 - damping) * tele, iterations, damping)
+        return _driver_frame(edges.sparkSession, g, {"rank": rank}, True)
     all_nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -539,7 +706,32 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     src→dst into auth, auth flows dst→src into hub) + the ``pregel``
     runner with lazy checkpoints. One superstep = the two
     triplet-join shuffles + one node-keyed reduce; state is 3 columns
-    per node, never materialized on the driver."""
+    per node, never materialized on the driver — unless the edge list's
+    size estimate is at most the session's broadcast threshold, where
+    the edges are collected once and the same Jacobi update runs as
+    numpy scatter-adds (see :func:`pagerank`). A zero L1 norm gives
+    NULL scores, as the loop's double division by zero does outside
+    ANSI mode."""
+    g = _small_graph(edges)
+    if g is not None:
+        n = len(g.nodes)
+        hub, auth = np.ones(n), np.ones(n)
+        s, d = g.src[g.live], g.dst[g.live]
+        for _ in range(iterations):
+            hub, auth = (
+                np.bincount(s, weights=auth[d], minlength=n),
+                np.bincount(d, weights=hub[s], minlength=n),
+            )
+        hn, an = hub.sum(), auth.sum()
+        return _driver_frame(
+            edges.sparkSession,
+            g,
+            {
+                "hub": hub / hn if hn else np.full(n, np.nan),
+                "auth": auth / an if an else np.full(n, np.nan),
+            },
+            True,
+        )
     all_nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))

@@ -700,3 +700,38 @@ def test_exports_equal_the_spark_collect_form_and_run_no_spark_job(
     assert by_key(json.loads(out.read_text())) == by_key(
         json.loads(json.dumps({**want, **want_emb}, default=str))
     )
+
+
+def test_exports_are_byte_stable_across_commit_order(spark, monkeypatch):
+    """Every export emits each table's rows sorted by its key columns:
+    the same rows, committed in one batch in one store and in reversed,
+    smaller batches in another, export byte-equal (the store's own row
+    order follows which buckets each commit rewrote)."""
+    monkeypatch.setattr("mie_spark.api.client.now_s", lambda: 1_700_000_000)
+    facts = [{"content": f"fact {i:02d}", "category": "technical"} for i in range(24)]
+    ents = [{"name": f"thing {i}", "kind": "technology"} for i in range(6)]
+    one = MieClient(spark, embedding_dim=4)
+    many = MieClient(spark, embedding_dim=4)
+    one.import_json({"mie_fact": facts, "mie_entity": ents})
+    for i in range(0, len(facts), 5):
+        many.import_json({"mie_fact": facts[::-1][i : i + 5]})
+    many.import_json({"mie_entity": ents[::-1]})
+    data = one.export_json()
+    fids = sorted(f["id"] for f in data["mie_fact"])
+    eids = sorted(e["id"] for e in data["mie_entity"])
+    edges = [(fids[i], eids[i % len(eids)]) for i in range(len(fids))]
+    for f, e in edges:
+        one.add_relationship("mie_fact_entity", f, e)
+    for f, e in reversed(edges):
+        many.add_relationship("mie_fact_entity", f, e)
+
+    def dumps(c: MieClient) -> list[str]:
+        graph = c.export_graph(include_embeddings=True)
+        graph.pop("exported_at")
+        return [
+            json.dumps(c.export_json(), default=str),
+            json.dumps(graph, default=str),
+            c.export_sql_script(),
+        ]
+
+    assert dumps(one) == dumps(many)

@@ -6,6 +6,9 @@ box): for each loop query, run arm A (spark.mie.graph.loopAdaptive=true
 job) and arm B (default — AQE off inside the loop, the whole
 fixed-iteration chain executes as one job) back to back, N rounds,
 noop sink. One JSON line per query with both arms' samples + medians.
+g_pagerank, g_ppr and g_hits are not in the default list: their edge
+lists fall under the session's broadcast threshold at sf0.1, so they
+run on the driver and never enter the loop either arm would change.
 
 Usage: [SPARK_GRAFT_SF_DIR=...] python tools_r14_pregel_ab.py [names...]
 """
@@ -25,9 +28,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROUNDS = max(1, int(os.environ.get("R14_AB_ROUNDS", "4")))
 
 DEFAULT = [
-    "g_pagerank",
-    "g_ppr",
-    "g_hits",
     "g_labelprop",
     "g_mis",
     "g_connected_components",
