@@ -167,13 +167,10 @@ class MieClient:
         path: str | None = None,
         embedder=None,
         embedding_dim: int = 4,
-        merge_buckets: int = 16,
     ):
         self.spark = spark
         self.embedder = embedder or MockEmbeddingProvider(embedding_dim)
-        self.store = MieStore(
-            spark, path, embedding_dim=embedding_dim, merge_buckets=merge_buckets
-        )
+        self.store = MieStore(spark, path, embedding_dim=embedding_dim)
 
     @classmethod
     def from_config(cls, spark: SparkSession, cfg=None) -> "MieClient":

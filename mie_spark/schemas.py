@@ -135,7 +135,7 @@ EMBEDDING_TABLES: dict[str, str] = {
 # schema): table -> (schema, key columns). These back engine features
 # that need transactional keyed storage — e.g. the exactly-once
 # streaming rollup keeps its aggregate state AND its per-batch commit
-# ledger here so both land in ONE atomic_upsert_dfs commit.
+# ledger here so both land in ONE atomic_upsert_rows commit.
 AUX_TABLES: dict[str, tuple[StructType, list[str]]] = {
     "mie_rollup_hourly": (
         StructType(

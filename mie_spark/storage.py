@@ -25,18 +25,12 @@ Reads take one of two paths over the same snapshot files:
   the ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) use
   it, and so do the JSON and SQL-script exports. Both paths apply the same schema-evolution contract.
 
-Writes take one of two merge paths by input kind, into the same
-snapshot layout:
-
-- row batches (:meth:`MieStore.atomic_upsert_rows`, every agent-sized
-  write) already live on the driver, so the driver merges them with
-  pyarrow: read the touched buckets' part files, drop the batch's keys,
-  append the batch, write one part file per bucket — no Spark job;
-- DataFrames (:meth:`MieStore.atomic_upsert_dfs`, the sink of the
-  exactly-once streaming rollup)
-  merge as one Spark plan (anti-join on keys ∪ new rows) whose write
-  streams straight to snapshot N+1, so they scale with the cluster,
-  not the driver.
+Writes take one path: :meth:`MieStore.atomic_upsert_rows` merges row
+batches on the driver with pyarrow — read the touched buckets' part
+files, drop the batch's keys, append the batch, write one part file per
+bucket — no Spark job. The agent tools, imports and meta writes call it,
+and so does the exactly-once streaming rollup, which collects its
+micro-batch's merged state (one row per touched key) to the driver.
 
 Every write (upsert, restore) prepares invisible snapshots and commits
 them through one multi-table manifest rename (:meth:`MieStore._commit_txn`, poor-man's
@@ -48,8 +42,10 @@ re-open via table() for fresh reads (the same contract as Delta's
 VACUUM horizon, just shorter).
 
 Snapshots are PARTITIONED by a stable key-hash bucket (``bkt=K``
-subdirs, ``merge_buckets`` of them; Spark's ``xxhash64`` on the driver
-side too, see :func:`_key_bucket`): a merge reads and rewrites ONLY
+subdirs, ``merge_buckets`` of them; Spark's
+``pmod(xxhash64(keys), merge_buckets)``, computed on the driver by
+:func:`_key_bucket`, so stores an earlier build's Spark merge wrote keep
+their layout): a merge reads and rewrites ONLY
 the buckets the batch touches and hard-links every untouched bucket's
 files from the previous snapshot — O(batch) I/O per commit instead of
 O(table), which is the difference between a usable and an unusable
@@ -189,12 +185,12 @@ def _read_arrow(table: str, files: list[str]):  # noqa: ANN202
 
 # -- driver-side bucket hash -----------------------------------------------
 #
-# A pure-Python twin of MieStore._bkt, i.e. Spark's
+# A pure-Python twin of Spark's
 # ``pmod(xxhash64(k1, k2, ...), merge_buckets)``: XXH64 with seed 42,
 # each non-NULL key column hashed with the previous column's hash as
 # its seed (NULLs are skipped), strings as their UTF-8 bytes and longs
-# as 8 little-endian bytes. Driver-merged rows land in exactly the
-# bucket a Spark merge would put them in.
+# as 8 little-endian bytes. Stores written by earlier builds filed rows
+# with Spark's hash, so merged rows must land in exactly that bucket.
 
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -244,8 +240,8 @@ def _xxh64(data: bytes, seed: int) -> int:
 
 
 def _key_bucket(key: tuple, n: int) -> int:
-    """The ``bkt`` MieStore._bkt gives a row with these key values
-    (strings and longs, the key types of schemas.py)."""
+    """The ``bkt`` of a row with these key values (strings and longs,
+    the key types of schemas.py)."""
     h = 42
     for v in key:
         if v is not None:
@@ -276,9 +272,9 @@ class MieStore:
         # stable hash of the key columns, so a row's bucket never moves;
         # a merge batch touching B buckets rewrites B/merge_buckets of
         # the table instead of all of it. Size it so one bucket's data
-        # fits an executor comfortably at the deployment's table size
-        # (16 is right for memory-graph scale; a lake deployment would
-        # use hundreds).
+        # fits the driver comfortably at the deployment's table size (a
+        # merge holds one touched bucket plus the batch; 16 is right
+        # for memory-graph scale).
         self.merge_buckets = merge_buckets
         # Writers fully serialize, matching the reference's single
         # RWMutex over the DB (storage/embedded.go:23-25,88-133): every
@@ -388,17 +384,6 @@ class MieStore:
         for stale in versions[:-2]:
             shutil.rmtree(os.path.join(tdir, stale), ignore_errors=True)
 
-    def _bkt(self, table: str):  # noqa: ANN202
-        """Stable key-hash bucket for the partitioned-merge layout: a
-        row's bucket is a pure function of its key columns, so it never
-        moves across rewrites and both sides of a merge agree on it."""
-        from pyspark.sql import functions as F
-
-        keys = key_columns(table)
-        return F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.merge_buckets)
-        ).cast("int")
-
     def _table_has_no_snapshot(self, name: str) -> bool:
         """True when a table has no committed, non-empty
         snapshot — i.e. ``table(name)`` would return
@@ -500,7 +485,7 @@ class MieStore:
 
     # -- writes -----------------------------------------------------------
     #
-    # Every write prepares invisible snapshots (_merge_and_write,
+    # Every write prepares invisible snapshots (_merge_arrow,
     # restore) and publishes them through _commit_txn — one
     # commit path, so a single-table write and an N-table transaction
     # have the same crash and visibility guarantees.
@@ -588,14 +573,13 @@ class MieStore:
             self._merge_commit(batches)
             return {t: b.num_rows for t, b in batches.items()}, values
 
-    def _merge_commit(self, frames: dict[str, Any]) -> None:
+    def _merge_commit(self, batches: dict[str, Any]) -> None:
         """Prepare every table's merged snapshot, then publish them all
         with one :meth:`_commit_txn`. Callers hold the write lock; each
-        frame (Arrow table or DataFrame) is key-unique and in canonical
-        column order."""
+        Arrow table is key-unique and in canonical column order."""
         versions: dict[str, str] = {}
-        for table, new in sorted(frames.items()):
-            v = self._merge_and_write(table, new)
+        for table, new in sorted(batches.items()):
+            v = self._merge_arrow(table, new)
             if v is not None:
                 versions[table] = v
         self._commit_txn(versions)
@@ -623,53 +607,17 @@ class MieStore:
             self._commit_snapshot(table, version)
         os.remove(os.path.join(self.path, TXN_FILE))
 
-    def atomic_upsert_dfs(self, updates: dict[str, DataFrame]) -> dict[str, int]:
-        """DataFrame form of :meth:`atomic_upsert_rows` — the streaming
-        foreachBatch sink shape: a micro-batch that lands rows in N
-        tables (the exactly-once rollup's state and its commit marker)
-        commits them with ONE manifest rename, so a reader never sees
-        one without the other (or a crash mid-batch expose half a
-        batch). Each input is localCheckpoint'ed once (after key-dedup):
-        the merge write and the returned count both consume it, so an
-        expensive lineage never executes twice. Returned counts are
-        unique-KEY counts after intra-batch dedup, the same contract as
-        :meth:`atomic_upsert_rows`."""
-        updates = dict(updates)
-        if not updates:
-            return {}
-        with self._write_lock:
-            frames: dict[str, DataFrame] = {}
-            counts: dict[str, int] = {}
-            for table, df in updates.items():
-                deduped = df.dropDuplicates(key_columns(table)).localCheckpoint()
-                frames[table] = deduped.select(*[f.name for f in table_schema(table)])
-                # unique-key count, matching atomic_upsert_rows
-                counts[table] = deduped.count()
-            self._merge_commit(frames)
-            return counts
-
-    def _merge_and_write(self, table: str, new: Any) -> str | None:
-        """Prepare one table's merged snapshot, not yet committed: the
-        current snapshot with ``new``'s keys replaced by ``new``'s rows.
-        ``new`` is key-unique and in canonical column order: an Arrow
-        table (a row batch, merged on the driver by :meth:`_merge_arrow`)
-        or a DataFrame (merged by one Spark plan, :meth:`_merge_df`).
-        Returns the prepared version, or None for an empty batch."""
-        if isinstance(new, DataFrame):
-            return self._merge_df(table, new)
-        return self._merge_arrow(table, new)
-
     def _merge_arrow(self, table: str, new: Any) -> str | None:
-        """Driver-side bucket MERGE of an Arrow batch: for each bucket
-        the batch touches, read the current snapshot's ``bkt=K`` part
-        files with pyarrow, drop the batch's keys (last write wins),
-        append the batch's rows of that bucket and write ONE part file
-        into the next snapshot; untouched buckets are hard-linked. This
-        is the layout a Spark merge writes (each row goes to the bucket
-        :func:`_key_bucket` gives it, the twin of ``_bkt``), with no
-        Spark job; peak driver memory is one touched bucket plus the
-        batch. A snapshot that predates the bucketed layout is read
-        whole and rewritten bucketed."""
+        """Prepare one table's merged snapshot, not yet committed: for
+        each bucket the batch touches, read the current snapshot's
+        ``bkt=K`` part files with pyarrow, drop the batch's keys (last
+        write wins), append the batch's rows of that bucket and write
+        ONE part file into the next snapshot; untouched buckets are
+        hard-linked. Each row goes to the bucket :func:`_key_bucket`
+        gives it, with no Spark job; peak driver memory is one touched
+        bucket plus the batch. A snapshot that predates the bucketed
+        layout is read whole and rewritten bucketed. Returns the
+        prepared version, or None for an empty batch."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -695,7 +643,7 @@ class MieStore:
             rows = batch.get(b)
             if rows is not None and old is not None:
                 replaced = set(zip(*(rows[k].to_pylist() for k in keys)))
-                # a NULL key never matches, as in the Spark anti-join
+                # a NULL key never matches, as in a SQL anti-join
                 keep = [
                     None in k or k not in replaced
                     for k in zip(*(old[c].to_pylist() for c in keys))
@@ -724,43 +672,6 @@ class MieStore:
             pa.int32(),
         )
         return {b: t.filter(pc.equal(bkts, b)) for b in set(bkts.to_pylist())}
-
-    def _merge_df(self, table: str, new: DataFrame) -> str | None:
-        """Bucket-pruned MERGE of a DataFrame: current snapshot
-        anti-join keys(new) ∪ new, restricted to the buckets the batch
-        touches — ONE Spark plan whose scan partition-prunes to the
-        touched ``bkt=K`` dirs and whose write, streamed to the next
-        snapshot (nothing passes through the driver), produces only
-        those dirs; untouched buckets are hard-linked from the previous
-        snapshot. O(batch) I/O per commit, not O(table). Falls back to a
-        full (bucketed) rewrite when the current snapshot predates the
-        bucketed layout or the batch touches every bucket anyway."""
-        from pyspark.sql import functions as F
-
-        keys = key_columns(table)
-        new = new.withColumn("bkt", self._bkt(table))
-        prev = self._snapshot_dir(table)
-        touched = None
-        if prev is not None and self._part_files(prev):
-            touched = sorted(r["bkt"] for r in new.select("bkt").distinct().collect())
-            if not touched:  # empty batch: nothing to merge
-                return None
-            old = self._read_snapshot(table, prev)
-            if self._is_bucketed(prev) and len(touched) < self.merge_buckets:
-                old = old.filter(F.col("bkt").isin(touched))
-            else:
-                touched = None  # rewrite the whole table, link nothing
-            new = (
-                _canon_select(old, table_schema(table))
-                .withColumn("bkt", self._bkt(table))
-                .join(new.select(*keys).dropDuplicates(keys), keys, "left_anti")
-                .unionByName(new)
-            )
-        snap, version = self._next_snapshot(table)
-        new.write.mode("overwrite").partitionBy("bkt").parquet(snap)
-        if touched is not None:
-            self._link_untouched(prev, snap, touched)
-        return version
 
     # -- meta KV (storage/embedded.go:194-228) ------------------------------
 

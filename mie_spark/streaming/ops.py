@@ -1082,7 +1082,6 @@ def make_rollup_apply(store: Any, stream_id: str = "rollup"):
     def _apply(batch_df: "DataFrame", batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         already = (
             store.table("mie_stream_commits")
             .filter(
@@ -1116,15 +1115,21 @@ def make_rollup_apply(store: Any, stream_id: str = "rollup"):
                 F.coalesce(F.col("value_cents"), F.lit(0)) + F.col("dc")
             ).alias("value_cents"),
         )
-        from mie_spark.schemas import table_schema
         from mie_spark.storage import now_s
 
-        marker = spark.createDataFrame(
-            [(stream_id, int(batch_id), now_s())],
-            schema=table_schema("mie_stream_commits"),
-        )
-        store.atomic_upsert_dfs(
-            {"mie_rollup_hourly": merged, "mie_stream_commits": marker}
+        # one row per (hour, event_type) the batch touches: small
+        # enough to merge on the driver
+        store.atomic_upsert_rows(
+            {
+                "mie_rollup_hourly": [r.asDict() for r in merged.collect()],
+                "mie_stream_commits": [
+                    {
+                        "stream_id": stream_id,
+                        "batch_id": int(batch_id),
+                        "committed_at": now_s(),
+                    }
+                ],
+            }
         )
 
     return _apply
@@ -1142,7 +1147,7 @@ def stream_exactly_once_rollup(
     bit_or), so exactness needs a commit ledger, and the ledger is only
     sound if it moves WITH the state: each micro-batch's merged rollup
     rows and its (stream_id, batch_id) marker land through ONE
-    atomic_upsert_dfs manifest commit.
+    atomic_upsert_rows manifest commit.
 
     - Replayed batch (recovery rerun, at-least-once delivery): the
       marker is already visible, the batch no-ops — counts never
@@ -1151,8 +1156,9 @@ def stream_exactly_once_rollup(
       construction — both are snapshots behind one manifest rename, so
       either the batch fully happened or it fully didn't, and the
       retry applies it exactly once.
-    - State is O(hours × types) rows; each batch rewrites only the
-      touched key-hash buckets (the store's MERGE), not the table.
+    - State is O(hours × types) rows; each batch collects only the
+      keys it touches and rewrites only their key-hash buckets (the
+      store's MERGE), not the table.
 
     batch_id is stable across recovery reruns of the SAME checkpointed
     query, which is the replay class this defends against; re-running

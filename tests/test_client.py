@@ -628,13 +628,12 @@ def test_store_with_zone_and_pin_files_still_works(spark, tmp_path):
     """Stores written by earlier builds carry a ``_ZONES.json`` zone-map
     sidecar in every snapshot dir and may carry a ``_PINNED`` list in a
     table dir. Such a store opens, reads the same rows through both
-    reads, merges through both merge paths and round-trips through
-    backup and restore. GC no longer honours the pin file: a version it
+    reads, merges row commits and round-trips through backup and
+    restore. GC no longer honours the pin file: a version it
     lists is removed once two newer commits exist."""
     import json
     import os
 
-    from mie_spark import schemas as S
     from mie_spark.storage import MieStore
 
     path = str(tmp_path / "old")
@@ -664,13 +663,9 @@ def test_store_with_zone_and_pin_files_still_works(spark, tmp_path):
 
     store.atomic_upsert_rows({"mie_fact": [{"id": "fact:1", "content": "rows"}]})
     assert os.path.isdir(os.path.join(path, "mie_fact", pinned))
-    frame = spark.createDataFrame(
-        [tuple({"id": "fact:9", "content": "df"}.get(f.name) for f in S.FACT)],
-        S.FACT,
-    )
-    store.atomic_upsert_dfs({"mie_fact": frame})
+    store.atomic_upsert_rows({"mie_fact": [{"id": "fact:9", "content": "again"}]})
     assert not os.path.isdir(os.path.join(path, "mie_fact", pinned))
-    expected.update({"fact:1": "rows", "fact:9": "df"})
+    expected.update({"fact:1": "rows", "fact:9": "again"})
     assert {r["id"]: r["content"] for r in store.table("mie_fact").collect()} == expected
 
     bdir = str(tmp_path / "bak")
@@ -861,7 +856,7 @@ def test_atomic_upsert_crash_before_commit_leaves_old_state(spark, tmp_path):
     )
 
     calls = {"n": 0}
-    orig = store._merge_and_write
+    orig = store._merge_arrow
 
     def crashing(table, new):
         out = orig(table, new)
@@ -870,7 +865,7 @@ def test_atomic_upsert_crash_before_commit_leaves_old_state(spark, tmp_path):
             raise RuntimeError("injected crash before manifest rename")
         return out
 
-    store._merge_and_write = crashing
+    store._merge_arrow = crashing
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected crash"):
@@ -1032,56 +1027,6 @@ def test_atomic_upsert_concurrent_writers_serialize(spark, tmp_path):
     from mie_spark.storage import TXN_FILE
 
     assert not os.path.exists(os.path.join(str(tmp_path / "conc"), TXN_FILE))
-
-
-def test_atomic_upsert_dfs_crash_exposes_neither_table(spark, tmp_path):
-    """DataFrame-transaction variant (the streaming micro-batch sink
-    shape): crash before the manifest rename leaves BOTH tables at
-    their old state — a reader can never see a fact whose embedding
-    batch didn't land."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mie_spark.storage import MieStore
-
-    path = str(tmp_path / "dftxn")
-    store = MieStore(spark, path=path, embedding_dim=4)
-    facts = spark.createDataFrame(
-        [("fact:a", "hello")], ["id", "content"]
-    ).select(
-        "id",
-        "content",
-        F.lit("general").alias("category"),
-        F.lit(0.8).cast("double").alias("confidence"),
-        F.lit("t").alias("source_agent"),
-        F.lit("").alias("source_conversation"),
-        F.lit(True).alias("valid"),
-        F.lit(0).cast("long").alias("created_at"),
-        F.lit(0).cast("long").alias("updated_at"),
-    )
-    embs = spark.createDataFrame(
-        [("fact:a", [0.1, 0.2, 0.3, 0.4])], "fact_id string, embedding array<float>"
-    )
-
-    orig = store._commit_txn
-    store._commit_txn = lambda versions: (_ for _ in ()).throw(
-        RuntimeError("injected crash before commit point")
-    )
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        store.atomic_upsert_dfs(
-            {"mie_fact": facts, "mie_fact_embedding": embs}
-        )
-    store._commit_txn = orig
-    reader = MieStore(spark, path=path, embedding_dim=4)
-    assert reader.table("mie_fact").count() == 0
-    assert reader.table("mie_fact_embedding").count() == 0
-
-    out = store.atomic_upsert_dfs(
-        {"mie_fact": facts, "mie_fact_embedding": embs}
-    )
-    assert out == {"mie_fact": 1, "mie_fact_embedding": 1}
-    assert reader.table("mie_fact").count() == 1
-    assert reader.table("mie_fact_embedding").count() == 1
 
 
 def test_schema_evolution_add_column_read_and_merge(spark, tmp_path):
@@ -1420,17 +1365,17 @@ def test_store_crash_in_embedding_merge_exposes_nothing(spark, tmp_path):
 
     path = str(tmp_path / "crash")
     client = MieClient(spark, path=path, embedding_dim=4)
-    orig = client.store._merge_and_write
+    orig = client.store._merge_arrow
 
     def crashing(table, new):
         if table == "mie_fact_embedding":
             raise RuntimeError("injected crash in embedding merge")
         return orig(table, new)
 
-    client.store._merge_and_write = crashing
+    client.store._merge_arrow = crashing
     with pytest.raises(RuntimeError, match="injected crash"):
         tools.store(client, {"type": "fact", "content": "half written", "category": "general"})
-    client.store._merge_and_write = orig
+    client.store._merge_arrow = orig
     for store in (client.store, MieStore(spark, path=path, embedding_dim=4)):
         assert store.table("mie_fact").count() == 0
         assert store.table("mie_fact_embedding").count() == 0

@@ -88,7 +88,10 @@ def _write_snapshot(spark, store, table: str, rows, bucketed: bool) -> None:  # 
     )
     snap, version = store._next_snapshot(table)
     if bucketed:
-        df.withColumn("bkt", store._bkt(table)).write.partitionBy("bkt").parquet(snap)
+        # the layout earlier builds' Spark merge wrote
+        keys = [F.col(k) for k in S.key_columns(table)]
+        bkt = F.pmod(F.xxhash64(*keys), F.lit(store.merge_buckets)).cast("int")
+        df.withColumn("bkt", bkt).write.partitionBy("bkt").parquet(snap)
     else:
         df.coalesce(2).write.parquet(snap)
     with open(os.path.join(store.path, table, "_CURRENT"), "w") as fh:

@@ -1,12 +1,12 @@
-"""The driver-side row commit path of MieStore against its Spark twin.
+"""MieStore's row commit path: ``atomic_upsert_rows``.
 
-``atomic_upsert_rows`` merges row batches on the driver with pyarrow and
-files each row under ``bkt=K`` with a pure-Python XXH64; the streaming
-path (``atomic_upsert_dfs``) merges DataFrames with one Spark plan and
-Spark's own ``pmod(xxhash64(keys), merge_buckets)``. These tests pin
-the two to each other: the bucket hash on every key type, the merged
-table contents and the snapshot layout — and that an agent-sized write
-or meta read runs no Spark job at all.
+The store merges row batches on the driver with pyarrow and files each
+row under ``bkt=K`` with a pure-Python XXH64. Stores written by earlier
+builds filed rows with Spark's ``pmod(xxhash64(keys), merge_buckets)``,
+so these tests pin the driver hash to Spark's on every key type, the
+merged tables to a last-write-wins model, and the snapshot layout to
+Spark's hash — and that an agent-sized write or meta read runs no Spark
+job at all.
 """
 
 from __future__ import annotations
@@ -60,13 +60,19 @@ def _values(dtype) -> list:  # noqa: ANN001
     return LONGS
 
 
+def _spark_bkt(table: str, n: int):  # noqa: ANN202
+    """Spark's bucket of a row: the hash stores written by earlier
+    builds' Spark merge filed every row with."""
+    keys = [F.col(k) for k in S.key_columns(table)]
+    return F.pmod(F.xxhash64(*keys), F.lit(n)).cast("int")
+
+
 def _assert_buckets_match(spark, table: str, rows: list[tuple]) -> None:
-    """Spark's _bkt for every merge_buckets in BUCKET_COUNTS, in one
+    """Spark's bucket for every merge_buckets in BUCKET_COUNTS, in one
     job, against the driver twin."""
-    stores = [MieStore(spark, merge_buckets=n) for n in BUCKET_COUNTS]
     df = spark.createDataFrame(rows, _key_schema(table))
     got = df.select(
-        *df.columns, *[s._bkt(table).alias(f"b{n}") for s, n in zip(stores, BUCKET_COUNTS)]
+        *df.columns, *[_spark_bkt(table, n).alias(f"b{n}") for n in BUCKET_COUNTS]
     ).collect()
     assert len(got) == len(rows)
     for r in got:
@@ -112,7 +118,7 @@ def test_key_bucket_property(spark, table, strategy):
     check()
 
 
-# -- differential: driver merge vs Spark merge -------------------------------
+# -- driver merge vs a last-write-wins model ---------------------------------
 
 TABLES = ("mie_fact", "mie_fact_embedding", "mie_fact_entity", "mie_stream_commits")
 
@@ -146,32 +152,38 @@ def _batch(ids: list[int], content: str = "c") -> dict[str, list[dict]]:
     }
 
 
-def _frames(spark, batch: dict[str, list[dict]]) -> dict:
-    out = {}
-    for table, rows in batch.items():
-        schema = S.table_schema(table)
-        out[table] = spark.createDataFrame(
-            [tuple(r.get(f.name) for f in schema) for r in rows], schema
-        )
-    return out
-
-
 def _contents(store: MieStore, table: str) -> list[tuple]:
     return sorted(
         (tuple(r) for r in store.table(table).collect()), key=repr
     )
 
 
-def test_driver_merge_matches_spark_merge(spark, tmp_path):
-    """One batch sequence through atomic_upsert_rows (driver) and
-    atomic_upsert_dfs (Spark): a first write under an older, narrower
-    schema (int created_at, float confidence), a merge into existing
-    buckets, an overwrite of existing keys with an intra-batch
-    duplicate, and a write that touches new and old buckets. Both
-    stores end with identical tables, and in the driver store every row
-    of a bkt=K file hashes to K under Spark's _bkt."""
+def _model_put(model: dict, batch: dict[str, list[dict]]) -> dict[str, int]:
+    """Last-write-wins by key, as sequential ``:put``: each table of
+    ``model`` maps a key tuple to its row in canonical column order.
+    Returns the batch's unique-key count per table."""
+    counts = {}
+    for table, rows in batch.items():
+        names = S.table_schema(table).names
+        seen = set()
+        for r in rows:
+            key = tuple(r[k] for k in S.key_columns(table))
+            model.setdefault(table, {})[key] = tuple(r.get(c) for c in names)
+            seen.add(key)
+        counts[table] = len(seen)
+    return counts
+
+
+def test_driver_merge_matches_model(spark, tmp_path):
+    """One batch sequence through atomic_upsert_rows against a
+    pure-Python last-write-wins model: a first write under an older,
+    narrower schema (int created_at, float confidence), a merge into
+    existing buckets, an overwrite of existing keys with an intra-batch
+    duplicate, and a write that touches new and old buckets. The store
+    ends with the model's tables, and every row of a bkt=K file hashes
+    to K under Spark's bucket hash."""
     driver = MieStore(spark, path=str(tmp_path / "driver"), merge_buckets=4)
-    spark_side = MieStore(spark, path=str(tmp_path / "spark"), merge_buckets=4)
+    model: dict = {}
     narrow = StructType(
         [
             StructField(
@@ -185,9 +197,7 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path):
     )
     with mock.patch.object(S, "NODE_TABLES", {**S.NODE_TABLES, "mie_fact": narrow}):
         first = _batch(list(range(0, 30)))
-        assert driver.atomic_upsert_rows(first) == spark_side.atomic_upsert_dfs(
-            _frames(spark, first)
-        )
+        assert driver.atomic_upsert_rows(first) == _model_put(model, first)
 
     dup = _batch([5, 6, 40])
     dup = {t: rows + rows[:1] for t, rows in dup.items()}  # exact duplicate row
@@ -197,16 +207,15 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path):
         _batch(list(range(25, 45)), content="new"),  # overwrites and inserts
     ]
     for batch in steps:
-        got = driver.atomic_upsert_rows(batch)
-        assert got == spark_side.atomic_upsert_dfs(_frames(spark, batch))
+        assert driver.atomic_upsert_rows(batch) == _model_put(model, batch)
 
     assert len(_contents(driver, "mie_fact")) == 45
     for table in TABLES:
-        assert _contents(driver, table) == _contents(spark_side, table), table
+        assert _contents(driver, table) == sorted(model[table].values(), key=repr), table
         snap = driver._snapshot_dir(table)
         misfiled = (
             driver._read_snapshot(table, snap)
-            .filter(F.col("bkt") != driver._bkt(table))
+            .filter(F.col("bkt") != _spark_bkt(table, driver.merge_buckets))
             .count()
         )
         assert misfiled == 0, table
@@ -215,7 +224,7 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path):
 def test_driver_merge_rewrites_pre_bucketing_snapshot(spark, tmp_path):
     """A snapshot written before the bucketed layout (flat part files,
     no bkt=K dirs) is read whole by the next row merge and rewritten
-    bucketed, with every row in the bucket Spark's _bkt gives it."""
+    bucketed, with every row in the bucket Spark's hash gives it."""
     path = str(tmp_path / "flat")
     store = MieStore(spark, path=path, merge_buckets=4)
     rows = _batch(list(range(12)))["mie_fact"]
@@ -234,7 +243,7 @@ def test_driver_merge_rewrites_pre_bucketing_snapshot(spark, tmp_path):
     assert by_id["fact:003"] == "new3" and by_id["fact:004"] == "c4"
     misfiled = (
         store._read_snapshot("mie_fact", snap)
-        .filter(F.col("bkt") != store._bkt("mie_fact"))
+        .filter(F.col("bkt") != _spark_bkt("mie_fact", store.merge_buckets))
         .count()
     )
     assert misfiled == 0

@@ -54,7 +54,7 @@ def test_foreach_batch_upsert_is_idempotent(spark, tmp_path):
             F.unix_seconds(F.col("ts")).alias("created_at"),
             F.unix_seconds(F.col("ts")).alias("updated_at"),
         )
-        store.atomic_upsert_dfs({"mie_fact": facts})
+        store.atomic_upsert_rows({"mie_fact": [r.asDict() for r in facts.collect()]})
 
     ev = read_events_stream(spark, SF)
     foreach_batch_upsert(ev, apply_batch)
