@@ -500,7 +500,9 @@ class MieClient:
         for table, t in nodes.items():
             emb_table, id_col = _EMBED_SOURCE[table]
             emb = self.store.table_arrow(emb_table)
-            emb = emb.filter(_in(emb[id_col], t["id"]))
+            keep = _in(emb[id_col], t["id"])
+            if not pc.all(keep).as_py():  # filtering copies every vector
+                emb = emb.filter(keep)
             sims = _cosine(emb["embedding"], q)
             parts.append(
                 pa.table(
@@ -1141,6 +1143,9 @@ def _first(t: Any) -> dict[str, Any] | None:
     return rows[0] if rows else None
 
 
+_COSINE_BLOCK = 2048  # rows per block of _cosine's fold
+
+
 def _cosine(emb: Any, q: np.ndarray) -> np.ndarray:
     """Cosine similarity of each vector in ``emb`` (an Arrow list
     column) to ``q``, bit-identical to Spark's ``cosine_sim``
@@ -1150,25 +1155,34 @@ def _cosine(emb: Any, q: np.ndarray) -> np.ndarray:
     vector or element, a length other than ``q``'s, a zero norm — so
     callers drop those rows.
 
-    The fold runs column by column over all rows at once, widening one
-    column at a time: its temporaries are O(rows), where widening the
-    whole (rows, d) block took several float64 copies of it (a 50k x
-    768 query drove peak RSS past 1.3 GB)."""
+    The fold runs column by column over blocks of at most
+    ``_COSINE_BLOCK`` rows, each flattened, widened and transposed once
+    so that a column is contiguous: every element still sees the same
+    left-to-right sequence of float64 operations, and the temporaries
+    stay one block in size (widening the whole (rows, d) table took
+    several float64 copies of it: a 50k x 768 query peaked past
+    1.3 GB)."""
     d = len(q)
     sims = np.full(len(emb), np.nan)
     fits = pc.fill_null(pc.equal(pc.list_value_length(emb), d), False)
     fits = fits.to_numpy(zero_copy_only=False)
     if d == 0 or not fits.any():
         return sims
-    flat = pc.list_flatten(emb.filter(pa.array(fits))).to_numpy(zero_copy_only=False)
-    e = flat.reshape(-1, d)
-    dots = np.zeros(len(e))
-    sq = np.zeros(len(e))
-    for j in range(d):
+    if not fits.all():  # filtering copies every vector
+        emb = emb.filter(pa.array(fits))
+    dots = np.zeros(len(emb))
+    sq = np.zeros(len(emb))
+    for lo in range(0, len(emb), _COSINE_BLOCK):
+        # flatten one block at a time: flattening a whole chunked
+        # column copies all of it
+        part = pc.list_flatten(emb.slice(lo, _COSINE_BLOCK))
+        e = part.to_numpy(zero_copy_only=False).reshape(-1, d)
         # widen explicitly: float32 * a numpy float64 scalar is float32
-        col = e[:, j].astype(np.float64)
-        dots += col * q[j]
-        sq += col * col
+        block = np.ascontiguousarray(e.T, dtype=np.float64)
+        bdots, bsq = dots[lo : lo + len(e)], sq[lo : lo + len(e)]
+        for j, col in enumerate(block):
+            bdots += col * q[j]
+            bsq += col * col
     den = np.sqrt(sq) * np.sqrt(np.cumsum(q * q)[-1])
     with np.errstate(divide="ignore", invalid="ignore"):
         sims[fits] = np.where(den != 0, dots / den, np.nan)

@@ -21,11 +21,14 @@ from __future__ import annotations
 
 import json
 import math
+import operator
 import os
 import random
 import time
 import urllib.request
 from dataclasses import dataclass
+
+import numpy as np
 
 _U64 = (1 << 64) - 1
 
@@ -71,6 +74,7 @@ class MockEmbeddingProvider:
 
     def __init__(self, dimension: int = 4):
         self.dimension = dimension
+        self._steps = np.arange(dimension, dtype=np.uint64) * np.uint64(7919)
 
     @staticmethod
     def _hash(text: str) -> int:
@@ -80,16 +84,18 @@ class MockEmbeddingProvider:
         return h
 
     def _deterministic(self, text: str) -> list[float]:
-        h = self._hash(text)
-        # the & _U64 wraparound BEFORE % 10000 matters: Go's uint64
-        # arithmetic wraps h + i*7919 mod 2^64 first, and
-        # 2^64 % 10000 = 7616 ≠ 0, so skipping the mask diverges from
-        # the reference mock for hashes within ~dim*7919 of 2^64
-        vec = [
-            float(((h + i * 7919) & _U64) % 10000) / 10000.0 * 2.0 - 1.0
-            for i in range(self.dimension)
-        ]
-        return _normalize(vec)
+        h = np.uint64(self._hash(text))
+        # uint64 arithmetic wraps h + i*7919 mod 2^64 BEFORE % 10000,
+        # as Go's does (2^64 % 10000 = 7616 ≠ 0, so skipping the wrap
+        # diverges from the reference mock for hashes within ~dim*7919
+        # of 2^64); the float steps run in the scalar formula's order
+        vals = ((h + self._steps) % np.uint64(10000)).astype(np.float64)
+        vals = vals / 10000.0 * 2.0 - 1.0
+        vec = vals.tolist()
+        # a sequential sum, as _normalize's: numpy's pairwise sum can
+        # differ in the last ulp
+        norm = math.sqrt(sum(map(operator.mul, vec, vec)))
+        return (vals / norm).tolist() if norm else vec
 
     def embed(self, texts: list[str]) -> list[list[float]]:
         return [self._deterministic(t) for t in texts]

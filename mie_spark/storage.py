@@ -23,7 +23,12 @@ Reads take one of two paths over the same snapshot files:
   on the driver with pyarrow into one Arrow table — no Spark job. The
   agent tools' reads (search, traversal, listing, point lookups) and
   the ``mie_meta`` key-value reads (:meth:`MieStore.meta_values`) use
-  it, and so do the JSON and SQL-script exports. Both paths apply the same schema-evolution contract.
+  it, and so do the JSON and SQL-script exports. Both paths apply the
+  same schema-evolution contract.
+
+Each store decodes a part file once: :class:`_DecodedParts` is an LRU
+of decoded files keyed by file identity, and the merge adds every file
+it writes, so no read after a commit decodes.
 
 Writes take one path: :meth:`MieStore.atomic_upsert_rows` merges row
 batches on the driver with pyarrow — read the touched buckets' part
@@ -69,6 +74,7 @@ import tempfile
 import threading
 import time
 import uuid
+from collections import OrderedDict
 from typing import Any
 
 import numpy as np
@@ -155,31 +161,95 @@ def _arrow_schema(table: str):  # noqa: ANN202
     return to_arrow_schema(table_schema(table))
 
 
-def _read_arrow(table: str, files: list[str]):  # noqa: ANN202
-    """Part files → one Arrow table in the canonical schema, the driver
-    twin of :meth:`MieStore._read_snapshot`'s schema-evolution contract:
-    columns a file predates arrive as typed NULLs, stale columns are
-    never read, narrower types (int->long, float->double) are up-cast."""
+# Decoded part files are kept per store, up to this many bytes of Arrow
+# buffers (least recently used first out). A warm agent read is then a
+# stat per part file; a 50k-fact 768-dim embedding table is ~150 MiB.
+_DECODED_BYTES = 256 << 20
+
+
+def _decode_part(path: str, schema):  # noqa: ANN001, ANN202
+    """One part file → an Arrow table in ``schema``, the driver twin of
+    :meth:`MieStore._read_snapshot`'s schema-evolution contract: columns
+    the file predates arrive as typed NULLs, stale columns are never
+    read, narrower types (int->long, float->double) are up-cast."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = _arrow_schema(table)
-    pieces = []
-    for path in files:
-        pf = pq.ParquetFile(path)
-        have = set(pf.schema_arrow.names)
-        t = pf.read(columns=[c for c in schema.names if c in have])
-        pieces.append(
-            pa.Table.from_arrays(
-                [
-                    t[f.name].cast(f.type)
-                    if f.name in have
-                    else pa.nulls(t.num_rows, f.type)
-                    for f in schema
-                ],
-                schema=schema,
-            )
+    pf = pq.ParquetFile(path)
+    have = set(pf.schema_arrow.names)
+    t = pf.read(columns=[c for c in schema.names if c in have])
+    return pa.Table.from_arrays(
+        [
+            t[f.name].cast(f.type) if f.name in have else pa.nulls(t.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+class _DecodedParts:
+    """One store's decoded part files, keyed by file identity: the
+    canonical schema they were decoded to (a store can be read under a
+    schema other than the one it was written with), the uuid basename
+    and ``(st_dev, st_ino, st_size, st_mtime_ns)``.
+
+    Part files are never modified: every write makes a new
+    ``part-<uuid4>.parquet`` and a snapshot's untouched buckets are
+    hard links to the same inodes. So a commit invalidates exactly the
+    files it replaced, whose entries age out of the LRU, and no
+    invalidation hook is needed. The basename guards against inode
+    reuse: GC frees inodes, and a new file can match a removed file's
+    ``(ino, size, mtime)`` within one clock tick."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._tables: OrderedDict = OrderedDict()
+        self._bytes = 0
+
+    @staticmethod
+    def _key(schema, path: str) -> tuple:  # noqa: ANN001
+        st = os.stat(path)
+        return (
+            schema.to_string(), os.path.basename(path),
+            st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns,
         )
+
+    def read(self, schema, path: str):  # noqa: ANN001, ANN201
+        key = self._key(schema, path)
+        with self._lock:
+            t = self._tables.get(key)
+            if t is not None:
+                self._tables.move_to_end(key)
+                return t
+        t = _decode_part(path, schema)
+        self._put(key, t)
+        return t
+
+    def add(self, schema, path: str, t) -> None:  # noqa: ANN001
+        """Write-through: ``t`` is exactly what was just written to
+        ``path``, in ``schema``."""
+        self._put(self._key(schema, path), t)
+
+    def _put(self, key: tuple, t) -> None:  # noqa: ANN001
+        if t.nbytes > _DECODED_BYTES:
+            return
+        with self._lock:
+            old = self._tables.pop(key, None)
+            if old is not None:
+                self._bytes -= old.nbytes
+            self._tables[key] = t
+            self._bytes += t.nbytes
+            while self._bytes > _DECODED_BYTES:
+                self._bytes -= self._tables.popitem(last=False)[1].nbytes
+
+
+def _read_arrow(table: str, files: list[str], parts: _DecodedParts):  # noqa: ANN202
+    """Part files → one Arrow table in the canonical schema, each file
+    decoded by :func:`_decode_part` unless ``parts`` holds it."""
+    import pyarrow as pa
+
+    schema = _arrow_schema(table)
+    pieces = [parts.read(schema, path) for path in files]
     return pa.concat_tables(pieces) if pieces else schema.empty_table()
 
 
@@ -282,6 +352,7 @@ class MieStore:
         # unserialized writers would lose one's rows. Reads need no lock
         # (snapshots are immutable; the pointer flip is atomic).
         self._write_lock = threading.RLock()
+        self._parts = _DecodedParts()
         os.makedirs(path, exist_ok=True)
         self._recover_txn()
         self.ensure_schema()
@@ -481,7 +552,7 @@ class MieStore:
         if name not in ALL_TABLES and name not in AUX_TABLES:
             raise KeyError(f"unknown table {name!r}")
         snap = self._snapshot_dir(name)
-        return _read_arrow(name, self._part_files(snap) if snap else [])
+        return _read_arrow(name, self._part_files(snap) if snap else [], self._parts)
 
     # -- writes -----------------------------------------------------------
     #
@@ -624,19 +695,25 @@ class MieStore:
         if new.num_rows == 0:
             return None
         keys = key_columns(table)
+        schema = _arrow_schema(table)
+        # dictionary pages pay off for repeated strings, never for
+        # float vectors
+        strings = [f.name for f in schema if pa.types.is_string(f.type)]
         batch = self._split_buckets(table, new)
         prev = self._snapshot_dir(table)
         files = self._part_files(prev) if prev else []
         bucketed = bool(files) and self._is_bucketed(prev)
         legacy = (
-            self._split_buckets(table, _read_arrow(table, files))
+            self._split_buckets(table, _read_arrow(table, files, self._parts))
             if files and not bucketed
             else {}
         )
         snap, version = self._next_snapshot(table)
         for b in sorted(batch.keys() | legacy.keys()):
             old = (
-                _read_arrow(table, self._part_files(os.path.join(prev, f"bkt={b}")))
+                _read_arrow(
+                    table, self._part_files(os.path.join(prev, f"bkt={b}")), self._parts
+                )
                 if bucketed
                 else legacy.get(b)
             )
@@ -649,12 +726,16 @@ class MieStore:
                     for k in zip(*(old[c].to_pylist() for c in keys))
                 ]
                 old = old.filter(pa.array(keep, pa.bool_()))
+            # one chunk per column, or a cached bucket would gain a chunk
+            # with every commit that touches it
+            merged = pa.concat_tables([t for t in (old, rows) if t is not None])
+            merged = merged.combine_chunks()
             bdir = os.path.join(snap, f"bkt={b}")
             os.makedirs(bdir)
-            pq.write_table(
-                pa.concat_tables([t for t in (old, rows) if t is not None]),
-                os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
-            )
+            part = os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet")
+            pq.write_table(merged, part, use_dictionary=strings)
+            # write-through: the next read of this bucket decodes nothing
+            self._parts.add(schema, part, merged)
         if bucketed:
             self._link_untouched(prev, snap, list(batch))
         return version

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from mie_spark import schemas as S
 from mie_spark.api import MieClient, tools
+from mie_spark.api.client import _COSINE_BLOCK, _cosine
 from mie_spark.embedding import MockEmbeddingProvider
 from mie_spark.functions.vectors import cosine_sim
 from mie_spark.storage import MieStore, _arrow_schema
@@ -367,6 +368,42 @@ def test_semantic_ranking_matches_spark(spark, data, query, limit, threshold):
         want = _spark_conflicts(client, "q", category, threshold, limit)
         assert got == want
         assert [g["similarity"].hex() for g in got] == [w["similarity"].hex() for w in want]
+
+
+@pytest.mark.parametrize("chunked", [False, True])
+@pytest.mark.parametrize("ragged", [False, True])
+def test_cosine_matches_spark_across_blocks(spark, ragged, chunked):
+    """_cosine over more rows than two of its fold blocks, against
+    Spark's cosine_sim bit for bit: full-mantissa float32 vectors;
+    (``ragged``) NULL vectors and elements and other widths between
+    them, which shift every later row's position within its block; and
+    (``chunked``) a column of uneven chunks, as table_arrow returns."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(5)
+    n = 2 * _COSINE_BLOCK + 37
+    vectors = [[_f32(int(k)) for k in row] for row in rng.integers(-999, 1000, (n, DIM))]
+    if ragged:
+        odd = [None, [1.0] * (DIM + 1), [1.0, None] + [1.0] * (DIM - 2), [0.0] * DIM]
+        for i in range(0, n, 97):
+            vectors[i] = odd[i % len(odd)]
+    emb = pa.array(vectors, pa.list_(pa.float32()))
+    if chunked:
+        cuts = [0, 1, 900, 900, 3100, n]
+        emb = pa.chunked_array([emb[a:b] for a, b in zip(cuts, cuts[1:])])
+    got = _cosine(emb, np.asarray(FOLD_Q))
+    q = F.array(*[F.lit(float(x)) for x in FOLD_Q])
+    df = spark.createDataFrame(list(enumerate(vectors)), "i long, embedding array<float>")
+    want = [
+        r["s"]
+        for r in df.select("i", cosine_sim(F.col("embedding"), q).alias("s")).orderBy("i").collect()
+    ]
+    assert len(got) == len(want) == n
+    for i, (g, w) in enumerate(zip(got, want)):
+        if w is None or w != w:
+            assert np.isnan(g), i
+        else:
+            assert g.hex() == w.hex(), i
 
 
 def test_semantic_search_skips_vectors_of_another_width(spark, tmp_path):

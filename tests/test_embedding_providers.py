@@ -152,3 +152,36 @@ def test_worker_embed_factory_matches_provider():
         w = make_worker_embed(dim)
         for text in ("", "hello world", "日本語", "x" * 500):
             assert w(text) == p.embed_query(text)
+
+
+def _scalar_mock(h: int, dim: int) -> list[float]:
+    """The reference mock's formula one element at a time: Python ints
+    wrapped to uint64, then a sequential norm."""
+    u64 = (1 << 64) - 1
+    vec = [float(((h + i * 7919) & u64) % 10000) / 10000.0 * 2.0 - 1.0 for i in range(dim)]
+    n = math.sqrt(sum(x * x for x in vec))
+    return [x / n for x in vec] if n else vec
+
+
+def test_mock_matches_scalar_formula_bit_for_bit(monkeypatch):
+    """The numpy mock equals the scalar formula exactly: on 3,002 texts
+    (ASCII, non-ASCII, empty, long) and on hashes within 768 * 7919 of
+    2^64, where the uint64 wrap lands inside the vector."""
+    import random
+
+    rng = random.Random(17)
+    alphabet = "abc XYZ 019 é日本😀\n"
+    texts = ["", "x" * 5000] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(1, 60)))
+        for _ in range(3000)
+    ]
+    p = MockEmbeddingProvider(768)
+    assert p.embed(texts) == [_scalar_mock(p._hash(t), 768) for t in texts]
+
+    top = 1 << 64
+    hashes = [top - 1, top - 7919, top - 7920, top - 768 * 7919, top - 768 * 7919 + 1]
+    hashes += [rng.randrange(top - 768 * 7919, top) for _ in range(20)]
+    for h in hashes:
+        monkeypatch.setattr(MockEmbeddingProvider, "_hash", staticmethod(lambda _, h=h: h))
+        for dim in (4, 768):
+            assert MockEmbeddingProvider(dim).embed_query("t") == _scalar_mock(h, dim), h

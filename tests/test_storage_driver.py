@@ -6,7 +6,8 @@ builds filed rows with Spark's ``pmod(xxhash64(keys), merge_buckets)``,
 so these tests pin the driver hash to Spark's on every key type, the
 merged tables to a last-write-wins model, and the snapshot layout to
 Spark's hash — and that an agent-sized write or meta read runs no Spark
-job at all.
+job at all. The store's cache of decoded part files must read exactly
+as a cold decode does, and decode nothing a warm read or merge needs.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import os
 from unittest import mock
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -28,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from mie_spark import schemas as S
+from mie_spark import storage
 from mie_spark.storage import MieStore, _key_bucket
 
 BUCKET_COUNTS = (1, 16, 7)
@@ -266,3 +269,194 @@ def test_small_writes_and_meta_reads_run_no_spark_job(spark, spark_jobs, tmp_pat
     assert store.meta_get("n") == "2"
     # the counter does see Spark jobs: a table scan runs at least one
     assert spark_jobs(lambda: store.table("mie_fact").count()) >= 1
+
+
+# -- the decoded-part cache ----------------------------------------------------
+
+
+def _cold(store: MieStore, table: str):  # noqa: ANN202
+    """``table`` decoded from disk by a store with an empty cache."""
+    return MieStore(store.spark, path=store.path).table_arrow(table)
+
+
+def _assert_warm_is_cold(store: MieStore) -> None:
+    for table in TABLES + ("mie_meta",):
+        warm = store.table_arrow(table)
+        cold = _cold(store, table)
+        assert warm.schema == cold.schema, table
+        assert warm.equals(cold), table
+
+
+@pytest.fixture()
+def decodes():
+    """Counts part files decoded from disk."""
+    with mock.patch.object(storage, "_decode_part", wraps=storage._decode_part) as spy:
+        yield spy
+
+
+def test_cached_reads_equal_cold_decodes(spark, tmp_path):
+    """Commits interleaved with reads, a first write under a narrower
+    schema among them: every table_arrow equals a decode from disk."""
+    store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=4)
+    narrow = StructType(
+        [
+            StructField(f.name, FloatType() if f.name == "confidence" else f.dataType)
+            for f in S.FACT
+        ]
+    )
+    with mock.patch.object(S, "NODE_TABLES", {**S.NODE_TABLES, "mie_fact": narrow}):
+        store.atomic_upsert_rows(_batch(list(range(10))))
+        _assert_warm_is_cold(store)
+    _assert_warm_is_cold(store)
+    for step in ([3, 4, 50], list(range(5, 25)), [7]):
+        store.atomic_upsert_rows(_batch(step, content="v"), {"n": 1})
+        _assert_warm_is_cold(store)
+        store.meta_increment("n")
+        _assert_warm_is_cold(store)
+    assert store.meta_get("n") == "6"
+
+
+def test_warm_reads_decode_nothing(spark, tmp_path, decodes):
+    """After a first write, reads decode no part file; neither does a
+    one-bucket commit nor the read after it. A store opened on the same
+    directory decodes each file once."""
+    store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=4)
+    store.atomic_upsert_rows(_batch(list(range(40))))
+    decodes.reset_mock()
+    for table in TABLES + ("mie_meta",):
+        store.table_arrow(table)
+    assert decodes.call_count == 0
+
+    store.upsert_rows("mie_fact", [_fact(3, "new")])
+    facts = store.table_arrow("mie_fact")
+    assert decodes.call_count == 0
+    assert dict(zip(facts["id"].to_pylist(), facts["content"].to_pylist()))["fact:003"] == "new3"
+
+    other = MieStore(spark, path=store.path, merge_buckets=4)
+    decodes.reset_mock()
+    other.table_arrow("mie_fact")
+    assert decodes.call_count == len(store._part_files(store._snapshot_dir("mie_fact")))
+    decodes.reset_mock()
+    other.table_arrow("mie_fact")
+    assert decodes.call_count == 0
+
+
+def test_replaced_part_file_is_decoded_again(spark, tmp_path, decodes):
+    """A part file swapped (os.replace) for another with the same name,
+    size and mtime is a new inode: the next read decodes it."""
+    import pyarrow.parquet as pq
+
+    store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=1)
+    store.upsert_rows("mie_fact", [_fact(i, "aaaa") for i in range(4)])
+    (part,) = store._part_files(store._snapshot_dir("mie_fact"))
+    rows = store.table_arrow("mie_fact")
+
+    def swap(content: str) -> None:
+        t = rows.set_column(1, "content", pa.array([content] * rows.num_rows))
+        tmp = part + ".tmp"
+        pq.write_table(t, tmp, compression="none", use_dictionary=False,
+                       write_statistics=False)
+        old = os.stat(part)
+        if content == "bbbb":  # the same name, size and mtime as the file it replaces
+            assert os.stat(tmp).st_size == old.st_size
+            os.utime(tmp, ns=(old.st_atime_ns, old.st_mtime_ns))
+        os.replace(tmp, part)
+
+    swap("aaaa")  # a file the test controls, so the swap can keep its size
+    assert set(store.table_arrow("mie_fact")["content"].to_pylist()) == {"aaaa"}
+    decodes.reset_mock()
+    swap("bbbb")
+    assert set(store.table_arrow("mie_fact")["content"].to_pylist()) == {"bbbb"}
+    assert decodes.call_count == 1
+
+
+def test_cache_stays_under_its_bound(spark, tmp_path):
+    bound = 6_000
+    with mock.patch.object(storage, "_DECODED_BYTES", bound):
+        store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=4)
+        for lo in range(0, 60, 15):
+            store.atomic_upsert_rows(_batch(list(range(lo, lo + 15))))
+            for table in TABLES + ("mie_meta",):
+                store.table_arrow(table)
+            cached = store._parts._tables.values()
+            assert store._parts._bytes == sum(t.nbytes for t in cached) <= bound
+        assert len(cached) < sum(
+            len(store._part_files(store._snapshot_dir(t))) for t in TABLES
+        )
+        _assert_warm_is_cold(store)
+
+
+def test_restore_and_reset_show_their_rows(spark, tmp_path):
+    """Warm reads across restore (which backs up and restores the
+    memory tables, not the streaming ledger) and reset."""
+    store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=4)
+    store.atomic_upsert_rows(_batch(list(range(12))))
+    memory = [t for t in TABLES if t in S.ALL_TABLES]
+    before = {t: store.table_arrow(t) for t in memory}
+    store.backup(str(tmp_path / "backup"))
+    store.atomic_upsert_rows(_batch(list(range(6, 20)), content="after"))
+    store.table_arrow("mie_fact")
+
+    store.restore(str(tmp_path / "backup"))
+    for t in memory:
+        assert sorted(store.table_arrow(t).to_pylist(), key=repr) == sorted(
+            before[t].to_pylist(), key=repr
+        ), t
+    _assert_warm_is_cold(store)
+
+    store.reset()
+    for t in TABLES:
+        assert store.table_arrow(t).num_rows == 0, t
+    assert store.meta_get("schema_version") == S.SCHEMA_VERSION
+    store.upsert_rows("mie_fact", [_fact(1, "fresh")])
+    assert store.table_arrow("mie_fact")["content"].to_pylist() == ["fresh1"]
+    _assert_warm_is_cold(store)
+
+
+def test_cache_accounting_survives_concurrent_readers(spark, tmp_path):
+    """Eight readers and a writer share one store's cache under a small
+    bound and a short switch interval: its byte count stays equal to
+    the bytes it holds, within the bound, and readers see whole rows."""
+    import sys
+    import threading
+
+    bound = 3_000  # about two buckets: nearly every read decodes and evicts
+    with mock.patch.object(storage, "_DECODED_BYTES", bound):
+        store = MieStore(spark, path=str(tmp_path / "s"), merge_buckets=4)
+        store.atomic_upsert_rows(_batch(list(range(20))))
+        errors: list[BaseException] = []
+
+        def read() -> None:
+            try:
+                for _ in range(30):
+                    for table in TABLES:
+                        try:
+                            assert store.table_arrow(table).num_rows >= 20
+                        except FileNotFoundError:
+                            pass  # two commits overtook the read: GC's contract
+            except BaseException as exc:  # noqa: BLE001 — reported below
+                errors.append(exc)
+
+        def write() -> None:
+            try:
+                for lo in range(20, 40, 4):
+                    store.atomic_upsert_rows(_batch(list(range(lo, lo + 4))))
+            except BaseException as exc:  # noqa: BLE001 — reported below
+                errors.append(exc)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=read) for _ in range(8)]
+            threads.append(threading.Thread(target=write))
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        cached = store._parts._tables.values()
+        assert store._parts._bytes == sum(t.nbytes for t in cached) <= bound
+        assert store.table_arrow("mie_fact").num_rows == 40
